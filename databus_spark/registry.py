@@ -69,14 +69,15 @@ def _dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
 def _staged_artifact(
     prefix: str, sf_dir: str, fingerprint: str, build, *, version: str
 ) -> str:
-    """THE staging protocol, in one place (five sites previously
-    copy-pasted it): a /tmp artifact directory keyed on the fixture
-    path, guarded by an exclusive flock (these dirs are shared across
-    test/bench processes), rebuilt iff the content fingerprint in its
-    _COMPLETE marker mismatches, with the marker written via tmp+rename
-    so a crash can only ever look 'stale', never half-written.
-    ``build(dir)`` materializes the artifact contents; returns the
-    artifact directory.
+    """THE staging protocol: every fixture shared through the temp dir
+    is staged here and nowhere else. A /tmp artifact directory keyed on
+    the fixture path, guarded by an exclusive flock (these dirs are
+    shared across test/bench processes), rebuilt iff the content
+    fingerprint in its _COMPLETE marker mismatches, with the marker
+    written via tmp+rename so a crash can only ever look 'stale', never
+    half-written. ``build(dir)`` materializes the artifact
+    contents (the dir does not exist yet when it is called); returns
+    the artifact directory.
 
     ``version`` is the builder's CODE-version stamp, folded into the
     marker alongside the content fingerprint: bump it whenever the
@@ -263,30 +264,19 @@ def filter_keymod_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog staged route-materialized (route_partition directories),
     subscribed via subscribe_key_mod — directory pruning, zero per-row
     hashing — and the result must equal the per-row KeyModFilter oracle
-    exactly. Staging is digest-markered like the other source fixtures."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    exactly. Staged once through _staged_artifact."""
     from databus_spark.operators.filters import subscribe_key_mod
     from databus_spark.streaming.source import stage_changelog
 
     log = customer_changelog(spark, sf_dir)
-    # "|c2b8-route-v1" = code-version stamp (n_chunks=2, route_buckets=8
-    # and the stage_changelog layout); bump on builder change
-    fingerprint = _content_fingerprint(log, "scn") + "|c2b8-route-v1"
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"databus_routed_{digest}")
-    marker = os.path.join(stage, "_ROUTED_COMPLETE")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as f:
-            stale = f.read().strip() != fingerprint
-    if stale:
-        shutil.rmtree(stage, ignore_errors=True)
-        stage_changelog(log, stage, n_chunks=2, route_buckets=8)
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+    # version = n_chunks=2, route_buckets=8 and the stage_changelog layout
+    stage = _staged_artifact(
+        "databus_routed",
+        sf_dir,
+        _content_fingerprint(log, "scn"),
+        lambda d: stage_changelog(log, d, n_chunks=2, route_buckets=8),
+        version="c2b8-route-v1",
+    )
     staged = spark.read.option("basePath", stage).parquet(stage + "/chunk=*")
     return subscribe_key_mod(staged, 8, 0, 4, route_buckets=8).select(*ENV_OUT)
 
@@ -313,27 +303,17 @@ def filter_keymod_staged_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. The oracle recomputes the hash from the key; the Spark
     side reads only the staged column — equality proves the staged
     hash IS the subscription hash (KeyModFilter.java:34-79)."""
-    import hashlib
-    import shutil
-    import tempfile
-
     from databus_spark.operators.filters import subscribe_key_mod
     from databus_spark.streaming.source import stage_changelog
 
     log = customer_changelog(spark, sf_dir)
-    fingerprint = _content_fingerprint(log, "scn") + "|c2-keyhash-v1"
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"databus_keyhash_{digest}")
-    marker = os.path.join(stage, "_KEYHASH_COMPLETE")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as f:
-            stale = f.read().strip() != fingerprint
-    if stale:
-        shutil.rmtree(stage, ignore_errors=True)
-        stage_changelog(log, stage, n_chunks=2, key_hash=True)
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+    stage = _staged_artifact(
+        "databus_keyhash",
+        sf_dir,
+        _content_fingerprint(log, "scn"),
+        lambda d: stage_changelog(log, d, n_chunks=2, key_hash=True),
+        version="c2-keyhash-v1",
+    )
     staged = spark.read.option("basePath", stage).parquet(stage + "/chunk=*")
     return subscribe_key_mod(staged, 5, 0, 2).select(*ENV_OUT)
 
@@ -2492,11 +2472,6 @@ def zorder_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed-down residual filters. The oracle is the plain full-scan
     filter — pruning must be invisible to results; the pruning ITSELF
     (files_read < files_total) is pinned in tests/test_layout.py."""
-    import hashlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from databus_spark.operators.layout import ZorderTable
 
     e = load_table(spark, sf_dir, "events").select(
@@ -2504,43 +2479,25 @@ def zorder_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hour"),
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    zdir = _os.path.join(tempfile.gettempdir(), f"databus_ztable_{digest}")
-    marker = _os.path.join(zdir, "_COMPLETE")
+
+    # The table sits one level down so its writer lock (path + ".lock")
+    # lives inside the artifact dir, never on the staging lock file.
+    def table(d: str) -> ZorderTable:
+        return ZorderTable(
+            spark, os.path.join(d, "t"), "user_id", "hour", rows_per_file=20_000
+        )
+
     # fingerprint must include EVERY stored dimension: a regenerated
     # fixture with identical ids but shifted ts would otherwise serve
     # stale hours from the marker-matched z-table
-    fingerprint = _content_fingerprint(e, "event_id", "user_id", "hour") + "|z-v1"
-    # OS file lock around the stage-or-reuse block: two concurrent
-    # driver/test processes share this tempdir path, and without the
-    # lock one could rmtree the dir the other is mid-staging/reading.
-    import fcntl
-
-    # DISTINCT lock file from ZorderTable's own writer lock (zdir +
-    # ".lock"): write_initial below takes that lock internally, and
-    # flock on a second fd of the same inode self-deadlocks — the
-    # staging gate must serialize stagers on its own file
-    lock_path = zdir + ".stage.lock"
-    with open(lock_path, "w") as lock_f:
-        fcntl.flock(lock_f, fcntl.LOCK_EX)
-        try:
-            stale = True
-            if _os.path.exists(marker):
-                with open(marker) as f:
-                    stale = f.read().strip() != fingerprint
-            if stale:
-                shutil.rmtree(zdir, ignore_errors=True)
-                t = ZorderTable(spark, zdir, "user_id", "hour", rows_per_file=20_000)
-                t.write_initial(e)
-                # tmp + atomic rename: a torn marker write must read as
-                # "stale", never as a half-written fingerprint match
-                mtmp = marker + ".tmp"
-                with open(mtmp, "w") as f:
-                    f.write(fingerprint)
-                _os.replace(mtmp, marker)
-        finally:
-            fcntl.flock(lock_f, fcntl.LOCK_UN)
-    t = ZorderTable(spark, zdir, "user_id", "hour", rows_per_file=20_000)
+    zdir = _staged_artifact(
+        "databus_ztable",
+        sf_dir,
+        _content_fingerprint(e, "event_id", "user_id", "hour"),
+        lambda d: table(d).write_initial(e),
+        version="z-v2",  # v2: the table moved down to <dir>/t
+    )
+    t = table(zdir)
     b = e.agg(F.min("user_id"), F.min("hour")).collect()[0]  # scalar probe
     df, _stats = t.read_box((b[0], b[0] + 10), (b[1], b[1] + 96))
     return df.select("event_id", "user_id", "hour")
@@ -2909,18 +2866,22 @@ def sql_txlog_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import tempfile
 
-    handler = FileMaxSCNHandler(
-        os.path.join(tempfile.mkdtemp(prefix="sqlpull_"), "scn.json")
-    )
-    puller = SqlTxlogPuller(
-        spark, duckdb_executor(con), "txlog", handler, chunk_rows=20_000
-    )
     chunks: list[DataFrame] = []
-    puller.drain(lambda b: chunks.append(b))
+    # drain() is eager and the chunks never read the SCN file
+    with tempfile.TemporaryDirectory(prefix="sqlpull_") as scn_dir:
+        handler = FileMaxSCNHandler(os.path.join(scn_dir, "scn.json"))
+        puller = SqlTxlogPuller(
+            spark, duckdb_executor(con), "txlog", handler, chunk_rows=20_000
+        )
+        puller.drain(lambda b: chunks.append(b))
     out = chunks[0]
     for c in chunks[1:]:
         out = out.unionByName(c)
     return out
+
+
+# in-memory Derby URLs this process has seeded (one per fingerprint)
+_DERBY_SEEDED: set[str] = set()
 
 
 @query(
@@ -2932,13 +2893,13 @@ def sql_txlog_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def jdbc_txlog_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S2 through Spark's REAL JDBC source: embedded Derby hosts the
-    txlog table (seeded once per sf via write.jdbc, reuse guarded by a
-    row-count marker); JdbcTxlogPuller drains it in txn-atomic keyset
+    txlog table in an in-JVM memory database, seeded via write.jdbc once
+    per process and content fingerprint, so no two processes ever share
+    a database file; JdbcTxlogPuller drains it in txn-atomic keyset
     chunks, each chunk a partitioned read (partitionColumn=scn) so
     executors issue parallel remote WHERE scans. The union of pulled
     chunks must equal the changelog the oracle recomputes in DuckDB."""
     import hashlib
-    import shutil
     import tempfile
 
     from databus_spark.envelope import orders_changelog
@@ -2948,34 +2909,23 @@ def jdbc_txlog_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["scn", "opcode", "key_str", "o_orderkey", "o_totalprice"]
     log = orders_changelog(spark, sf_dir).select(*cols)
     # content digest, not just row count: a regenerated fixture with equal
-    # cardinality must not silently reuse the previously-seeded Derby db
+    # cardinality must not silently reuse the previously-seeded database
     fingerprint = _content_fingerprint(log, "scn", "o_totalprice") + "|seed-v1"
-
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    db_dir = os.path.join(tempfile.gettempdir(), f"databus_derby_{digest}")
-    url = f"jdbc:derby:{db_dir};create=true"
-    marker = db_dir + ".seeded"
-    need_seed = True
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                need_seed = f.read().strip() != fingerprint
-        except OSError:
-            need_seed = True
-    if need_seed:
-        shutil.rmtree(db_dir, ignore_errors=True)
+    digest = hashlib.md5(fingerprint.encode()).hexdigest()[:12]
+    url = f"jdbc:derby:memory:databus_txlog_{digest};create=true"
+    if url not in _DERBY_SEEDED:
         seed_jdbc_table(log, url, "TXLOG")
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+        _DERBY_SEEDED.add(url)
 
-    handler = FileMaxSCNHandler(
-        os.path.join(tempfile.mkdtemp(prefix="jdbcpull_"), "scn.json")
-    )
-    # chunk size sized for the bench SF (a handful of keyset round trips);
-    # chunk atomicity at small chunk sizes is proven by test_jdbc_puller
-    puller = JdbcTxlogPuller(spark, url, "TXLOG", handler, chunk_rows=50_000)
     chunks: list[DataFrame] = []
-    puller.drain(lambda b: chunks.append(b))
+    # drain() is eager and the chunks never read the SCN file
+    with tempfile.TemporaryDirectory(prefix="jdbcpull_") as scn_dir:
+        handler = FileMaxSCNHandler(os.path.join(scn_dir, "scn.json"))
+        # chunk size sized for the bench SF (a handful of keyset round
+        # trips); chunk atomicity at small chunk sizes is proven by
+        # test_jdbc_puller
+        puller = JdbcTxlogPuller(spark, url, "TXLOG", handler, chunk_rows=50_000)
+        puller.drain(lambda b: chunks.append(b))
     out = chunks[0]
     for c in chunks[1:]:
         out = out.unionByName(c)
@@ -2997,31 +2947,17 @@ def avro_ocf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     markers, and codec all from the public Avro spec, and the read goes
     through the SYNC-SPLIT scan (byte-range splits within files, the
     Hadoop AvroInputFormat convention) so the driver-checked path is the
-    100 TB one. Fixture staging is digest-markered like the Derby/trail
-    fixtures (collect is FIXTURE-ONLY; a production OCF producer is
-    upstream)."""
-    import hashlib
-    import shutil
-    import tempfile
-
+    100 TB one. The OCF files are staged once through _staged_artifact
+    (collect is FIXTURE-ONLY; a production OCF producer is upstream)."""
     from databus_spark.sources.avro_ocf import read_ocf_splits, write_ocf
 
     cols = ["scn", "opcode", "key_str"]
     log = orders_changelog(spark, sf_dir).select(
         *cols, F.col("o_totalprice").cast("double").alias("amount")
     )
-    fingerprint = _content_fingerprint(log, "scn", "amount")
 
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    ocf_dir = os.path.join(tempfile.gettempdir(), f"databus_ocf_{digest}")
-    marker = os.path.join(ocf_dir, "_COMPLETE")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as f:
-            stale = f.read().strip() != fingerprint
-    if stale:
-        shutil.rmtree(ocf_dir, ignore_errors=True)
-        os.makedirs(ocf_dir)
+    def build(d: str) -> None:
+        os.makedirs(d)
         schema = {
             "type": "record",
             "name": "orders_txn",
@@ -3037,13 +2973,19 @@ def avro_ocf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         per = (len(rows) + n_files - 1) // n_files
         for i in range(n_files):
             write_ocf(
-                os.path.join(ocf_dir, f"part{i}.avro"),
+                os.path.join(d, f"part{i}.avro"),
                 rows[i * per : (i + 1) * per],
                 schema,
                 codec="deflate",
             )
-        with open(marker, "w") as f:
-            f.write(fingerprint)
+
+    ocf_dir = _staged_artifact(
+        "databus_ocf",
+        sf_dir,
+        _content_fingerprint(log, "scn", "amount"),
+        build,
+        version="ocf-v1",
+    )
     return read_ocf_splits(
         spark,
         os.path.join(ocf_dir, "*.avro"),
@@ -4240,54 +4182,35 @@ def trail_file_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
     files below the position before Spark ever lists them, and from_xml
     parses the rest (TrailFilePositionSetter.java seek semantics +
     ggParser parse; file prune is the Spark-native 'byte offset')."""
-    import shutil
-    import tempfile
-
     from databus_spark.sources.trail import TrailWriter, read_trail
 
-    # Stable digest (not PYTHONHASHSEED-randomized builtin hash), so the
-    # same sf_dir reuses one dir across processes instead of leaking a
-    # fresh tempdir per run; the _COMPLETE marker (storing from_scn)
-    # makes the fixture build idempotent — the trail content is a pure
-    # function of sf_dir, so later calls skip the collect+write entirely.
-    import hashlib
+    orders = load_table(spark, sf_dir, "orders")
 
-    trail_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"databus_trail_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    marker = os.path.join(trail_dir, "_COMPLETE")
-    # content digest (count + sum/max of key and price), not row count
-    # alone: a regenerated fixture with equal cardinality but different
-    # content must rebuild the trail, not serve the stale one
-    fingerprint = _content_fingerprint(
-        load_table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice"
-    )
-    from_scn = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            saved_scn, saved_fp = f.read().split(",", 1)
-        if saved_fp == fingerprint:
-            from_scn = int(saved_scn)
-    if from_scn is None:
-        rows = (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice")
-            .collect()
-        )
+    def build(d: str) -> None:
+        rows = orders.select("o_orderkey", "o_totalprice").collect()
         txns: dict[int, list] = {}
         for r in rows:
             txns.setdefault(r["o_orderkey"] // 3, []).append(
                 ("I", r["o_orderkey"], r["o_totalprice"])
             )
-        max_scn = max(txns)
-        from_scn = max_scn // 2
-        shutil.rmtree(trail_dir, ignore_errors=True)
-        writer = TrailWriter(trail_dir, max_bytes=64 * 1024)
+        writer = TrailWriter(d, max_bytes=64 * 1024)
         for scn in sorted(txns):
             writer.append_txn(scn, sorted(txns[scn]))
-        with open(marker, "w") as f:
-            f.write(f"{from_scn},{fingerprint}")
+        with open(os.path.join(d, "_FROM_SCN"), "w") as f:
+            f.write(str(max(txns) // 2))
+
+    # content digest (count + sum/max of key and price), not row count
+    # alone: a regenerated fixture with equal cardinality but different
+    # content must rebuild the trail, not serve the stale one
+    trail_dir = _staged_artifact(
+        "databus_trail",
+        sf_dir,
+        _content_fingerprint(orders, "o_orderkey", "o_totalprice"),
+        build,
+        version="trail-v1",
+    )
+    with open(os.path.join(trail_dir, "_FROM_SCN")) as f:
+        from_scn = int(f.read())
     return read_trail(spark, trail_dir, from_scn=from_scn)
 
 

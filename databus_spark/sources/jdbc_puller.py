@@ -11,8 +11,12 @@ max-SCN probe :784-810).
 
 The test database is embedded Apache Derby — the JDBC engine Spark
 already ships for its Hive metastore — seeded through `df.write.jdbc`
-(also the real JDBC write path). No extra jars, no network listener;
-on a cluster only the URL changes.
+(also the real JDBC write path). The registry's `jdbc_txlog_pull`
+seeds an in-JVM memory database (`jdbc:derby:memory:<name>;create=true`,
+named by the content fingerprint) once per process, so concurrent
+processes never contend for one on-disk database; in local mode the
+executors share that JVM and so see the same database. No extra jars,
+no network listener; on a cluster only the URL changes.
 
 Chunking is keyset + txn-atomic, identical to SqlTxlogPuller: the
 boundary probe takes the scn of the chunk_rows-th candidate row

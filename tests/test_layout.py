@@ -339,8 +339,9 @@ def test_zorder_staging_rebuild_does_not_self_deadlock(spark, sf_dir):
     zdir+'.lock' while write_initial took the SAME file via
     ZorderTable._write_lock — flock on a second fd of one inode
     self-deadlocks, so the REBUILD path (stale/absent marker) hung
-    forever. The gate now locks zdir+'.stage.lock'; this drives the
-    rebuild path under a watchdog."""
+    forever. The table now sits one level inside the staged artifact
+    dir, so its writer lock never shares a file with the staging lock;
+    this drives the rebuild path under a watchdog."""
     import glob as _glob
     import os as _os
     import shutil as _shutil
