@@ -53,6 +53,10 @@ _WINDOW = [
     "sql_txlog_pull",
     "trail_file_seek",
     "zorder_box_read",
+    # audioop removal: parse_media_meta's WAV RMS moved onto numpy
+    # (pcm_rms), so media_wav_probe is a changed path too; it displaces
+    # the window's last row, media_png_probe, to the back of _REST.
+    "media_wav_probe",
     # round 15 (optimization round 2): tools/window_manifest.py
     # affected_queries vs the committed r14 manifest reads 25 changed
     # query paths (the LSH band explode: minhash/simhash/bithash/near-
@@ -110,7 +114,6 @@ _WINDOW = [
     "length_histogram",
     "max_scn_probe",
     "media_features",
-    "media_png_probe",
 ]
 
 # below the 50-row window this round (all still verified locally by the
@@ -233,13 +236,13 @@ _REST = [
     "semdedup_survivors",
     "semdedup_survivors_v2",
     "semdedup_trained",
-    "media_wav_probe",
     "oov_rate",
     "partition_router",
     "pivot_events_daily",
     "schema_key_filter",
     "simhash_sketch",
     "vocab_top_terms",
+    "media_png_probe",
 ]
 
 _PRIORITY = _WINDOW + _REST

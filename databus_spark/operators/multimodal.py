@@ -4,7 +4,7 @@ Beyond-reference capability. Images/audio/video travel as `binary`
 columns with a typed metadata struct; decode / feature-extract run as
 Arrow-batched Pandas functions over mapInPandas. REAL, stdlib-only
 codecs cover: header metadata for PNG/GIF/BMP/JPEG, full WAV decode
-(wave + audioop RMS), and full PNG pixel decode (zlib inflate + all
+(wave + numpy RMS), and full PNG pixel decode (zlib inflate + all
 five scanline filters, png_decode below) — each driven through the
 oracle gate by a synthesized corpus with closed-form expected values.
 Baseline grayscale JPEG decode (segment walk, Annex K Huffman, zigzag,
@@ -118,10 +118,44 @@ _NO_META = {
 }
 
 
+class AudioFormatError(Exception):
+    """A PCM fragment that is not whole samples of width 1-4 (the
+    ``audioop.error`` analog): a parse-layer error, data not a bug."""
+
+
+def pcm_rms(fragment: bytes, width: int) -> int:
+    """Root-mean-square of signed little-endian PCM samples of ``width``
+    bytes (1-4), truncated to an int — the replacement for
+    ``audioop.rms``, which Python 3.13 removes. The squares are summed
+    in sample order in float64 (``np.cumsum`` is sequential, unlike the
+    pairwise ``np.sum``), the same arithmetic as audioop's C loop, so the
+    two agree exactly."""
+    import math
+
+    import numpy as np
+
+    if width not in (1, 2, 3, 4):
+        raise AudioFormatError(f"sample width {width} is not 1-4")
+    if len(fragment) % width:
+        raise AudioFormatError("fragment is not a whole number of samples")
+    if not fragment:
+        return 0
+    if width == 3:
+        # 24-bit: shift each sample into the top of an int32, then an
+        # arithmetic shift back sign-extends it
+        padded = np.zeros((len(fragment) // 3, 4), dtype=np.uint8)
+        padded[:, 1:] = np.frombuffer(fragment, dtype=np.uint8).reshape(-1, 3)
+        samples = padded.view("<i4").ravel() >> 8
+    else:
+        samples = np.frombuffer(fragment, dtype=f"<i{width}")
+    x = samples.astype(np.float64)
+    return int(math.sqrt(np.cumsum(x * x)[-1] / len(samples)))
+
+
 def parse_media_meta(payload: bytes) -> dict:
     """REAL format sniff + metadata decode for the container's
     libs-free environment: PNG/GIF/BMP/JPEG dimensions from their wire
-    headers, WAV audio via the stdlib wave/audioop modules (channels,
+    headers, WAV audio via the stdlib wave module and pcm_rms (channels,
     sample rate, duration, RMS energy). Unknown formats degrade to the
     opaque-bytes row, never an error — a corrupt header is data, not an
     ingest crash. Only PARSE-LAYER exception types degrade (same
@@ -129,7 +163,6 @@ def parse_media_meta(payload: bytes) -> dict:
     programming bugs (AttributeError, NameError, TypeError, ...) must
     propagate, or a future edit silently reclassifies every payload as
     opaque and no test fails."""
-    import audioop
     import io
     import struct
     import wave
@@ -171,7 +204,7 @@ def parse_media_meta(payload: bytes) -> dict:
                     n_channels=wf.getnchannels(),
                     sample_rate_hz=rate,
                     duration_ms=int(frames * 1000 / rate) if rate else None,
-                    rms_energy=audioop.rms(wf.readframes(frames), width)
+                    rms_energy=pcm_rms(wf.readframes(frames), width)
                     if frames
                     else 0,
                 )
@@ -179,7 +212,7 @@ def parse_media_meta(payload: bytes) -> dict:
         struct.error,  # unpack on a truncated header slice
         wave.Error,
         EOFError,
-        audioop.error,
+        AudioFormatError,
         RuntimeError,  # stdlib wave's torn-chunk path (see decode_media)
     ):
         return dict(_NO_META)  # torn/corrupt header -> opaque bytes
@@ -244,7 +277,7 @@ def synth_wav_corpus(docs: DataFrame) -> DataFrame:
     path): mono 8 kHz, 16-bit, constant amplitude 500 + doc_id % 1000,
     100 + n_chars % 500 frames — every metadata field the probe decodes
     is a closed-form function of (doc_id, n_chars), so a SQL oracle can
-    check the REAL wave/audioop decode end-to-end. Arrow-batched
+    check the REAL wave/pcm_rms decode end-to-end. Arrow-batched
     synthesis; payload bytes never leave the executors."""
     import io
     import struct
@@ -382,7 +415,7 @@ def frame_sample(media_df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
 # Pixel-level decode for PNG needs no external imaging lib: IDAT is zlib
 # (RFC 1950) and scanline defiltering is five integer filters (PNG spec
 # §9). Implemented here so the "decode" stage of the multimodal pipeline
-# is REAL for PNG the way wave/audioop made it real for WAV; JPEG/video
+# is REAL for PNG the way wave + pcm_rms make it real for WAV; JPEG/video
 # remain the honest stub in decode_media (their entropy coders genuinely
 # need libjpeg/ffmpeg).
 

@@ -3434,7 +3434,7 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_wav_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL audio codec driver-checked end-to-end: deterministic WAV
     payloads synthesized per document (stdlib wave), decoded back by
-    media_meta_probe (wave + audioop RMS), every decoded field matched
+    media_meta_probe (wave + numpy pcm_rms), every decoded field matched
     against its closed-form oracle — constant-amplitude RMS equals the
     amplitude exactly, duration is integer math."""
     from databus_spark.operators.multimodal import media_meta_probe, synth_wav_corpus

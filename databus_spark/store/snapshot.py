@@ -7,18 +7,25 @@ plus their log/applier separation and periodic compaction
 (BootstrapDBCleaner.java).
 
 No Delta/Iceberg jars ship in this image, so MERGE is implemented as
-copy-on-write over hash-bucketed parquet with an atomic version pointer:
+merge-on-read over hash-bucketed parquet with an atomic version pointer:
 
     root/
-      _VERSION                  <- text file: current version number
-      v<N>/bucket=<k>/*.parquet <- state partitioned by key-hash bucket
+      _VERSION                   <- text file: current version number
+      v<N>/_BASE_BYTES           <- parquet bytes of v<N>'s compacted base
+      v<N>/_bucket=<k>/*.parquet <- base + pending deltas, by key-hash bucket
 
-merge(batch) rewrites ONLY the buckets the batch touches (anti-join +
-union per bucket), then commits a new version pointer — the same
-copy-on-write-by-file strategy Delta's MERGE uses, at directory
-granularity. On a cluster this class is swapped for a one-line
-``DeltaTable.merge``; the interface is kept identical to make that a
-drop-in (see ``DELTA_MERGE_SQL``).
+A version is a compacted base (one row per key) plus the raw batches
+appended since — the reference's ``tab_<srcid>`` + ``log_<srcid>``
+split, and the delta-files-plus-snapshots state store of Structured
+Streaming. merge(batch) hard-links every file of v<N> into v<N+1> and
+appends the batch rows: one Spark job, no exchange, no state scan.
+Reads resolve the latest row per key over base ∪ deltas. Once v<N>'s
+pending delta bytes reach its base bytes, the next merge FOLDS instead:
+it writes latest_by_key(v<N> ∪ batch) as v<N+1>'s new base. The rule
+has no parameter: a read scans at most ~2x the base in bytes, and each
+row is rewritten an amortized O(1) times. On a cluster this class is
+swapped for a one-line ``DeltaTable.merge``; the interface is kept
+identical to make that a drop-in (see ``DELTA_MERGE_SQL``).
 
 Idempotence: merge() is last-writer-wins by (key, scn). Replaying a
 micro-batch (T7/T8 at-least-once retry) converges to the same state,
@@ -30,8 +37,9 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from databus_spark.operators.compaction import latest_by_key
@@ -45,6 +53,19 @@ WHEN MATCHED AND b.scn > s.scn THEN UPDATE SET *
 WHEN NOT MATCHED AND b.opcode <> 'DELETE' THEN INSERT *
 """
 
+# `_`-prefixed, so Spark's parquet reader skips it
+_BASE_MARKER = "_BASE_BYTES"
+
+
+class MergeResult(NamedTuple):
+    """What merge() committed, with the batch's row count and max SCN
+    observed on the write itself. An empty batch commits nothing: its
+    ``version`` is the unchanged current one and ``max_scn`` is None."""
+
+    version: int
+    rows: int
+    max_scn: int | None
+
 
 class ParquetSnapshotStore:
     def __init__(
@@ -53,41 +74,36 @@ class ParquetSnapshotStore:
         root: str,
         key_cols: Sequence[str] = ("source", "key_str"),
         n_buckets: int = 16,
-        broadcast_merge_max_rows: int = 200_000,
-        broadcast_merge_min_state_bytes: int = 256 << 20,
     ) -> None:
         self.spark = spark
         self.root = root
         self.key_cols = list(key_cols)
         self.n_buckets = n_buckets
-        # The broadcast MERGE engages when BOTH hold: the batch is
-        # small enough to build-map safely on a real cluster
-        # (<= max_rows, ~tens of MB at 200k full rows) AND the table
-        # state is big enough that its shuffle dominates the merge
-        # (>= min_state_bytes on disk). Below that floor the shuffle
-        # path is measurably FASTER: at a ~15 MB sf0.1 state the
-        # broadcast plan's two extra state scans + two broadcast
-        # builds + extra stages read 7.8k rows/s vs the shuffle
-        # path's ~17k — fixed per-stage overheads dominate when the
-        # state shuffle costs nothing. I/O accounting at big state S:
-        # shuffle path ≈ 5S (scan + 2x shuffle write/read + write) vs
-        # broadcast ≈ 3S (2 scans + write), zero exchange, no
-        # O(S/partitions) hash maps.
-        self.broadcast_merge_max_rows = broadcast_merge_max_rows
-        self.broadcast_merge_min_state_bytes = broadcast_merge_min_state_bytes
         os.makedirs(root, exist_ok=True)
 
-    def _state_bytes(self, version: int) -> int:
-        """On-disk size of a version — the cheap state-size signal the
-        merge-path choice reads (no Spark job)."""
+    def _parquet_bytes(self, version: int) -> int:
+        """Parquet bytes of a version (no Spark job). Checksums and
+        ``_SUCCESS`` are left out: counting them would make a freshly
+        folded version look as if it had pending deltas."""
         total = 0
         for dirpath, _dirs, files in os.walk(self._data_dir(version)):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
-                except OSError:
-                    pass
+            total += sum(
+                os.path.getsize(os.path.join(dirpath, f))
+                for f in files
+                if f.endswith(".parquet")
+            )
         return total
+
+    def _base_bytes(self, version: int) -> int:
+        try:
+            with open(os.path.join(self._data_dir(version), _BASE_MARKER)) as f:
+                return int(f.read())
+        except FileNotFoundError:
+            # written before merge-on-read: every file is compacted base
+            return self._parquet_bytes(version)
+
+    def _has_deltas(self, version: int) -> bool:
+        return self._parquet_bytes(version) > self._base_bytes(version)
 
     # -- version pointer ----------------------------------------------------
     def _version(self) -> int:
@@ -97,7 +113,9 @@ class ParquetSnapshotStore:
         with open(path) as f:
             return int(f.read().strip())
 
-    def _commit(self, version: int) -> None:
+    def _commit(self, version: int, base_bytes: int) -> None:
+        with open(os.path.join(self._data_dir(version), _BASE_MARKER), "w") as f:
+            f.write(str(base_bytes))
         tmp = os.path.join(self.root, "_VERSION.tmp")
         with open(tmp, "w") as f:
             f.write(str(version))
@@ -106,29 +124,43 @@ class ParquetSnapshotStore:
     def _data_dir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
 
+    def _new_dir(self, version: int) -> str:
+        """A clean directory for an uncommitted version: a merge killed
+        mid-write leaves files there, and writing into them would
+        duplicate rows."""
+        path = self._data_dir(version)
+        shutil.rmtree(path, ignore_errors=True)
+        return path
+
     def _bucket_col(self) -> F.Column:
         return F.pmod(F.hash(*self.key_cols), F.lit(self.n_buckets)).alias("_bucket")
 
     # -- reads ---------------------------------------------------------------
+    def _live(self, df: DataFrame, version: int) -> DataFrame:
+        """Latest row per key, then tombstones filtered out. Tombstones
+        are retained on disk so that a replayed/out-of-order older batch
+        cannot resurrect a deleted key — same reason Delta retains
+        deletion vectors. A version without pending deltas is already
+        one row per key and skips the compaction."""
+        if self._has_deltas(version):
+            df = latest_by_key(df, self.key_cols + ["_bucket"]).select(*df.columns)
+        return df.where(F.col("opcode") != "DELETE").drop("_bucket")
+
     def read(self) -> DataFrame | None:
-        """Live state: tombstones filtered out (they are retained on disk so
-        that a replayed/out-of-order older batch cannot resurrect a deleted
-        key — same reason Delta retains deletion vectors)."""
+        """Live state of the current version."""
         v = self._version()
         if v == 0:
             return None
-        df = self.spark.read.parquet(self._data_dir(v)).drop("_bucket")
-        return df.where(F.col("opcode") != "DELETE")
+        return self._live(self.spark.read.parquet(self._data_dir(v)), v)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: read any retained historical version (vacuum
         bounds retention) — the Delta VERSION AS OF analog, free because
-        MERGE is copy-on-write versioned."""
+        every version is an immutable directory of hard links."""
         path = self._data_dir(version)
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {version} not retained under {self.root}")
-        df = self.spark.read.parquet(path).drop("_bucket")
-        return df.where(F.col("opcode") != "DELETE")
+        return self._live(self.spark.read.parquet(path), version)
 
     def versions(self) -> list[int]:
         return sorted(
@@ -144,6 +176,8 @@ class ParquetSnapshotStore:
         expression merge() buckets by, then only those _bucket=<k>
         directories are scanned; within a bucket the key predicate is
         left to parquet min/max skipping (optimize() sorts by key).
+        The key semi-join runs before the latest-per-key compaction, so
+        pending deltas cost only the matched rows.
         At 16k buckets over 100 TB a lookup reads ~1/16000th of the
         table regardless of table size.
         """
@@ -161,224 +195,56 @@ class ParquetSnapshotStore:
         ]
         if not paths:
             return self.spark.read.parquet(self._data_dir(v)).drop("_bucket").limit(0)
-        df = (
-            self.spark.read.option("basePath", self._data_dir(v))
-            .parquet(*paths)
-            .drop("_bucket")
-        )
-        return df.join(keys.select(*self.key_cols).distinct(), self.key_cols, "left_semi").where(
-            F.col("opcode") != "DELETE"
-        )
+        df = self.spark.read.option("basePath", self._data_dir(v)).parquet(*paths)
+        df = df.join(keys.select(*self.key_cols).distinct(), self.key_cols, "left_semi")
+        return self._live(df, v)
 
     # -- MERGE ----------------------------------------------------------------
-    def bucket_col(self) -> F.Column:
-        """The store's bucket expression — exposed so a caller can fuse
-        its own per-batch statistics with the bucket probe into ONE job
-        (see StreamingApplier.apply_batch) and hand `touched` to
-        merge()."""
-        return self._bucket_col()
-
-    def _broadcast_merge(
-        self, current: DataFrame, batch: DataFrame, touched: list[int]
-    ) -> DataFrame:
-        """MERGE with ZERO shuffle of table state — the micro-batch
-        regime (batch rows ≤ broadcast_merge_max_rows, the streaming
-        applier's steady state). The old path compacted
-        latest_by_key(current ∪ batch) and re-partitioned by bucket:
-        two full shuffles of the touched state PER MICRO-BATCH, i.e.
-        merge cost O(state) in shuffle bytes even for a 1-row batch
-        (r13 verdict next-#4: stream_apply was the worst-scaling soak
-        leg, exponent 0.625 / 9.5 GB shuffle at x100).
-
-        Construction (winner per key = argmax scn over {current row,
-        batch rows}, identical to the old path by max_by associativity;
-        SCNs are unique per key):
-          batch_latest = latest_by_key(batch)        # batch-sized shuffle
-          winners  = current(touched) ⟕ BROADCAST(batch_latest):
-                     take the batch row iff it exists and b.scn > s.scn
-                     — map-side only, state never moves
-          present  = current(touched) ⋉ BROADCAST(batch keys)           (≤ batch rows)
-          inserts  = batch_latest anti BROADCAST(present)
-          merged   = winners ∪ inserts
-        Two map-side scans of the touched buckets replace two full
-        shuffles of them; every join builds on the batch side. The
-        write needs no repartition: winner tasks are per input file,
-        so each task already holds exactly one bucket's rows."""
-        cols = list(batch.columns)
-        cur_touched = current.where(F.col("_bucket").isin(touched)).select(*cols)
-        batch_latest = latest_by_key(
-            batch, self.key_cols + ["_bucket"]
-        ).localCheckpoint(eager=False)
-        renamed = batch_latest.select(
-            *[F.col(c).alias(f"_b_{c}") for c in cols]
-        )
-        cond = None
-        for c in self.key_cols:
-            eq = F.col(c).eqNullSafe(F.col(f"_b_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        joined = cur_touched.join(F.broadcast(renamed), cond, "left")
-        take_batch = F.col("_b_scn").isNotNull() & (F.col("_b_scn") > F.col("scn"))
-        winners = joined.select(
-            *[
-                F.when(take_batch, F.col(f"_b_{c}")).otherwise(F.col(c)).alias(c)
-                for c in cols
-            ]
-        )
-        present = (
-            cur_touched.join(
-                F.broadcast(
-                    renamed.select(*[F.col(f"_b_{c}") for c in self.key_cols])
-                ),
-                cond,
-                "left_semi",
-            )
-            .select(*self.key_cols)
-        )
-        icond = None
-        for c in self.key_cols:
-            eq = F.col(f"src.{c}").eqNullSafe(F.col(f"p.{c}"))
-            icond = eq if icond is None else (icond & eq)
-        inserts = batch_latest.alias("src").join(
-            F.broadcast(present.alias("p")), icond, "left_anti"
-        )
-        # coalesce bounds output files per version: winner tasks are
-        # 1:1 with current-state files, so without this every merge
-        # multiplies the file count (v3 reads v2's winners+inserts
-        # files, and so on). coalesce is shuffle-free and each task
-        # still writes per-bucket via partitionBy.
-        width = max(1, min(64, len(touched) * 4))
-        return winners.unionByName(inserts.select(*cols)).coalesce(width)
-
-    def merge(
-        self,
-        batch: DataFrame,
-        precheckpointed: bool = False,
-        touched: list[int] | None = None,
-        prebucketed: bool = False,
-        batch_rows: int | None = None,
-    ) -> int:
+    def merge(self, batch: DataFrame) -> MergeResult:
         """Upsert a changelog batch: latest (key, scn) wins, DELETE removes.
 
-        Only buckets containing batch keys are rewritten; untouched
-        buckets are carried forward by cheap directory hard-links, so
-        merge cost scales with batch keyspan, not table size.
-
-        Two physical strategies, selected by batch size (``batch_rows``
-        — the streaming applier passes its fused-stats count, otherwise
-        one count over the checkpointed batch):
-
-        * batch ≤ broadcast_merge_max_rows and a current version
-          exists: the BROADCAST path (``_broadcast_merge``) — zero
-          shuffle of table state, every join builds on the batch side.
-          This is the streaming micro-batch regime, where the old
-          always-shuffle path paid O(state) shuffle bytes per batch.
-        * otherwise: intra-batch last-wins FUSED into the
-          (current ∪ batch) compaction — max_by over the union picks
-          the same winners a separate intra-batch pass would. ONE
-          shuffle of the touched state: the old second exchange
-          (repartition by _bucket before the partitioned write) bought
-          nothing but fewer output files — partitionBy routes rows
-          per-task without co-location, so dropping it halves merge
-          shuffle bytes at the cost of more (bounded:
-          shuffle.partitions × touched) files per version, which the
-          next compaction's scan absorbs.
-
-        Without ``precheckpointed``, the batch is checkpointed eagerly
-        so the bucket probe and the merged write evaluate an arbitrary
-        caller plan once, not twice. ``precheckpointed=True`` is the
-        caller's vouch that a second evaluation of the batch plan is
-        BOTH stable and cheap — either the caller already materialized
-        it, or (the streaming applier's default since r14) the batch
-        is a deterministic file-source chunk whose re-read costs less
-        than copying every batch into block storage did (the eager
-        copy was a third serialized job per micro-batch).
-
-        ``prebucketed=True`` declares the batch already carries a
-        ``_bucket`` column computed with THIS store's bucket_col() (the
-        applier's fused stats+probe path). It is an explicit contract,
-        not an inference: a caller whose changelog schema happens to
-        carry a ``_bucket`` field — or a stale one from a different
-        bucket geometry — must NOT be silently routed by it (r10 ADVICE
-        #4), so without the flag merge always overwrites the column.
+        Appends the batch to a hard-linked copy of the current version,
+        or folds it into a new compacted base when the current version's
+        pending delta bytes are at least its base bytes (and for the
+        first version). Tombstones are KEPT (reads hide them) so replayed
+        older upserts lose to them. The batch is evaluated once, by the
+        write; its row count and max SCN ride that job. An empty batch
+        commits no version.
         """
-        if prebucketed:
-            if "_bucket" not in batch.columns:
-                raise ValueError(
-                    "merge(prebucketed=True) requires a _bucket column "
-                    "computed with this store's bucket_col()"
-                )
-        else:
-            # always (re)derive: an inherited _bucket column from another
-            # schema or geometry would route rows into wrong buckets
-            batch = batch.withColumn("_bucket", self._bucket_col())
-        if not precheckpointed:
-            batch = batch.localCheckpoint(eager=True)
-        if touched is None:
-            touched = sorted(
-                r["_bucket"] for r in batch.select("_bucket").distinct().collect()
+        # always (re)derive: an inherited _bucket column from another
+        # schema or geometry would route rows into wrong buckets
+        batch = batch.withColumn("_bucket", self._bucket_col())
+        cur = self._version()
+        new_dir = self._new_dir(cur + 1)
+        obs = Observation()
+        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * self._base_bytes(cur)
+        if fold:
+            # observe ABOVE the union: an Observation on a union leg
+            # never fires; the marker column says which rows are the batch
+            frame = batch.withColumn("_in_batch", F.lit(True))
+            if cur > 0:
+                current = self.spark.read.parquet(self._data_dir(cur)).select(*batch.columns)
+                frame = current.withColumn("_in_batch", F.lit(False)).unionByName(frame)
+            frame = frame.observe(obs, *_batch_stats(F.col("_in_batch"))).drop("_in_batch")
+            out = latest_by_key(frame, self.key_cols + ["_bucket"]).repartition(
+                self.n_buckets, "_bucket"
             )
         else:
-            touched = sorted(touched)
-        cur_version = self._version()
-        new_version = cur_version + 1
-        new_dir = self._data_dir(new_version)
-        os.makedirs(new_dir, exist_ok=True)
-
-        current = None
-        if cur_version > 0:
-            current = self.spark.read.parquet(self._data_dir(cur_version))
-
-        # 1. carry forward untouched buckets without rewriting data files
-        if cur_version > 0:
-            for entry in os.listdir(self._data_dir(cur_version)):
-                if not entry.startswith("_bucket="):
-                    continue
-                b = int(entry.split("=", 1)[1])
-                if b not in touched:
+            for entry in os.listdir(self._data_dir(cur)):
+                if entry.startswith("_bucket="):
                     self._link_tree(
-                        os.path.join(self._data_dir(cur_version), entry),
+                        os.path.join(self._data_dir(cur), entry),
                         os.path.join(new_dir, entry),
                     )
-
-        # 2. merge the touched buckets. Tombstones are KEPT (read()
-        # hides them) so replayed older upserts lose to them.
-        if current is not None and batch_rows is None:
-            batch_rows = batch.count()  # checkpointed: a cheap local count
-        state_big = (
-            current is not None
-            and self._state_bytes(cur_version) >= self.broadcast_merge_min_state_bytes
-        )
-        if (
-            state_big
-            and batch_rows <= self.broadcast_merge_max_rows
-        ):
-            merged = self._broadcast_merge(current, batch, touched)
-        else:
-            merged = batch
-            if current is not None:
-                cur_touched = current.where(F.col("_bucket").isin(touched))
-                cols = [c for c in batch.columns]
-                merged = cur_touched.select(*cols).unionByName(batch)
-            merged = latest_by_key(merged, self.key_cols + ["_bucket"])
-            if not state_big:
-                # small state / first version: the bucket exchange is
-                # ~free here and buys the one-file-per-bucket layout +
-                # 16-way write parallelism (dropping it let AQE
-                # coalesce the write to 3-10 tasks and cost ~30% of
-                # the micro-batch rate at sf0.1)
-                merged = merged.repartition(max(1, len(touched)), "_bucket")
-            # big state: the exchange would re-shuffle the whole
-            # touched state a second time purely for file layout —
-            # write through the compaction's own partitioning and let
-            # the per-bucket file count ride (bounded by
-            # shuffle.partitions)
-        (
-            merged.write.mode("append")
-            .partitionBy("_bucket")
-            .parquet(new_dir)
-        )
-        self._commit(new_version)
-        return new_version
+            out = batch.observe(obs, *_batch_stats(F.lit(True)))
+        out.write.mode("append").partitionBy("_bucket").parquet(new_dir)
+        rows, max_scn = obs.get["rows"], obs.get["max_scn"]
+        if rows == 0:
+            shutil.rmtree(new_dir, ignore_errors=True)
+            return MergeResult(cur, 0, None)
+        base = self._parquet_bytes(cur + 1) if fold else self._base_bytes(cur)
+        self._commit(cur + 1, base)
+        return MergeResult(cur + 1, rows, max_scn)
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
@@ -395,16 +261,20 @@ class ParquetSnapshotStore:
 
     def optimize(self, tombstone_horizon_scn: int | None = None) -> int:
         """Compaction maintenance (the Delta OPTIMIZE + tombstone-retention
-        analog). Per-bucket copy-on-write already keeps ~1 file per bucket,
-        so the accumulating cost here is TOMBSTONES: DELETE markers are
-        retained so replayed older batches cannot resurrect keys (see
-        read()). Once every consumer checkpoint has passed
-        `tombstone_horizon_scn`, markers at or below it can never be
-        contradicted and are purged. Returns the new version."""
+        analog): a fold of the current version into a sorted base.
+        DELETE markers are retained so replayed older batches cannot
+        resurrect keys (see _live()). Once every consumer checkpoint has
+        passed `tombstone_horizon_scn`, markers at or below it can never
+        be contradicted and are purged. The purge runs AFTER the
+        latest-per-key compaction: run first, it would drop a DELETE
+        still pending in a delta and resurrect the older UPSERT beneath
+        it in the base. Returns the new version."""
         v = self._version()
         if v == 0:
             return 0
-        current = self.spark.read.parquet(self._data_dir(v))
+        current = latest_by_key(
+            self.spark.read.parquet(self._data_dir(v)), self.key_cols + ["_bucket"]
+        )
         if tombstone_horizon_scn is not None:
             current = current.where(
                 ~((F.col("opcode") == "DELETE") & (F.col("scn") <= tombstone_horizon_scn))
@@ -418,9 +288,9 @@ class ParquetSnapshotStore:
             .sortWithinPartitions(*self.key_cols)
             .write.mode("append")
             .partitionBy("_bucket")
-            .parquet(self._data_dir(new_version))
+            .parquet(self._new_dir(new_version))
         )
-        self._commit(new_version)
+        self._commit(new_version, self._parquet_bytes(new_version))
         return new_version
 
     def vacuum(self, keep_last: int = 2) -> None:
@@ -430,6 +300,15 @@ class ParquetSnapshotStore:
             if entry.startswith("v") and entry[1:].isdigit():
                 if int(entry[1:]) < v - keep_last + 1:
                     shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
+
+
+def _batch_stats(in_batch: Column) -> list[Column]:
+    """Row count and max SCN of the rows where ``in_batch`` holds —
+    fresh aliases per call, because Observation refuses reused ones."""
+    return [
+        F.count(F.when(in_batch, F.lit(1))).alias("rows"),
+        F.max(F.when(in_batch, F.col("scn"))).alias("max_scn"),
+    ]
 
 
 def prune_staged_log(stage_dir: str, retain_from_scn: int, spark: SparkSession) -> list[str]:
@@ -451,9 +330,3 @@ def prune_staged_log(stage_dir: str, retain_from_scn: int, spark: SparkSession) 
             pruned.append(chunk)
     return pruned
 
-
-def _count_files(path: str) -> int:
-    total = 0
-    for _root, _dirs, files in os.walk(path):
-        total += sum(1 for f in files if f.endswith(".parquet"))
-    return total

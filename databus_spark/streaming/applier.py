@@ -23,7 +23,6 @@ import time
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from databus_spark.store.snapshot import ParquetSnapshotStore
 from databus_spark.streaming.checkpoint import Checkpoint
@@ -37,7 +36,6 @@ class StreamingApplier:
         store: ParquetSnapshotStore,
         subscription: Column | None = None,
         on_checkpoint: Callable[[Checkpoint], None] | None = None,
-        checkpoint_batches: bool = False,
     ) -> None:
         self.store = store
         self.subscription = subscription
@@ -45,50 +43,18 @@ class StreamingApplier:
         self.on_checkpoint = on_checkpoint
         self.batches_applied = 0
         self.rows_applied = 0
-        # True re-enables the pre-r14 eager localCheckpoint of every
-        # micro-batch before the stats/merge passes. The default skips
-        # it: the engine's batch sources (staged parquet chunks, rate
-        # ranges) re-evaluate deterministically, and the checkpoint
-        # copy was a third serialized JOB per micro-batch (~25% of the
-        # ~1.2 s micro-batch budget; measured 16.9k -> 17.7k rows/s at
-        # sf0.1 without it). Set True for a source whose batch plan is
-        # NOT stable under re-evaluation.
-        self.checkpoint_batches = checkpoint_batches
 
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if self.subscription is not None:
             batch = batch.where(self.subscription)
-        # bucket first so ONE job yields stats AND the store's
-        # touched-bucket set: count/max-scn/bucket-probe were two
-        # separate driver round-trips per micro-batch on top of the
-        # MERGE — measurable against a ~1 s micro-batch budget (this
-        # fusion closed the r8 >= 20k rows/s watchpoint)
-        batch = batch.withColumn("_bucket", self.store.bucket_col())
-        if self.checkpoint_batches:
-            batch = batch.localCheckpoint(eager=True)
-        rows = batch.groupBy("_bucket").agg(
-            F.count(F.lit(1)).alias("_n"), F.max("scn").alias("_mx")
-        ).collect()
-        n = sum(r["_n"] for r in rows)
-        if n == 0:
+        # ONE job per micro-batch: the merge's write evaluates the batch
+        # once and observes its row count and max SCN on the way
+        applied = self.store.merge(batch)
+        if applied.rows == 0:
             return
-        self.store.merge(
-            batch,
-            # "precheckpointed" to merge() means "do not checkpoint
-            # again — the caller vouches the batch plan is stable for
-            # a second evaluation" (a file-source micro-batch is a
-            # fixed file list; re-reading it is cheaper than copying
-            # every batch into block storage)
-            precheckpointed=True,
-            touched=[r["_bucket"] for r in rows],
-            prebucketed=True,  # _bucket above IS store.bucket_col() — explicit contract
-            batch_rows=n,  # fused-stats count: lets merge pick the broadcast path
-        )
-        self.checkpoint.on_window_end(
-            max(int(r["_mx"]) for r in rows), time.time_ns()
-        )
+        self.checkpoint.on_window_end(applied.max_scn, time.time_ns())
         self.batches_applied += 1
-        self.rows_applied += n
+        self.rows_applied += applied.rows
         if self.on_checkpoint:
             self.on_checkpoint(self.checkpoint)
 

@@ -96,6 +96,57 @@ def test_parse_media_meta_real_formats():
     assert torn_wav["mime"] == "application/octet-stream"
 
 
+def test_pcm_rms_matches_audioop(spark):
+    """pcm_rms is pinned against audioop.rms while the interpreter still
+    ships it (the module is gone in Python 3.13): on the frames of the
+    WAV fixtures and on seeded random buffers of every sample width, and
+    a fragment cut mid-sample degrades to opaque bytes as before."""
+    import warnings
+    import wave
+
+    import numpy as np
+    import pytest
+
+    from databus_spark.operators.multimodal import (
+        AudioFormatError,
+        pcm_rms,
+        synth_audio_corpus,
+        synth_wav_corpus,
+    )
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", DeprecationWarning)
+        audioop = pytest.importorskip("audioop")
+
+    docs = spark.createDataFrame(
+        [(d, 37 * d % 700) for d in range(12)], "doc_id BIGINT, n_chars INT"
+    )
+    wavs = [make_wav(8000, 4000, amplitude=1000), make_wav(16000, 16000, amplitude=-32768)]
+    wavs += [bytes(r["media"]) for r in synth_wav_corpus(docs).collect()]
+    wavs += [bytes(r["media"]) for r in synth_audio_corpus(docs).collect()]
+    for wav in wavs:
+        with wave.open(io.BytesIO(wav)) as wf:
+            width, raw = wf.getsampwidth(), wf.readframes(wf.getnframes())
+        assert pcm_rms(raw, width) == audioop.rms(raw, width)
+
+    rng = np.random.default_rng(20261017)
+    for width in (1, 2, 3, 4):
+        for n in (0, 1, 2, 7, 1000, 100_003):
+            buf = rng.integers(0, 256, size=n * width, dtype=np.uint8).tobytes()
+            assert pcm_rms(buf, width) == audioop.rms(buf, width), (width, n)
+        most_negative = b"\x00" * (width - 1) + b"\x80"
+        assert pcm_rms(most_negative * 99, width) == audioop.rms(most_negative * 99, width)
+
+    for buf, width in ((b"\x00" * 5, 2), (b"\x00" * 5, 4), (b"\x00" * 10, 5)):
+        with pytest.raises(audioop.error):
+            audioop.rms(buf, width)
+        with pytest.raises(AudioFormatError):
+            pcm_rms(buf, width)
+    # WAV data cut mid-sample: the parse-layer error degrades to opaque
+    torn = parse_media_meta(make_wav(8000, 400)[:-1])
+    assert torn["mime"] == "application/octet-stream"
+
+
 def test_parse_media_meta_propagates_programming_bugs(monkeypatch):
     """The degrade-to-opaque handler is narrowed to parse-layer
     exception types: a planted AttributeError (the canonical

@@ -1,5 +1,5 @@
-"""Round-11 guards: size-gated broadcasts, the explicit prebucketed
-merge contract, and the SQL twins' packed-key width guard.
+"""Round-11 guards: size-gated broadcasts, merge's re-derived bucket
+column, and the SQL twins' packed-key width guard.
 
 r10 ADVICE closed here:
   #1 _exsub_cut broadcast cuts unconditionally (corpus-proportional on
@@ -8,8 +8,7 @@ r10 ADVICE closed here:
   #3 the DuckDB packed-key twins silently alias past the field bounds
      where the Spark side raises -> packed_key_sql mirrors the guard.
   #4 merge() inferred "already bucketed" from column presence -> an
-     explicit prebucketed flag; an inherited _bucket column is always
-     recomputed without it.
+     inherited _bucket column is always recomputed.
 """
 
 from __future__ import annotations
@@ -81,8 +80,8 @@ def test_lm_vocab_merge_fallback_identical(spark, sf_dir):
 def test_merge_recomputes_inherited_bucket_column(spark, tmp_path):
     """A batch that arrives ALREADY carrying a _bucket column (another
     store's geometry, or a schema that legitimately has the name) must
-    be re-bucketed unless the caller explicitly declares prebucketed —
-    previously column presence silently routed rows into wrong buckets."""
+    be re-bucketed — previously column presence silently routed rows
+    into wrong buckets."""
     from databus_spark.store.snapshot import ParquetSnapshotStore
 
     store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=8)
@@ -97,10 +96,6 @@ def test_merge_recomputes_inherited_bucket_column(spark, tmp_path):
     )
     got = store.lookup(keys)
     assert got is not None and got.count() == 20
-
-    # the explicit contract: prebucketed=True without the column is loud
-    with pytest.raises(ValueError, match="prebucketed"):
-        store.merge(batch.drop("_bucket"), prebucketed=True)
 
 
 def test_packed_key_sql_mirrors_width_guard():

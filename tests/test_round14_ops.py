@@ -1,6 +1,6 @@
 """Round-14 additions: dual-class pin evaluation (mechanical restore of
 the r11-class pins), staged IVF+SQ8 serving artifact, release-gate
-utility report, stream-apply merge paths."""
+utility report, the merge-on-read snapshot store."""
 
 from __future__ import annotations
 
@@ -166,16 +166,17 @@ def test_sq8_ivf_serve_delta_and_append(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# broadcast MERGE path (r13 verdict next-#4: stream_apply scaling)
+# merge-on-read snapshot store (appended deltas + size-triggered folds)
 # ---------------------------------------------------------------------------
 
 
-def test_broadcast_merge_equals_shuffle_merge(spark, sf_dir, tmp_path):
-    """The zero-state-shuffle broadcast MERGE must produce bit-equal
-    state to the shuffle path over the same batch sequence — upserts,
-    deletes, out-of-order replay of an older batch, and new-key
-    inserts all covered. Threshold forced to select each path."""
+def test_merge_on_read_matches_compaction_oracle(spark, sf_dir, tmp_path):
+    """After every merge — appended or folded — read() and lookup() equal
+    the batch compaction of every row merged so far: upserts, deletes,
+    an exact replay and an out-of-order OLDER batch. Each retained
+    version still time-travels to its own state across the folds."""
     from databus_spark.envelope import orders_changelog
+    from databus_spark.operators.compaction import snapshot
     from databus_spark.store.snapshot import ParquetSnapshotStore
 
     log = orders_changelog(spark, str(sf_dir)).localCheckpoint()
@@ -184,36 +185,56 @@ def test_broadcast_merge_equals_shuffle_merge(spark, sf_dir, tmp_path):
     b1 = log.where(F.col("scn") <= cut1)
     b2 = log.where((F.col("scn") > cut1) & (F.col("scn") <= cut2))
     b3 = log.where(F.col("scn") > cut2)
+    # every 5th key by hash: live, updated and deleted keys alike
+    keys = (
+        log.select("source", "key_str")
+        .distinct()
+        .where(F.pmod(F.hash("source", "key_str"), F.lit(5)) == 0)
+        .localCheckpoint()
+    )
+    cols = ["source", "key_str", "scn", "opcode"]
 
-    stores = {
-        # threshold 0 => every merge takes the shuffle path
-        "shuffle": ParquetSnapshotStore(
-            spark, str(tmp_path / "shuf"), broadcast_merge_max_rows=0
-        ),
-        # huge row threshold + zero state floor => every merge after v1
-        # takes the broadcast path
-        "broadcast": ParquetSnapshotStore(
-            spark,
-            str(tmp_path / "bcast"),
-            broadcast_merge_max_rows=10_000_000,
-            broadcast_merge_min_state_bytes=0,
-        ),
-    }
-    for store in stores.values():
-        store.merge(b1)
-        store.merge(b2)
-        store.merge(b2)  # exact replay: idempotent
-        store.merge(b3)
-        store.merge(b1)  # out-of-order OLDER batch: must lose everywhere
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
 
-    def state(store):
-        return sorted(
-            map(tuple, store.read().select("source", "key_str", "scn", "opcode").collect())
-        )
+    store = ParquetSnapshotStore(spark, str(tmp_path / "mor"), n_buckets=4)
+    merged, expected, kinds = None, {}, []
+    for batch in (b1, b2, b2, b3, b1):  # b2 replayed; b1 replayed out of order
+        version = store.merge(batch).version
+        kinds.append(store._has_deltas(version))
+        merged = batch if merged is None else merged.unionByName(batch)
+        want = snapshot(merged)
+        expected[version] = rows(want)
+        assert rows(store.read()) == expected[version]
+        assert rows(store.lookup(keys)) == rows(want.join(keys, ["source", "key_str"], "left_semi"))
+    # both shapes were exercised: a fold after the first version, and appends
+    assert kinds[0] is False and True in kinds and False in kinds[1:]
+    assert expected[1] and expected[5]
+    for version, want_rows in expected.items():
+        assert rows(store.read_version(version)) == want_rows
 
-    s_shuf, s_bcast = state(stores["shuffle"]), state(stores["broadcast"])
-    assert s_shuf == s_bcast
-    assert len(s_shuf) > 0
+
+def test_optimize_folds_before_tombstone_purge(spark, tmp_path):
+    """A DELETE pending in a delta above an older UPSERT in the base must
+    survive optimize(tombstone_horizon_scn=...) as a deleted key: purging
+    tombstones before the latest-per-key fold would resurrect it."""
+    from databus_spark.store.snapshot import ParquetSnapshotStore
+
+    schema = "source string, key_str string, scn long, opcode string, payload string"
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
+    store.merge(spark.createDataFrame(
+        [("s", f"k{i}", 10 + i, "UPSERT", f"v{i}") for i in range(20)], schema
+    ))
+    store.merge(spark.createDataFrame([("s", "k3", 100, "DELETE", None)], schema))
+    assert store._has_deltas(2)  # the DELETE is pending, the UPSERT is base
+
+    v = store.optimize(tombstone_horizon_scn=1000)
+    assert not store._has_deltas(v)
+    live = {r["key_str"] for r in store.read().collect()}
+    assert live == {f"k{i}" for i in range(20)} - {"k3"}
+    # the aged tombstone itself is gone from disk
+    on_disk = spark.read.parquet(store._data_dir(v))
+    assert on_disk.where(F.col("opcode") == "DELETE").count() == 0
 
 
 # ---------------------------------------------------------------------------

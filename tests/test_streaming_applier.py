@@ -240,3 +240,38 @@ def test_store_time_travel_versions(spark, sf_dir, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         store.read_version(1)
+
+
+def test_merge_retry_ignores_files_of_a_killed_merge(spark, tmp_path):
+    """A merge killed mid-write leaves files in the uncommitted v<N+1>;
+    the retry must start that directory afresh, never write next to the
+    leftovers (they would surface as duplicate rows). Covers the append
+    path (v2 after a committed v1) and the fold path (the first merge)."""
+    import glob
+    import os
+    import shutil
+
+    from databus_spark.store.snapshot import ParquetSnapshotStore
+
+    schema = "source string, key_str string, scn long, opcode string, payload string"
+    old = spark.createDataFrame(
+        [("s", f"k{i}", i + 1, "UPSERT", "old") for i in range(50)], schema
+    )
+    new = spark.createDataFrame(
+        [("s", f"k{i}", i + 1000, "UPSERT", "new") for i in range(50)], schema
+    )
+
+    store = ParquetSnapshotStore(spark, str(tmp_path / "a"), n_buckets=3)
+    store.merge(old)
+    leftover = sorted(glob.glob(f"{store._data_dir(1)}/_bucket=0/*.parquet"))[0]
+    os.makedirs(f"{store._data_dir(2)}/_bucket=0")
+    shutil.copy(leftover, f"{store._data_dir(2)}/_bucket=0/part-killed.parquet")
+    store.merge(new)
+    got = store.read().select("key_str", "payload").collect()
+    assert len(got) == 50 and {r["payload"] for r in got} == {"new"}
+
+    fresh = ParquetSnapshotStore(spark, str(tmp_path / "b"), n_buckets=3)
+    os.makedirs(f"{fresh._data_dir(1)}/_bucket=0")
+    shutil.copy(leftover, f"{fresh._data_dir(1)}/_bucket=0/part-killed.parquet")
+    fresh.merge(old)
+    assert fresh.read().count() == 50

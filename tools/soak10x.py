@@ -412,16 +412,15 @@ def fam_stream_apply_unbucketed(spark, docs, emb, sf_dir):
 fam_stream_apply_unbucketed.prestage = _prestage_stream
 
 
-# -- big-state streaming MERGE: the broadcast path's design regime ---------
+# -- big-state streaming MERGE: small batches into a large snapshot ------
 # The x1/xN stream_apply legs replay a FIXED 8-chunk log, so batch size
-# grows with scale and the large (shuffle) path is what xN measures. The
-# production steady state is the opposite shape: a trigger-bounded SMALL
-# batch merging into a LARGE accumulated snapshot. These two families
-# pin that regime: both drain the SAME small sf0.1-sized changelog (8 x
-# ~23k-row batches, rep-0 keys ⊂ the big corpus keyspace so updates are
-# real) into a link-copied clone of a big prestaged snapshot; the
-# control forces the shuffle path (broadcast_merge_max_rows=0), so the
-# pair is the measured value of the zero-state-shuffle broadcast MERGE.
+# grows with scale. The production steady state is the opposite shape:
+# a trigger-bounded SMALL batch merging into a LARGE accumulated
+# snapshot. This family pins that regime: it drains the SAME small
+# sf0.1-sized changelog (8 x ~23k-row batches, rep-0 keys ⊂ the big
+# corpus keyspace so updates are real) into a link-copied clone of a big
+# prestaged snapshot, so the merge-on-read appends and the size-triggered
+# fold are what it measures.
 _BIGSTATE_ROOT = "/tmp/databus_soak_bigstate"
 
 
@@ -454,7 +453,7 @@ def _prestage_bigstate(spark, docs, emb, sf_dir):
     open(os.path.join(out, "_DONE"), "w").write("1")
 
 
-def _run_bigstate(spark, sf_dir, force_shuffle: bool) -> None:
+def fam_stream_bigstate(spark, docs, emb, sf_dir):
     import tempfile
 
     from databus_spark.envelope import orders_changelog
@@ -465,29 +464,14 @@ def _run_bigstate(spark, sf_dir, force_shuffle: bool) -> None:
     ParquetSnapshotStore._link_tree(
         os.path.join(_bigstate_dir(sf_dir), "base"), f"{tmp}/snap"
     )
-    store = ParquetSnapshotStore(
-        spark, f"{tmp}/snap",
-        broadcast_merge_max_rows=0 if force_shuffle else 200_000,
-    )
-    applier = _traced_applier(spark, store)
+    applier = _traced_applier(spark, ParquetSnapshotStore(spark, f"{tmp}/snap"))
     olog = orders_changelog(spark, SF_DIR)
     stage = f"{_stream_stage_dir(SF_DIR)}/stage"
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
     q.awaitTermination(1800)
 
 
-def fam_stream_bigstate(spark, docs, emb, sf_dir):
-    _run_bigstate(spark, sf_dir, force_shuffle=False)
-
-
 fam_stream_bigstate.prestage = _prestage_bigstate
-
-
-def fam_stream_bigstate_shuffle(spark, docs, emb, sf_dir):
-    _run_bigstate(spark, sf_dir, force_shuffle=True)
-
-
-fam_stream_bigstate_shuffle.prestage = _prestage_bigstate
 
 
 def fam_media_dhash(spark, docs, emb, sf_dir):
@@ -631,7 +615,6 @@ FAMILIES = {
     "semdedup_incremental": fam_semdedup_incremental,
     "stream_apply_unbucketed": fam_stream_apply_unbucketed,
     "stream_bigstate": fam_stream_bigstate,
-    "stream_bigstate_shuffle": fam_stream_bigstate_shuffle,
     "media_dhash": fam_media_dhash,
     "stream_apply": fam_stream_apply,
     "semdedup": fam_semdedup,
