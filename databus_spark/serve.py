@@ -140,11 +140,15 @@ class RelayFacade:
                 f"checkpoint {since_scn} below retention floor {self.retained_min_scn}"
             )
         nxt = self.log.where(F.col("scn") > since_scn).select("scn").distinct()
-        bounds = nxt.orderBy("scn").limit(n_windows).agg(F.max("scn")).collect()[0][0]
-        if bounds is None:
+        # a root top-n (TakeOrderedAndProject) returns the window scns in
+        # order: the last one is the bound, with no single-partition
+        # exchange for a max over the limit
+        head = nxt.orderBy("scn").limit(n_windows).collect()
+        if not head:
             return self.log.where(F.lit(False)), since_scn
-        page = self.log.where((F.col("scn") > since_scn) & (F.col("scn") <= bounds))
-        return page, int(bounds)
+        bound = int(head[-1]["scn"])
+        page = self.log.where((F.col("scn") > since_scn) & (F.col("scn") <= bound))
+        return page, bound
 
 
 class RelayUnavailableError(RuntimeError):

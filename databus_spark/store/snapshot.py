@@ -12,6 +12,7 @@ merge-on-read over hash-bucketed parquet with an atomic version pointer:
     root/
       _VERSION                   <- text file: current version number
       v<N>/_BASE_BYTES           <- parquet bytes of v<N>'s compacted base
+      v<N>/_SCHEMA               <- v<N>'s read schema (StructType JSON)
       v<N>/_bucket=<k>/*.parquet <- base + pending deltas, by key-hash bucket
 
 A version is a compacted base (one row per key) plus the raw batches
@@ -23,7 +24,11 @@ Reads resolve the latest row per key over base ∪ deltas. Once v<N>'s
 pending delta bytes reach its base bytes, the next merge FOLDS instead:
 it writes latest_by_key(v<N> ∪ batch) as v<N+1>'s new base. The rule
 has no parameter: a read scans at most ~2x the base in bytes, and each
-row is rewritten an amortized O(1) times. On a cluster this class is
+row is rewritten an amortized O(1) times. Each version records its
+read schema beside the data, as Structured Streaming's state store
+does, so no read re-derives it from the parquet footers (a Spark job
+per read) and a batch whose columns differ from the state is refused
+instead of folded into a narrower table. On a cluster this class is
 swapped for a one-line ``DeltaTable.merge``; the interface is kept
 identical to make that a drop-in (see ``DELTA_MERGE_SQL``).
 
@@ -34,6 +39,7 @@ which is what makes the streaming applier exactly-once end-to-end.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from collections.abc import Sequence
@@ -41,6 +47,14 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from databus_spark.operators.compaction import latest_by_key
 
@@ -53,8 +67,9 @@ WHEN MATCHED AND b.scn > s.scn THEN UPDATE SET *
 WHEN NOT MATCHED AND b.opcode <> 'DELETE' THEN INSERT *
 """
 
-# `_`-prefixed, so Spark's parquet reader skips it
+# `_`-prefixed, so Spark's parquet reader skips them
 _BASE_MARKER = "_BASE_BYTES"
+_SCHEMA_MARKER = "_SCHEMA"
 
 
 class MergeResult(NamedTuple):
@@ -105,6 +120,22 @@ class ParquetSnapshotStore:
     def _has_deltas(self, version: int) -> bool:
         return self._parquet_bytes(version) > self._base_bytes(version)
 
+    def _schema(self, version: int) -> StructType:
+        try:
+            with open(os.path.join(self._data_dir(version), _SCHEMA_MARKER)) as f:
+                return StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            # written before the marker: infer from the footers (one job)
+            return self.spark.read.parquet(self._data_dir(version)).schema
+
+    def _scan(self, version: int, paths: Sequence[str] = ()) -> DataFrame:
+        """v<N>'s files (or the given bucket dirs of it) under its
+        recorded schema: building the frame runs no Spark job."""
+        reader = self.spark.read.schema(self._schema(version))
+        if not paths:
+            return reader.parquet(self._data_dir(version))
+        return reader.option("basePath", self._data_dir(version)).parquet(*paths)
+
     # -- version pointer ----------------------------------------------------
     def _version(self) -> int:
         path = os.path.join(self.root, "_VERSION")
@@ -113,9 +144,11 @@ class ParquetSnapshotStore:
         with open(path) as f:
             return int(f.read().strip())
 
-    def _commit(self, version: int, base_bytes: int) -> None:
+    def _commit(self, version: int, base_bytes: int, schema: StructType) -> None:
         with open(os.path.join(self._data_dir(version), _BASE_MARKER), "w") as f:
             f.write(str(base_bytes))
+        with open(os.path.join(self._data_dir(version), _SCHEMA_MARKER), "w") as f:
+            f.write(schema.json())
         tmp = os.path.join(self.root, "_VERSION.tmp")
         with open(tmp, "w") as f:
             f.write(str(version))
@@ -147,11 +180,12 @@ class ParquetSnapshotStore:
         return df.where(F.col("opcode") != "DELETE").drop("_bucket")
 
     def read(self) -> DataFrame | None:
-        """Live state of the current version."""
+        """Live state of the current version. The frame is built under
+        the version's recorded schema, so building it runs no Spark job."""
         v = self._version()
         if v == 0:
             return None
-        return self._live(self.spark.read.parquet(self._data_dir(v)), v)
+        return self._live(self._scan(v), v)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: read any retained historical version (vacuum
@@ -160,7 +194,7 @@ class ParquetSnapshotStore:
         path = self._data_dir(version)
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {version} not retained under {self.root}")
-        return self._live(self.spark.read.parquet(path), version)
+        return self._live(self._scan(version), version)
 
     def versions(self) -> list[int]:
         return sorted(
@@ -174,29 +208,35 @@ class ParquetSnapshotStore:
 
         The requested keys' bucket ids are computed with the SAME hash
         expression merge() buckets by, then only those _bucket=<k>
-        directories are scanned; within a bucket the key predicate is
-        left to parquet min/max skipping (optimize() sorts by key).
+        directories are scanned. Pruning happens at that bucket-directory
+        level only: the key semi-join pushes no key filter into the
+        parquet scan, so every row group of a scanned bucket is read.
         The key semi-join runs before the latest-per-key compaction, so
         pending deltas cost only the matched rows.
         At 16k buckets over 100 TB a lookup reads ~1/16000th of the
         table regardless of table size.
+
+        Two Spark jobs for a local keys frame (``createDataFrame`` of a
+        pandas frame or an Arrow table, planned as a LocalRelation): its
+        bucket ids are collected without a job, the scan is built under
+        the version's recorded schema, and the semi-join needs no key
+        ``distinct`` (it never repeats a left row), which leaves the
+        broadcast and the scan. A distributed keys frame (a list of rows
+        is parallelized) adds one job for the bucket ids and the join's
+        own shuffle stages.
         """
         v = self._version()
         if v == 0:
             return None
-        buckets = sorted(
-            r["_bucket"]
-            for r in keys.select(self._bucket_col()).distinct().collect()
-        )
+        buckets = sorted({r[0] for r in keys.select(self._bucket_col()).collect()})
         paths = [
             p
             for b in buckets
             if os.path.isdir(p := os.path.join(self._data_dir(v), f"_bucket={b}"))
         ]
         if not paths:
-            return self.spark.read.parquet(self._data_dir(v)).drop("_bucket").limit(0)
-        df = self.spark.read.option("basePath", self._data_dir(v)).parquet(*paths)
-        df = df.join(keys.select(*self.key_cols).distinct(), self.key_cols, "left_semi")
+            return self._scan(v).drop("_bucket").limit(0)
+        df = self._scan(v, paths).join(keys.select(*self.key_cols), self.key_cols, "left_semi")
         return self._live(df, v)
 
     # -- MERGE ----------------------------------------------------------------
@@ -210,11 +250,19 @@ class ParquetSnapshotStore:
         older upserts lose to them. The batch is evaluated once, by the
         write; its row count and max SCN ride that job. An empty batch
         commits no version.
+
+        A batch must carry the state's columns with the same types (in
+        any order, nullability aside); otherwise ValueError names the
+        differing columns and nothing is written.
         """
         # always (re)derive: an inherited _bucket column from another
         # schema or geometry would route rows into wrong buckets
         batch = batch.withColumn("_bucket", self._bucket_col())
         cur = self._version()
+        schema = None
+        if cur > 0:
+            schema = self._schema(cur)
+            _check_columns(schema, batch.schema)
         new_dir = self._new_dir(cur + 1)
         obs = Observation()
         fold = cur == 0 or self._parquet_bytes(cur) >= 2 * self._base_bytes(cur)
@@ -223,12 +271,13 @@ class ParquetSnapshotStore:
             # never fires; the marker column says which rows are the batch
             frame = batch.withColumn("_in_batch", F.lit(True))
             if cur > 0:
-                current = self.spark.read.parquet(self._data_dir(cur)).select(*batch.columns)
+                current = self._scan(cur).select(*batch.columns)
                 frame = current.withColumn("_in_batch", F.lit(False)).unionByName(frame)
             frame = frame.observe(obs, *_batch_stats(F.col("_in_batch"))).drop("_in_batch")
             out = latest_by_key(frame, self.key_cols + ["_bucket"]).repartition(
                 self.n_buckets, "_bucket"
             )
+            schema = _read_schema(out.schema)
         else:
             for entry in os.listdir(self._data_dir(cur)):
                 if entry.startswith("_bucket="):
@@ -243,7 +292,8 @@ class ParquetSnapshotStore:
             shutil.rmtree(new_dir, ignore_errors=True)
             return MergeResult(cur, 0, None)
         base = self._parquet_bytes(cur + 1) if fold else self._base_bytes(cur)
-        self._commit(cur + 1, base)
+        # an append keeps v<N>'s schema: the check made the batch match it
+        self._commit(cur + 1, base, schema)
         return MergeResult(cur + 1, rows, max_scn)
 
     @staticmethod
@@ -272,25 +322,18 @@ class ParquetSnapshotStore:
         v = self._version()
         if v == 0:
             return 0
-        current = latest_by_key(
-            self.spark.read.parquet(self._data_dir(v)), self.key_cols + ["_bucket"]
-        )
+        current = latest_by_key(self._scan(v), self.key_cols + ["_bucket"])
         if tombstone_horizon_scn is not None:
             current = current.where(
                 ~((F.col("opcode") == "DELETE") & (F.col("scn") <= tombstone_horizon_scn))
             )
         new_version = v + 1
-        (
-            # sortWithinPartitions by key: parquet row-group min/max stats
-            # then skip inside a bucket, so lookup() point reads prune at
-            # BOTH levels (bucket dir, then row group).
-            current.repartition(self.n_buckets, "_bucket")
-            .sortWithinPartitions(*self.key_cols)
-            .write.mode("append")
-            .partitionBy("_bucket")
-            .parquet(self._new_dir(new_version))
-        )
-        self._commit(new_version, self._parquet_bytes(new_version))
+        # sorted by key within each bucket file. lookup() still prunes at
+        # the bucket-directory level only: its semi-join pushes no key
+        # filter down, so the row-group min/max stats are not consulted.
+        out = current.repartition(self.n_buckets, "_bucket").sortWithinPartitions(*self.key_cols)
+        out.write.mode("append").partitionBy("_bucket").parquet(self._new_dir(new_version))
+        self._commit(new_version, self._parquet_bytes(new_version), _read_schema(out.schema))
         return new_version
 
     def vacuum(self, keep_last: int = 2) -> None:
@@ -300,6 +343,46 @@ class ParquetSnapshotStore:
             if entry.startswith("v") and entry[1:].isdigit():
                 if int(entry[1:]) < v - keep_last + 1:
                     shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested field, element and value nullable, as
+    Spark's file reader returns it (Scala's ``DataType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_schema(written: StructType) -> StructType:
+    """The schema ``spark.read.parquet`` infers for a version written
+    from a frame of schema ``written`` with ``partitionBy("_bucket")``:
+    the data columns nullable, then ``_bucket`` as a partition integer."""
+    data = _nullable(StructType([f for f in written.fields if f.name != "_bucket"]))
+    return StructType([*data.fields, StructField("_bucket", IntegerType(), True)])
+
+
+def _check_columns(state: StructType, batch: StructType) -> None:
+    """Refuse a batch whose columns differ from the state's by name or
+    data type. Order, nullability and ``_bucket`` are ignored: the
+    bootstrap controller's snapshot batches put ``opcode`` last."""
+
+    def types(schema: StructType) -> dict[str, str]:
+        # simpleString leaves nested nullability out too
+        return {f.name: f.dataType.simpleString() for f in schema.fields if f.name != "_bucket"}
+
+    have, got = types(state), types(batch)
+    differ = sorted(n for n in have.keys() | got.keys() if have.get(n) != got.get(n))
+    if differ:
+        detail = ", ".join(
+            f"{n} (store {have.get(n, 'absent')}, batch {got.get(n, 'absent')})" for n in differ
+        )
+        raise ValueError(f"batch columns differ from the store's: {detail}")
 
 
 def _batch_stats(in_batch: Column) -> list[Column]:

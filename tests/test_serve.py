@@ -193,3 +193,41 @@ def test_stale_checkpoint_scn_not_found_then_bootstrap_cue(facade, spark):
     ok = RelayFacade(spark, log, retained_min_scn=2_000_000_000)
     page, bound = ok.stream_windows(1_999_999_999, 10)
     assert bound > 1_999_999_999
+
+
+def _agg_max_bound(log, since, n):
+    """The bound as an aggregate over the limited distinct scns."""
+    nxt = log.where(F.col("scn") > since).select("scn").distinct()
+    return nxt.orderBy("scn").limit(n).agg(F.max("scn")).collect()[0][0]
+
+
+def test_stream_windows_bound_edges(facade):
+    """The page bound equals the max over the next n distinct scns: with
+    fewer than n windows left, with a checkpoint at the head (caught
+    up: the checkpoint comes back with an empty page), and over windows
+    of several rows each, whose rows are all served."""
+    f, log = facade
+    counts = log.groupBy("scn").count()
+    multi = sorted(r["scn"] for r in counts.where(F.col("count") > 1).collect())
+    scns = sorted(r["scn"] for r in counts.collect())
+    assert len(multi) >= 3  # the fixture has multi-row txn windows
+    head = scns[-1]
+
+    page, bound = f.stream_windows(scns[-4], 10)  # 3 windows left
+    assert bound == _agg_max_bound(log, scns[-4], 10) == head
+    assert page.count() == log.where(F.col("scn") > scns[-4]).count()
+
+    page, bound = f.stream_windows(head, 10)
+    assert _agg_max_bound(log, head, 10) is None
+    assert bound == head and page.count() == 0
+
+    for since in (multi[0] - 1, multi[len(multi) // 2] - 1, multi[-1] - 1):
+        for n in (1, 2, 7):
+            page, bound = f.stream_windows(since, n)
+            assert bound == _agg_max_bound(log, since, n)
+            assert page.count() == log.where(
+                (F.col("scn") > since) & (F.col("scn") <= bound)
+            ).count()
+            assert page.select("scn").distinct().count() == min(
+                n, sum(1 for s in scns if s > since)
+            )
