@@ -57,6 +57,19 @@ _WINDOW = [
     # (pcm_rms), so media_wav_probe is a changed path too; it displaces
     # the window's last row, media_png_probe, to the back of _REST.
     "media_wav_probe",
+    # SemDeDup unification: affected_queries vs the committed manifest
+    # adds the eight rows whose path runs through the one
+    # semdedup_survivors operator or the shared k-means pieces. They
+    # displace the window's last eight rows, which go to the back of
+    # _REST as the newest external greens.
+    "kmeans_assign_summary",
+    "kmeans_centroids",
+    "semdedup_incremental",
+    "semdedup_multiprobe",
+    "semdedup_recall_eval",
+    "semdedup_survivors",
+    "semdedup_survivors_v2",
+    "semdedup_trained",
     # round 15 (optimization round 2): tools/window_manifest.py
     # affected_queries vs the committed r14 manifest reads 25 changed
     # query paths (the LSH band explode: minhash/simhash/bithash/near-
@@ -106,14 +119,6 @@ _WINDOW = [
     "event_rate_anomaly",
     "filter_keymod_longkey",
     "filter_keymod_strkey",
-    "filter_keyrange",
-    "filter_payload_fields",
-    "funnel_conversion",
-    "hash_sample",
-    "key_skew_profile",
-    "length_histogram",
-    "max_scn_probe",
-    "media_features",
 ]
 
 # below the 50-row window this round (all still verified locally by the
@@ -220,8 +225,6 @@ _REST = [
     "exactsubstr_dedup",
     "exactsubstr_spans",
     "exactsubstr_stats",
-    "kmeans_assign_summary",
-    "kmeans_centroids",
     "lm2_quality_score",
     "lm_quality_score",
     "as_of_join_events",
@@ -230,12 +233,6 @@ _REST = [
     "dedup_embedding_cosine",
     "json_props_extract",
     "pii_redact",
-    "semdedup_incremental",
-    "semdedup_multiprobe",
-    "semdedup_recall_eval",
-    "semdedup_survivors",
-    "semdedup_survivors_v2",
-    "semdedup_trained",
     "oov_rate",
     "partition_router",
     "pivot_events_daily",
@@ -243,6 +240,14 @@ _REST = [
     "simhash_sketch",
     "vocab_top_terms",
     "media_png_probe",
+    "filter_keyrange",
+    "filter_payload_fields",
+    "funnel_conversion",
+    "hash_sample",
+    "key_skew_profile",
+    "length_histogram",
+    "max_scn_probe",
+    "media_features",
 ]
 
 _PRIORITY = _WINDOW + _REST

@@ -1947,6 +1947,11 @@ SEM_CELLS = 32       # finer than the ANN N_CELLS: within-cell pair cost
                      # 4.6 s in r7 after the lazy localCheckpoint on the
                      # 4-consumer assignment. Scale rule stays ~sqrt(n).
 
+# SemDeDup over TRAINED cells — the paper's actual pipeline shape
+# (arXiv:2303.09540 clusters with k-means, then dedups within clusters).
+SEM_TRAINED_K = 32     # same cell density the hash-sample variant uses
+SEM_TRAINED_ITER = 2
+
 
 def semdedup_survivors(
     emb: DataFrame,
@@ -1955,11 +1960,40 @@ def semdedup_survivors(
     vec_col: str = "embedding",
     n_cells: int = SEM_CELLS,
     dim: int | None = None,
+    trained: bool = False,
+    n_probe: int | None = 1,
+    n_iter: int = SEM_TRAINED_ITER,
+    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """(vec_id, cell_id, cluster_id, is_survivor) for EVERY corpus
-    vector: vectors whose cosine >= threshold within their cell are
+    vector: vectors whose cosine >= threshold within a shared cell are
     grouped transitively; survivor = the min-id member. Vectors with no
-    semantic twin survive as their own singleton cluster.
+    semantic twin survive as their own singleton cluster. Output is one
+    row per vector under its rank-1 cell.
+
+    The one SemDeDup operator; its registered rows differ only in where
+    the cells come from and how many each vector probes:
+
+    * ``trained=False`` — cells are the ``n_cells`` hash-sampled corpus
+      vectors (_ivf_centroids), ranked by rounded cosine (ties -> lowest
+      cell). ``trained=True`` — cells are ``n_cells`` integer-exact
+      Lloyd centroids (``centroids`` if staged, else ``n_iter`` rounds
+      from the hash-sample init), ranked by the exact dist*k+cell key.
+      Trained cells follow the data's density, so near-twins co-locate
+      more reliably — the SemDeDup paper's clustering stage.
+    * ``n_probe`` — each vector joins its top-``n_probe`` cells for pair
+      generation. Single assignment (1) is the family's measured recall
+      cap: near-twins straddling a cell boundary never meet (r8 fixture
+      measurement: 0.34 co-location recall hash-sample, 0.29 trained);
+      probing runner-up cells is the standard IVF fix. ``None`` derives
+      the probes from the cell count via the measured joint scale rule
+      (semdedup_probe_for_cells) — 6 at the 128-cell reference, 24 at the
+      1280-cell third-decade point — so scaling ``n_cells`` with the
+      corpus carries the recall dial along instead of silently
+      fragmenting neighborhoods (the refuted cells-only rule).
+
+    Pairs sharing several probed cells are generated once per shared
+    cell; they collapse in dedup_clusters' canonical edge distinct.
 
     Pair scoring precomputes each vector's norm ONCE (one fold per
     vector instead of two extra folds per PAIR): sim = dot/(na*nb) is
@@ -1971,45 +2005,99 @@ def semdedup_survivors(
     MAX_BUCKET_VECS and the cap silently drops ALL pair work (found by
     the 100x soak: x100 "finished" 3x faster than x10 because zero
     cells survived the cap). The default stays SEM_CELLS for oracle
-    parity at test SFs."""
-    emb = widen_scan(emb)
-    cent = _ivf_centroids(emb, id_col, vec_col, n_cells=n_cells)
-    # lazy checkpoint: `assigned` feeds FOUR consumers (ok-cells agg,
-    # pair sides a and b, the final corpus join) — without it the
-    # centroid crossJoin + max_by assignment recomputes per consumer,
-    # which is what kept the bench at ~7 s while the plan itself was
-    # sound (r6 verdict, What's wrong #4)
-    assigned = _ivf_assign(emb, cent, id_col, vec_col, dim=dim).localCheckpoint(
-        eager=False
+    parity at test SFs.
+
+    Scale shape: centroids broadcast, scoring map-side; top-p selection
+    is a per-vector collect over n_cells scored rows; pair-gen fan-out
+    is n_probe rows per vector but stays population-capped per cell."""
+    if n_probe is None:
+        n_probe = semdedup_probe_for_cells(n_cells)
+    # The float vector rides the top-p groupBy via first() where the
+    # scored fan-out is cheap to carry it through: the hash family
+    # scores ON it, and at n_cells <= SEM_CELLS carrying beat a
+    # join-back's extra exchange (bench: 4.48 -> 6.55 s with the
+    # join-back on the 2-probe row; the 32-cell trained row runs one
+    # job fewer carrying). Past that, the trained family — which scores
+    # only the quantized vector — joins it back from the checkpointed
+    # embq instead: at 128 cells the carry was 131 MB of array copy
+    # (2000 x 128 x 64 doubles, measured -0.8 s); at corpus scale it is
+    # corpus x k. The join is vid-keyed over corpus-sized sides.
+    carry = ("_vec",) if not trained or n_cells <= SEM_CELLS else ()
+    if trained:
+        vecs = _km_frame(widen_scan(emb), id_col, vec_col, raw="_vec")
+        if centroids is None:
+            centroids = _km_train(vecs, n_cells, n_iter, dim=dim)
+        top = _km_top_cells(vecs, centroids, n_cells, n_probe, dim=dim, carry=carry)
+    else:
+        vecs = widen_scan(emb).select(
+            F.col(id_col).alias("vid"), F.col(vec_col).alias("_vec")
+        )
+        cent = _ivf_centroids(vecs, "vid", "_vec", n_cells=n_cells)
+        top = _top_cells(
+            _ivf_scored(vecs, cent, "vid", "_vec", dim=dim),
+            F.struct((-F.col("cell_sim")).alias("s"), F.col("cell_id").alias("c")),
+            lambda x: x["c"],
+            n_probe,
+            carry,
+        )
+    if not carry:
+        top = top.join(vecs.select("vid", "_vec"), "vid")
+    top = (
+        # the norm rides THIS checkpoint — once per vector, codegen'd
+        # when dim is known, instead of once per probe-row in a second
+        # checkpointed pass inside the tail (round-12: two checkpoint
+        # jobs removed from the 6-probe row's fixture wall)
+        top.withColumn(
+            "_nrm",
+            _norm_u(F.col("_vec"), dim) if _use_unroll(dim) else _norm(F.col("_vec")),
+        )
+        # feeds BOTH the exploded assignment and the rank-1 report
+        .localCheckpoint(eager=False)
     )
-    return _semdedup_within_cells(assigned, threshold, id_col, vec_col, dim=dim)
+    assigned = (
+        top.select("vid", "_vec", "_nrm", F.explode("cells").alias("cell_id"))
+        # three consumers in the tail (ok agg, pair sides a+b)
+        .localCheckpoint(eager=False)
+    )
+    report = top.select("vid", F.element_at("cells", 1).alias("cell_id"))
+    return _semdedup_within_cells(assigned, report, threshold, id_col)
+
+
+def _top_cells(
+    scored: DataFrame,
+    key: Column,
+    cell,
+    n_probe: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vid, cells, *carry): each vector's ``n_probe`` lowest-``key``
+    cells, best first. ``key`` orders a scored (vid, cell) row and
+    ``cell`` maps a key back to its cell id; ``carry`` columns ride the
+    same groupBy via first() (constant per vid). A per-vector collect
+    over the bounded x cells fan-out, not a corpus-wide window."""
+    return scored.groupBy("vid").agg(
+        F.transform(
+            F.slice(F.array_sort(F.collect_list(key)), 1, n_probe), cell
+        ).alias("cells"),
+        *[F.first(c).alias(c) for c in carry],
+    )
 
 
 def _semdedup_within_cells(
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    report: DataFrame | None = None,
-    dim: int | None = None,
+    assigned: DataFrame, report: DataFrame, threshold: float, id_col: str
 ) -> DataFrame:
-    """Shared SemDeDup tail over ANY cell assignment (hash-sample IVF,
-    trained k-means, or multi-probe top-p): population-capped
+    """SemDeDup tail over a cell assignment: population-capped
     within-cell cosine pairs, transitive grouping, min-id survivor.
 
-    ``report`` is the one-row-per-vector frame the final projection
-    joins (defaults to ``assigned``; multi-probe passes the rank-1
-    assignment so output stays one row per vector while pairs generate
-    over every probed cell). Multi-probe pairs sharing several cells
-    are NOT pre-deduped here: dedup_clusters canonicalizes + distincts
-    its edge set anyway, so a pairs-level dropDuplicates was a whole
-    redundant exchange + AQE stage job (r10 verdict #6 — fixture-scale
-    wall in this family is job-count-dominated).
-
-    If ``assigned`` already carries a ``_nrm`` column (survivors_v2
-    computes it once per VECTOR inside the top-p checkpoint, not once
-    per probe-row here), the norm pass and its checkpoint are skipped —
-    one whole job removed from the fixture-scale wall."""
+    ``assigned`` is (vid, _vec, _nrm, cell_id), one row per probed cell,
+    with the norm computed once per vector upstream. ``report`` is the
+    one-row-per-vector (vid, cell_id) frame the final projection joins,
+    so output stays one row per vector while pairs generate over every
+    probed cell. Pairs sharing several probed cells are NOT pre-deduped
+    here: dedup_clusters canonicalizes + distincts its edge set anyway,
+    so a pairs-level dropDuplicates was a whole redundant exchange + AQE
+    stage job (r10 verdict #6 — fixture-scale wall in this family is
+    job-count-dominated)."""
     from databus_spark.operators.dedup import dedup_clusters
 
     ok = (
@@ -2018,22 +2106,7 @@ def _semdedup_within_cells(
         .where((F.col("_n") >= 2) & (F.col("_n") <= MAX_BUCKET_VECS))
         .select("cell_id")
     )
-    if "_nrm" in assigned.columns:
-        paired = assigned.join(F.broadcast(ok), "cell_id")
-    else:
-        # lazy checkpoint: both pair sides (a, b) derive from `paired` —
-        # the per-vector norm fold is interpreted HOF work and would run
-        # twice per vector without the barrier
-        nrm = (
-            _norm_u(F.col(vec_col), dim)
-            if _use_unroll(dim)
-            else _norm(F.col(vec_col))
-        )
-        paired = (
-            assigned.join(F.broadcast(ok), "cell_id")
-            .withColumn("_nrm", nrm)
-            .localCheckpoint(eager=False)
-        )
+    paired = assigned.join(F.broadcast(ok), "cell_id")
     # Explicit keyed repartition on BOTH pair sides, pinned at full
     # width (the fuzzy_join_pairs escape, measured here in r14): the
     # assigned table is small in BYTES (~6 MB at sf0.1), so AQE
@@ -2050,11 +2123,11 @@ def _semdedup_within_cells(
     # still a 2-task sim stage in that variant).
     par = assigned.sparkSession.sparkContext.defaultParallelism
     a = paired.select(
-        "cell_id", F.col(id_col).alias("ida"), F.col(vec_col).alias("va"),
+        "cell_id", F.col("vid").alias("ida"), F.col("_vec").alias("va"),
         F.col("_nrm").alias("na"),
     ).repartition(par, "cell_id")
     b = paired.select(
-        "cell_id", F.col(id_col).alias("idb"), F.col(vec_col).alias("vb"),
+        "cell_id", F.col("vid").alias("idb"), F.col("_vec").alias("vb"),
         F.col("_nrm").alias("nb"),
     ).repartition(par, "cell_id")
     pairs = (
@@ -2081,17 +2154,15 @@ def _semdedup_within_cells(
         .select("doc_a", "doc_b")
     )
     clusters = dedup_clusters(pairs).select(
-        F.col("doc_id").alias(id_col), "cluster_id"
+        F.col("doc_id").alias("vid"), "cluster_id"
     )
-    rep = assigned if report is None else report
     return (
-        rep.select(id_col, "cell_id")
-        .join(clusters, id_col, "left")
+        report.join(clusters, "vid", "left")
         .select(
-            id_col,
+            F.col("vid").alias(id_col),
             "cell_id",
-            F.coalesce(F.col("cluster_id"), F.col(id_col)).alias("cluster_id"),
-            (F.coalesce(F.col("cluster_id"), F.col(id_col)) == F.col(id_col)).alias(
+            F.coalesce(F.col("cluster_id"), F.col("vid")).alias("cluster_id"),
+            (F.coalesce(F.col("cluster_id"), F.col("vid")) == F.col("vid")).alias(
                 "is_survivor"
             ),
         )
@@ -2221,161 +2292,6 @@ def semdedup_dial(
     return n_cells, semdedup_probe_for_cells(n_cells)
 
 
-def semdedup_multiprobe_survivors(
-    emb: DataFrame,
-    threshold: float = SEM_THRESHOLD,
-    n_cells: int = SEM_CELLS,
-    n_probe: int = SEM_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """SemDeDup with MULTI-PROBE cell assignment: each vector joins its
-    top-``n_probe`` cells for pair generation (output stays one row per
-    vector, reported under its rank-1 cell). Single-assignment cells are
-    the family's measured recall cap — near-twins straddling a cell
-    boundary never meet (r8 fixture measurement: 0.34 co-location recall
-    hash-sample, 0.29 trained); probing the runner-up cell is the
-    standard IVF fix and the production lever SCALE.md names.
-
-    Scale shape unchanged: centroids broadcast, scoring map-side; top-p
-    selection is a per-vector collect over N_CELLS scored rows
-    (bounded, map-side-combinable); pair-gen fan-out doubles (2 rows
-    per vector) but stays population-capped per cell; pairs sharing
-    both probed cells dedup before clustering."""
-    emb = widen_scan(emb)
-    cent = _ivf_centroids(emb, id_col, vec_col, n_cells=n_cells)
-    scored = _ivf_scored(emb, cent, id_col, vec_col, dim=dim)
-    top = (
-        scored.groupBy(id_col)
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("cell_sim")).alias("s"),
-                            F.col("cell_id").alias("c"),
-                        )
-                    )
-                ),
-                1,
-                n_probe,
-            ).alias("_top"),
-            # the vector CARRIES here, unlike survivors_v2's join-back:
-            # at this variant's x n_cells=32 fan-out the carry is cheap
-            # and the join-back's extra exchange measurably lost
-            # (bench: 4.48 -> 6.55 s with the join-back; reverted)
-            F.first(vec_col).alias(vec_col),
-        )
-        # feeds BOTH the exploded assignment and the rank-1 report
-        .localCheckpoint(eager=False)
-    )
-    assigned = (
-        top.select(id_col, vec_col, F.explode(F.col("_top.c")).alias("cell_id"))
-        # four consumers in the tail (ok agg, pair sides a+b, norms)
-        .localCheckpoint(eager=False)
-    )
-    report = top.select(id_col, F.element_at("_top", 1)["c"].alias("cell_id"))
-    return _semdedup_within_cells(
-        assigned, threshold, id_col, vec_col, report=report, dim=dim
-    )
-
-
-def semdedup_survivors_v2(
-    emb: DataFrame,
-    threshold: float = SEM_THRESHOLD,
-    k: int = SEM_EVAL_CELLS,
-    n_iter: int = SEM_EVAL_ITER,
-    n_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """The production SemDeDup row at the MEASURED dial: trained
-    centroids (integer-exact Lloyd, staged train-once) + deep
-    multi-probe (top-n_probe by the dist*k+cell scalar key) at the
-    config semdedup_recall_eval pins (128 cells / 6 probes — recall
-    0.97/0.86 at scan 0.40/0.26 on the fixture SFs). Pair generation
-    stays population-capped per cell; pairs sharing several probed
-    cells dedup before clustering; output is one row per vector under
-    its rank-1 cell — the same contract as every survivors variant.
-
-    ``n_probe=None`` derives from the cell count via the measured
-    joint scale rule (semdedup_probe_for_cells) — 6 at the 128-cell
-    reference, 24 at the 1280-cell third-decade point — so scaling
-    ``k`` with the corpus carries the recall dial along instead of
-    silently fragmenting neighborhoods (the refuted cells-only rule)."""
-    if n_probe is None:
-        n_probe = semdedup_probe_for_cells(k)
-    embq = (
-        widen_scan(emb)
-        .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("_vec"),
-            _km_quant(F.col(vec_col)).alias("qv"),
-        )
-        .localCheckpoint(eager=False)  # quantization + scan run once
-    )
-    cent = centroids
-    if cent is None:
-        cent = _km_init(embq, k)
-        for _ in range(n_iter):
-            cent = _km_update(_km_assign(embq, cent, k, dim=dim))
-    dist = (
-        _sqdist_u(F.col("qv"), F.col("cent"), dim)
-        if _use_unroll(dim)
-        else F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cent"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-    )
-    key = dist * F.lit(k).cast("long") + F.col("cell_id").cast("long")
-    top = (
-        embq.crossJoin(F.broadcast(cent))
-        .select("vid", key.alias("_key"))
-        .groupBy("vid")
-        .agg(F.slice(F.array_sort(F.collect_list("_key")), 1, n_probe).alias("_ks"))
-        # join the raw vector back from the checkpointed embq instead of
-        # carrying it through the x k crossJoin only to be first()'d —
-        # at fixture scale that carry was 131 MB of array copy
-        # (2000 x 128 x 64 doubles, measured -0.8 s); at corpus scale it
-        # is corpus x k. The join is vid-keyed over corpus-sized sides.
-        .join(embq.select("vid", "_vec"), "vid")
-        # the norm rides THIS checkpoint — once per vector, codegen'd
-        # when dim is known, instead of once per probe-row in a second
-        # checkpointed pass inside the shared tail (round-12: two
-        # checkpoint jobs removed from this variant's fixture wall)
-        .withColumn(
-            "_nrm",
-            _norm_u(F.col("_vec"), dim) if _use_unroll(dim) else _norm(F.col("_vec")),
-        )
-        # feeds BOTH the exploded assignment and the rank-1 report
-        .localCheckpoint(eager=False)
-    )
-    assigned = (
-        top.select(
-            F.col("vid").alias(id_col),
-            F.col("_vec").alias(vec_col),
-            "_nrm",
-            F.explode(
-                F.transform(F.col("_ks"), lambda x: (x % k).cast("int"))
-            ).alias("cell_id"),
-        )
-        # three consumers in the tail (ok agg, pair sides a+b); the tail
-        # skips its own norm pass + checkpoint on seeing _nrm
-        .localCheckpoint(eager=False)
-    )
-    report = top.select(
-        F.col("vid").alias(id_col),
-        (F.element_at("_ks", 1) % k).cast("int").alias("cell_id"),
-    )
-    return _semdedup_within_cells(
-        assigned, threshold, id_col, vec_col, report=report, dim=dim
-    )
-
-
 def semdedup_survivors_v2_sql(
     threshold: float = SEM_THRESHOLD,
     k: int = SEM_EVAL_CELLS,
@@ -2480,6 +2396,21 @@ _KM_QUANT_SQL = (
 )
 
 
+def _km_frame(
+    emb: DataFrame, id_col: str, vec_col: str, raw: str | None = None
+) -> DataFrame:
+    """(vid, [raw,] qv): the quantized vectors, checkpointed so the scan
+    and the quantization run ONCE however many Lloyd rounds, assignments
+    or probes read them. ``raw`` names a column that keeps the float
+    vector beside its quantization."""
+    cols = [F.col(id_col).alias("vid")]
+    if raw is not None:
+        cols.append(F.col(vec_col).alias(raw))
+    return emb.select(*cols, _km_quant(F.col(vec_col)).alias("qv")).localCheckpoint(
+        eager=False
+    )
+
+
 def _km_init(embq: DataFrame, k: int) -> DataFrame:
     """k seed centroids by lowest seeded hash of the vector id (the
     _ivf_centroids hash-sample init), renumbered 0..k-1 in hash order so
@@ -2498,18 +2429,18 @@ def _km_init(embq: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _km_assign(
+def _km_scored(
     embq: DataFrame,
     cent: DataFrame,
     k: int,
-    carry: tuple[str, ...] = (),
     dim: int | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(vid, qv, *carry, cell_id, dist): nearest centroid per vector —
-    centroids broadcast, squared-L2 in exact bigints, argmin as a
-    map-side-combinable min over the scalar key dist*k + cell (ties ->
-    lowest cell, both engines identical). ``carry`` columns ride the
-    aggregation via first() (constant per vid)."""
+    """(vid, *carry, _key): every vector against the broadcast
+    centroids, scored map-side by the exact key dist*k + cell — squared
+    L2 in bigints, so ordering by it ranks centroids by distance with
+    ties to the lowest cell, identically in both engines. ``dim`` opts
+    into the unrolled codegen distance."""
     dist = (
         _sqdist_u(F.col("qv"), F.col("cent"), dim)
         if _use_unroll(dim)
@@ -2520,20 +2451,24 @@ def _km_assign(
         )
     )
     key = dist * F.lit(k).cast("long") + F.col("cell_id").cast("long")
-    scored = embq.crossJoin(F.broadcast(cent)).select(
-        "vid", "qv", *carry, key.alias("_key")
-    )
+    return embq.crossJoin(F.broadcast(cent)).select("vid", *carry, key.alias("_key"))
+
+
+def _km_assign(
+    embq: DataFrame,
+    cent: DataFrame,
+    k: int,
+    dim: int | None = None,
+) -> DataFrame:
+    """(vid, qv, cell_id, dist): nearest centroid per vector — argmin
+    as a map-side-combinable min over the _km_scored key."""
     return (
-        scored.groupBy("vid")
-        .agg(
-            F.min("_key").alias("_key"),
-            F.first("qv").alias("qv"),
-            *[F.first(c).alias(c) for c in carry],
-        )
+        _km_scored(embq, cent, k, dim, ("qv",))
+        .groupBy("vid")
+        .agg(F.min("_key").alias("_key"), F.first("qv").alias("qv"))
         .select(
             "vid",
             "qv",
-            *carry,
             (F.col("_key") % k).cast("int").alias("cell_id"),
             F.expr(f"_key div {int(k)}").alias("dist"),
         )
@@ -2558,6 +2493,36 @@ def _km_update(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _km_train(
+    embq: DataFrame, k: int, n_iter: int, dim: int | None = None
+) -> DataFrame:
+    """Centroids (cell_id, cent) after n_iter exact Lloyd rounds over a
+    _km_frame, from the hash-sample init."""
+    cent = _km_init(embq, k)
+    for _ in range(n_iter):
+        cent = _km_update(_km_assign(embq, cent, k, dim=dim))
+    return cent
+
+
+def _km_top_cells(
+    embq: DataFrame,
+    cent: DataFrame,
+    k: int,
+    n_probe: int,
+    dim: int | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vid, cells, *carry): each vector's n_probe nearest centroids,
+    nearest first, by the _km_scored key."""
+    return _top_cells(
+        _km_scored(embq, cent, k, dim, carry),
+        F.col("_key"),
+        lambda x: (x % k).cast("int"),
+        n_probe,
+        carry,
+    )
+
+
 def kmeans_lloyd(
     emb: DataFrame,
     k: int = KM_K,
@@ -2568,15 +2533,7 @@ def kmeans_lloyd(
 ) -> DataFrame:
     """Final centroids (cell_id, cent: array<bigint>) after n_iter exact
     Lloyd rounds from the hash-sample init."""
-    embq = (
-        widen_scan(emb)
-        .select(F.col(id_col).alias("vid"), _km_quant(F.col(vec_col)).alias("qv"))
-        .localCheckpoint(eager=False)  # quantization runs ONCE, not per round
-    )
-    cent = _km_init(embq, k)
-    for _ in range(n_iter):
-        cent = _km_update(_km_assign(embq, cent, k, dim=dim))
-    return cent
+    return _km_train(_km_frame(widen_scan(emb), id_col, vec_col), k, n_iter, dim=dim)
 
 
 def kmeans_assign(
@@ -2588,23 +2545,16 @@ def kmeans_assign(
     centroids: DataFrame | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """(vid, qv, cell_id, dist) against the TRAINED centroids.
+    """(vid, qv, cell_id, dist) against the given or trained centroids.
 
     ``centroids`` short-circuits training with a pre-trained
     (cell_id, cent) frame — the staged-model serve path (a clustering
     model trains once at ingest and assigns everywhere; results are
     identical because training is deterministic)."""
-    embq = (
-        widen_scan(emb)
-        .select(F.col(id_col).alias("vid"), _km_quant(F.col(vec_col)).alias("qv"))
-        .localCheckpoint(eager=False)
-    )
-    cent = centroids
-    if cent is None:
-        cent = _km_init(embq, k)
-        for _ in range(n_iter):
-            cent = _km_update(_km_assign(embq, cent, k, dim=dim))
-    return _km_assign(embq, cent, k, dim=dim)
+    embq = _km_frame(widen_scan(emb), id_col, vec_col)
+    if centroids is None:
+        centroids = _km_train(embq, k, n_iter, dim=dim)
+    return _km_assign(embq, centroids, k, dim=dim)
 
 
 def _kmeans_ctes(
@@ -2668,59 +2618,6 @@ def kmeans_summary_sql(k: int = KM_K, n_iter: int = KM_ITER) -> str:
         f"WITH {ctes} SELECT cell_id, CAST(count(*) AS BIGINT) AS n_members,"
         f" CAST(sum(dist) AS BIGINT) AS inertia FROM a{n + 1} GROUP BY cell_id"
     )
-
-
-# SemDeDup over TRAINED cells — the paper's actual pipeline shape
-# (arXiv:2303.09540 clusters with k-means, then dedups within clusters).
-SEM_TRAINED_K = 32     # same cell density the hash-sample variant uses
-SEM_TRAINED_ITER = 2
-
-
-def semdedup_trained_survivors(
-    emb: DataFrame,
-    threshold: float = SEM_THRESHOLD,
-    k: int = SEM_TRAINED_K,
-    n_iter: int = SEM_TRAINED_ITER,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """SemDeDup with cells from the integer-exact Lloyd trainer instead
-    of the hash-sample init: train k centroids (kmeans_lloyd), assign
-    each vector to its nearest trained cell, then run the shared
-    within-cell cosine dedup tail. Trained cells follow the data's
-    density, so near-twins land in the same cell more reliably than
-    under sampled-point cells — the fidelity gap between the fast
-    variant and the paper. Same scale shape: all k-means rounds are
-    broadcast+map-side with bounded shuffles, the tail is
-    population-capped pair-gen."""
-    embq = (
-        widen_scan(emb)
-        .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("_vec"),
-            _km_quant(F.col(vec_col)).alias("qv"),
-        )
-        .localCheckpoint(eager=False)  # quantization + scan run once
-    )
-    cent = centroids
-    if cent is None:
-        cent = _km_init(embq, k)
-        for _ in range(n_iter):
-            cent = _km_update(_km_assign(embq, cent, k, dim=dim))
-    assigned = (
-        _km_assign(embq, cent, k, carry=("_vec",), dim=dim)
-        .select(
-            F.col("vid").alias(id_col),
-            F.col("_vec").alias(vec_col),
-            "cell_id",
-        )
-        # feeds FOUR consumers in the tail (ok agg, both pair sides,
-        # final corpus join) — same barrier rule as semdedup_survivors
-        .localCheckpoint(eager=False)
-    )
-    return _semdedup_within_cells(assigned, threshold, id_col, vec_col, dim=dim)
 
 
 def semdedup_trained_survivors_sql(
@@ -2836,38 +2733,14 @@ def semdedup_recall_eval(
             emb, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col, dim=dim
         )
     h = portable_hash64(F.col(id_col).cast("string"), seed=F.lit("sdre"))
-    samp = (
-        emb.orderBy(h.asc(), F.col(id_col).asc())
-        .limit(sample)
-        .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            _km_quant(F.col(vec_col)).alias("qv"),
-        )
-        # three consumers: probe scoring + both pair sides
-        .localCheckpoint(eager=False)
+    # three consumers: probe scoring + both pair sides
+    samp = _km_frame(
+        emb.orderBy(h.asc(), F.col(id_col).asc()).limit(sample),
+        id_col,
+        vec_col,
+        raw="vec",
     )
-    dist = (
-        _sqdist_u(F.col("qv"), F.col("cent"), dim)
-        if _use_unroll(dim)
-        else F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cent"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-    )
-    key = dist * F.lit(k).cast("long") + F.col("cell_id").cast("long")
-    probes = (
-        samp.crossJoin(F.broadcast(cent))
-        .select("vid", key.alias("_key"))
-        .groupBy("vid")
-        .agg(
-            F.transform(
-                F.slice(F.array_sort(F.collect_list("_key")), 1, n_probe),
-                lambda x: (x % k).cast("int"),
-            ).alias("cells")
-        )
-    )
+    probes = _km_top_cells(samp, cent, k, n_probe, dim=dim)
     side = samp.select("vid", "vec").join(probes, "vid").localCheckpoint(eager=False)
     # stream side repartitioned, build side broadcast (r14): the sample
     # descends from .limit(), which collapses to ONE partition, so the
@@ -3073,7 +2946,7 @@ def semdedup_incremental(
     and ``base_index`` short-circuit training/assignment with the
     staged artifacts; ``base`` is only consulted to build them.
     ``n_probe=None`` derives from ``k`` via the measured joint scale
-    rule (semdedup_probe_for_cells), like survivors_v2."""
+    rule (semdedup_probe_for_cells), like semdedup_survivors."""
     if n_probe is None:
         n_probe = semdedup_probe_for_cells(k)
     if centroids is None:
@@ -3090,36 +2963,11 @@ def semdedup_incremental(
     # ran as ONE task otherwise (r14 stage metrics: four sequential
     # 1-task stages of 0.9-2.1 CPU-s). No-op when the delta arrives
     # already split.
-    embq = (
-        widen_scan(incoming.select(id_col, vec_col))
-        .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("_vec"),
-            _km_quant(F.col(vec_col)).alias("qv"),
-        )
-        .localCheckpoint(eager=False)
+    embq = _km_frame(
+        widen_scan(incoming.select(id_col, vec_col)), id_col, vec_col, raw="_vec"
     )
-    dist = (
-        _sqdist_u(F.col("qv"), F.col("cent"), dim)
-        if _use_unroll(dim)
-        else F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cent"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-    )
-    key = dist * F.lit(k).cast("long") + F.col("cell_id").cast("long")
-    probe_cells = (
-        embq.crossJoin(F.broadcast(centroids))
-        .select("vid", key.alias("_key"))
-        .groupBy("vid")
-        .agg(F.slice(F.array_sort(F.collect_list("_key")), 1, n_probe).alias("_ks"))
-        .select(
-            "vid",
-            F.explode(
-                F.transform(F.col("_ks"), lambda x: (x % k).cast("int"))
-            ).alias("cell_id"),
-        )
+    probe_cells = _km_top_cells(embq, centroids, k, n_probe, dim=dim).select(
+        "vid", F.explode("cells").alias("cell_id")
     )
     ok = (
         base_index.groupBy("cell_id")

@@ -1244,8 +1244,10 @@ def semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast/map-side; the dedup tail is the shared population-capped
     pair-gen. Assigns against the STAGED trained model (train-once/
     serve-many; staged == inline pinned by test)."""
-    return similarity.semdedup_trained_survivors(
+    return similarity.semdedup_survivors(
         load_table(spark, sf_dir, "embeddings"),
+        n_cells=similarity.SEM_TRAINED_K,
+        trained=True,
         centroids=_staged_kmeans(
             spark, sf_dir, similarity.SEM_TRAINED_K, similarity.SEM_TRAINED_ITER
         ),
@@ -1271,10 +1273,10 @@ def semdedup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing the runner-up cell lifts co-location recall of true
     cosine>=0.4 pairs from 0.34 to 0.56 on the sf0.01 fixture, the
     standard IVF multi-probe fix. Pair fan-out doubles but stays
-    population-capped; pairs sharing both probed cells dedup before
-    clustering."""
-    return similarity.semdedup_multiprobe_survivors(
-        load_table(spark, sf_dir, "embeddings")
+    population-capped; a pair sharing both probed cells is generated
+    twice and collapses in dedup_clusters' canonical edge distinct."""
+    return similarity.semdedup_survivors(
+        load_table(spark, sf_dir, "embeddings"), n_probe=similarity.SEM_NPROBE
     )
 
 
@@ -1284,13 +1286,20 @@ def semdedup_survivors_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means cells + 6-probe assignment at the 128-cell config
     semdedup_recall_eval pins (co-location recall 0.97/0.86 vs the r8
     hash/2-probe config's 0.56). Centroids from the staged train-once
-    model; everything else is the shared population-capped within-cell
-    tail all survivors variants ride."""
+    model; the rest is semdedup_survivors, the operator every survivors
+    row calls."""
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _staged_kmeans(
         spark, sf_dir, similarity.SEM_EVAL_CELLS, similarity.SEM_EVAL_ITER
     )
-    return similarity.semdedup_survivors_v2(emb, centroids=cent, dim=_emb_dim(spark, sf_dir))
+    return similarity.semdedup_survivors(
+        emb,
+        n_cells=similarity.SEM_EVAL_CELLS,
+        dim=_emb_dim(spark, sf_dir),
+        trained=True,
+        n_probe=None,
+        centroids=cent,
+    )
 
 
 @query("semdedup_recall_eval", similarity.semdedup_recall_eval_sql())

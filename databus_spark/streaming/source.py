@@ -45,10 +45,8 @@ def stage_changelog(
 
     The global ntile window + per-chunk coalesce(1) below funnel through
     a single task — acceptable for staging test replays, a driver-width
-    bottleneck at scale. The production path is ``stage_changelog_ranged``
-    below (repartitionByRange + one parallel partitioned write); this
-    ntile form is kept because chunk count and window-atomicity must be
-    byte-deterministic for the replay tests.
+    bottleneck at scale. The ntile form is used because chunk count and
+    window-atomicity must be byte-deterministic for the replay tests.
 
     With ``route_buckets`` set, the producer's hash route is materialized
     and the layout becomes chunk=<i>/route_partition=<p>/ — key-mod
@@ -131,36 +129,3 @@ __all__ = [
     "envelope_schema_of",
     "ENVELOPE_COLS",
 ]
-
-
-def stage_changelog_ranged(
-    log: DataFrame,
-    stage_dir: str,
-    n_chunks: int = 8,
-    order_col: str = "scn",
-) -> None:
-    """PRODUCTION staging path: range-partition the changelog by SCN and
-    write every chunk in ONE parallel job — no global window, no
-    coalesce(1), no driver-width stage. The scale-safe alternative the
-    fixture-grade ``stage_changelog`` names in its docstring.
-
-    Guarantees kept from the fixture path:
-      * replay order — the file stream lists chunk dirs in name order,
-        and range partitioning makes chunk i's SCNs all <= chunk i+1's;
-      * txn-window atomicity — rows sharing an SCN land in the same
-        range partition (range boundaries are between distinct values).
-    Differences: chunk boundaries are sampled (Spark's range
-    partitioner), so exact chunk populations are not bit-reproducible
-    run-to-run — fine for production ingest, not for byte-deterministic
-    replay tests.
-
-    A Spark partitioned write cannot name directories by an ordinal
-    alone, so the chunk id is materialized as a column via
-    spark_partition_id() AFTER repartitionByRange — ids are ordered by
-    range, giving chunk=00000..chunk=<n-1> dirs that sort in SCN order.
-    """
-    ranged = log.repartitionByRange(n_chunks, F.col(order_col))
-    with_chunk = ranged.withColumn(
-        "chunk", F.format_string("%05d", F.spark_partition_id() + 1)
-    )
-    with_chunk.write.mode("overwrite").partitionBy("chunk").parquet(stage_dir)

@@ -96,7 +96,9 @@ def test_semdedup_trained_consistent_with_fast_variant(spark, sf_dir):
     from databus_spark.operators import similarity as S
 
     emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
-    rows = S.semdedup_trained_survivors(emb).collect()
+    rows = S.semdedup_survivors(
+        emb, n_cells=S.SEM_TRAINED_K, trained=True, n_iter=S.SEM_TRAINED_ITER
+    ).collect()
     assert len(rows) == emb.count()
     by_cluster = {}
     cells = {}
@@ -124,7 +126,7 @@ def test_semdedup_multiprobe_supersets_single_probe_pairs(spark, sf_dir):
         (r["vec_id"], r["cluster_id"])
         for r in S.semdedup_survivors(emb).collect()
     }
-    rows = S.semdedup_multiprobe_survivors(emb).collect()
+    rows = S.semdedup_survivors(emb, n_probe=S.SEM_NPROBE).collect()
     assert len(rows) == emb.count()
     by_cluster = {}
     for r in rows:

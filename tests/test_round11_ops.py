@@ -145,9 +145,15 @@ def test_unrolled_dim_path_identical(spark, sf_dir):
     dim = emb.selectExpr("size(embedding) d").first()["d"]
     for fn in (
         lambda d: S.semdedup_survivors(emb, dim=d),
-        lambda d: S.semdedup_multiprobe_survivors(emb, dim=d),
-        lambda d: S.semdedup_survivors_v2(emb, dim=d),
-        lambda d: S.semdedup_trained_survivors(emb, dim=d),
+        lambda d: S.semdedup_survivors(emb, dim=d, n_probe=S.SEM_NPROBE),
+        lambda d: S.semdedup_survivors(
+            emb, n_cells=S.SEM_EVAL_CELLS, dim=d, trained=True, n_probe=None,
+            n_iter=S.SEM_EVAL_ITER,
+        ),
+        lambda d: S.semdedup_survivors(
+            emb, n_cells=S.SEM_TRAINED_K, dim=d, trained=True,
+            n_iter=S.SEM_TRAINED_ITER,
+        ),
         lambda d: S.semdedup_recall_eval(emb, dim=d),
         lambda d: S.kmeans_lloyd(emb, k=8, n_iter=2, dim=d).select(
             "cell_id", "cent"

@@ -114,60 +114,3 @@ def test_multimodal_frame_sample_plan_shape(spark, sf_dir):
         assert idxs == list(range(len(idxs)))  # contiguous frame indices
         assert len(fr) == (sizes[doc_id] - 1) // 64 + 1
         assert all(off == i * 64 for i, off in sorted(fr))
-
-
-def test_ranged_staging_parallel_and_window_atomic(spark, sf_dir, tmp_path):
-    """stage_changelog_ranged: one parallel job, chunk dirs sort in SCN
-    order, no txn window split across chunks, and the streamed replay
-    yields exactly the staged rows."""
-    import os
-    import re
-
-    from pyspark.sql import functions as F
-
-    from databus_spark.envelope import lineitem_changelog
-    from databus_spark.streaming.source import changelog_stream, stage_changelog_ranged
-
-    log = lineitem_changelog(spark, sf_dir).localCheckpoint(eager=True)
-    stage = str(tmp_path / "ranged")
-    stage_changelog_ranged(log, stage, n_chunks=4)
-
-    chunks = sorted(d for d in os.listdir(stage) if d.startswith("chunk="))
-    assert len(chunks) >= 2  # range partitioner may merge tiny ranges
-
-    # chunk dirs sort in SCN order: max(scn) of chunk i <= min(scn) of i+1
-    spans = []
-    for c in chunks:
-        df = spark.read.parquet(os.path.join(stage, c))
-        row = df.agg(F.min("scn").alias("lo"), F.max("scn").alias("hi")).collect()[0]
-        spans.append((row["lo"], row["hi"]))
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, f"chunk ranges overlap: {spans}"
-
-    # txn-window atomicity: every scn lives in exactly one chunk
-    staged = spark.read.option("basePath", stage).parquet(stage + "/chunk=*")
-    n_split = (
-        staged.groupBy("scn")
-        .agg(F.countDistinct("chunk").alias("n_chunks"))
-        .where(F.col("n_chunks") > 1)
-        .count()
-    )
-    assert n_split == 0
-
-    # full-fidelity replay through the file stream
-    out = str(tmp_path / "out")
-    q = (
-        changelog_stream(spark, stage, log.schema)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    replayed = spark.read.schema(log.schema).parquet(out)
-    assert replayed.count() == log.count()
-    assert (
-        replayed.select("scn", "key_str").exceptAll(log.select("scn", "key_str")).count()
-        == 0
-    )
