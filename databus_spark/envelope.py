@@ -110,8 +110,10 @@ _STAGE_ROOT: str | None = None
 
 
 def _staged(kind: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     if os.environ.get("DATABUS_CACHE_CHANGELOGS") != "1":
@@ -119,6 +121,8 @@ def _staged(kind: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
     global _STAGE_ROOT
     if _STAGE_ROOT is None:
         _STAGE_ROOT = tempfile.mkdtemp(prefix="databus_staged_")
+        # per-process scratch: nothing reads it once this process exits
+        atexit.register(shutil.rmtree, _STAGE_ROOT, True)
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(_STAGE_ROOT, f"{kind.replace(':', '_')}_{digest}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):

@@ -28,6 +28,7 @@ exactly as BootstrapCheckpointHandler does.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +41,7 @@ from databus_spark.streaming.checkpoint import (
     MODE_SNAPSHOT,
     Checkpoint,
     FileCheckpointProvider,
+    _require_mode,
 )
 from databus_spark.streaming.source import changelog_stream
 
@@ -89,12 +91,15 @@ class BootstrapController:
     # -- relay side -----------------------------------------------------------
     def retained_min_scn(self) -> int | None:
         """Smallest SCN still in the retention window (buffer minScn);
-        None when the window holds nothing."""
+        None when the window holds nothing. A chunk that cannot be read
+        raises: serving it as an empty window would force a bootstrap."""
         try:
             df = self.spark.read.schema(self.schema).parquet(self.stage_dir + "/chunk=*")
-            return df.agg(F.min("scn")).collect()[0][0]
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+        return df.agg(F.min("scn")).collect()[0][0]
 
     def check_availability(self, from_scn: int) -> None:
         """The relay's SCN check: streaming from a pruned SCN raises
@@ -187,15 +192,16 @@ class BootstrapController:
 
         self.last_catchup_rows = 0
         for src in self.sources[ckpt.bootstrap_catchup_source_index:]:
-            catchup = log.where(
-                (F.col("source") == src)
-                & (F.col("scn") > start_scn)
-                & (F.col("scn") <= target_scn)
-            )
-            n = catchup.count()
-            if n > 0:
-                self.store.merge(catchup)
-                self.last_catchup_rows += n
+            # a head that did not move leaves (start, target] empty: no job.
+            # Otherwise the merge counts the rows on its write and commits
+            # nothing for a source with none.
+            if target_scn > start_scn:
+                catchup = log.where(
+                    (F.col("source") == src)
+                    & (F.col("scn") > start_scn)
+                    & (F.col("scn") <= target_scn)
+                )
+                self.last_catchup_rows += self.store.merge(catchup).rows
             ckpt.advance_after_catchup_phase(target_scn)
             self._persist()
         return target_scn
@@ -223,9 +229,9 @@ class BootstrapController:
             start_scn = self.snapshot_phase()
         else:
             start_scn = ckpt.bootstrap_start_scn
-        assert ckpt.consumption_mode == MODE_CATCHUP
+        _require_mode(ckpt.consumption_mode, (MODE_CATCHUP,), "catchup_phase")
         self.catchup_phase(start_scn)
-        assert ckpt.consumption_mode == MODE_ONLINE
+        _require_mode(ckpt.consumption_mode, (MODE_ONLINE,), "bootstrap resume online")
         self._persist()
 
     # -- consumer entry point -------------------------------------------------

@@ -1,11 +1,13 @@
 """Live stream metrics: the DbusEventsStatisticsCollector / UnifiedClientStats
 operational layer (SURVEY §2.6 A2-A5, §7 Phase 5).
 
-A StreamingQueryListener collects per-batch progress (rows, duration,
-rates) — the engine's JMX-mbean analog — and a small aggregation turns
-the collected history into the reference's headline ops metrics
-(timeLag/percentiles, per-source counts). The listener is push-based
-exactly like the reference's internal listeners on the event buffer
+A StreamingQueryListener collects per-batch progress — input rows, the
+triggerExecution duration and the input rate — as the engine's
+JMX-mbean analog, and ``summary()`` rolls the history up into batch
+count, total rows, total duration and p50/p95/p99 batch duration. It
+does not collect the reference's timeLag (SCN or event-time lag) nor
+per-source event counts. The listener is push-based like the
+reference's internal listeners on the event buffer
 (DbusEventsStatisticsCollector registered at append/stream time).
 """
 

@@ -98,7 +98,9 @@ def test_catchup_replays_moving_head(spark, sf_dir, tmp_path):
     target_scn = ctl.catchup_phase(start_scn)
     assert ctl.checkpoint.consumption_mode == "ONLINE_CONSUMPTION"
     assert target_scn > start_scn
-    assert ctl.last_catchup_rows > 0  # catchup actually replayed rows
+    # catchup replayed exactly the (start, target] range, counted by its merge
+    replayed = log.where((F.col("scn") > start_scn) & (F.col("scn") <= target_scn)).count()
+    assert ctl.last_catchup_rows == replayed > 0
 
     expected = batch_snapshot(log, key_cols=("source", "key_str"))
     assert _rows(store.read()) == _rows(expected)
@@ -138,6 +140,35 @@ def test_empty_retention_window_raises_scn_not_found(spark, sf_dir, tmp_path):
     )
     with pytest.raises(SCNNotFoundError, match="empty"):
         ctl.check_availability(0)
+
+
+def test_unreadable_chunk_raises_the_read_error_not_scn_not_found(spark, sf_dir, tmp_path):
+    """A corrupt chunk is a fault to surface, not an empty window that
+    sends the consumer into a full bootstrap."""
+    log = orders_changelog(spark, sf_dir)
+    chunk = tmp_path / "stage" / "chunk=00001"
+    chunk.mkdir(parents=True)
+    (chunk / "part-00000.parquet").write_bytes(b"not a parquet file")
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"))
+    ctl = BootstrapController(
+        spark, log, str(tmp_path / "stage"), log.schema, store, ["orders"]
+    )
+    with pytest.raises(Exception) as raised:
+        ctl.check_availability(0)
+    assert not isinstance(raised.value, SCNNotFoundError)
+    assert "parquet" in str(raised.value).lower()
+
+
+def test_bootstrap_mode_invariant_raises_without_assert(spark, sf_dir, tmp_path):
+    """With no sources the snapshot phase never reaches catchup; the
+    invariant check raises under ``python -O`` too."""
+    from databus_spark.streaming.checkpoint import InvalidCheckpointTransition
+
+    log = orders_changelog(spark, sf_dir)
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"))
+    ctl = BootstrapController(spark, log, str(tmp_path / "stage"), log.schema, store, [])
+    with pytest.raises(InvalidCheckpointTransition, match="catchup_phase"):
+        ctl.bootstrap(0)
 
 
 def test_checkpoint_rejects_illegal_transition():

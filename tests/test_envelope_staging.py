@@ -90,3 +90,32 @@ def test_bpe_staged_fingerprint_sees_text_content(spark):
     )
     assert fp(a) == fp(a)
     assert fp(a) != fp(b)
+
+
+def test_stage_root_is_removed_at_exit(sf_dir, tmp_path):
+    """Each process's stage root is scratch: it must not outlive the
+    process that made it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "import databus_spark.envelope as env\n"
+        "from databus_spark.session import build_session\n"
+        "spark = build_session('stage_root_exit', cpus=1)\n"
+        f"env.orders_changelog(spark, {sf_dir!r})\n"
+        "print(env._STAGE_ROOT)\n"
+    )
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = {**os.environ, "TMPDIR": str(tmpdir), "DATABUS_CACHE_CHANGELOGS": "1"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    stage_root = out.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(stage_root) == str(tmpdir)  # it was made under TMPDIR
+    assert [p for p in os.listdir(tmpdir) if p.startswith("databus_staged_")] == []

@@ -3,10 +3,10 @@
 
 curation_decisions_v2 composes four doc_id-keyed derivations; the x100
 soak records one aggregate peak-task-memory number (3.0 GB in r8).
-This tool runs each derivation under its own job group on the
-soak-staged corpus and parses the event log, so the peak attributes to
-a stage instead of a family. Reuses tools/soak10x.py's fixture and
-event-log parser.
+This tool runs each derivation in its own perfbench.tracing span on the
+soak-staged corpus and attributes the event log to the spans, so the
+peak attributes to a stage instead of a family. Reuses tools/soak10x.py's
+fixture.
 
 Usage: python tools/curation_attrib.py [--dir /tmp/databus_soak10x]
        (run after soak10x has staged the target scale)
@@ -17,14 +17,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-EVENT_DIR = "/tmp/databus_curation_attrib_events"
 
 
 def main() -> None:
@@ -32,21 +27,11 @@ def main() -> None:
     ap.add_argument("--dir", default="/tmp/databus_soak10x")
     args = ap.parse_args()
 
-    from soak10x import parse_event_log
-
     from databus_spark.session import build_session
+    from tools.traced import TracedRun
 
-    shutil.rmtree(EVENT_DIR, ignore_errors=True)
-    os.makedirs(EVENT_DIR, exist_ok=True)
-    spark = build_session(
-        "databus_curation_attrib",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{EVENT_DIR}",
-            "spark.eventLog.compress": "false",
-        },
-    )
-    sc = spark.sparkContext
+    run = TracedRun("curation_attrib")
+    spark = run.attach(build_session("databus_curation_attrib", extra_conf=run.conf))
 
     from pyspark.sql import functions as F
 
@@ -67,26 +52,22 @@ def main() -> None:
         "decontaminate_8gram": lambda: decontaminate(corpus, benchmark),
         "lm_train_score": lambda: text.lm_quality_score(docs),
     }
-    walls = {}
     for name, fn in stages.items():
-        sc.setJobGroup(name, name)
-        t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
-        walls[name] = round(time.time() - t0, 2)
-        print(f"{name}: {walls[name]}s", flush=True)
-    sc.setJobGroup("idle", "idle")
-    spark.stop()
+        with run.tracer.span(name):
+            fn().write.format("noop").mode("overwrite").save()
+        span = run.tracer.spans[-1]
+        print(f"{name}: {span.end - span.start:.2f}s", flush=True)
+    run.finish()
 
-    metrics = parse_event_log(EVENT_DIR)
     out = {}
-    for name in stages:
-        m = metrics.get(name, {})
-        out[name] = {
-            "wall_s": walls[name],
-            "peak_task_mem_mb": round(m.get("peak_task_mem_b", 0) / 1e6, 1),
-            "shuffle_mb": round(m.get("shuffle_write_b", 0) / 1e6, 1),
-            "spill_mb": round(m.get("spill_b", 0) / 1e6, 1),
-            "n_tasks": m.get("n_tasks", 0),
+    for span in run.tracer.spans:
+        m = run.metrics(span)
+        out[span.name] = {
+            "wall_s": round(m["wall_s"], 2),
+            "peak_task_mem_mb": round(m["peak_execution_memory"] / 1e6, 1),
+            "shuffle_mb": round(m["shuffle_write_bytes"] / 1e6, 1),
+            "spill_mb": round(m["spill_bytes"] / 1e6, 1),
+            "n_tasks": m["tasks"],
         }
     print(json.dumps(out, indent=2))
 

@@ -1,8 +1,14 @@
-"""Generate PLANS.md: formatted physical plans of headline queries."""
-import io, sys
+"""Generate PLANS.md: formatted physical plans of headline queries.
+
+Usage: python tools/dump_plans.py
+"""
+import io
+import os
+import sys
 from contextlib import redirect_stdout
-from databus_spark.session import build_session
-from databus_spark.registry import QUERIES
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADLINE = [
     ("snapshot_orders", "K4/A6 compaction: single shuffle, partial max_by"),
@@ -51,26 +57,36 @@ HEADLINE = [
     ("release_gate_utility", "suppression-cost report: one map-combinable per-lang agg over the gate verdict, exact scaled-div fractions"),
 ]
 
-spark = build_session("plans", cpus=8)
 sf = "/root/testdata/sf0.001"
-out = []
-out.append("""# PLANS — physical-plan evidence for headline queries
+HEADER = """# PLANS — physical-plan evidence for headline queries
 
 Generated from `.explain("formatted")` at sf0.001, local[8]
 (regenerate with `python tools/dump_plans.py` after plan-affecting
 changes). The shapes asserted here are pinned by `tests/test_plans.py`;
 this file is the human-readable audit trail. Exchange/Join/codegen
 shapes are identical at every SF — only row counts differ.
-""")
-for name, why in HEADLINE:
-    df = QUERIES[name](spark, sf)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    text = buf.getvalue()
-    # keep the operator tree, drop the verbose per-node detail section
-    tree = text.split("\n\n")[0]
-    out.append(f"## {name}\n\n*{why}*\n\n```\n{tree}\n```\n")
-with open("/root/repo/PLANS.md", "w") as f:
-    f.write("\n".join(out))
-print("written", sum(len(s) for s in out))
+"""
+
+
+def main() -> None:
+    from databus_spark.registry import QUERIES
+    from databus_spark.session import build_session
+
+    spark = build_session("plans", cpus=8)
+    out = [HEADER]
+    for name, why in HEADLINE:
+        df = QUERIES[name](spark, sf)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        text = buf.getvalue()
+        # keep the operator tree, drop the verbose per-node detail section
+        tree = text.split("\n\n")[0]
+        out.append(f"## {name}\n\n*{why}*\n\n```\n{tree}\n```\n")
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+        f.write("\n".join(out))
+    print("written", sum(len(s) for s in out))
+
+
+if __name__ == "__main__":
+    main()

@@ -4,7 +4,7 @@ fresh JVM per experiment.
 
 Usage (from a REPL or driven by exec):
     from tools.opt_probe import Probe
-    p = Probe()                  # sf0.1, 32 cpus (bench parity)
+    p = Probe()                  # bench's scale and core count
     p.time("release_gate")       # best-of-1 wall seconds
     p.time("release_gate", n=3)  # min of 3
     p.plan("release_gate")       # formatted explain to stdout
@@ -18,14 +18,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.soak10x import SF_DIR  # noqa: E402
+
 
 class Probe:
-    def __init__(self, sf_dir: str = "/root/testdata/sf0.1", cpus: int = 32,
-                 extra_conf: dict | None = None):
+    def __init__(self, sf_dir: str = SF_DIR, extra_conf: dict | None = None):
         os.environ.setdefault("DATABUS_CACHE_CHANGELOGS", "1")
         from databus_spark.session import build_session
 
-        self.spark = build_session("opt_probe", cpus=cpus, extra_conf=extra_conf)
+        self.spark = build_session("opt_probe", extra_conf=extra_conf)
         self.sf_dir = sf_dir
         import __spark_entry__ as entry_mod
 

@@ -31,7 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SOAK_DIR = "/tmp/databus_soak10x"
-EVENT_DIR = "/tmp/databus_soak_events"
 REPLICA_STRIDE = 100_000_000
 
 
@@ -313,8 +312,9 @@ def fam_batch_apply(spark, docs, emb, sf_dir):
 #    drain but attributed ONLY the staging shuffle (x1 79 MB / x100
 #    9.5 GB — byte-identical across engine changes because staging
 #    never changed). Staging now prestages untimed under a content
-#    marker, and apply_batch is wrapped to claim the job group ON the
-#    micro-batch thread, so the recorded shuffle/mem is the applier's.
+#    marker, and the micro-batch jobs (which carry the stream's run-id
+#    group) are attributed to the leg's span by their submission time,
+#    so the recorded shuffle/mem is the applier's.
 _STREAM_STAGE = "/tmp/databus_soak_streamstage"
 
 
@@ -351,37 +351,18 @@ def _prestage_stream(spark, docs, emb, sf_dir):
     open(os.path.join(out, "_DONE"), "w").write("1")
 
 
-def _traced_applier(spark, store):
-    """StreamingApplier whose apply_batch claims the caller's job group
-    on the STREAM-EXECUTION thread (setJobGroup is thread-local; the
-    group set around fn() in main() lives on the driver main thread and
-    micro-batch jobs never inherit it)."""
-    from databus_spark.streaming.applier import StreamingApplier
-
-    applier = StreamingApplier(store)
-    group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
-    orig = applier.apply_batch
-
-    def traced(batch, epoch_id):
-        if group:
-            spark.sparkContext.setJobGroup(group, group)
-        orig(batch, epoch_id)
-
-    applier.apply_batch = traced
-    return applier
-
-
 def fam_stream_apply(spark, docs, emb, sf_dir):
     import tempfile
 
     from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
+    from databus_spark.streaming.applier import StreamingApplier
     from databus_spark.streaming.source import changelog_stream
 
     olog = orders_changelog(spark, sf_dir)
     stage = f"{_stream_stage_dir(sf_dir)}/stage"
     tmp = tempfile.mkdtemp(prefix="soak_stream_")
-    applier = _traced_applier(spark, ParquetSnapshotStore(spark, f"{tmp}/snap"))
+    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
     q.awaitTermination(1800)
 
@@ -397,14 +378,13 @@ def fam_stream_apply_unbucketed(spark, docs, emb, sf_dir):
 
     from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
+    from databus_spark.streaming.applier import StreamingApplier
     from databus_spark.streaming.source import changelog_stream
 
     olog = orders_changelog(spark, sf_dir)
     stage = f"{_stream_stage_dir(sf_dir)}/stage"
     tmp = tempfile.mkdtemp(prefix="soak_stream_ub_")
-    applier = _traced_applier(
-        spark, ParquetSnapshotStore(spark, f"{tmp}/snap", n_buckets=1)
-    )
+    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap", n_buckets=1))
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
     q.awaitTermination(1800)
 
@@ -458,13 +438,14 @@ def fam_stream_bigstate(spark, docs, emb, sf_dir):
 
     from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
+    from databus_spark.streaming.applier import StreamingApplier
     from databus_spark.streaming.source import changelog_stream
 
     tmp = tempfile.mkdtemp(prefix="soak_bigstate_")
     ParquetSnapshotStore._link_tree(
         os.path.join(_bigstate_dir(sf_dir), "base"), f"{tmp}/snap"
     )
-    applier = _traced_applier(spark, ParquetSnapshotStore(spark, f"{tmp}/snap"))
+    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
     olog = orders_changelog(spark, SF_DIR)
     stage = f"{_stream_stage_dir(SF_DIR)}/stage"
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
@@ -631,48 +612,6 @@ FAMILIES = {
 }
 
 
-def parse_event_log(event_dir: str) -> dict[str, dict]:
-    """Aggregate shuffle bytes + peak task memory per job group from the
-    Spark event log (the only place local-mode task metrics surface)."""
-    import glob
-
-    stage_to_group: dict[int, str] = {}
-    agg: dict[str, dict] = {}
-    paths = [
-        p
-        for p in glob.glob(os.path.join(event_dir, "**", "*"), recursive=True)
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    for path in paths:
-        with open(path, errors="replace") as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except ValueError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
-                    if group:
-                        for sid in ev.get("Stage IDs", []):
-                            stage_to_group[sid] = group
-                elif kind == "SparkListenerTaskEnd":
-                    group = stage_to_group.get(ev.get("Stage ID"))
-                    if not group:
-                        continue
-                    m = ev.get("Task Metrics") or {}
-                    a = agg.setdefault(group, {
-                        "shuffle_read_b": 0, "shuffle_write_b": 0,
-                        "peak_task_mem_b": 0, "n_tasks": 0, "spill_b": 0,
-                    })
-                    a["n_tasks"] += 1
-                    a["shuffle_read_b"] += (m.get("Shuffle Read Metrics") or {}).get("Remote Bytes Read", 0) + (m.get("Shuffle Read Metrics") or {}).get("Local Bytes Read", 0)
-                    a["shuffle_write_b"] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
-                    a["peak_task_mem_b"] = max(a["peak_task_mem_b"], m.get("Peak Execution Memory", 0))
-                    a["spill_b"] += m.get("Disk Bytes Spilled", 0)
-    return agg
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--families", default=",".join(FAMILIES))
@@ -685,23 +624,11 @@ def main() -> None:
     args = ap.parse_args()
     fams = [f for f in args.families.split(",") if f in FAMILIES]
 
-    shutil.rmtree(EVENT_DIR, ignore_errors=True)
-    os.makedirs(EVENT_DIR, exist_ok=True)
-
     from databus_spark.session import build_session
+    from tools.traced import TracedRun
 
-    spark = build_session(
-        "databus_soak10x",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{EVENT_DIR}",
-            # Spark 4 defaults to zstd event logs inside a rolling dir;
-            # plain JSON keeps the parser stdlib-only
-            "spark.eventLog.compress": "false",
-        },
-    )
-    sc = spark.sparkContext
+    run = TracedRun("soak10x")
+    spark = run.attach(build_session("databus_soak10x", extra_conf=run.conf))
 
     t0 = time.time()
     build_soak_fixture(spark, args.scale)
@@ -724,6 +651,7 @@ def main() -> None:
         )
 
     results: dict[str, dict] = {"_staging_s": stage_s, "_scale": args.scale}
+    fastest = {}  # (family, leg) -> span of the min-wall repeat
     for fam in fams:
         fn = FAMILIES[fam]
         for label, dirpath in (("x1", SF_DIR), (f"x{args.scale}", SOAK_DIR)):
@@ -731,14 +659,12 @@ def main() -> None:
             spark.catalog.clearCache()
             # one-time fixture staging stays OUT of the timed wall
             getattr(fn, "prestage", lambda *a: None)(spark, docs, emb, dirpath)
-            group = f"{fam}:{label}"
-            sc.setJobGroup(group, group)
-            wall = float("inf")
             for _rep in range(args.repeats):
-                t0 = time.time()
-                fn(spark, docs, emb, dirpath)
-                wall = min(wall, round(time.time() - t0, 2))
-            sc.setJobGroup("idle", "idle")
+                with run.tracer.span(f"{fam}:{label}"):
+                    fn(spark, docs, emb, dirpath)
+            span = min(run.tracer.named(f"{fam}:{label}"), key=lambda s: s.end - s.start)
+            fastest[fam, label] = span
+            wall = round(span.end - span.start, 2)
             results.setdefault(fam, {})[label] = {"wall_s": wall}
             print(f"{fam} {label}: {wall}s", flush=True)
         w1 = results[fam]["x1"]["wall_s"]
@@ -749,17 +675,16 @@ def main() -> None:
             math.log(max(wN, 1e-9) / max(w1, 1e-9)) / math.log(args.scale), 3
         )
 
-    spark.stop()  # flush event log
-    metrics = parse_event_log(EVENT_DIR)
-    for fam in fams:
-        for label in ("x1", f"x{args.scale}"):
-            m = metrics.get(f"{fam}:{label}")
-            if m:
-                # additive counters accumulate across --repeats; report
-                # per-run (the min-wall run's job is identical each time)
-                for k in ("shuffle_read_b", "shuffle_write_b", "spill_b", "n_tasks"):
-                    m[k] = m[k] // args.repeats
-                results[fam][label].update(m)
+    run.finish()
+    for (fam, label), span in fastest.items():
+        m = run.metrics(span)
+        results[fam][label].update({
+            "shuffle_read_b": m["shuffle_read_bytes"],
+            "shuffle_write_b": m["shuffle_write_bytes"],
+            "peak_task_mem_b": m["peak_execution_memory"],
+            "n_tasks": m["tasks"],
+            "spill_b": m["spill_bytes"],
+        })
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = os.path.join(here, f"SOAK_{args.scale}X.json")
