@@ -40,52 +40,40 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # staging round: the seven fixture queries moved onto the one staging
-    # protocol (_staged_artifact; Derby per-process in memory) are the
-    # changed engine paths (tools/window_manifest.py affected_queries vs
-    # the committed manifest), so rule (a) puts them first. They displace
-    # the last seven rows of the r15 window, which go to the back of
-    # _REST as the newest external greens.
-    "avro_ocf_roundtrip",
-    "filter_keymod_staged_hash",
-    "filter_keymod_subscribe",
-    "jdbc_txlog_pull",
-    "sql_txlog_pull",
-    "trail_file_seek",
-    "zorder_box_read",
-    # audioop removal: parse_media_meta's WAV RMS moved onto numpy
-    # (pcm_rms), so media_wav_probe is a changed path too; it displaces
-    # the window's last row, media_png_probe, to the back of _REST.
-    "media_wav_probe",
-    # SemDeDup unification: affected_queries vs the committed manifest
-    # adds the eight rows whose path runs through the one
-    # semdedup_survivors operator or the shared k-means pieces. They
-    # displace the window's last eight rows, which go to the back of
-    # _REST as the newest external greens.
-    "kmeans_assign_summary",
-    "kmeans_centroids",
-    "semdedup_incremental",
-    "semdedup_multiprobe",
-    "semdedup_recall_eval",
-    "semdedup_survivors",
-    "semdedup_survivors_v2",
-    "semdedup_trained",
-    # staged-changelog cleanup: envelope._staged now removes its
-    # per-process stage root at exit, and every changelog-fixture query
-    # runs through it, so affected_queries vs the committed manifest
-    # adds these 23 rows. They displace the window's last 23 unchanged
-    # rows, which go to the back of _REST as the newest external greens.
-    "bootstrap_snapshot_catchup",
-    "buffer_info",
-    "event_metadata_extract",
+    # ANN fold: the ANN family's bodies now share one probe-cell rule,
+    # one rank rule and the IVF+SQ8 postings/probe/scoring pieces, so
+    # these 14 rows run changed code (tools/window_manifest.py
+    # affected_queries vs the parent tree). Rule (a) puts them first.
+    "ann_cosine_topk",
+    "ann_filtered_topk",
+    "ann_ivf_topk",
+    "ann_ivfpq_rerank_topk",
+    "ann_ivfpq_topk",
+    "ann_lsh_topk",
+    "ann_pq_topk",
+    "ann_recall_eval",
+    "ann_sq8_ivf_serve",
+    "ann_sq8_ivf_serve_delta",
+    "ann_sq8_ivf_topk",
+    "ann_sq8_topk",
+    "hybrid_rrf_serve",
+    "hybrid_rrf_topk",
+    # RANGE filter configs parse string keys through the gated parse
+    # (compile_source_config), and key_range_filter lost its wrapper.
     "filter_composite_json",
     "filter_keyrange",
-    "filter_payload_fields",
-    "keyset_page",
+    # compaction.py lost latest_by_key_window and with it an import, so
+    # every row whose closure reaches the module is a changed unit.
+    "bootstrap_snapshot_catchup",
+    "buffer_info",
+    "checkpoint_mult_fetch",
+    "cube_rollup",
+    "dtail_json",
+    "event_metadata_extract",
+    "events_as_changelog_state",
     "max_scn_probe",
     "null_rate_profile",
     "opcode_transitions",
-    "partition_router",
     "partition_spread_per_source",
     "per_source_stats",
     "pricing_summary",
@@ -98,30 +86,23 @@ _WINDOW = [
     "sql_surface_window_stats",
     "stream_fetch_bounded",
     "txn_window_stats",
-    # round 15 (optimization round 2): tools/window_manifest.py
-    # affected_queries vs the committed r14 manifest reads 25 changed
-    # query paths (the LSH band explode: minhash/simhash/bithash/near-
-    # index family; the serve-collect Observation batching: sq8_ivf /
-    # bm25 / hybrid serve rows; the shared-groups + overlapped-
-    # construction work: record_linkage / release_gate / curation_v3
-    # compositions). Rule (a): all 25 changed rows take slots, ordered
-    # oldest-external-green first (the 13 sitting in _REST since r13 or
-    # earlier, then the 12 re-checked in r14). Rule (b): the remaining
-    # 25 slots go to the head of the r14 _REST — the r10 cohort
-    # (checkpoint_mult_fetch, dtail_json, max_scn_probe, ...) that r14's
-    # 71-row overflow could not fit, exactly as that round's log
-    # promised. Unchanged r14-window rows (ann family, bpe, curation
-    # v1/v2, exactsubstr, kmeans, semdedup) are the NEWEST external
-    # greens and rotate to the back of _REST.
-    "media_audio_near_pairs",
-    "media_decision_log",
-    "media_dhash_clusters",
-    "media_dhash_incremental",
-    "media_dhash_near_pairs",
-    "dedup_minhash_lsh",
-    "checkpoint_mult_fetch",
-    "cube_rollup",
-    "dtail_json",
+    # With 59 rows changed since the committed manifest and 50 slots,
+    # the window is spent on changed rows only: the 38 above, then the
+    # 12 most recently rotated of the earlier changes (the SemDeDup
+    # unification and the staged-changelog cleanup). The 9 earliest
+    # rotated (staging round, audioop, kmeans_assign_summary) go to the
+    # FRONT of _REST, first in line next round; the window's 6
+    # unchanged rows go to its back.
+    "kmeans_centroids",
+    "semdedup_incremental",
+    "semdedup_multiprobe",
+    "semdedup_recall_eval",
+    "semdedup_survivors",
+    "semdedup_survivors_v2",
+    "semdedup_trained",
+    "filter_payload_fields",
+    "keyset_page",
+    "partition_router",
     "filter_keymod_longkey",
     "filter_keymod_strkey",
 ]
@@ -130,6 +111,15 @@ _WINDOW = [
 # full sf0.01 oracle sweep), never-checked first then oldest external
 # green first — next round's rotation reads top-down:
 _REST = [
+    "avro_ocf_roundtrip",
+    "filter_keymod_staged_hash",
+    "filter_keymod_subscribe",
+    "jdbc_txlog_pull",
+    "sql_txlog_pull",
+    "trail_file_seek",
+    "zorder_box_read",
+    "media_wav_probe",
+    "kmeans_assign_summary",
     "zorder_events_key",
     "corpus_drift",
     "dedup_span_windows",
@@ -145,7 +135,6 @@ _REST = [
     "boilerplate_strip",
     "cm_frequency_profile",
     "dedup_cdc_chunks",
-    "events_as_changelog_state",
     "hll_distinct_users",
     "k_anonymity_audit",
     "media_jpeg_probe",
@@ -162,9 +151,6 @@ _REST = [
     "time_window_tumbling",
     "train_split_assign",
     "urgent_orders_shipped",
-    "ann_cosine_topk",
-    "ann_sq8_ivf_topk",
-    "ann_sq8_topk",
     "decontaminate_vs_benchmark",
     "dedup_exact",
     "dedup_ngram_jaccard",
@@ -191,19 +177,12 @@ _REST = [
     "value_histogram",
     "weighted_sample_topk",
     "xml_trail_parse",
-    "ann_lsh_topk",
     "bpe_learn_merges",
     "bpe_learn_merges_batched",
     "contamination_fraction",
     "decontaminate_bloom",
     "quality_topk_per_lang",
     "sparse_tfidf_pairs",
-    "ann_filtered_topk",
-    "ann_ivf_topk",
-    "ann_ivfpq_rerank_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_topk",
-    "ann_recall_eval",
     "bpe_encode_corpus",
     "bpe_pair_counts",
     "curation_decisions",
@@ -237,10 +216,6 @@ _REST = [
     "record_linkage_clusters",
     "record_linkage_incremental",
     "release_gate",
-    "ann_sq8_ivf_serve",
-    "ann_sq8_ivf_serve_delta",
-    "hybrid_rrf_serve",
-    "hybrid_rrf_topk",
     "release_gate_utility",
     "dedup_cluster_star",
     "dedup_cluster_survivors",
@@ -253,6 +228,12 @@ _REST = [
     "dedup_canonical",
     "dedup_incremental",
     "event_rate_anomaly",
+    "media_audio_near_pairs",
+    "media_decision_log",
+    "media_dhash_clusters",
+    "media_dhash_incremental",
+    "media_dhash_near_pairs",
+    "dedup_minhash_lsh",
 ]
 
 _PRIORITY = _WINDOW + _REST

@@ -5,18 +5,11 @@ The reference maintains snapshot tables by replaying the change log with
 per key (reference: databus-bootstrap-producer/.../BootstrapApplierThread.java:850;
 intra-txn merge: databus2-relay-impl/.../producers/gg/DBUpdatesMergeUtils.java).
 
-Two physical strategies, both shuffle exactly once on the key:
-
-* ``latest_by_key`` — groupBy(key).agg(max_by(struct(*), scn)): partial
-  aggregation runs map-side (combiner), so at 100 TB the shuffle carries
-  one row per key per input partition, not the whole log. Preferred.
-* ``latest_by_key_window`` — row_number() over (partition by key order
-  by scn desc) = 1: no map-side combine, but keeps ties deterministic
-  and supports returning ALL columns without struct packing. Used where
-  tie-break semantics matter.
-
-SCNs are unique per key in this engine (event windows are totally
-ordered per partition), so both agree.
+``latest_by_key`` is groupBy(key).agg(max_by(struct(*), scn)): partial
+aggregation runs map-side (combiner), so at 100 TB the shuffle carries
+one row per key per input partition, not the whole log. SCNs are unique
+per key in this engine (event windows are totally ordered per
+partition), so the latest row is well defined.
 """
 
 from __future__ import annotations
@@ -25,7 +18,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def latest_by_key(
@@ -37,15 +29,6 @@ def latest_by_key(
         F.max_by(F.struct(*others), F.col(order_col)).alias("_latest")
     )
     return packed.select(*key_cols, *[F.col(f"_latest.{c}").alias(c) for c in others])
-
-
-def latest_by_key_window(
-    log: DataFrame, key_cols: Sequence[str] = ("source", "key_str"), order_col: str = "scn"
-) -> DataFrame:
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(F.desc(order_col))
-    return (
-        log.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    )
 
 
 def snapshot(

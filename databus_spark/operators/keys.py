@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 CANONICAL_SEP = ":"
@@ -47,17 +47,8 @@ def canonical_key(key_struct: Column | str, fields: Sequence[str]) -> Column:
     return F.concat_ws(CANONICAL_SEP, *[s[f].cast("string") for f in fields])
 
 
-def canonical_key_sql(fields: Sequence[str]) -> str:
-    """DuckDB twin of canonical_key over the UNPACKED field columns."""
-    cols = ", ".join(f"CAST({f} AS VARCHAR)" for f in fields)
-    return f"concat_ws('{CANONICAL_SEP}', {cols})"
-
-
 def key_field(name: str, key_col: str = "key_struct") -> Column:
     """Accessor for one field of the composite key (filter building block:
     range/mod predicates apply to any key field, pushed like any column)."""
     return F.col(f"{key_col}.{name}")
 
-
-def with_canonical_key(df: DataFrame, fields: Sequence[str], key_col: str = "key_struct") -> DataFrame:
-    return df.withColumn("key_canonical", canonical_key(key_col, fields))

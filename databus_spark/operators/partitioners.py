@@ -1,9 +1,8 @@
 """Producer-side partition routing (SURVEY §2.11 producer UDFs).
 
 Reference parity:
-  PartitionFunction / ConstantPartitionFunction <- databus2-relay-impl/
+  PartitionFunction                             <- databus2-relay-impl/
       .../producers/PartitionFunction.java
-  DbusConstantPartitionRouter                   <- core/DbusConstantPartitionRouter.java
   DbusHashPartitionRouter (key hash -> partition) <- core/DbusHashPartitionRouter.java
 
 The hash router must agree with the consumer-side KeyModFilter so a
@@ -17,10 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from databus_spark.operators.filters import key_mod_bucket
-
-
-def constant_router(partition: int) -> Column:
-    return F.lit(int(partition)).cast("int")
 
 
 def hash_router(n_partitions: int) -> Column:

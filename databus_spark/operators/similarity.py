@@ -115,6 +115,40 @@ def _cosine_sql(a: str, b: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+# The ANN family's two shared rules
+# ---------------------------------------------------------------------------
+
+def _top_k(scored: DataFrame, k: int, score: Column) -> DataFrame:
+    """The top-k rank rule of every ANN operator: ``rank`` =
+    row_number per query_id by ``score`` (an ordering, e.g.
+    F.desc("sim")), ties to the lowest neighbor_id; rows with
+    rank <= k survive."""
+    w = Window.partitionBy("query_id").orderBy(score, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _probe_cells(scored: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The probe-cell rule over an _ivf_scored frame: each vector's
+    ``n`` highest-cell_sim cells, ties to the lowest cell_id. Used for
+    query probes and for multi-assigned corpus postings alike."""
+    w = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
+    return scored.withColumn("cell_rank", F.row_number().over(w)).where(
+        F.col("cell_rank") <= n
+    )
+
+
+def _cosine_ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim, rank) from candidate pairs carrying
+    q_vec and c_vec: exact float cosine rounded to 6dp, top-k."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("sim"),
+    )
+    return _top_k(scored, k, F.desc("sim")).select("query_id", "neighbor_id", "sim", "rank")
+
+
+# ---------------------------------------------------------------------------
 # Exact brute-force top-k
 # ---------------------------------------------------------------------------
 
@@ -131,20 +165,8 @@ def cosine_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+    return _cosine_ranked(
+        c.crossJoin(F.broadcast(q)).where(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -203,6 +225,48 @@ def _idot(a: Column, b: Column) -> Column:
     )
 
 
+# The two sides of an integer-dot join: (id, int8 codes, code self-norm).
+# Self-norms ride each ROW (one HOF dot per vector, not three per pair):
+# the pair expression then pays ONE interpreted HOF dot, with the same
+# doubles multiplied in the same order.
+_SQ8_SIDES = {"q": ("query_id", "_qq", "_qn"), "c": ("neighbor_id", "_qc", "_cn")}
+
+
+def _sq8_codes(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *carry: str
+) -> DataFrame:
+    """(id, codes, norm, *carry) named for the query (``side="q"``:
+    query_id, _qq, _qn) or corpus side (``"c"``: neighbor_id, _qc,
+    _cn); ``carry`` columns ride between codes and norm."""
+    i, code, norm = _SQ8_SIDES[side]
+    return df.select(
+        F.col(id_col).alias(i), _sq8(F.col(vec_col)).alias(code), *carry
+    ).withColumn(norm, F.sqrt(_idot(F.col(code), F.col(code)).cast("double")))
+
+
+def _sq8_sim() -> Column:
+    """int8 cosine of a (query, corpus) code pair, rounded to 6dp."""
+    return F.round(
+        _idot(F.col("_qq"), F.col("_qc")).cast("double")
+        / (F.col("_qn") * F.col("_cn")),
+        6,
+    )
+
+
+def _with_float_recall(
+    ranked: DataFrame, emb: DataFrame, n_queries: int, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """``ranked`` plus ``in_float_topk``: is the hit also in the exact
+    float top-k (cosine_topk, same k) of its query."""
+    fl = cosine_topk(emb, n_queries, k, id_col, vec_col).select(
+        "query_id", "neighbor_id", F.lit(True).alias("_in_f")
+    )
+    return ranked.join(F.broadcast(fl), ["query_id", "neighbor_id"], "left").select(
+        *ranked.columns,
+        F.coalesce(F.col("_in_f"), F.lit(False)).alias("in_float_topk"),
+    )
+
+
 def sq8_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -226,61 +290,25 @@ def sq8_topk(
     deployment — where SQ8 is the actual 8x IO lever — passes False
     and the ``in_float_topk`` column is omitted; only the quantized
     scan runs."""
-    # self-norms ride each ROW (one HOF dot per vector, not three per
-    # pair): bit-identical output, same doubles in the same order
-    qz = (
-        widen_scan(emb)
-        .select(F.col(id_col).alias("_id"), _sq8(F.col(vec_col)).alias("_qv"))
-        .withColumn("_n", F.sqrt(_idot(F.col("_qv"), F.col("_qv")).cast("double")))
-        .localCheckpoint(eager=False)  # quantize once, feed both join sides
-    )
-    q = qz.where(F.col("_id") < n_queries).select(
-        F.col("_id").alias("query_id"),
-        F.col("_qv").alias("_qq"),
-        F.col("_n").alias("_qn"),
-    )
-    c = qz.select(
-        F.col("_id").alias("neighbor_id"),
-        F.col("_qv").alias("_qc"),
-        F.col("_n").alias("_cn"),
-    )
-    sim = F.round(
-        _idot(F.col("_qq"), F.col("_qc")).cast("double")
-        / (F.col("_qn") * F.col("_cn")),
-        6,
+    c = _sq8_codes(widen_scan(emb), id_col, vec_col, "c").localCheckpoint(
+        eager=False
+    )  # quantize once, feed both join sides
+    q = c.where(F.col("neighbor_id") < n_queries).select(
+        F.col("neighbor_id").alias("query_id"),
+        F.col("_qc").alias("_qq"),
+        F.col("_cn").alias("_qn"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim_q8"))
+        .select("query_id", "neighbor_id", _sq8_sim().alias("sim_q8"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q8"), F.asc("neighbor_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    ranked = _top_k(scored, k, F.desc("sim_q8")).select(
+        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "sim_q8"
     )
     if not check_recall:
-        return ranked.select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "sim_q8",
-        )
-    fl = cosine_topk(emb, n_queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id", F.lit(True).alias("_in_f")
-    )
-    return (
-        ranked.join(F.broadcast(fl), ["query_id", "neighbor_id"], "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "sim_q8",
-            F.coalesce(F.col("_in_f"), F.lit(False)).alias("in_float_topk"),
-        )
-    )
+        return ranked
+    return _with_float_recall(ranked, emb, n_queries, k, id_col, vec_col)
 
 
 def sq8_topk_sql(n_queries: int = 10, k: int = 5) -> str:
@@ -374,6 +402,67 @@ SQ8IVF_ASSIGN = 3  # cells each corpus vector is posted to (multi-assign)
 SQ8IVF_NPROBE = 5  # probed cells per query (of N_CELLS=8)
 
 
+def _sq8_postings(
+    emb: DataFrame, cent: DataFrame, id_col: str, vec_col: str, assign_r: int
+) -> DataFrame:
+    """Corpus postings (neighbor_id, _qc, cell_id, _cn): each vector
+    posted to its ``assign_r`` nearest cells with its int8 codes — the
+    rows of the staged index, and the inline corpus side.
+
+    The keyed repartition replaces the window's own exchange (r14),
+    which AQE coalesced to ONE partition (the score table is tiny in
+    bytes), running rank + quantize serial: 3.0 CPU-s on 1 task. It
+    satisfies the window's distribution, so no exchange is added."""
+    par = emb.sparkSession.sparkContext.defaultParallelism
+    scored = _ivf_scored(emb, cent, id_col, vec_col).repartition(par, id_col)
+    return _sq8_codes(_probe_cells(scored, id_col, assign_r), id_col, vec_col, "c", "cell_id")
+
+
+def _sq8_probes(
+    queries: DataFrame, cent: DataFrame, id_col: str, vec_col: str, nprobe: int
+) -> DataFrame:
+    """Query probes (query_id, _qq, cell_id, _qn): each query's
+    ``nprobe`` nearest cells with its int8 codes."""
+    scored = _ivf_scored(queries, cent, id_col, vec_col)
+    return _sq8_codes(_probe_cells(scored, id_col, nprobe), id_col, vec_col, "q", "cell_id")
+
+
+def _sq8_cell_candidates(postings: DataFrame, probes: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, _qq, _qn, _qc, _cn) for every posting in
+    a probed cell of its query, self excluded."""
+    return (
+        postings.join(F.broadcast(probes), "cell_id")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "_qq", "_qn", "_qc", "_cn")
+    )
+
+
+def _sq8_ranked(cand: DataFrame, k: int, n_corpus: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, sim_q8, cand_frac) from candidate
+    code pairs. Multi-assignment surfaces a pair from up to assign_r
+    probed cells, so pairs are deduplicated before scoring; cand_frac
+    is the query's distinct candidates over ``n_corpus``."""
+    scored = (
+        cand.dropDuplicates(["query_id", "neighbor_id"])
+        .select("query_id", "neighbor_id", _sq8_sim().alias("sim_q8"))
+        .localCheckpoint(eager=False)
+    )  # feeds the per-query candidate count AND the ranking
+    cc = scored.groupBy("query_id").agg(F.count(F.lit(1)).alias("_nc"))
+    return (
+        _top_k(scored, k, F.desc("sim_q8"))
+        .join(F.broadcast(cc), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("int").alias("rank"),
+            "sim_q8",
+            F.round(F.col("_nc").cast("double") / F.lit(float(n_corpus)), 6).alias(
+                "cand_frac"
+            ),
+        )
+    )
+
+
 def sq8_ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -392,103 +481,19 @@ def sq8_ivf_topk(
     hash-sampled centroids as ivf_topk; probe ranking by 6dp-rounded
     float cosine, identical in both engines), and ONLY the quantized
     codes posted there are scored, with exact integer dot products.
+    It is sq8_ivf_serve over postings built in memory: the same
+    postings, probe and scoring pieces, without the write.
     ``check_recall`` as in sq8_topk: fixture-scale instrumentation,
     skipped in the scale deployment."""
     cent = _ivf_centroids(emb, id_col, vec_col)
-    # corpus side: top-assign_r cells + int8 codes — at scale this IS
-    # the staged index (partitioned by cell_id, 8x smaller per posting
-    # than the floats, assign_r postings per vector). Self-norms are
-    # hoisted to one column per ROW here (not per candidate pair): the
-    # pair expression then pays ONE interpreted HOF dot instead of
-    # three, with bit-identical output (the same doubles, multiplied
-    # in the same order).
-    c_scored = _ivf_scored(emb, cent, id_col, vec_col)
-    # keyed repartition instead of the window's ENSURE exchange (r14):
-    # the corpus x centroid score table is tiny in bytes, so AQE
-    # coalesced the window exchange to ONE partition and the fused
-    # rank + int8-quantize + candidate-join stage ran serial (measured
-    # 3.0 CPU-s on 1 task = the bulk of this query's wall). Same
-    # byte-blind-AQE escape as the SemDeDup pair join; the user
-    # repartition satisfies the window's required distribution, so no
-    # second exchange is added.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    wc = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    assigned = (
-        c_scored.repartition(par, id_col)
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .where(F.col("cell_rank") <= assign_r)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _sq8(F.col(vec_col)).alias("_qc"),
-            "cell_id",
-        )
-        .withColumn(
-            "_cn", F.sqrt(_idot(F.col("_qc"), F.col("_qc")).cast("double"))
-        )
+    cand = _sq8_cell_candidates(
+        _sq8_postings(emb, cent, id_col, vec_col, assign_r),
+        _sq8_probes(emb.where(F.col(id_col) < n_queries), cent, id_col, vec_col, nprobe),
     )
-    q_scored = _ivf_scored(emb.where(F.col(id_col) < n_queries), cent, id_col, vec_col)
-    wq = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    probes = (
-        q_scored.withColumn("cell_rank", F.row_number().over(wq))
-        .where(F.col("cell_rank") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            _sq8(F.col(vec_col)).alias("_qq"),
-            "cell_id",
-        )
-        .withColumn(
-            "_qn", F.sqrt(_idot(F.col("_qq"), F.col("_qq")).cast("double"))
-        )
-    )
-    # multi-assignment => a (query, neighbor) pair can surface from up
-    # to assign_r probed cells: dedup before scoring/counting
-    cand = (
-        assigned.join(F.broadcast(probes), "cell_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    sim = F.round(
-        _idot(F.col("_qq"), F.col("_qc")).cast("double")
-        / (F.col("_qn") * F.col("_cn")),
-        6,
-    )
-    scored = cand.select("query_id", "neighbor_id", sim.alias("sim_q8")).localCheckpoint(
-        eager=False
-    )  # feeds the per-query candidate count AND the ranking
-    n_corpus = emb.count()  # one scalar: the cand_frac denominator
-    cc = scored.groupBy("query_id").agg(F.count(F.lit(1)).alias("_nc"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_q8"), F.asc("neighbor_id"))
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .join(F.broadcast(cc), "query_id")
-        .withColumn(
-            "cand_frac",
-            F.round(F.col("_nc").cast("double") / F.lit(float(n_corpus)), 6),
-        )
-    )
+    ranked = _sq8_ranked(cand, k, emb.count())  # one scalar: the cand_frac denominator
     if not check_recall:
-        return ranked.select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "sim_q8",
-            "cand_frac",
-        )
-    fl = cosine_topk(emb, n_queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id", F.lit(True).alias("_in_f")
-    )
-    return (
-        ranked.join(F.broadcast(fl), ["query_id", "neighbor_id"], "left")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "sim_q8",
-            "cand_frac",
-            F.coalesce(F.col("_in_f"), F.lit(False)).alias("in_float_topk"),
-        )
-    )
+        return ranked
+    return _with_float_recall(ranked, emb, n_queries, k, id_col, vec_col)
 
 
 def sq8_ivf_topk_sql(
@@ -584,20 +589,42 @@ def sq8_ivf_topk_sql(
 # ---------------------------------------------------------------------------
 # IVF + SQ8 as an ON-DISK serving artifact (r13 verdict next-#2)
 # ---------------------------------------------------------------------------
-# sq8_ivf_topk above recomputes centroids, assignments, and int8 codes
-# inline per query batch; its own docstring said "at scale this IS the
-# staged index (partitioned by cell_id)". These three functions make
-# that true, the way BM25 did it (text.bm25_postings partitioned by
-# token bucket + bm25_serve): build once -> parquet partitioned by
-# cell_id -> serve by reading ONLY the probed cells' directories
-# (file-listing-level pruning, not a post-scan filter), merge unindexed
-# deltas inline, append increments without touching staged partitions.
+# The staged form of sq8_ivf_topk, the way BM25 did it
+# (text.bm25_postings partitioned by token bucket + bm25_serve): build
+# once -> parquet partitioned by cell_id -> serve by reading ONLY the
+# probed cells' directories (file-listing-level pruning, not a post-scan
+# filter), merge unindexed deltas inline, append increments without
+# touching staged partitions. Build, append, serve and the inline
+# sq8_ivf_topk share one postings builder, one probe builder and one
+# candidate scorer.
 #
 # Layout:
 #   <dir>/centroids/   N_CELLS rows (cell_id, cell_vec) — frozen at build
 #   <dir>/postings/cell_id=<c>/  (neighbor_id, _qc int8-code array, _cn)
 #                      assign_r postings per vector, 8x smaller than floats
 #   <dir>/stats/       one (n_rows) row per build/append; reader sums
+
+
+def _sq8_index_write(
+    emb: DataFrame,
+    cent: DataFrame,
+    index_dir: str,
+    id_col: str,
+    vec_col: str,
+    assign_r: int,
+    mode: str,
+) -> None:
+    """Write ``emb``'s postings against ``cent`` and its stats row.
+    The postings are regrouped by cell_id before the write, so each
+    write adds one file per cell however many tasks built them."""
+    import os as _o
+
+    _sq8_postings(emb, cent, id_col, vec_col, assign_r).repartition(
+        "cell_id"
+    ).write.mode(mode).partitionBy("cell_id").parquet(_o.path.join(index_dir, "postings"))
+    emb.groupBy().agg(F.count(F.lit(1)).alias("n_rows")).write.mode(mode).parquet(
+        _o.path.join(index_dir, "stats")
+    )
 
 
 def sq8_ivf_index_build(
@@ -607,35 +634,19 @@ def sq8_ivf_index_build(
     vec_col: str = "embedding",
     assign_r: int = SQ8IVF_ASSIGN,
 ) -> None:
-    """Materialize the IVF+SQ8 serving index. Exactly the corpus-side
-    plan of sq8_ivf_topk (same centroids, same top-assign_r
-    multi-assignment, same int8 grid, same hoisted self-norms), written
-    instead of joined — so a serve over the artifact is bit-equal to
-    the inline composition by construction. Codes are array<long>
-    holding int8 values: parquet round-trips them exactly, and the
-    integer dot at serve time is the same exact arithmetic."""
+    """Materialize the IVF+SQ8 serving index: the centroids and the
+    postings sq8_ivf_topk joins in memory (_sq8_postings: same
+    top-assign_r multi-assignment, same int8 grid, same hoisted
+    self-norms), written instead of joined — so a serve over the
+    artifact is bit-equal to the inline composition by construction.
+    Codes are array<long> holding int8 values: parquet round-trips them
+    exactly, and the integer dot at serve time is the same exact
+    arithmetic."""
     import os as _o
 
     cent = _ivf_centroids(emb, id_col, vec_col)
-    wc = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    assigned = (
-        _ivf_scored(emb, cent, id_col, vec_col)
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .where(F.col("cell_rank") <= assign_r)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _sq8(F.col(vec_col)).alias("_qc"),
-            "cell_id",
-        )
-        .withColumn("_cn", F.sqrt(_idot(F.col("_qc"), F.col("_qc")).cast("double")))
-    )
     cent.write.mode("overwrite").parquet(_o.path.join(index_dir, "centroids"))
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        _o.path.join(index_dir, "postings")
-    )
-    emb.groupBy().agg(F.count(F.lit(1)).alias("n_rows")).write.mode(
-        "overwrite"
-    ).parquet(_o.path.join(index_dir, "stats"))
+    _sq8_index_write(emb, cent, index_dir, id_col, vec_col, assign_r, "overwrite")
 
 
 def sq8_ivf_index_append(
@@ -654,24 +665,7 @@ def sq8_ivf_index_append(
     import os as _o
 
     cent = spark.read.parquet(_o.path.join(index_dir, "centroids"))
-    wc = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    assigned = (
-        _ivf_scored(delta_emb, cent, id_col, vec_col)
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .where(F.col("cell_rank") <= assign_r)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _sq8(F.col(vec_col)).alias("_qc"),
-            "cell_id",
-        )
-        .withColumn("_cn", F.sqrt(_idot(F.col("_qc"), F.col("_qc")).cast("double")))
-    )
-    assigned.write.mode("append").partitionBy("cell_id").parquet(
-        _o.path.join(index_dir, "postings")
-    )
-    delta_emb.groupBy().agg(F.count(F.lit(1)).alias("n_rows")).write.mode(
-        "append"
-    ).parquet(_o.path.join(index_dir, "stats"))
+    _sq8_index_write(delta_emb, cent, index_dir, id_col, vec_col, assign_r, "append")
 
 
 def _is_local_path(path: str) -> bool:
@@ -735,22 +729,11 @@ def sq8_ivf_serve(
     from pyspark.sql import Observation
 
     cent = spark.read.parquet(_o.path.join(index_dir, "centroids"))
-    wq = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    # the probed-cell list rides the checkpoint job via Observation
-    # (the star-signature pattern): ONE eager job replaces the previous
-    # lazy checkpoint + separate distinct+collect — one fewer job
-    # round-trip per serve batch (r15; guide §2.6/§5 driver latency)
+    # the probed-cell list rides the checkpoint job via Observation: one
+    # eager job, no separate distinct+collect (r15 driver latency)
     obs = Observation()
     probes = (
-        _ivf_scored(queries, cent, id_col, vec_col)
-        .withColumn("cell_rank", F.row_number().over(wq))
-        .where(F.col("cell_rank") <= nprobe)
-        .select(
-            F.col(id_col).alias("query_id"),
-            _sq8(F.col(vec_col)).alias("_qq"),
-            "cell_id",
-        )
-        .withColumn("_qn", F.sqrt(_idot(F.col("_qq"), F.col("_qq")).cast("double")))
+        _sq8_probes(queries, cent, id_col, vec_col, nprobe)
         .observe(obs, F.collect_set("cell_id").alias("cells"))
         .localCheckpoint(eager=True)  # feeds the cell list AND the join
     )
@@ -761,31 +744,19 @@ def sq8_ivf_serve(
         for c in cells
         if _o.path.isdir(p := _o.path.join(postings_root, f"cell_id={c}"))
     ]
+    cand = None  # every probed cell may be empty on a tiny delta-only index
     if paths:
-        assigned = spark.read.option("basePath", postings_root).parquet(*paths)
-        cand = (
-            assigned.join(F.broadcast(probes), "cell_id")
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id", "_qq", "_qn", "_qc", "_cn")
+        cand = _sq8_cell_candidates(
+            spark.read.option("basePath", postings_root).parquet(*paths), probes
         )
-    else:  # every probed cell empty (possible on a tiny delta-only index)
-        cand = None
-    # driver-side pyarrow read instead of a Spark job (r14): the stats
-    # artifact is a handful of one-row files (one per build/append);
-    # summing it was a whole scheduled job + its planning gap per serve
-    # batch. Same value, zero jobs — the serve batch's driver latency
-    # drops by one job round-trip. Scheme-guarded (r14 verdict): pyarrow
-    # only reads paths its local filesystem can reach, so a non-local
-    # index_dir (hdfs://, s3a://, ...) falls back to the Spark read the
-    # pre-r14 path used — that works anywhere Spark can read.
+    # a driver-side read of the one-row stats files on local paths: no
+    # Spark job per serve batch (_stats_n_rows)
     n_corpus = _stats_n_rows(spark, _o.path.join(index_dir, "stats"))
     if delta_emb is not None:
-        dq = delta_emb.select(
-            F.col(id_col).alias("neighbor_id"), _sq8(F.col(vec_col)).alias("_qc")
-        ).withColumn("_cn", F.sqrt(_idot(F.col("_qc"), F.col("_qc")).cast("double")))
         qd = probes.dropDuplicates(["query_id"]).select("query_id", "_qq", "_qn")
         dcand = (
-            dq.crossJoin(F.broadcast(qd))
+            _sq8_codes(delta_emb, id_col, vec_col, "c")
+            .crossJoin(F.broadcast(qd))
             .where(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id", "_qq", "_qn", "_qc", "_cn")
         )
@@ -793,31 +764,7 @@ def sq8_ivf_serve(
         n_corpus += delta_emb.count()
     if cand is None:
         raise ValueError(f"empty index at {index_dir} and no delta to serve from")
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    sim = F.round(
-        _idot(F.col("_qq"), F.col("_qc")).cast("double")
-        / (F.col("_qn") * F.col("_cn")),
-        6,
-    )
-    scored = cand.select("query_id", "neighbor_id", sim.alias("sim_q8")).localCheckpoint(
-        eager=False
-    )
-    cc = scored.groupBy("query_id").agg(F.count(F.lit(1)).alias("_nc"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_q8"), F.asc("neighbor_id"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .join(F.broadcast(cc), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            "sim_q8",
-            F.round(
-                F.col("_nc").cast("double") / F.lit(float(n_corpus)), 6
-            ).alias("cand_frac"),
-        )
-    )
+    out = _sq8_ranked(cand, k, n_corpus)
     out._sq8_probed_paths = paths
     return out
 
@@ -1069,17 +1016,7 @@ def lsh_topk(
         .select("query_id", "q_vec", "neighbor_id", F.col("neighbor_id_vec").alias("c_vec"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _cosine_ranked(cand, k)
 
 
 def lsh_topk_sql(n_queries: int = 10, k: int = 5) -> str:
@@ -1225,28 +1162,15 @@ def ivf_topk(
     # probe ranking only over the (tiny) query subset — its window is
     # over n_queries * N_CELLS rows, not the corpus
     q_scored = _ivf_scored(emb.where(F.col(id_col) < n_queries), cent, id_col, vec_col)
-    wq = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    probes = (
-        q_scored.withColumn("cell_rank", F.row_number().over(wq))
-        .where(F.col("cell_rank") <= IVF_NPROBE)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "cell_id")
+    probes = _probe_cells(q_scored, id_col, IVF_NPROBE).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), "cell_id"
     )
     cand = (
         assigned.join(F.broadcast(probes), "cell_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _cosine_ranked(cand, k)
 
 
 def ivf_topk_sql(n_queries: int = 10, k: int = 5, candidate_where: str = "TRUE") -> str:
@@ -1453,6 +1377,47 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, id_col: str, vec_col: str) ->
     )
 
 
+def _pq_adc(
+    emb: DataFrame,
+    n_queries: int,
+    id_col: str,
+    vec_col: str,
+    pq_index: tuple[DataFrame, DataFrame] | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, adc) of the PQ scorers: the corpus codes (neighbor_id, m,
+    code) — the given materialized index or a fresh encode — and the
+    per-query ADC table (query_id, m, code, d), n_queries*M_SUB*PQ_K
+    decimal distances."""
+    if pq_index is not None:
+        cb, codes = pq_index
+    else:
+        cb = _pq_codebook(emb, id_col, vec_col)
+        codes = pq_encode(emb, cb, id_col, vec_col)
+    adc = (
+        emb.where(F.col(id_col) < n_queries)
+        .crossJoin(F.broadcast(cb))
+        .withColumn("m", F.explode(F.sequence(F.lit(0), F.lit(M_SUB - 1))))
+        .select(
+            F.col(id_col).alias("query_id"),
+            "m",
+            F.col("code_id").alias("code"),
+            _sub_l2sq(vec_col, "code_vec").cast("decimal(18,6)").alias("d"),
+        )
+    )
+    return codes.select(F.col(id_col).alias("neighbor_id"), "m", "code"), adc
+
+
+def _pq_ranked(approx: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, approx_dist, rank): ascending ADC
+    distance, top-k."""
+    return _top_k(approx, k, F.asc("approx_dist")).select(
+        "query_id",
+        "neighbor_id",
+        F.col("approx_dist").cast("double").alias("approx_dist"),
+        "rank",
+    )
+
+
 def pq_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -1471,40 +1436,14 @@ def pq_topk(
     it once — the FAISS build-once/serve-many shape — instead of
     re-encoding per query."""
     emb = widen_scan(emb)
-    if pq_index is not None:
-        cb, codes = pq_index
-    else:
-        cb = _pq_codebook(emb, id_col, vec_col)
-        codes = pq_encode(emb, cb, id_col, vec_col)
-    codes = codes.select(F.col(id_col).alias("neighbor_id"), "m", "code")
-    adc = (
-        emb.where(F.col(id_col) < n_queries)
-        .crossJoin(F.broadcast(cb))
-        .withColumn("m", F.explode(F.sequence(F.lit(0), F.lit(M_SUB - 1))))
-        .select(
-            F.col(id_col).alias("query_id"),
-            "m",
-            F.col("code_id").alias("code"),
-            _sub_l2sq(vec_col, "code_vec").cast("decimal(18,6)").alias("d"),
-        )
-    )
+    codes, adc = _pq_adc(emb, n_queries, id_col, vec_col, pq_index)
     approx = (
         codes.join(F.broadcast(adc), ["m", "code"])
         .where(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").cast("decimal(24,6)").alias("approx_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    return (
-        approx.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("approx_dist").cast("double").alias("approx_dist"),
-            "rank",
-        )
-    )
+    return _pq_ranked(approx, k)
 
 
 def pq_topk_sql(n_queries: int = 10, k: int = 5) -> str:
@@ -1599,35 +1538,15 @@ def ivfpq_topk(
         F.col(id_col).alias("neighbor_id"), "cell_id"
     )
     q_scored = _ivf_scored(emb.where(F.col(id_col) < n_queries), cent, id_col, vec_col)
-    wq = Window.partitionBy(id_col).orderBy(F.desc("cell_sim"), F.asc("cell_id"))
-    probes = (
-        q_scored.withColumn("cell_rank", F.row_number().over(wq))
-        .where(F.col("cell_rank") <= nprobe)
-        .select(F.col(id_col).alias("query_id"), "cell_id")
+    probes = _probe_cells(q_scored, id_col, nprobe).select(
+        F.col(id_col).alias("query_id"), "cell_id"
     )
     cand = (
         assigned.join(F.broadcast(probes), "cell_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-
-    if pq_index is not None:
-        cb, codes = pq_index
-    else:
-        cb = _pq_codebook(emb, id_col, vec_col)
-        codes = pq_encode(emb, cb, id_col, vec_col)
-    codes = codes.select(F.col(id_col).alias("neighbor_id"), "m", "code")
-    adc = (
-        emb.where(F.col(id_col) < n_queries)
-        .crossJoin(F.broadcast(cb))
-        .withColumn("m", F.explode(F.sequence(F.lit(0), F.lit(M_SUB - 1))))
-        .select(
-            F.col(id_col).alias("query_id"),
-            "m",
-            F.col("code_id").alias("code"),
-            _sub_l2sq(vec_col, "code_vec").cast("decimal(18,6)").alias("d"),
-        )
-    )
+    codes, adc = _pq_adc(emb, n_queries, id_col, vec_col, pq_index)
     approx = (
         # cand is bounded by the query batch (n_queries * probed-cell
         # population) — broadcast it explicitly; with PQ_K=32 the codes
@@ -1638,17 +1557,7 @@ def ivfpq_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").cast("decimal(24,6)").alias("approx_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    return (
-        approx.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("approx_dist").cast("double").alias("approx_dist"),
-            "rank",
-        )
-    )
+    return _pq_ranked(approx, k)
 
 
 def ivfpq_topk_sql(n_queries: int = 10, k: int = 5, nprobe: int | None = None) -> str:
@@ -1752,19 +1661,7 @@ def ivfpq_rerank_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
     nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = nv.join(
-        F.broadcast(cand.join(qv, "query_id")), "neighbor_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _cosine_ranked(nv.join(F.broadcast(cand.join(qv, "query_id")), "neighbor_id"), k)
 
 
 def ivfpq_rerank_topk_sql(n_queries: int = 10, k: int = 5, shortlist: int = 40) -> str:

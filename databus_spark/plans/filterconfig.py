@@ -13,7 +13,11 @@ Semantics mirrored exactly:
 - MOD:   abs(key) % numBuckets in the listed bucket ranges; string keys
          bucket by Java String.hashCode (KeyModFilter.java:55-79).
 - RANGE: key in [id*size, (id+1)*size) for each listed partition id
-         (KeyRangeFilter.java:25-60).
+         (KeyRangeFilter.java:25-60); a string key that does not parse
+         as a long never matches. The parse is key_range_filter's gated
+         one, so it cannot fail under ANSI casts; whitespace-padded
+         keys, which DuckDB's TRY_CAST trims and Java's parseLong
+         rejects, are left out of the oracle's claim.
 - Sources not present in the config are allowed (composite filter
   returns allow-all for unknown source ids).
 
@@ -27,7 +31,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from databus_spark.functions.hashes import java_hash_sql
-from databus_spark.operators.filters import disjunction, key_mod_bucket
+from databus_spark.operators.filters import _parsed_long_key, disjunction, key_mod_bucket
 
 
 def parse_ranges(spec: str) -> list[tuple[int, int]]:
@@ -59,7 +63,7 @@ def compile_source_config(cfg: dict) -> Column:
         return _range_pred(bucket, parse_ranges(cfg["buckets"]))
     if ptype == "RANGE":
         size = int(cfg["size"])
-        key = F.coalesce(F.col("key_num"), F.col("key_str").cast("long"))
+        key = _parsed_long_key()
         scaled = [(lo * size, hi * size) for lo, hi in parse_ranges(cfg["partitions"])]
         return key.isNotNull() & _range_pred(key, scaled)
     raise ValueError(f"unknown partitionType {ptype!r}")

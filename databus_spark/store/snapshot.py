@@ -263,9 +263,13 @@ class ParquetSnapshotStore:
         if cur > 0:
             schema = self._schema(cur)
             _check_columns(schema, batch.schema)
+        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * self._base_bytes(cur)
+        # a fold scans and rewrites the whole state: make sure there is a
+        # batch to fold first (one short job over the batch alone)
+        if fold and cur > 0 and batch.isEmpty():
+            return MergeResult(cur, 0, None)
         new_dir = self._new_dir(cur + 1)
         obs = Observation()
-        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * self._base_bytes(cur)
         if fold:
             # observe ABOVE the union: an Observation on a union leg
             # never fires; the marker column says which rows are the batch

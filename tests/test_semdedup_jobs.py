@@ -1,11 +1,13 @@
-"""Spark job counts of the SemDeDup and k-means registered rows.
+"""Spark job counts of the SemDeDup, k-means, ANN and hybrid rows.
 
-At fixture scale this family's wall is dominated by job scheduling, not
-by data work, so a refactor that adds a job is a measurable slowdown
+At fixture scale these families' walls are dominated by job scheduling,
+not by data work, so a refactor that adds a job is a measurable slowdown
 even when its rows are identical. Each row runs once to stage its
 artifacts, then once more under a job group; the warm count must stay
-at or below the bound measured on the four-operator layout that
-preceded the single semdedup_survivors operator.
+at or below the bound measured on the layout that preceded the shared
+operator: the four SemDeDup survivors bodies for the SemDeDup rows, and
+the ANN bodies with their own probe, rank and IVF+SQ8 copies for the
+ANN and hybrid rows (sf0.001).
 """
 
 from __future__ import annotations
@@ -20,6 +22,20 @@ _WARM_JOBS = {
     "semdedup_recall_eval": 9,
     "semdedup_incremental": 12,
     "kmeans_assign_summary": 8,
+    "ann_cosine_topk": 6,
+    "ann_filtered_topk": 10,
+    "ann_ivf_topk": 10,
+    "ann_ivfpq_rerank_topk": 20,
+    "ann_ivfpq_topk": 17,
+    "ann_lsh_topk": 7,
+    "ann_pq_topk": 10,
+    "ann_recall_eval": 22,
+    "ann_sq8_ivf_serve": 13,
+    "ann_sq8_ivf_serve_delta": 17,
+    "ann_sq8_ivf_topk": 16,
+    "ann_sq8_topk": 10,
+    "hybrid_rrf_serve": 14,
+    "hybrid_rrf_topk": 24,
 }
 
 

@@ -177,3 +177,31 @@ def test_request_paths_run_no_probe_jobs(spark, tmp_path):
             assert jobs <= 2, (name, attempt, jobs)
     assert _jobs(spark, "read", store.read)[1] == 0
     assert _jobs(spark, "read-version", lambda: store.read_version(1))[1] == 0
+
+
+def test_empty_batch_on_a_fold_due_store_reads_no_state(spark, tmp_path):
+    """A fold rewrites the whole state, so an empty batch that arrives
+    when a fold is due must be found empty before the state is touched.
+    The state's parquet files are zeroed in place first (same sizes, so
+    the fold stays due): any read of them fails."""
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
+    store.merge(_batch(spark, range(200), 1, "a"))
+    for scn0 in range(1000, 9000, 1000):
+        v = store._version()
+        if store._parquet_bytes(v) >= 2 * store._base_bytes(v):
+            break
+        store.merge(_batch(spark, range(200), scn0, f"b{scn0}"))
+    v = store._version()
+    assert store._parquet_bytes(v) >= 2 * store._base_bytes(v), "no fold due"
+    for dirpath, _dirs, files in os.walk(store._data_dir(v)):
+        for name in files:
+            if name.endswith(".parquet"):
+                path = os.path.join(dirpath, name)
+                size = os.path.getsize(path)
+                with open(path, "r+b") as f:
+                    f.write(b"\0" * size)
+    empty = _batch(spark, range(200), 1, "c").where(F.col("scn") < 0)
+    res, jobs = _jobs(spark, "empty-fold-due", lambda: store.merge(empty))
+    assert res == (v, 0, None)
+    assert jobs <= 1, jobs
+    assert store._version() == v
