@@ -40,10 +40,17 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # ANN fold: the ANN family's bodies now share one probe-cell rule,
-    # one rank rule and the IVF+SQ8 postings/probe/scoring pieces, so
-    # these 14 rows run changed code (tools/window_manifest.py
-    # affected_queries vs the parent tree). Rule (a) puts them first.
+    # BM25 fold: bm25_topk is bm25_serve's pipeline with no staged base,
+    # the query terms ride one eager checkpoint, and the staged index has
+    # one writer and one reader, so these 4 rows run changed code
+    # (tools/window_manifest.py affected_queries vs the parent tree).
+    # Rule (a) puts them first.
+    "bm25_incremental",
+    "bm25_topk",
+    "hybrid_rrf_serve",
+    "hybrid_rrf_topk",
+    # ANN fold (the previous change): the ANN family's bodies share one
+    # probe-cell rule, one rank rule and the IVF+SQ8 pieces.
     "ann_cosine_topk",
     "ann_filtered_topk",
     "ann_ivf_topk",
@@ -56,8 +63,6 @@ _WINDOW = [
     "ann_sq8_ivf_serve_delta",
     "ann_sq8_ivf_topk",
     "ann_sq8_topk",
-    "hybrid_rrf_serve",
-    "hybrid_rrf_topk",
     # RANGE filter configs parse string keys through the gated parse
     # (compile_source_config), and key_range_filter lost its wrapper.
     "filter_composite_json",
@@ -86,13 +91,13 @@ _WINDOW = [
     "sql_surface_window_stats",
     "stream_fetch_bounded",
     "txn_window_stats",
-    # With 59 rows changed since the committed manifest and 50 slots,
-    # the window is spent on changed rows only: the 38 above, then the
-    # 12 most recently rotated of the earlier changes (the SemDeDup
-    # unification and the staged-changelog cleanup). The 9 earliest
-    # rotated (staging round, audioop, kmeans_assign_summary) go to the
-    # FRONT of _REST, first in line next round; the window's 6
-    # unchanged rows go to its back.
+    # With 61 rows changed since the committed manifest and 50 slots,
+    # the window is spent on changed rows only: the 40 above, then the
+    # 10 most recently rotated of the earlier changes (the SemDeDup
+    # unification and the staged-changelog cleanup). The earliest
+    # rotated (filter_keymod_longkey/strkey, then the staging round,
+    # audioop, kmeans_assign_summary) sit at the FRONT of _REST, first
+    # in line next round.
     "kmeans_centroids",
     "semdedup_incremental",
     "semdedup_multiprobe",
@@ -103,14 +108,14 @@ _WINDOW = [
     "filter_payload_fields",
     "keyset_page",
     "partition_router",
-    "filter_keymod_longkey",
-    "filter_keymod_strkey",
 ]
 
 # below the 50-row window this round (all still verified locally by the
 # full sf0.01 oracle sweep), never-checked first then oldest external
 # green first — next round's rotation reads top-down:
 _REST = [
+    "filter_keymod_longkey",
+    "filter_keymod_strkey",
     "avro_ocf_roundtrip",
     "filter_keymod_staged_hash",
     "filter_keymod_subscribe",
@@ -131,7 +136,6 @@ _REST = [
     "media_video_frames",
     "approx_quantiles_binned",
     "approx_stats",
-    "bm25_topk",
     "boilerplate_strip",
     "cm_frequency_profile",
     "dedup_cdc_chunks",
@@ -222,7 +226,6 @@ _REST = [
     "dedup_decision_log",
     "dedup_incremental_near",
     "dedup_survivor_corpus",
-    "bm25_incremental",
     "curation_decisions_v3",
     "data_expectations",
     "dedup_canonical",

@@ -266,7 +266,10 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()
-    headline = [name for name in queries]
+    # timed in sorted-name order: the cold-JVM positions stay on the same
+    # queries whatever the _WINDOW rotation (queries() keeps the window
+    # order for the oracle check)
+    headline = sorted(queries)
 
     def clear_caches() -> None:
         """Drop cached/checkpointed blocks between queries so one query's
@@ -576,8 +579,6 @@ def main() -> None:
     # query-bound, so the measurement replicates the corpus (doc_ids
     # remapped, texts verbatim: vocabulary and df shape preserved) and
     # stages its index ONCE under the content-keyed marker protocol.
-    import os as _os
-
     from databus_spark.operators import dedup as _dedup
     from databus_spark.operators import text as _text
     from databus_spark.registry import _content_fingerprint, _staged_artifact, load_table
@@ -592,33 +593,21 @@ def main() -> None:
         )
     )
 
-    def _bm25x_build(d):
-        _text.bm25_postings(_basex).write.partitionBy("bkt").parquet(
-            _os.path.join(d, "postings")
-        )
-        _text.bm25_corpus_stats(_basex).write.parquet(_os.path.join(d, "stats"))
-        _text.bm25_query_terms(_basex).write.parquet(_os.path.join(d, "queries"))
-
     _idx = _staged_artifact(
         "databus_bm25x",
         f"{sf_dir}|x{BM25X}",
         _content_fingerprint(_base, "doc_id", "n_chars"),
-        _bm25x_build,
-        version="bm25x-v1",
+        lambda d: _text.bm25_index_build(_basex, d),
+        version="bm25x-v2",
     )
-    _qt = spark.read.parquet(_os.path.join(_idx, "queries"))
+    _qt = _text.bm25_index_read(spark, _idx)[2]
     _delta = _dedup.documents_with_dups(spark, sf_dir).where(
         _F.col("doc_id") >= 1_000_000
     )
     _unionx = _basex.unionByName(_delta.select("doc_id", "text"))
 
     def _bm25_serve_leg():
-        return _text.bm25_serve(
-            spark.read.parquet(_os.path.join(_idx, "postings")),
-            spark.read.parquet(_os.path.join(_idx, "stats")),
-            _qt,
-            delta_docs=_delta,
-        )
+        return _text.bm25_serve(*_text.bm25_index_read(spark, _idx), delta_docs=_delta)
 
     def _bm25_rebuild_leg():
         return _text.bm25_serve(

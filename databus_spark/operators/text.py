@@ -1581,12 +1581,31 @@ def boilerplate_strip_sql(from_sql: str, min_docs: int = BOILER_MIN_DOCS) -> str
 # ---------------------------------------------------------------------------
 # The lexical sibling of the ANN family: training-data pipelines retrieve
 # by keyword as often as by embedding (benchmark decontamination by
-# retrieval, targeted corpus slicing, dedup triage). Scale shape: the
-# query-term set is tiny and BROADCAST, so the corpus-side explode
-# prunes map-side to rows whose token appears in some query — the only
-# corpus-wide shuffle is the per-(doc, term) tf aggregate over that
-# pruned stream; document frequencies aggregate from the same pruned
-# rows; the final top-k window runs per query over candidate docs only.
+# retrieval, targeted corpus slicing, dedup triage).
+#
+# One pipeline serves every BM25 row. House convention (LSH band index,
+# SemDeDup cell index, linkage block index): the expensive corpus-wide
+# artifact is built ONCE at ingest and every query batch / corpus delta
+# serves against it. For BM25 the artifact is the INVERTED INDEX —
+# per-(token, doc) term frequencies with the doc length riding each
+# posting — plus the two corpus scalars (doc count, total token count).
+# Everything BM25 needs is additive across corpus slices: tf rows just
+# union, per-term df is a count over the unioned postings, and avgdl
+# recomputes from summed scalars — so bm25_serve over a staged base ∪
+# an unindexed delta is EXACT, not an approximation, and the inline
+# bm25_topk is that same serve with no staged base and the whole corpus
+# as the delta (the bm25_incremental oracle is the from-scratch rebuild
+# and hash-checks the claim).
+#
+# Scale shape: the query-term set is tiny and rides the one eager
+# checkpoint of the query workload (an Observation), so every corpus-
+# side explode prunes MAP-SIDE to query tokens before any shuffle. The
+# staged postings are PARTITIONED by a crc32 token bucket: a query batch
+# lists only its vocabulary's bucket directories (partition pruning at
+# the file listing — the scan never touches the other ~98% of the
+# index). The bucket column is engine-internal (never in oracle output),
+# so its hash needs no cross-engine twin. The final top-k window runs
+# per query over candidate docs only.
 #
 # Determinism discipline: every per-term weight rounds to 6dp and sums
 # as DECIMAL (order-independent, bit-identical across engines); avgdl is
@@ -1598,148 +1617,42 @@ BM25_B = 0.75
 BM25_N_QUERIES = 10
 BM25_QUERY_LEN = 3
 BM25_TOPK = 5
-
-
-def bm25_topk(
-    docs: DataFrame,
-    n_queries: int = BM25_N_QUERIES,
-    q_len: int = BM25_QUERY_LEN,
-    topk: int = BM25_TOPK,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-) -> DataFrame:
-    """(query_id, doc_id, rank, score): BM25 top-k documents per query.
-
-    Queries are derived deterministically from the corpus itself (the
-    fixture has no separate query table): the ``n_queries`` docs with
-    the lowest seeded hash contribute tokens 2..q_len+1 as a query,
-    keyed by the source doc_id — the same hash-sample convention the
-    ANN rows use for their query vectors.
-    """
-    from pyspark.sql.window import Window
-
-    toks = tokens_col(text_col)
-    base = docs.select("doc_id", toks.alias("_t")).localCheckpoint(eager=False)
-
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("_t")).alias("total_len"),
-    ).select(
-        "n_docs",
-        # exact micro-unit mean doc length, then ONE IEEE divide
-        (F.expr("total_len * 1000000 div n_docs").cast("double") / 1000000.0).alias(
-            "avgdl"
-        ),
-    )
-
-    h = portable_hash64(F.col("doc_id").cast("string"), F.lit("bm25"))
-    qtoks = (
-        base.where(F.size("_t") >= q_len + 1)
-        .orderBy(h.asc(), F.col("doc_id").asc())
-        .limit(n_queries)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.explode(F.slice("_t", 2, q_len)).alias("tok"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds the prune set AND the scoring join
-    )
-
-    # corpus explode, pruned MAP-SIDE to query terms before any shuffle
-    tf = (
-        base.select("doc_id", F.size("_t").alias("dl"), F.explode("_t").alias("tok"))
-        .join(F.broadcast(qtoks.select("tok").distinct()), "tok")
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-    )
-    df_t = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    w = (
-        idf
-        * (F.col("tf") * F.lit(1.0 + k1))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    terms = (
-        tf.join(F.broadcast(qtoks), "tok")
-        .join(F.broadcast(df_t), "tok")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(w, 6).cast("decimal(18,6)").alias("w"),
-        )
-    )
-    scored = terms.groupBy("query_id", "doc_id").agg(F.sum("w").alias("_score"))
-    rk = Window.partitionBy("query_id").orderBy(
-        F.col("_score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .where(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("_score").cast("double").alias("score"),
-        )
-    )
-
-
-# -- the staged-index / incremental legs of the BM25 triad ------------------
-# House convention (LSH band index, SemDeDup cell index, linkage block
-# index): the expensive corpus-wide artifact is built ONCE at ingest
-# and every query batch / corpus delta serves against it. For BM25 the
-# artifact is the INVERTED INDEX — per-(token, doc) term frequencies
-# with the doc length riding each posting — plus the two corpus
-# scalars (doc count, total token count). Everything BM25 needs is
-# additive across corpus deltas: tf rows just union, per-term df is a
-# count over the unioned postings, and avgdl recomputes from summed
-# scalars — so serving base ∪ delta from the index is EXACT, not an
-# approximation (the oracle is the from-scratch rebuild and hash-checks
-# that claim).
-#
-# 100 TB shape: postings are written PARTITIONED by a crc32 token
-# bucket. A query batch touches |query vocabulary| tokens, so the
-# serve path lists the handful of matching bucket directories
-# (partition pruning at the file listing — the scan never touches the
-# other ~98% of the index) and broadcast-joins the tiny term set
-# inside them. The bucket column is engine-internal (never in oracle
-# output), so its hash needs no cross-engine twin.
-
 BM25_BUCKETS = 64
+_BM25_PARTS = ("postings", "stats", "queries")
+
+
+def _bm25_bucket() -> Column:
+    return (F.crc32(F.col("tok")) % BM25_BUCKETS).cast("int")
+
+
+def _bm25_tf(docs: DataFrame, text_col: str, terms: list | None = None) -> DataFrame:
+    """(tok, doc_id, tf, dl): per-(doc, token) term frequencies, the doc
+    length riding each row. With ``terms`` the explode is pruned
+    map-side to those tokens, so the tf aggregate is the only shuffle
+    and it carries query-token rows only."""
+    rows = docs.select("doc_id", tokens_col(text_col).alias("_t")).select(
+        "doc_id", F.size("_t").alias("dl"), F.explode("_t").alias("tok")
+    )
+    if terms is not None:
+        rows = rows.where(F.col("tok").isin(terms))
+    return (
+        rows.groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
+        .select("tok", "doc_id", "tf", "dl")
+    )
 
 
 def bm25_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(tok, bkt, doc_id, tf, dl): the full inverted index of a corpus.
-    One explode + one (doc, tok) count agg — map-side combinable, the
-    same cost as a single bm25_topk rebuild, paid once at ingest."""
+    One explode + one (doc, tok) count agg — map-side combinable, paid
+    once at ingest."""
     from databus_spark.plans.hints import widen_scan
 
-    toks = tokens_col(text_col)
     # tokenize+explode map side ran on the single-split scan's one task
     # (r14: hybrid_rrf_topk's 1-task 1.1 CPU-s stage); the agg partials
     # are plain counts, so the widen trade wins (unlike approx_stats)
-    base = widen_scan(docs).select("doc_id", toks.alias("_t"))
-    return (
-        base.select("doc_id", F.size("_t").alias("dl"), F.explode("_t").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-        .select(
-            "tok",
-            (F.crc32(F.col("tok")) % BM25_BUCKETS).cast("int").alias("bkt"),
-            "doc_id",
-            "tf",
-            "dl",
-        )
+    return _bm25_tf(widen_scan(docs), text_col).select(
+        "tok", _bm25_bucket().alias("bkt"), "doc_id", "tf", "dl"
     )
 
 
@@ -1763,9 +1676,12 @@ def bm25_query_terms(
     q_len: int = BM25_QUERY_LEN,
     text_col: str = "text",
 ) -> DataFrame:
-    """(query_id, tok): the deterministic fixture query workload —
-    same derivation as bm25_topk's inline version (tokens 2..q_len+1
-    of the n_queries lowest-seeded-hash docs)."""
+    """(query_id, tok): the deterministic fixture query workload.
+    Queries are derived from the corpus itself (the fixture has no
+    separate query table): the ``n_queries`` docs with the lowest seeded
+    hash contribute tokens 2..q_len+1 as a query, keyed by the source
+    doc_id — the same hash-sample convention the ANN rows use for their
+    query vectors."""
     toks = tokens_col(text_col)
     base = docs.select("doc_id", toks.alias("_t"))
     h = portable_hash64(F.col("doc_id").cast("string"), F.lit("bm25"))
@@ -1781,74 +1697,81 @@ def bm25_query_terms(
     )
 
 
-def bm25_serve(
-    postings: DataFrame,
-    stats: DataFrame,
-    qtoks: DataFrame,
-    delta_docs: DataFrame | None = None,
-    topk: int = BM25_TOPK,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    text_col: str = "text",
-) -> DataFrame:
-    """(query_id, doc_id, rank, score): BM25 top-k served from the
-    staged inverted index, optionally merged with an UNINDEXED delta
-    batch — exact over base ∪ delta (identical scores to a from-scratch
-    rebuild; see the module note on additivity).
+def bm25_index_build(docs: DataFrame, index_dir: str, text_col: str = "text") -> None:
+    """Write the staged BM25 index of ``docs`` under the local directory
+    ``index_dir``: postings/ partitioned by token bucket, stats/ (the
+    corpus scalars) and queries/ (the fixture query workload), plus each
+    part's read schema in _SCHEMA so bm25_index_read runs no
+    schema-inference job. The one writer of the layout bm25_index_read
+    reads."""
+    import json
+    import os
 
-    Serve cost: partition-pruned postings of the query vocabulary
-    (+ one delta-sized explode when a delta rides along); never a
-    corpus rescan. The bucket list is a driver-side scalar collect
-    bounded by the query vocabulary size."""
+    spark = docs.sparkSession
+    bm25_postings(docs, text_col).write.partitionBy("bkt").parquet(
+        os.path.join(index_dir, "postings")
+    )
+    bm25_corpus_stats(docs, text_col).write.parquet(os.path.join(index_dir, "stats"))
+    bm25_query_terms(docs, text_col=text_col).write.parquet(
+        os.path.join(index_dir, "queries")
+    )
+    schemas = {
+        p: spark.read.parquet(os.path.join(index_dir, p)).schema.jsonValue()
+        for p in _BM25_PARTS
+    }
+    with open(os.path.join(index_dir, "_SCHEMA"), "w") as f:
+        json.dump(schemas, f)
+
+
+def bm25_index_read(spark, index_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(postings, stats, queries) of a bm25_index_build directory, each
+    read under its recorded schema: building the frames runs no Spark
+    job beyond the postings directory listing."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    with open(os.path.join(index_dir, "_SCHEMA")) as f:
+        schemas = json.load(f)
+    return tuple(
+        spark.read.schema(StructType.fromJson(schemas[p])).parquet(
+            os.path.join(index_dir, p)
+        )
+        for p in _BM25_PARTS
+    )
+
+
+def _bm25_query_set(qtoks: DataFrame) -> tuple[DataFrame, list, list]:
+    """Checkpoint the (query_id, tok) workload ONCE, eagerly, and read
+    its distinct tokens and their buckets off the same job (an
+    Observation): the returned frame feeds the scoring join, the two
+    lists prune the corpus side, and an inline query frame is never
+    evaluated twice. Both lists are bounded by the query vocabulary."""
     from pyspark.sql import Observation
+
+    obs = Observation()
+    qt = qtoks.observe(
+        obs,
+        F.collect_set("tok").alias("terms"),
+        F.collect_set(_bm25_bucket()).alias("bkts"),
+    ).localCheckpoint(eager=True)
+    got = obs.get
+    return qt, sorted(got["terms"]), sorted(got["bkts"])
+
+
+def _bm25_ranked(
+    hits: DataFrame, stats: DataFrame, qt: DataFrame, topk: int, k1: float, b: float
+) -> DataFrame:
+    """The scoring/rank tail every BM25 row shares: (tok, doc_id, tf,
+    dl) candidate postings + one (n_docs, total_len) row + the
+    checkpointed (query_id, tok) workload -> (query_id, doc_id, rank,
+    score)."""
     from pyspark.sql.window import Window
 
-    # the bucket list rides the query-vocabulary checkpoint job via
-    # Observation (the star-signature pattern): ONE eager job replaces
-    # the previous lazy checkpoint + separate distinct+collect — one
-    # fewer job round-trip per serve batch (r15; guide §2.6/§5)
-    obs = Observation()
-    qset = (
-        qtoks.select("tok")
-        .distinct()
-        .observe(
-            obs,
-            F.collect_set(
-                (F.crc32(F.col("tok")) % BM25_BUCKETS).cast("int")
-            ).alias("bkts"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    buckets = sorted(obs.get["bkts"])
-    hits = (
-        postings.where(F.col("bkt").isin(buckets))
-        .join(F.broadcast(qset), "tok")
-        .select("tok", "doc_id", "tf", "dl")
-    )
-    if delta_docs is not None:
-        toks = tokens_col(text_col)
-        dbase = delta_docs.select("doc_id", toks.alias("_t")).localCheckpoint(
-            eager=False
-        )
-        dtf = (
-            dbase.select(
-                "doc_id", F.size("_t").alias("dl"), F.explode("_t").alias("tok")
-            )
-            .join(F.broadcast(qset), "tok")
-            .groupBy("doc_id", "tok")
-            .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-            .select("tok", "doc_id", "tf", "dl")
-        )
-        hits = hits.unionByName(dtf)
-        stats = (
-            stats.unionByName(bm25_corpus_stats(delta_docs, text_col))
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("total_len").alias("total_len"),
-            )
-        )
     st = stats.select(
         "n_docs",
+        # exact micro-unit mean doc length, then ONE IEEE divide
         (F.expr("total_len * 1000000 div n_docs").cast("double") / 1000000.0).alias(
             "avgdl"
         ),
@@ -1869,7 +1792,7 @@ def bm25_serve(
         )
     )
     terms = (
-        hits.join(F.broadcast(qtoks), "tok")
+        hits.join(F.broadcast(qt), "tok")
         .join(F.broadcast(df_t), "tok")
         .crossJoin(F.broadcast(st))
         .select(
@@ -1908,6 +1831,58 @@ def bm25_serve(
             F.col("rank").cast("int").alias("rank"),
             F.col("_score").cast("double").alias("score"),
         )
+    )
+
+
+def bm25_serve(
+    postings: DataFrame,
+    stats: DataFrame,
+    qtoks: DataFrame,
+    delta_docs: DataFrame | None = None,
+    topk: int = BM25_TOPK,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    text_col: str = "text",
+) -> DataFrame:
+    """(query_id, doc_id, rank, score): BM25 top-k served from the
+    staged inverted index, optionally merged with an UNINDEXED delta
+    batch — exact over base ∪ delta (identical scores to a from-scratch
+    rebuild; see the module note on additivity).
+
+    Serve cost: partition-pruned postings of the query vocabulary
+    (+ one delta-sized explode when a delta rides along); never a
+    corpus rescan."""
+    qt, terms, buckets = _bm25_query_set(qtoks)
+    hits = (
+        postings.where(F.col("bkt").isin(buckets))
+        .where(F.col("tok").isin(terms))
+        .select("tok", "doc_id", "tf", "dl")
+    )
+    if delta_docs is not None:
+        hits = hits.unionByName(_bm25_tf(delta_docs, text_col, terms))
+        stats = stats.unionByName(bm25_corpus_stats(delta_docs, text_col)).agg(
+            F.sum("n_docs").alias("n_docs"), F.sum("total_len").alias("total_len")
+        )
+    return _bm25_ranked(hits, stats, qt, topk, k1, b)
+
+
+def bm25_topk(
+    docs: DataFrame,
+    n_queries: int = BM25_N_QUERIES,
+    q_len: int = BM25_QUERY_LEN,
+    topk: int = BM25_TOPK,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    text_col: str = "text",
+) -> DataFrame:
+    """(query_id, doc_id, rank, score): BM25 top-k documents per query,
+    from scratch — bm25_serve's pipeline with no staged base and the
+    whole corpus as the delta: the bm25_query_terms workload, the corpus
+    tf pruned map-side to its tokens (no full postings are built),
+    bm25_corpus_stats, and the shared scoring/rank tail."""
+    qt, terms, _ = _bm25_query_set(bm25_query_terms(docs, n_queries, q_len, text_col))
+    return _bm25_ranked(
+        _bm25_tf(docs, text_col, terms), bm25_corpus_stats(docs, text_col), qt, topk, k1, b
     )
 
 

@@ -165,6 +165,24 @@ def _content_fingerprint(df: DataFrame, *num_cols: str) -> str:
     return fp
 
 
+def _text_fingerprint(docs: DataFrame) -> str:
+    """_content_fingerprint of a documents frame over its ids and a crc
+    of each (doc_id, text): a corpus rewritten with the same ids but
+    different text changes it."""
+    return _content_fingerprint(
+        docs.withColumn(
+            "_tcrc",
+            F.crc32(
+                F.concat_ws("|", F.col("doc_id").cast("string"), F.col("text")).cast(
+                    "binary"
+                )
+            ),
+        ),
+        "doc_id",
+        "_tcrc",
+    )
+
+
 # --------------------------------------------------------------------------
 # Snapshot compaction (bootstrap applier semantics, SURVEY §2.2 K4 / §2.6 A6)
 # --------------------------------------------------------------------------
@@ -1049,11 +1067,7 @@ def hybrid_rrf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timeline showed SEVEN sequential parquet footer jobs over
     # t=0-0.7 s before either leg could start (guide §2.6)
     def _bm_reads():
-        d = _staged_bm25_index(spark, sf_dir)
-        return (
-            spark.read.parquet(os.path.join(d, "postings")),
-            spark.read.parquet(os.path.join(d, "stats")),
-        )
+        return text.bm25_index_read(spark, _staged_bm25_index(spark, sf_dir))[:2]
 
     with ThreadPoolExecutor(max_workers=4) as _ex:
         _fbm = _ex.submit(_bm_reads)
@@ -1415,9 +1429,11 @@ def semdedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 lexical top-5 retrieval over the documents table — the
     keyword sibling of the ANN rows (decontamination-by-retrieval,
-    targeted corpus slicing). Query terms are hash-sampled from the
-    corpus (the ANN query-vector convention); the corpus-side explode
-    prunes MAP-SIDE against the broadcast query-term set, so the only
+    targeted corpus slicing). The from-scratch form of the staged serve
+    path, with no scoring code of its own: text.bm25_topk is bm25_serve's
+    pipeline with no staged base and the whole corpus as the delta.
+    Query terms are hash-sampled from the corpus (the ANN query-vector
+    convention) and prune the corpus-side explode MAP-SIDE, so the only
     corpus-wide shuffle is the per-(doc, term) tf aggregate over
     matching rows. Per-term weights round to 6dp and sum as DECIMAL
     (order-independent, cross-engine exact); ties rank by doc_id."""
@@ -1425,34 +1441,19 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """The base corpus's BM25 artifacts, staged once per fixture: the
-    inverted index (postings partitioned by token bucket — the serve
-    path's partition pruning), the additive corpus scalars, and the
-    deterministic fixture query workload. The retrieval sibling of the
-    linkage block index / SemDeDup cell index."""
+    """The base corpus's BM25 index (text.bm25_index_build: postings
+    partitioned by token bucket — the serve path's partition pruning —
+    the additive corpus scalars and the deterministic fixture query
+    workload), staged once per fixture; read it with
+    text.bm25_index_read. The retrieval sibling of the linkage block
+    index / SemDeDup cell index."""
     base = load_table(spark, sf_dir, "documents")
-    fingerprint = _content_fingerprint(
-        base.withColumn(
-            "_tcrc",
-            F.crc32(
-                F.concat_ws("|", F.col("doc_id").cast("string"), F.col("text")).cast(
-                    "binary"
-                )
-            ),
-        ),
-        "doc_id",
-        "_tcrc",
-    )
-
-    def build(d: str) -> None:
-        text.bm25_postings(base).write.partitionBy("bkt").parquet(
-            os.path.join(d, "postings")
-        )
-        text.bm25_corpus_stats(base).write.parquet(os.path.join(d, "stats"))
-        text.bm25_query_terms(base).write.parquet(os.path.join(d, "queries"))
-
     return _staged_artifact(
-        "databus_bm25idx", sf_dir, fingerprint, build, version="bm25-v1"
+        "databus_bm25idx",
+        sf_dir,
+        _text_fingerprint(base),
+        lambda d: text.bm25_index_build(base, d),
+        version="bm25-v2",
     )
 
 
@@ -1475,13 +1476,10 @@ def bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = dedup.documents_with_dups(spark, sf_dir).where(
         F.col("doc_id") >= 1_000_000
     )
-    idx_dir = _staged_bm25_index(spark, sf_dir)
-    return text.bm25_serve(
-        spark.read.parquet(os.path.join(idx_dir, "postings")),
-        spark.read.parquet(os.path.join(idx_dir, "stats")),
-        spark.read.parquet(os.path.join(idx_dir, "queries")),
-        delta_docs=incoming,
+    postings, stats, queries = text.bm25_index_read(
+        spark, _staged_bm25_index(spark, sf_dir)
     )
+    return text.bm25_serve(postings, stats, queries, delta_docs=incoming)
 
 
 @query("kmeans_centroids", similarity.kmeans_centroids_sql())

@@ -1,13 +1,14 @@
-"""Spark job counts of the SemDeDup, k-means, ANN and hybrid rows.
+"""Spark job counts of the SemDeDup, k-means, ANN, hybrid and BM25 rows.
 
 At fixture scale these families' walls are dominated by job scheduling,
 not by data work, so a refactor that adds a job is a measurable slowdown
 even when its rows are identical. Each row runs once to stage its
 artifacts, then once more under a job group; the warm count must stay
 at or below the bound measured on the layout that preceded the shared
-operator: the four SemDeDup survivors bodies for the SemDeDup rows, and
-the ANN bodies with their own probe, rank and IVF+SQ8 copies for the
-ANN and hybrid rows (sf0.001).
+operator: the four SemDeDup survivors bodies for the SemDeDup rows, the
+ANN bodies with their own probe, rank and IVF+SQ8 copies for the ANN
+and hybrid rows, and the separate inline and staged BM25 bodies for the
+BM25 rows (sf0.001).
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ _WARM_JOBS = {
     "ann_sq8_ivf_serve_delta": 17,
     "ann_sq8_ivf_topk": 16,
     "ann_sq8_topk": 10,
+    "bm25_incremental": 21,
+    "bm25_topk": 13,
     "hybrid_rrf_serve": 14,
     "hybrid_rrf_topk": 24,
 }

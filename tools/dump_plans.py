@@ -49,7 +49,7 @@ HEADLINE = [
     ("fuzzy_join_docs", "blocked fuzzy join: explicit keyed repartition pins the quadratic DP stage at full width (AQE sizes by bytes and serialized it); capped block-local self-join, codegen levenshtein"),
     ("fuzzy_join_incremental", "delta vs staged base block index: one (block,bucket) equi-join, base never re-blocked"),
     ("corpus_drift", "drift KL: one corpus explode+agg; vocab/bins/totals all broadcast back onto a slices x bins grid"),
-    ("bm25_incremental", "BM25 serve: bucket-pruned postings scan + broadcast term set; delta explode pruned map-side; base never rescanned"),
+    ("bm25_incremental", "BM25 serve: bucket-pruned postings scan filtered to the observed query terms; delta explode pruned map-side; base never rescanned"),
     ("release_gate", "curation + k-anonymity: QI group counts shuffle once, verdict joins back on the QI key"),
     ("ann_sq8_ivf_serve", "staged IVF+SQ8 serve: path-scoped read of probed cell partitions only, broadcast query probes, exact integer dots"),
     ("weighted_sample_topk", "A-ES weighted sample: TakeOrderedAndProject top-n, never a global sort"),

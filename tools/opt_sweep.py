@@ -2,15 +2,17 @@
 """Per-query Spark attribution for registry queries: a sweep over the
 whole registry, or the stage timeline of a few queries.
 
-Runs each query the bench way (clear caches, build, noop sink) ``--runs``
-times in one session, each run inside its own perfbench.tracing span,
-and reports each query's last (warm) run: wall, jobs, stages, tasks,
-executor CPU, shuffle read/write, spill, peak execution memory,
-driver_only_s (wall minus the union of its stage intervals, i.e.
-planning, analysis and the gaps between jobs), the NARROW stages (<= 2
-tasks and >= 0.4 executor CPU-s: a per-row stage running serial on a
-wide box) and one timeline row per stage, in seconds from the run's
-start, with the gap before it in which no stage ran.
+Runs every selected query once untimed, outside any span, so fixture
+staging and first-touch costs never land in a timed run (host_ab.py's
+protocol). Then runs each query the bench way (clear caches, build,
+noop sink) ``--runs`` times in one session, each run inside its own
+perfbench.tracing span, and reports each query's last run: wall, jobs,
+stages, tasks, executor CPU, shuffle read/write, spill, peak execution
+memory, driver_only_s (wall minus the union of its stage intervals,
+i.e. planning, analysis and the gaps between jobs), the NARROW stages
+(<= 2 tasks and >= 0.4 executor CPU-s: a per-row stage running serial
+on a wide box) and one timeline row per stage, in seconds from the
+run's start, with the gap before it in which no stage ran.
 
 Usage: python tools/opt_sweep.py [out.json] [--queries a,b,c] [--runs N]
 """
@@ -26,6 +28,20 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.traced import TracedRun  # noqa: E402
+
+
+def warm_up(probe, names: list[str]) -> None:
+    """One untimed run of each query, outside any span: a sweep's
+    numbers then do not depend on what earlier runs left in the temp
+    dir. A failure here is left for the timed runs to record."""
+    for name in names:
+        probe.clear()
+        try:
+            probe.queries[name](probe.spark, probe.sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception:  # noqa: BLE001 - time_queries records it
+            pass
 
 
 def time_queries(probe, tracer, names: list[str], runs: int) -> tuple[dict, dict]:
@@ -76,7 +92,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out", nargs="?", default=os.path.join(tempfile.gettempdir(), "opt_sweep.json"))
     ap.add_argument("--queries", help="comma-separated query names (default: every query, sorted)")
-    ap.add_argument("--runs", type=int, default=1, help="runs per query; the last one is reported")
+    ap.add_argument("--runs", type=int, default=1, help="timed runs per query; the last one is reported")
     args = ap.parse_args()
     from tools.opt_probe import Probe
 
@@ -84,6 +100,7 @@ def main() -> None:
     p = Probe(extra_conf=run.conf)
     run.attach(p.spark)
     names = args.queries.split(",") if args.queries else sorted(p.queries)
+    warm_up(p, names)
     spans, results = time_queries(p, run.tracer, names, args.runs)
     run.finish()
     for name, span in spans.items():

@@ -33,6 +33,31 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SOAK_DIR = "/tmp/databus_soak10x"
 REPLICA_STRIDE = 100_000_000
 
+# (stage, source dir) -> artifact dir, filled by the families' prestages
+_STAGED: dict[tuple[str, str], str] = {}
+
+
+def _stage(name: str, sf_dir: str, fingerprint: str, build, version: str) -> None:
+    """Stage one derived soak input through the shared staging protocol
+    (registry._staged_artifact: flock, content-fingerprint marker written
+    by rename) and remember its directory for the family that reads it.
+    The soak fixture dir holds the x10 corpus one run and the x100 corpus
+    the next (build_soak_fixture rebuilds it in place per --scale), so
+    the key is the source's content, never its path alone."""
+    from databus_spark.registry import _staged_artifact
+
+    _STAGED[name, sf_dir] = _staged_artifact(
+        f"databus_soak_{name}", sf_dir, fingerprint, build, version=version
+    )
+
+
+def _orders_fingerprint(spark, sf_dir: str) -> str:
+    from databus_spark.registry import _content_fingerprint, load_table
+
+    return _content_fingerprint(
+        load_table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice"
+    )
+
 
 def build_soak_fixture(spark, scale: int) -> None:
     """Stage the 10x documents/embeddings/orders parquet (one-time)."""
@@ -230,25 +255,19 @@ def _web_corpus(docs):
     return grouped.select("doc_id", text.alias("text"))
 
 
-_WEB_STAGE = "/tmp/databus_soak_web"
-
-
 def _prestage_web(spark, docs, emb, sf_dir):
     """Corpus derivation (group/salt/concat HOFs) is one-time staging,
-    not the measured operator — write it once per source dir."""
-    import hashlib
+    not the measured operator — written once per source content."""
+    from databus_spark.registry import _text_fingerprint
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = os.path.join(_WEB_STAGE, tag)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _web_corpus(docs).repartition(32).write.mode("overwrite").parquet(out)
+    def build(d):
+        _web_corpus(docs).repartition(32).write.parquet(os.path.join(d, "web"))
+
+    _stage("web", sf_dir, _text_fingerprint(docs), build, version="web-v1")
 
 
 def _read_web(spark, sf_dir):
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return spark.read.parquet(os.path.join(_WEB_STAGE, tag))
+    return spark.read.parquet(os.path.join(_STAGED["web", sf_dir], "web"))
 
 
 def fam_exactsubstr_web(spark, docs, emb, sf_dir):
@@ -314,41 +333,24 @@ def fam_batch_apply(spark, docs, emb, sf_dir):
 #    never changed). Staging now prestages untimed under a content
 #    marker, and the micro-batch jobs (which carry the stream's run-id
 #    group) are attributed to the leg's span by their submission time,
-#    so the recorded shuffle/mem is the applier's.
-_STREAM_STAGE = "/tmp/databus_soak_streamstage"
-
-
-def _stream_stage_dir(sf_dir: str) -> str:
-    """CONTENT-keyed stage tag: /tmp/databus_soak10x holds the x10
-    corpus one run and the x100 corpus the next (build_soak_fixture
-    rebuilds in place per --scale), so a path-keyed marker serves a
-    stale smaller-scale staging to the bigger leg — measured: an
-    'x100' stream_apply run drained the x10 staging and read 15.5 s /
-    507 MB, the x10 numbers. The orders.parquet directory signature
-    (name, size, mtime_ns per file) changes with every rebuild."""
-    import hashlib
-
-    sig = [sf_dir]
-    src = os.path.join(sf_dir, "orders.parquet")
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            sig.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-    return os.path.join(
-        _STREAM_STAGE, hashlib.md5("|".join(sig).encode()).hexdigest()[:12]
-    )
-
-
+#    so the recorded shuffle/mem is the applier's. The stage is keyed on
+#    the orders content: a path-keyed marker once served the x10 staging
+#    to an 'x100' stream_apply run (it read 15.5 s / 507 MB, the x10
+#    numbers).
 def _prestage_stream(spark, docs, emb, sf_dir):
     from databus_spark.envelope import orders_changelog
     from databus_spark.streaming.source import stage_changelog
 
-    out = _stream_stage_dir(sf_dir)
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return
-    shutil.rmtree(out, ignore_errors=True)
-    stage_changelog(orders_changelog(spark, sf_dir), f"{out}/stage", n_chunks=8)
-    open(os.path.join(out, "_DONE"), "w").write("1")
+    def build(d):
+        stage_changelog(
+            orders_changelog(spark, sf_dir), os.path.join(d, "stage"), n_chunks=8
+        )
+
+    _stage("stream", sf_dir, _orders_fingerprint(spark, sf_dir), build, version="stream-v1")
+
+
+def _stream_stage_dir(sf_dir: str) -> str:
+    return os.path.join(_STAGED["stream", sf_dir], "stage")
 
 
 def fam_stream_apply(spark, docs, emb, sf_dir):
@@ -360,7 +362,7 @@ def fam_stream_apply(spark, docs, emb, sf_dir):
     from databus_spark.streaming.source import changelog_stream
 
     olog = orders_changelog(spark, sf_dir)
-    stage = f"{_stream_stage_dir(sf_dir)}/stage"
+    stage = _stream_stage_dir(sf_dir)
     tmp = tempfile.mkdtemp(prefix="soak_stream_")
     applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
@@ -382,7 +384,7 @@ def fam_stream_apply_unbucketed(spark, docs, emb, sf_dir):
     from databus_spark.streaming.source import changelog_stream
 
     olog = orders_changelog(spark, sf_dir)
-    stage = f"{_stream_stage_dir(sf_dir)}/stage"
+    stage = _stream_stage_dir(sf_dir)
     tmp = tempfile.mkdtemp(prefix="soak_stream_ub_")
     applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap", n_buckets=1))
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
@@ -401,36 +403,18 @@ fam_stream_apply_unbucketed.prestage = _prestage_stream
 # corpus keyspace so updates are real) into a link-copied clone of a big
 # prestaged snapshot, so the merge-on-read appends and the size-triggered
 # fold are what it measures.
-_BIGSTATE_ROOT = "/tmp/databus_soak_bigstate"
-
-
-def _bigstate_dir(sf_dir: str) -> str:
-    import hashlib
-
-    sig = [sf_dir]
-    src = os.path.join(sf_dir, "orders.parquet")
-    if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            sig.append(f"{name}:{st.st_size}:{st.st_mtime_ns}")
-    return os.path.join(
-        _BIGSTATE_ROOT, hashlib.md5("|".join(sig).encode()).hexdigest()[:12]
-    )
-
-
 def _prestage_bigstate(spark, docs, emb, sf_dir):
     from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
-    from databus_spark.streaming.source import stage_changelog
 
     _prestage_stream(spark, docs, emb, SF_DIR)  # the small drain log
-    out = _bigstate_dir(sf_dir)
-    if os.path.exists(os.path.join(out, "_DONE")):
-        return
-    shutil.rmtree(out, ignore_errors=True)
-    store = ParquetSnapshotStore(spark, os.path.join(out, "base"))
-    store.merge(orders_changelog(spark, sf_dir))  # one big v1 seed
-    open(os.path.join(out, "_DONE"), "w").write("1")
+
+    def build(d):
+        store = ParquetSnapshotStore(spark, os.path.join(d, "base"))
+        store.merge(orders_changelog(spark, sf_dir))  # one big v1 seed
+
+    fingerprint = _orders_fingerprint(spark, sf_dir)
+    _stage("bigstate", sf_dir, fingerprint, build, version="bigstate-v1")
 
 
 def fam_stream_bigstate(spark, docs, emb, sf_dir):
@@ -443,11 +427,11 @@ def fam_stream_bigstate(spark, docs, emb, sf_dir):
 
     tmp = tempfile.mkdtemp(prefix="soak_bigstate_")
     ParquetSnapshotStore._link_tree(
-        os.path.join(_bigstate_dir(sf_dir), "base"), f"{tmp}/snap"
+        os.path.join(_STAGED["bigstate", sf_dir], "base"), f"{tmp}/snap"
     )
     applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
     olog = orders_changelog(spark, SF_DIR)
-    stage = f"{_stream_stage_dir(SF_DIR)}/stage"
+    stage = _stream_stage_dir(SF_DIR)
     q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
     q.awaitTermination(1800)
 
@@ -522,14 +506,6 @@ def fam_bm25(spark, docs, emb, sf_dir):
     text.bm25_topk(docs).write.format("noop").mode("overwrite").save()
 
 
-def _bm25_idx_dir(sf_dir: str) -> str:
-    import hashlib
-
-    return os.path.join(
-        "/tmp", "databus_soak_bm25idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    )
-
-
 def fam_bm25_serve(spark, docs, emb, sf_dir):
     """The staged-index serve leg vs fam_bm25's per-query rebuild: the
     inverted index is built once at ingest (prestage, untimed); the
@@ -541,28 +517,23 @@ def fam_bm25_serve(spark, docs, emb, sf_dir):
 
     from databus_spark.operators import text
 
-    d = _bm25_idx_dir(sf_dir)
+    postings, stats, queries = text.bm25_index_read(spark, _STAGED["bm25idx", sf_dir])
     text.bm25_serve(
-        spark.read.parquet(os.path.join(d, "postings")),
-        spark.read.parquet(os.path.join(d, "stats")),
-        spark.read.parquet(os.path.join(d, "queries")),
-        delta_docs=docs.where(F.col("doc_id") < 50),
+        postings, stats, queries, delta_docs=docs.where(F.col("doc_id") < 50)
     ).write.format("noop").mode("overwrite").save()
 
 
 def _prestage_bm25_serve(spark, docs, emb, sf_dir):
     from databus_spark.operators import text
+    from databus_spark.registry import _text_fingerprint
 
-    d = _bm25_idx_dir(sf_dir)
-    if os.path.exists(os.path.join(d, "_DONE")):
-        return
-    shutil.rmtree(d, ignore_errors=True)
-    text.bm25_postings(docs).write.partitionBy("bkt").parquet(
-        os.path.join(d, "postings")
+    _stage(
+        "bm25idx",
+        sf_dir,
+        _text_fingerprint(docs),
+        lambda d: text.bm25_index_build(docs, d),
+        version="bm25-v2",
     )
-    text.bm25_corpus_stats(docs).write.parquet(os.path.join(d, "stats"))
-    text.bm25_query_terms(docs).write.parquet(os.path.join(d, "queries"))
-    open(os.path.join(d, "_DONE"), "w").write("1")
 
 
 fam_bm25_serve.prestage = _prestage_bm25_serve
