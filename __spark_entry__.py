@@ -40,11 +40,17 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # BM25 fold: bm25_topk is bm25_serve's pipeline with no staged base,
-    # the query terms ride one eager checkpoint, and the staged index has
-    # one writer and one reader, so these 4 rows run changed code
+    # One versioned-state commit protocol: ZorderTable commits through
+    # store/versions.py and bpe_learn_merges is the batched learner at
+    # one rule per round, so these 3 rows run changed code
     # (tools/window_manifest.py affected_queries vs the parent tree).
     # Rule (a) puts them first.
+    "bpe_learn_merges",
+    "zorder_box_read",
+    "zorder_events_key",
+    # BM25 fold (an earlier change): bm25_topk is bm25_serve's pipeline
+    # with no staged base, the query terms ride one eager checkpoint, and
+    # the staged index has one writer and one reader.
     "bm25_incremental",
     "bm25_topk",
     "hybrid_rrf_serve",
@@ -91,13 +97,13 @@ _WINDOW = [
     "sql_surface_window_stats",
     "stream_fetch_bounded",
     "txn_window_stats",
-    # With 61 rows changed since the committed manifest and 50 slots,
-    # the window is spent on changed rows only: the 40 above, then the
-    # 10 most recently rotated of the earlier changes (the SemDeDup
-    # unification and the staged-changelog cleanup). The earliest
-    # rotated (filter_keymod_longkey/strkey, then the staging round,
-    # audioop, kmeans_assign_summary) sit at the FRONT of _REST, first
-    # in line next round.
+    # With 63 rows changed since the committed manifest and 50 slots,
+    # the window is spent on changed rows only: the 43 above, then the
+    # 7 most recently rotated of the earlier changes (the SemDeDup
+    # unification). The earliest rotated (filter_keymod_longkey/strkey,
+    # then the staging round, audioop, kmeans_assign_summary, then the
+    # staged-changelog cleanup) sit at the FRONT of _REST, first in line
+    # next round.
     "kmeans_centroids",
     "semdedup_incremental",
     "semdedup_multiprobe",
@@ -105,9 +111,6 @@ _WINDOW = [
     "semdedup_survivors",
     "semdedup_survivors_v2",
     "semdedup_trained",
-    "filter_payload_fields",
-    "keyset_page",
-    "partition_router",
 ]
 
 # below the 50-row window this round (all still verified locally by the
@@ -122,10 +125,11 @@ _REST = [
     "jdbc_txlog_pull",
     "sql_txlog_pull",
     "trail_file_seek",
-    "zorder_box_read",
     "media_wav_probe",
     "kmeans_assign_summary",
-    "zorder_events_key",
+    "filter_payload_fields",
+    "keyset_page",
+    "partition_router",
     "corpus_drift",
     "dedup_span_windows",
     "exactsubstr_incremental",
@@ -181,7 +185,6 @@ _REST = [
     "value_histogram",
     "weighted_sample_topk",
     "xml_trail_parse",
-    "bpe_learn_merges",
     "bpe_learn_merges_batched",
     "contamination_fraction",
     "decontaminate_bloom",

@@ -370,6 +370,12 @@ def main() -> None:
         # the timed row measures probe + pruned-cell scoring, not the
         # one-time corpus quantize/assign
         "ann_sq8_ivf_serve",
+        # the route-materialized changelog stage: the timed row measures
+        # the directory-pruned subscription, not the one-time staging
+        "filter_keymod_subscribe",
+        # the staged base dHash band index: the timed row measures the
+        # delta decode + probe, not the one-time base decode + hash
+        "media_dhash_incremental",
     ):
         if _fixture_q in queries:
             queries[_fixture_q](spark, sf_dir)

@@ -129,9 +129,10 @@ def zorder_layout(
 
 import contextlib as _contextlib
 import fcntl as _fcntl
-import json as _json
 import os as _os
 import uuid as _uuid
+
+from databus_spark.store.versions import VersionedState as _VersionedState
 
 
 class ZorderTable:
@@ -139,8 +140,9 @@ class ZorderTable:
 
     write_initial(df) lays the table out and freezes the bucketing
     bounds; append(df) rewrites only the files whose z-interval the
-    batch overlaps. Versioned directories + a _VERSION pointer give the
-    same crash-atomic commit the snapshot store uses.
+    batch overlaps. Each version's manifest commits through
+    store/versions.py, the crash-atomic commit every versioned state
+    (the snapshot store, the streaming sketch sinks) uses.
     """
 
     def __init__(self, spark, path: str, x_col: str, y_col: str,
@@ -148,7 +150,7 @@ class ZorderTable:
         self.spark, self.path = spark, path
         self.x_col, self.y_col, self.bits = x_col, y_col, bits
         self.rows_per_file = rows_per_file
-        _os.makedirs(path, exist_ok=True)
+        self.vstate = _VersionedState(path)
 
     # -- writer mutual exclusion -------------------------------------------
     @_contextlib.contextmanager
@@ -169,32 +171,10 @@ class ZorderTable:
 
     # -- manifest / version plumbing ---------------------------------------
     def _version(self) -> int:
-        p = _os.path.join(self.path, "_VERSION")
-        return int(open(p).read()) if _os.path.exists(p) else 0
-
-    def _commit(self, v: int, manifest: dict) -> None:
-        # manifest first, atomically; THEN flip _VERSION (also atomic).
-        # A crash between the two leaves _VERSION at v-1 pointing at the
-        # intact previous manifest — the table stays readable, the
-        # orphaned v-dir is garbage for vacuum, never corruption.
-        mtmp = _os.path.join(self.path, f"_manifest_v{v}.json.tmp")
-        with open(mtmp, "w") as f:
-            _json.dump(manifest, f)
-        _os.replace(mtmp, _os.path.join(self.path, f"_manifest_v{v}.json"))
-        tmp = _os.path.join(self.path, "_VERSION.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        _os.replace(tmp, _os.path.join(self.path, "_VERSION"))
+        return self.vstate.current()
 
     def manifest(self) -> dict:
-        v = self._version()
-        with open(_os.path.join(self.path, f"_manifest_v{v}.json")) as f:
-            return _json.load(f)
-
-    def _data_dir(self, v: int) -> str:
-        d = _os.path.join(self.path, f"v{v}")
-        _os.makedirs(d, exist_ok=True)
-        return d
+        return self.vstate.manifest(self.vstate.current())
 
     # -- keying with frozen bounds -----------------------------------------
     def _keyed(self, df: DataFrame, bounds: dict) -> DataFrame:
@@ -265,8 +245,8 @@ class ZorderTable:
         bounds = {"xmin": int(mm[0]), "xmax": int(mm[1]),
                   "ymin": int(mm[2]), "ymax": int(mm[3])}
         keyed = self._keyed(df, bounds)
-        entries = self._write_files(keyed, self._data_dir(1))
-        self._commit(1, {"bounds": bounds, "files": entries})
+        entries = self._write_files(keyed, self.vstate.dir(1))
+        self.vstate.commit(1, {"bounds": bounds, "files": entries})
 
     def append(self, df: DataFrame) -> dict:
         """Incrementally cluster a new batch: only files whose
@@ -276,7 +256,8 @@ class ZorderTable:
             return self._append_locked(df)
 
     def _append_locked(self, df: DataFrame) -> dict:
-        man, v = self.manifest(), self._version()
+        v = self.vstate.current()
+        man = self.vstate.manifest(v)
         bounds = man["bounds"]
         keyed = self._keyed(df, bounds).localCheckpoint(eager=False)
         # pure-JVM VALUES LocalRelation, not createDataFrame-from-rows:
@@ -302,7 +283,9 @@ class ZorderTable:
                     (F.col("z") >= F.col("zlo")) & (F.col("z") <= F.col("zhi")),
                 ).select("fid").distinct().collect()
             }
-        new_dir = self._data_dir(v + 1)
+        # the manifest names its files, so what a killed append left in
+        # v<N+1>/ is never read: vacuum collects it once superseded
+        new_dir = self.vstate.dir(v + 1)
         kept, rewrite_files = [], []
         for i, e in enumerate(man["files"]):
             (rewrite_files if i in touched else kept).append(e)
@@ -314,7 +297,7 @@ class ZorderTable:
             union = old.unionByName(keyed)
         entries = kept + self._write_files(union, new_dir)
         entries.sort(key=lambda e: e["zlo"])
-        self._commit(v + 1, {"bounds": bounds, "files": entries})
+        self.vstate.commit(v + 1, {"bounds": bounds, "files": entries})
         return {"rewritten": len(rewrite_files), "kept": len(kept)}
 
     def read(self) -> DataFrame:
@@ -345,8 +328,8 @@ class ZorderTable:
             return self._vacuum_locked()
 
     def _vacuum_locked(self) -> dict:
-        v = self._version()
-        man = self.manifest()
+        v = self.vstate.current()
+        man = self.vstate.manifest(v)
         referenced = {
             _os.path.normpath(_os.path.join(self.path, e["file"]))
             for e in man["files"]

@@ -796,80 +796,10 @@ BPE_D = "\x01"  # token delimiter: never appears in whitespace-split tokens
 def bpe_learn_merges(docs: DataFrame, n_merges: int = 3, text_col: str = "text") -> DataFrame:
     """(rank, pair, n): the first n_merges BPE merge rules learned
     greedily over the corpus (count DESC, pair ASC tie-break), each
-    with its count at adoption time."""
-    spark = docs.sparkSession
-    d = BPE_D
-    # strip the delimiter char from the corpus FIRST (both engines): a
-    # token containing \\x01 would otherwise read as a spurious token
-    # boundary in the delimited string, and merge rules would be
-    # learned over tokens that don't exist in the corpus
-    clean = F.expr(f"translate({text_col}, chr(1), '')")
-    # widen BEFORE the tokenize and the checkpoint (r14): the corpus-
-    # string table descends from a single-split scan, so the initial
-    # tokenize+join AND every round's pair explode+count AND every
-    # replace-fold ran as ONE task (stage metrics: 0.5-1.0 CPU-s
-    # single-task stages, one per round). Widening the raw text first
-    # spreads the build; the checkpointed blocks keep the width for
-    # every round after.
-    from databus_spark.plans.hints import widen_scan
-
-    s = (
-        widen_scan(docs.select(F.col(text_col)))
-        .select(
-            F.concat(
-                F.lit(d), F.array_join(tokens_col(clean), d), F.lit(d)
-            ).alias("s")
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    rules = []
-    for rank in range(1, n_merges + 1):
-        toks = F.expr(f"split(substring(s, 2, length(s) - 2), '{d}')")
-        # rules are (a, b) STRUCTS, never a joined display string: after
-        # round 1 a merged token itself contains a space, so splitting a
-        # "a b c" pair string back into its two sides is ambiguous
-        pairs = F.zip_with(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-            lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-        )
-        top = (
-            s.select(F.explode(pairs).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], top[0]["n"]
-        rules.append((rank, a + " " + b, int(n)))
-        pat, rep = F.lit(d + a + d + b + d), F.lit(d + a + " " + b + d)
-        s = s.select(
-            F.replace(F.replace(F.col("s"), pat, rep), pat, rep).alias("s")
-        ).localCheckpoint(eager=False)
-    if not rules:
-        return spark.sql(
-            "SELECT CAST(1 AS INT) AS rank, '' AS pair,"
-            " CAST(0 AS BIGINT) AS n WHERE false"
-        )
-    def _sql_str(p: str) -> str:
-        # Spark parses string literals with backslash escapes
-        # (escapedStringLiterals=false): a corpus token containing a
-        # backslash must be doubled BEFORE quote-doubling, or '\t'
-        # silently becomes a TAB and a trailing '\' escapes the quote
-        return p.replace("\\", "\\\\").replace("'", "''")
-
-    rows_sql = ", ".join(
-        "({}, '{}', {})".format(r, _sql_str(p), n) for r, p, n in rules
-    )
-    # LocalRelation, not createDataFrame-from-rows (no Python RDD)
-    return spark.sql(
-        f"SELECT CAST(col1 AS INT) AS rank, col2 AS pair,"
-        f" CAST(col3 AS BIGINT) AS n FROM (VALUES {rows_sql})"
-    )
+    with its count at adoption time. The batched learner at one rule
+    per round: each round adopts the round's top pair, exactly the
+    serial greedy step."""
+    return bpe_learn_merges_batched(docs, n_merges, 1, text_col).select("rank", "pair", "n")
 
 
 BPE_CAND_CAP = 512  # per-round candidate window both engines rank over
@@ -883,9 +813,9 @@ def bpe_learn_merges_batched(
 ) -> DataFrame:
     """(rank, pair, n): batched-greedy BPE — the standard parallel-BPE
     trick that makes realistic rule counts tractable. The serial loop
-    (bpe_learn_merges) pays one full pair-count + one driver round-trip
-    PER RULE; at production merge counts (30k) that round structure is
-    the bottleneck, not the counting. Here each round counts once and
+    (k_per_round=1, bpe_learn_merges) pays one full pair-count + one
+    driver round-trip PER RULE; at production merge counts (30k) that
+    round structure is the bottleneck, not the counting. Here each round counts once and
     adopts up to k_per_round TOKEN-DISJOINT rules from one snapshot:
     rules sharing no token (and no rule's output colliding with
     another's input) have count-invariant applications, so the adopted
@@ -909,9 +839,17 @@ def bpe_learn_merges_batched(
     projection pass over the corpus per round, all JVM-side."""
     spark = docs.sparkSession
     d = BPE_D
+    # strip the delimiter char from the corpus FIRST (both engines): a
+    # token containing \\x01 would otherwise read as a spurious token
+    # boundary in the delimited string, and merge rules would be
+    # learned over tokens that don't exist in the corpus
     clean = F.expr(f"translate({text_col}, chr(1), '')")
-    # same single-split widen as the serial learner above: the build
-    # and all n_rounds of count + replace-fold inherit the width
+    # widen BEFORE the tokenize and the checkpoint (r14): the corpus-
+    # string table descends from a single-split scan, so the initial
+    # tokenize AND every round's pair explode+count AND every
+    # replace-fold ran as ONE task. Widening the raw text first spreads
+    # the build, and all n_rounds of count + replace-fold inherit the
+    # width from the checkpointed blocks.
     from databus_spark.plans.hints import widen_scan
 
     s = (
@@ -938,6 +876,9 @@ def bpe_learn_merges_batched(
         if k_round <= 0:
             break
         toks = F.expr(f"split(substring(s, 2, length(s) - 2), '{d}')")
+        # rules are (a, b) STRUCTS, never a joined display string: after
+        # round 1 a merged token itself contains a space, so splitting a
+        # "a b c" pair string back into its two sides is ambiguous
         pairs = F.zip_with(
             F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
             F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -979,8 +920,13 @@ def bpe_learn_merges_batched(
         )
 
     def _sql_str(p: str) -> str:
+        # Spark parses string literals with backslash escapes
+        # (escapedStringLiterals=false): a corpus token containing a
+        # backslash must be doubled BEFORE quote-doubling, or '\t'
+        # silently becomes a TAB and a trailing '\' escapes the quote
         return p.replace("\\", "\\\\").replace("'", "''")
 
+    # LocalRelation, not createDataFrame-from-rows (no Python RDD)
     rows_sql = ", ".join(
         "({}, '{}', {}, '{}', '{}')".format(
             r, _sql_str(p), n, _sql_str(a), _sql_str(b)

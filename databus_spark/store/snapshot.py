@@ -7,12 +7,14 @@ plus their log/applier separation and periodic compaction
 (BootstrapDBCleaner.java).
 
 No Delta/Iceberg jars ship in this image, so MERGE is implemented as
-merge-on-read over hash-bucketed parquet with an atomic version pointer:
+merge-on-read over hash-bucketed parquet, committed through the shared
+versioned-state protocol (store/versions.py):
 
     root/
-      _VERSION                   <- text file: current version number
-      v<N>/_BASE_BYTES           <- parquet bytes of v<N>'s compacted base
-      v<N>/_SCHEMA               <- v<N>'s read schema (StructType JSON)
+      _VERSION                   <- the committed version N
+      _manifest_v<N>.json        <- {"base_bytes": parquet bytes of v<N>'s
+                                     compacted base, "schema": its read
+                                     schema as StructType JSON}
       v<N>/_bucket=<k>/*.parquet <- base + pending deltas, by key-hash bucket
 
 A version is a compacted base (one row per key) plus the raw batches
@@ -24,10 +26,10 @@ Reads resolve the latest row per key over base ∪ deltas. Once v<N>'s
 pending delta bytes reach its base bytes, the next merge FOLDS instead:
 it writes latest_by_key(v<N> ∪ batch) as v<N+1>'s new base. The rule
 has no parameter: a read scans at most ~2x the base in bytes, and each
-row is rewritten an amortized O(1) times. Each version records its
-read schema beside the data, as Structured Streaming's state store
-does, so no read re-derives it from the parquet footers (a Spark job
-per read) and a batch whose columns differ from the state is refused
+row is rewritten an amortized O(1) times. Each version's manifest
+records its read schema, as Structured Streaming's state store does,
+so no read re-derives it from the parquet footers (a Spark job per
+read) and a batch whose columns differ from the state is refused
 instead of folded into a narrower table. On a cluster this class is
 swapped for a one-line ``DeltaTable.merge``; the interface is kept
 identical to make that a drop-in (see ``DELTA_MERGE_SQL``).
@@ -39,7 +41,6 @@ which is what makes the streaming applier exactly-once end-to-end.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Sequence
@@ -57,6 +58,7 @@ from pyspark.sql.types import (
 )
 
 from databus_spark.operators.compaction import latest_by_key
+from databus_spark.store.versions import VersionedState
 
 # What this store becomes when Delta is on the classpath (kept for parity docs):
 DELTA_MERGE_SQL = """
@@ -66,11 +68,6 @@ WHEN MATCHED AND b.scn > s.scn AND b.opcode = 'DELETE' THEN DELETE
 WHEN MATCHED AND b.scn > s.scn THEN UPDATE SET *
 WHEN NOT MATCHED AND b.opcode <> 'DELETE' THEN INSERT *
 """
-
-# `_`-prefixed, so Spark's parquet reader skips them
-_BASE_MARKER = "_BASE_BYTES"
-_SCHEMA_MARKER = "_SCHEMA"
-
 
 class MergeResult(NamedTuple):
     """What merge() committed, with the batch's row count and max SCN
@@ -94,14 +91,14 @@ class ParquetSnapshotStore:
         self.root = root
         self.key_cols = list(key_cols)
         self.n_buckets = n_buckets
-        os.makedirs(root, exist_ok=True)
+        self.vstate = VersionedState(root)
 
     def _parquet_bytes(self, version: int) -> int:
         """Parquet bytes of a version (no Spark job). Checksums and
         ``_SUCCESS`` are left out: counting them would make a freshly
         folded version look as if it had pending deltas."""
         total = 0
-        for dirpath, _dirs, files in os.walk(self._data_dir(version)):
+        for dirpath, _dirs, files in os.walk(self.vstate.dir(version)):
             total += sum(
                 os.path.getsize(os.path.join(dirpath, f))
                 for f in files
@@ -109,97 +106,51 @@ class ParquetSnapshotStore:
             )
         return total
 
-    def _base_bytes(self, version: int) -> int:
-        try:
-            with open(os.path.join(self._data_dir(version), _BASE_MARKER)) as f:
-                return int(f.read())
-        except FileNotFoundError:
-            # written before merge-on-read: every file is compacted base
-            return self._parquet_bytes(version)
-
-    def _has_deltas(self, version: int) -> bool:
-        return self._parquet_bytes(version) > self._base_bytes(version)
-
-    def _schema(self, version: int) -> StructType:
-        try:
-            with open(os.path.join(self._data_dir(version), _SCHEMA_MARKER)) as f:
-                return StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            # written before the marker: infer from the footers (one job)
-            return self.spark.read.parquet(self._data_dir(version)).schema
-
-    def _scan(self, version: int, paths: Sequence[str] = ()) -> DataFrame:
-        """v<N>'s files (or the given bucket dirs of it) under its
-        recorded schema: building the frame runs no Spark job."""
-        reader = self.spark.read.schema(self._schema(version))
+    def _scan(self, version: int, man: dict, paths: Sequence[str] = ()) -> DataFrame:
+        """v<N>'s files (or the given bucket dirs of it) under the schema
+        its manifest records: building the frame runs no Spark job."""
+        reader = self.spark.read.schema(StructType.fromJson(man["schema"]))
         if not paths:
-            return reader.parquet(self._data_dir(version))
-        return reader.option("basePath", self._data_dir(version)).parquet(*paths)
-
-    # -- version pointer ----------------------------------------------------
-    def _version(self) -> int:
-        path = os.path.join(self.root, "_VERSION")
-        if not os.path.exists(path):
-            return 0
-        with open(path) as f:
-            return int(f.read().strip())
+            return reader.parquet(self.vstate.dir(version))
+        return reader.option("basePath", self.vstate.dir(version)).parquet(*paths)
 
     def _commit(self, version: int, base_bytes: int, schema: StructType) -> None:
-        with open(os.path.join(self._data_dir(version), _BASE_MARKER), "w") as f:
-            f.write(str(base_bytes))
-        with open(os.path.join(self._data_dir(version), _SCHEMA_MARKER), "w") as f:
-            f.write(schema.json())
-        tmp = os.path.join(self.root, "_VERSION.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, os.path.join(self.root, "_VERSION"))
-
-    def _data_dir(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version}")
-
-    def _new_dir(self, version: int) -> str:
-        """A clean directory for an uncommitted version: a merge killed
-        mid-write leaves files there, and writing into them would
-        duplicate rows."""
-        path = self._data_dir(version)
-        shutil.rmtree(path, ignore_errors=True)
-        return path
+        self.vstate.commit(version, {"base_bytes": base_bytes, "schema": schema.jsonValue()})
 
     def _bucket_col(self) -> F.Column:
         return F.pmod(F.hash(*self.key_cols), F.lit(self.n_buckets)).alias("_bucket")
 
     # -- reads ---------------------------------------------------------------
-    def _live(self, df: DataFrame, version: int) -> DataFrame:
+    def _live(self, df: DataFrame, version: int, man: dict) -> DataFrame:
         """Latest row per key, then tombstones filtered out. Tombstones
         are retained on disk so that a replayed/out-of-order older batch
         cannot resurrect a deleted key — same reason Delta retains
         deletion vectors. A version without pending deltas is already
         one row per key and skips the compaction."""
-        if self._has_deltas(version):
+        if self._parquet_bytes(version) > man["base_bytes"]:
             df = latest_by_key(df, self.key_cols + ["_bucket"]).select(*df.columns)
         return df.where(F.col("opcode") != "DELETE").drop("_bucket")
 
     def read(self) -> DataFrame | None:
         """Live state of the current version. The frame is built under
         the version's recorded schema, so building it runs no Spark job."""
-        v = self._version()
+        v = self.vstate.current()
         if v == 0:
             return None
-        return self._live(self._scan(v), v)
+        man = self.vstate.manifest(v)
+        return self._live(self._scan(v, man), v, man)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: read any retained historical version (vacuum
         bounds retention) — the Delta VERSION AS OF analog, free because
         every version is an immutable directory of hard links."""
-        path = self._data_dir(version)
-        if not os.path.isdir(path):
+        if version not in self.versions():
             raise FileNotFoundError(f"version {version} not retained under {self.root}")
-        return self._live(self._scan(version), version)
+        man = self.vstate.manifest(version)
+        return self._live(self._scan(version, man), version, man)
 
     def versions(self) -> list[int]:
-        return sorted(
-            int(e[1:]) for e in os.listdir(self.root) if e.startswith("v") and e[1:].isdigit()
-        )
+        return self.vstate.versions()
 
     def lookup(self, keys: DataFrame) -> DataFrame | None:
         """Point/multi-key reads that touch ONLY the key's buckets — the
@@ -225,19 +176,22 @@ class ParquetSnapshotStore:
         is parallelized) adds one job for the bucket ids and the join's
         own shuffle stages.
         """
-        v = self._version()
+        v = self.vstate.current()
         if v == 0:
             return None
+        man = self.vstate.manifest(v)
         buckets = sorted({r[0] for r in keys.select(self._bucket_col()).collect()})
         paths = [
             p
             for b in buckets
-            if os.path.isdir(p := os.path.join(self._data_dir(v), f"_bucket={b}"))
+            if os.path.isdir(p := os.path.join(self.vstate.dir(v), f"_bucket={b}"))
         ]
         if not paths:
-            return self._scan(v).drop("_bucket").limit(0)
-        df = self._scan(v, paths).join(keys.select(*self.key_cols), self.key_cols, "left_semi")
-        return self._live(df, v)
+            return self._scan(v, man).drop("_bucket").limit(0)
+        df = self._scan(v, man, paths).join(
+            keys.select(*self.key_cols), self.key_cols, "left_semi"
+        )
+        return self._live(df, v, man)
 
     # -- MERGE ----------------------------------------------------------------
     def merge(self, batch: DataFrame) -> MergeResult:
@@ -258,24 +212,25 @@ class ParquetSnapshotStore:
         # always (re)derive: an inherited _bucket column from another
         # schema or geometry would route rows into wrong buckets
         batch = batch.withColumn("_bucket", self._bucket_col())
-        cur = self._version()
-        schema = None
+        cur = self.vstate.current()
+        schema = man = None
         if cur > 0:
-            schema = self._schema(cur)
+            man = self.vstate.manifest(cur)
+            schema = StructType.fromJson(man["schema"])
             _check_columns(schema, batch.schema)
-        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * self._base_bytes(cur)
+        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * man["base_bytes"]
         # a fold scans and rewrites the whole state: make sure there is a
         # batch to fold first (one short job over the batch alone)
         if fold and cur > 0 and batch.isEmpty():
             return MergeResult(cur, 0, None)
-        new_dir = self._new_dir(cur + 1)
+        new_dir = self.vstate.new_dir(cur + 1)
         obs = Observation()
         if fold:
             # observe ABOVE the union: an Observation on a union leg
             # never fires; the marker column says which rows are the batch
             frame = batch.withColumn("_in_batch", F.lit(True))
             if cur > 0:
-                current = self._scan(cur).select(*batch.columns)
+                current = self._scan(cur, man).select(*batch.columns)
                 frame = current.withColumn("_in_batch", F.lit(False)).unionByName(frame)
             frame = frame.observe(obs, *_batch_stats(F.col("_in_batch"))).drop("_in_batch")
             out = latest_by_key(frame, self.key_cols + ["_bucket"]).repartition(
@@ -283,10 +238,10 @@ class ParquetSnapshotStore:
             )
             schema = _read_schema(out.schema)
         else:
-            for entry in os.listdir(self._data_dir(cur)):
+            for entry in os.listdir(self.vstate.dir(cur)):
                 if entry.startswith("_bucket="):
                     self._link_tree(
-                        os.path.join(self._data_dir(cur), entry),
+                        os.path.join(self.vstate.dir(cur), entry),
                         os.path.join(new_dir, entry),
                     )
             out = batch.observe(obs, *_batch_stats(F.lit(True)))
@@ -295,7 +250,7 @@ class ParquetSnapshotStore:
         if rows == 0:
             shutil.rmtree(new_dir, ignore_errors=True)
             return MergeResult(cur, 0, None)
-        base = self._parquet_bytes(cur + 1) if fold else self._base_bytes(cur)
+        base = self._parquet_bytes(cur + 1) if fold else man["base_bytes"]
         # an append keeps v<N>'s schema: the check made the batch match it
         self._commit(cur + 1, base, schema)
         return MergeResult(cur + 1, rows, max_scn)
@@ -323,10 +278,12 @@ class ParquetSnapshotStore:
         latest-per-key compaction: run first, it would drop a DELETE
         still pending in a delta and resurrect the older UPSERT beneath
         it in the base. Returns the new version."""
-        v = self._version()
+        v = self.vstate.current()
         if v == 0:
             return 0
-        current = latest_by_key(self._scan(v), self.key_cols + ["_bucket"])
+        current = latest_by_key(
+            self._scan(v, self.vstate.manifest(v)), self.key_cols + ["_bucket"]
+        )
         if tombstone_horizon_scn is not None:
             current = current.where(
                 ~((F.col("opcode") == "DELETE") & (F.col("scn") <= tombstone_horizon_scn))
@@ -336,17 +293,13 @@ class ParquetSnapshotStore:
         # the bucket-directory level only: its semi-join pushes no key
         # filter down, so the row-group min/max stats are not consulted.
         out = current.repartition(self.n_buckets, "_bucket").sortWithinPartitions(*self.key_cols)
-        out.write.mode("append").partitionBy("_bucket").parquet(self._new_dir(new_version))
+        out.write.mode("append").partitionBy("_bucket").parquet(self.vstate.new_dir(new_version))
         self._commit(new_version, self._parquet_bytes(new_version), _read_schema(out.schema))
         return new_version
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop superseded versions (the BootstrapDBCleaner analog)."""
-        v = self._version()
-        for entry in os.listdir(self.root):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) < v - keep_last + 1:
-                    shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
+        self.vstate.vacuum(keep_last)
 
 
 def _nullable(dt: DataType) -> DataType:

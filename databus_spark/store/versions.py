@@ -1,0 +1,85 @@
+"""The one commit protocol of every versioned state directory: the
+snapshot store, the streaming sketch sinks and the z-table.
+
+    root/
+      _VERSION              <- the committed version N, a bare integer
+      _manifest_v<N>.json   <- version N's metadata, a JSON object
+      v<N>/                 <- version N's data
+
+commit(N, manifest) replaces the manifest atomically (tmp + rename),
+then flips ``_VERSION`` the same way: the versioned state-store commit
+of Structured Streaming. A writer killed before the flip leaves an
+uncommitted ``v<N>/``, an orphan manifest or a ``_VERSION.tmp``.
+Readers see none of them, and the next commit of N replaces them; a
+writer starts the data of N in ``new_dir(N)``, which discards what a
+killed writer left there.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+
+
+def _replace(path: str, text: str) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+class VersionedState:
+    def __init__(self, root: str) -> None:
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def current(self) -> int:
+        """The committed version; 0 before the first commit."""
+        try:
+            with open(os.path.join(self.root, "_VERSION")) as f:
+                return int(f.read())
+        except FileNotFoundError:
+            return 0
+
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self.root, f"_manifest_v{version}.json")
+
+    def manifest(self, version: int) -> dict:
+        with open(self._manifest_path(version)) as f:
+            return json.load(f)
+
+    def dir(self, version: int) -> str:
+        return os.path.join(self.root, f"v{version}")
+
+    def new_dir(self, version: int) -> str:
+        """A clean directory for an uncommitted version: a writer killed
+        mid-write leaves files there, and writing next to them would
+        duplicate rows."""
+        path = self.dir(version)
+        shutil.rmtree(path, ignore_errors=True)
+        return path
+
+    def commit(self, version: int, manifest: dict) -> None:
+        _replace(self._manifest_path(version), json.dumps(manifest))
+        _replace(os.path.join(self.root, "_VERSION"), str(version))
+
+    def versions(self) -> list[int]:
+        """Committed versions whose data is retained, oldest first."""
+        cur = self.current()
+        return sorted(
+            v
+            for e in os.listdir(self.root)
+            if e.startswith("v") and e[1:].isdigit() and (v := int(e[1:])) <= cur
+        )
+
+    def vacuum(self, keep_last: int) -> None:
+        """Drop every version but the last keep_last committed ones. The
+        manifest goes first, so a vacuum killed midway leaves a data
+        directory the next vacuum still finds."""
+        cutoff = self.current() - keep_last
+        for v in self.versions():
+            if v <= cutoff:
+                if os.path.exists(self._manifest_path(v)):
+                    os.remove(self._manifest_path(v))
+                shutil.rmtree(self.dir(v), ignore_errors=True)

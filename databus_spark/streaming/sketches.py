@@ -11,12 +11,13 @@ merge with the persisted state, commit. No per-key state store, no
 watermark bookkeeping — the state is O(m) per group FOREVER, however
 many keys the stream carries.
 
-Persistence follows the snapshot store's crash contract: versioned
-directories + an atomically-replaced ``_VERSION`` pointer, so a crash
-mid-commit leaves the previous state readable and the batch replays
-(merges are idempotent for HLL's max; for Count-Min the applier's
-at-least-once replay can double-add a batch, so the committed version
-records the last batch_id and replays of it are skipped).
+Persistence is the snapshot store's commit protocol
+(store/versions.py): versioned directories behind an atomically
+replaced ``_VERSION`` pointer, so a crash mid-commit leaves the
+previous state readable and the batch replays. Each version's manifest
+records the last merged batch_id: merges are idempotent for HLL's max,
+but the applier's at-least-once replay would double-add a Count-Min
+batch, so the additive sinks skip a batch_id already committed.
 """
 
 from __future__ import annotations
@@ -24,11 +25,43 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databus_spark.store.versions import VersionedState
 
-class StreamingDistinctCounter:
+
+class _VersionedSink:
+    """A foreachBatch sink whose state is versioned parquet under
+    ``root``, each version's manifest naming the batch it committed."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark, self.root = spark, root
+        self.vstate = VersionedState(root)
+
+    def _committed(self) -> tuple[int, dict]:
+        """(current version, its manifest); batch_id -1 before the first."""
+        v = self.vstate.current()
+        return v, (self.vstate.manifest(v) if v else {"batch_id": -1})
+
+    def _table(self) -> DataFrame | None:
+        v = self.vstate.current()
+        return self.spark.read.parquet(self.vstate.dir(v)) if v else None
+
+    def _merge(self, fresh: DataFrame, batch_id: int, keys: list[str], agg: Column) -> None:
+        """Fold the batch's partial state into the current table by the
+        per-key aggregate ``agg``, and commit it as the next version."""
+        v, prev = self.vstate.current(), self._table()
+        merged = fresh if prev is None else fresh.unionByName(prev).groupBy(*keys).agg(agg)
+        merged.write.parquet(self.vstate.new_dir(v + 1))
+        self.vstate.commit(v + 1, {"batch_id": batch_id})
+
+    def vacuum(self, keep_last: int = 2) -> None:
+        """Drop state versions older than the last keep_last."""
+        self.vstate.vacuum(keep_last)
+
+
+class StreamingDistinctCounter(_VersionedSink):
     """Per-group distinct-key estimate maintained across micro-batches
     via HLL register max-merge. Use as a foreachBatch sink:
 
@@ -39,33 +72,11 @@ class StreamingDistinctCounter:
     """
 
     def __init__(self, spark: SparkSession, root: str, key_col: str, group_col: str):
-        self.spark, self.root = spark, root
+        super().__init__(spark, root)
         self.key_col, self.group_col = key_col, group_col
-        os.makedirs(root, exist_ok=True)
-
-    # -- version plumbing (snapshot-store contract) -------------------------
-    def _version(self) -> int:
-        p = os.path.join(self.root, "_VERSION")
-        return int(open(p).read().split(":")[0]) if os.path.exists(p) else 0
-
-    def _last_batch(self) -> int:
-        p = os.path.join(self.root, "_VERSION")
-        if not os.path.exists(p):
-            return -1
-        parts = open(p).read().split(":")
-        return int(parts[1]) if len(parts) > 1 else -1
-
-    def _commit(self, v: int, batch_id: int) -> None:
-        tmp = os.path.join(self.root, "_VERSION.tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{v}:{batch_id}")
-        os.replace(tmp, os.path.join(self.root, "_VERSION"))
 
     def registers(self) -> DataFrame | None:
-        v = self._version()
-        if v == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.root, f"v{v}"))
+        return self._table()
 
     # -- the foreachBatch hook ----------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -75,15 +86,7 @@ class StreamingDistinctCounter:
         from databus_spark.operators.stats import hll_registers
 
         fresh = hll_registers(batch, self.key_col, self.group_col)
-        prev = self.registers()
-        merged = (
-            fresh
-            if prev is None
-            else fresh.unionByName(prev).groupBy("grp", "b").agg(F.max("r").alias("r"))
-        )
-        v = self._version() + 1
-        merged.write.mode("overwrite").parquet(os.path.join(self.root, f"v{v}"))
-        self._commit(v, batch_id)
+        self._merge(fresh, batch_id, ["grp", "b"], F.max("r").alias("r"))
 
     def estimates(self) -> DataFrame:
         from databus_spark.operators.stats import hll_estimate
@@ -93,52 +96,28 @@ class StreamingDistinctCounter:
             return self.spark.createDataFrame([], "grp STRING, n_hll DOUBLE")
         return hll_estimate(regs)
 
-    def vacuum(self, keep_last: int = 2) -> None:
-        """Drop register versions older than the last keep_last."""
-        v = self._version()
-        for name in os.listdir(self.root):
-            if name.startswith("v") and name[1:].isdigit():
-                if int(name[1:]) <= v - keep_last:
-                    shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
-
-class StreamingFrequencySketch:
+class StreamingFrequencySketch(_VersionedSink):
     """Per-key frequency estimates maintained across micro-batches via
-    Count-Min counter ADDITION. Addition is NOT idempotent, so the
-    committed ``_VERSION`` records the last merged batch_id and an
+    Count-Min counter ADDITION. Addition is NOT idempotent, so each
+    version's manifest records the last merged batch_id and an
     at-least-once replay of the same batch is skipped rather than
     double-added."""
 
     def __init__(self, spark: SparkSession, root: str, key_col: str):
-        self.spark, self.root, self.key_col = spark, root, key_col
-        os.makedirs(root, exist_ok=True)
-
-    _version = StreamingDistinctCounter._version
-    _last_batch = StreamingDistinctCounter._last_batch
-    _commit = StreamingDistinctCounter._commit
-    vacuum = StreamingDistinctCounter.vacuum
+        super().__init__(spark, root)
+        self.key_col = key_col
 
     def sketch(self) -> DataFrame | None:
-        v = self._version()
-        if v == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.root, f"v{v}"))
+        return self._table()
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from databus_spark.operators.stats import cm_sketch
 
-        if batch_id <= self._last_batch():
+        if batch_id <= self._committed()[1]["batch_id"]:
             return  # replay of an already-merged batch: adding twice would overcount
         fresh = cm_sketch(batch, self.key_col)
-        prev = self.sketch()
-        merged = (
-            fresh
-            if prev is None
-            else fresh.unionByName(prev).groupBy("s", "pos").agg(F.sum("c").alias("c"))
-        )
-        v = self._version() + 1
-        merged.write.mode("overwrite").parquet(os.path.join(self.root, f"v{v}"))
-        self._commit(v, batch_id)
+        self._merge(fresh, batch_id, ["s", "pos"], F.sum("c").alias("c"))
 
     def estimate(self, keys: DataFrame) -> DataFrame:
         from databus_spark.operators.stats import cm_estimate
@@ -149,7 +128,7 @@ class StreamingFrequencySketch:
         return cm_estimate(keys, sk, self.key_col)
 
 
-class StreamingDriftMonitor:
+class StreamingDriftMonitor(_VersionedSink):
     """Per-slice token-distribution drift of an incoming document
     stream against a STAGED baseline corpus — the streaming guardrail
     form of operators/text.corpus_drift (a scraper regression or
@@ -160,7 +139,7 @@ class StreamingDriftMonitor:
     bin space; its bin distribution is the KL reference), so every
     micro-batch bins identically forever. Per batch, the stream's
     (slice, bin) counts ADD into persisted state — the Count-Min
-    algebra, NOT idempotent — so the committed ``_VERSION`` records the
+    algebra, NOT idempotent — so each version's manifest records the
     last merged batch_id and at-least-once replays are skipped (the
     FrequencySketch contract). ``drift()`` is then available at any
     commit point as smoothed KL(accumulated slice || baseline), OOV
@@ -182,10 +161,9 @@ class StreamingDriftMonitor:
     ):
         from databus_spark.operators.text import DRIFT_VOCAB, drift_vocab
 
-        self.spark, self.root = spark, root
+        super().__init__(spark, root)
         self.slice_col, self.text_col = slice_col, text_col
         self.vocab_size = DRIFT_VOCAB if vocab_size is None else vocab_size
-        os.makedirs(root, exist_ok=True)
         staged = os.path.join(root, "baseline", "_STAGED")
         if not os.path.exists(staged):
             if baseline_docs is None:
@@ -204,11 +182,6 @@ class StreamingDriftMonitor:
             with open(staged + ".tmp", "w") as f:
                 f.write(str(self.vocab_size))
             os.replace(staged + ".tmp", staged)
-
-    _version = StreamingDistinctCounter._version
-    _last_batch = StreamingDistinctCounter._last_batch
-    _commit = StreamingDistinctCounter._commit
-    vacuum = StreamingDistinctCounter.vacuum
 
     # -- shared binning against the staged space ----------------------------
     def _token_counts(self, docs: DataFrame) -> DataFrame:
@@ -234,27 +207,14 @@ class StreamingDriftMonitor:
         return drift_bin_counts(tc, vocab)
 
     def counts(self) -> DataFrame | None:
-        v = self._version()
-        if v == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.root, f"v{v}"))
+        return self._table()
 
     # -- the foreachBatch hook ----------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch():
+        if batch_id <= self._committed()[1]["batch_id"]:
             return  # replayed batch: counter addition would double-count
         fresh = self._bin_counts(self._token_counts(batch))
-        prev = self.counts()
-        merged = (
-            fresh
-            if prev is None
-            else fresh.unionByName(prev)
-            .groupBy("src", "bin")
-            .agg(F.sum("c").alias("c"))
-        )
-        v = self._version() + 1
-        merged.write.mode("overwrite").parquet(os.path.join(self.root, f"v{v}"))
-        self._commit(v, batch_id)
+        self._merge(fresh, batch_id, ["src", "bin"], F.sum("c").alias("c"))
 
     def drift(self) -> DataFrame:
         """(source, n_tokens, kl_div) of everything merged so far."""
@@ -271,7 +231,7 @@ class StreamingDriftMonitor:
         return drift_kl(state, baseline)
 
 
-class StreamingEntityResolver:
+class StreamingEntityResolver(_VersionedSink):
     """Rolling entity resolution across micro-batches — the streaming
     form of record_linkage_incremental, applied repeatedly against
     GROWING state. Per batch:
@@ -287,7 +247,7 @@ class StreamingEntityResolver:
       both versioned parquet with the snapshot-store crash contract.
 
     Edge merging via CC is idempotent, but APPENDING a replayed
-    batch's blocks to the index is not, so the committed ``_VERSION``
+    batch's blocks to the index is not, so each version's manifest
     records the last batch_id and replays are skipped (the CM/
     FrequencySketch contract).
 
@@ -301,8 +261,8 @@ class StreamingEntityResolver:
     overwrites. Every ``compact_every``-th leaf FOLDS the live leaves
     into itself instead (log-structured compaction, r12 verdict #8:
     append-only fixed the write cost but left the probe-side read
-    growing O(#batches) file listings/opens) — the ``_VERSION`` file
-    carries a third field, the leaf FLOOR, and readers union only
+    growing O(#batches) file listings/opens) — each version's manifest
+    also records the leaf FLOOR, and readers union only
     leaves in (floor, version], so live-leaf count is bounded by
     ``compact_every`` for the life of the stream. The fold write is
     O(accumulated) but amortizes to O(batch x const) per batch; a
@@ -335,14 +295,13 @@ class StreamingEntityResolver:
     ):
         from databus_spark.operators import joins
 
-        self.spark, self.root = spark, root
+        super().__init__(spark, root)
         self.text_col, self.block_col, self.len_col = text_col, block_col, len_col
         self.prefix_len = joins.LINK_PREFIX if prefix_len is None else prefix_len
         self.max_dist = joins.LINK_MAX_DIST if max_dist is None else max_dist
         self.bucket = joins.LINK_LEN_BUCKET if bucket is None else bucket
         self.max_block = joins.LINK_MAX_BLOCK if max_block is None else max_block
         self.compact_every = compact_every
-        os.makedirs(root, exist_ok=True)
         staged = os.path.join(root, "base_blocks", "_STAGED")
         if not os.path.exists(staged):
             base_blocks.write.mode("overwrite").parquet(
@@ -352,49 +311,27 @@ class StreamingEntityResolver:
             # staged entity state, same seed as the batch operator) —
             # without it base-internal clusters would never surface,
             # since batches only probe the index, never base vs base
-            if base_labels is not None and self._version() == 0:
-                vdir = os.path.join(self.root, "v1")
-                base_labels.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "labels")
-                )
-                self._commit(1, -1)
+            if base_labels is not None and self.vstate.current() == 0:
+                base_labels.write.parquet(os.path.join(self.vstate.new_dir(1), "labels"))
+                self.vstate.commit(1, {"batch_id": -1, "leaf_floor": 0})
             with open(staged + ".tmp", "w") as f:
                 f.write("1")
             os.replace(staged + ".tmp", staged)
 
-    _version = StreamingDistinctCounter._version
-    _last_batch = StreamingDistinctCounter._last_batch
-    _commit = StreamingDistinctCounter._commit
-
-    def _leaf_floor(self) -> int:
-        """Compaction watermark: leaves numbered <= floor were folded
-        into a later leaf and are dead (vacuum-able). Third field of
-        _VERSION; absent (pre-compaction state dirs) means 0."""
-        p = os.path.join(self.root, "_VERSION")
-        if not os.path.exists(p):
-            return 0
-        parts = open(p).read().split(":")
-        return int(parts[2]) if len(parts) > 2 else 0
-
-    def _commit_er(self, v: int, batch_id: int, floor: int) -> None:
-        tmp = os.path.join(self.root, "_VERSION.tmp")
-        with open(tmp, "w") as f:
-            f.write(f"{v}:{batch_id}:{floor}")
-        os.replace(tmp, os.path.join(self.root, "_VERSION"))
-
-    def _read(self, leaf: str) -> DataFrame | None:
-        v = self._version()
-        if v == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.root, f"v{v}", leaf))
+    def _committed(self) -> tuple[int, dict]:
+        """(current version, its manifest). The manifest's leaf_floor is
+        the compaction watermark: leaves numbered <= floor were folded
+        into a later leaf and are dead (vacuum-able)."""
+        v, man = super()._committed()
+        return v, {"leaf_floor": 0, **man}
 
     def labels(self) -> DataFrame:
-        got = self._read("labels")
-        if got is None:
+        v = self.vstate.current()
+        if v == 0:
             return self.spark.createDataFrame(
                 [], "doc_id LONG, cluster_id LONG, is_survivor BOOLEAN"
             )
-        return got
+        return self.spark.read.parquet(os.path.join(self.vstate.dir(v), "labels"))
 
     def _inc_leaf_dirs(self) -> list[str]:
         """LIVE committed incoming-index leaves: leaf numbers in
@@ -403,8 +340,8 @@ class StreamingEntityResolver:
         overwrites it; leaves at or below the compaction floor were
         folded into a later leaf and are skipped (then vacuumed)."""
         d = os.path.join(self.root, "inc_leaves")
-        v = self._version()
-        floor = self._leaf_floor()
+        v, man = self._committed()
+        floor = man["leaf_floor"]
         if not os.path.isdir(d):
             return []
         return [
@@ -419,7 +356,8 @@ class StreamingEntityResolver:
         from databus_spark.operators import joins
         from databus_spark.operators.dedup import dedup_clusters
 
-        if batch_id <= self._last_batch():
+        v, man = self._committed()
+        if batch_id <= man["batch_id"]:
             return  # replay: appending its blocks again would duplicate the index
         kw = dict(
             text_col=self.text_col,
@@ -460,30 +398,25 @@ class StreamingEntityResolver:
             F.lit(joins._LINK_SEC_NONE).alias("_sec"),
             F.lit(joins._LINK_SEC_NONE).alias("_sec2"),
         )
-        v = self._version() + 1
-        vdir = os.path.join(self.root, f"v{v}")
-        merged.write.mode("overwrite").parquet(os.path.join(vdir, "labels"))
+        v += 1
+        merged.write.parquet(os.path.join(self.vstate.new_dir(v), "labels"))
         # append-only: ONE leaf per batch, O(batch) bytes written — never
         # the r11 read-union-overwrite of the whole accumulated index.
         # Every compact_every-th leaf instead FOLDS the live leaves in
         # with the batch (log-structured compaction: probe-side leaf
         # count stays bounded; the fold cost amortizes over the window).
-        floor = self._leaf_floor()
+        floor = man["leaf_floor"]
         if leaves and len(leaves) + 1 >= self.compact_every:
             new_inc = new_inc.unionByName(self.spark.read.parquet(*leaves))
             floor = v - 1  # everything before this fold is dead
         new_inc.write.mode("overwrite").parquet(
             os.path.join(self.root, "inc_leaves", f"leaf{v}")
         )
-        self._commit_er(v, batch_id, floor)
+        self.vstate.commit(v, {"batch_id": batch_id, "leaf_floor": floor})
 
     def vacuum(self, keep_last: int = 2) -> None:
-        v = self._version()
-        floor = self._leaf_floor()
-        for name in os.listdir(self.root):
-            if name.startswith("v") and name[1:].isdigit():
-                if int(name[1:]) <= v - keep_last:
-                    shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        super().vacuum(keep_last)
+        floor = self._committed()[1]["leaf_floor"]
         # dead leaves: folded into a later leaf by compaction
         leaf_dir = os.path.join(self.root, "inc_leaves")
         if os.path.isdir(leaf_dir):

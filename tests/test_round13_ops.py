@@ -428,22 +428,22 @@ def test_streaming_er_fold_crash_replay(spark, tmp_path):
     resolver.process_batch(
         _link_docs(spark, ["first streamed record padded out to length"], start=10), 0
     )
-    v_before = resolver._version()
-    floor_before = resolver._leaf_floor()
+    v_before = resolver.vstate.current()
+    floor_before = resolver.vstate.manifest(v_before)["leaf_floor"]
     # simulate: batch 1 wrote its (fold) leaf but died before commit
     fold_leaf = os.path.join(root, "inc_leaves", f"leaf{v_before + 1}")
     joins.fuzzy_join_blocks(
         _link_docs(spark, ["orphan leaf content that must be ignored xx"], start=99)
     ).write.mode("overwrite").parquet(fold_leaf)
-    assert resolver._version() == v_before
-    assert resolver._leaf_floor() == floor_before
+    assert resolver.vstate.current() == v_before
+    assert resolver.vstate.manifest(v_before)["leaf_floor"] == floor_before
     assert fold_leaf not in resolver._inc_leaf_dirs()  # orphan invisible
     # replay batch 1 for real: overwrites the orphan, commits, folds
     resolver.process_batch(
         _link_docs(spark, ["second streamed record padded out to length"], start=20), 1
     )
-    assert resolver._version() == v_before + 1
-    assert resolver._leaf_floor() == v_before  # fold moved the floor
+    assert resolver.vstate.current() == v_before + 1
+    assert resolver.vstate.manifest(v_before + 1)["leaf_floor"] == v_before  # fold moved it
     live = resolver._inc_leaf_dirs()
     assert live == [fold_leaf]
     # the orphan content is gone; the fold carries both real batches

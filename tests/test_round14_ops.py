@@ -170,6 +170,11 @@ def test_sq8_ivf_serve_delta_and_append(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _has_deltas(store, version):
+    """The version holds parquet bytes beyond its compacted base."""
+    return store._parquet_bytes(version) > store.vstate.manifest(version)["base_bytes"]
+
+
 def test_merge_on_read_matches_compaction_oracle(spark, sf_dir, tmp_path):
     """After every merge — appended or folded — read() and lookup() equal
     the batch compaction of every row merged so far: upserts, deletes,
@@ -201,7 +206,7 @@ def test_merge_on_read_matches_compaction_oracle(spark, sf_dir, tmp_path):
     merged, expected, kinds = None, {}, []
     for batch in (b1, b2, b2, b3, b1):  # b2 replayed; b1 replayed out of order
         version = store.merge(batch).version
-        kinds.append(store._has_deltas(version))
+        kinds.append(_has_deltas(store, version))
         merged = batch if merged is None else merged.unionByName(batch)
         want = snapshot(merged)
         expected[version] = rows(want)
@@ -226,14 +231,14 @@ def test_optimize_folds_before_tombstone_purge(spark, tmp_path):
         [("s", f"k{i}", 10 + i, "UPSERT", f"v{i}") for i in range(20)], schema
     ))
     store.merge(spark.createDataFrame([("s", "k3", 100, "DELETE", None)], schema))
-    assert store._has_deltas(2)  # the DELETE is pending, the UPSERT is base
+    assert _has_deltas(store, 2)  # the DELETE is pending, the UPSERT is base
 
     v = store.optimize(tombstone_horizon_scn=1000)
-    assert not store._has_deltas(v)
+    assert not _has_deltas(store, v)
     live = {r["key_str"] for r in store.read().collect()}
     assert live == {f"k{i}" for i in range(20)} - {"k3"}
     # the aged tombstone itself is gone from disk
-    on_disk = spark.read.parquet(store._data_dir(v))
+    on_disk = spark.read.parquet(store.vstate.dir(v))
     assert on_disk.where(F.col("opcode") == "DELETE").count() == 0
 
 

@@ -1,7 +1,7 @@
 """The snapshot store's recorded per-version schema.
 
-Every committed version carries ``v<N>/_SCHEMA``, the schema a parquet
-reader would infer for it. Reads build their frames from it, so the
+Every committed version's manifest (``_manifest_v<N>.json``) carries
+the schema a parquet reader would infer for it. Reads build their frames from it, so the
 serving path runs no schema-inference job, and merge() refuses a batch
 whose columns differ from the state instead of folding it into a
 narrower table.
@@ -10,7 +10,6 @@ narrower table.
 from __future__ import annotations
 
 import datetime
-import json
 import os
 
 import pandas as pd
@@ -43,8 +42,11 @@ def _batch(spark, keys, scn0, tag):
 
 
 def _marker(store, version):
-    with open(os.path.join(store._data_dir(version), "_SCHEMA")) as f:
-        return StructType.fromJson(json.load(f))
+    return StructType.fromJson(store.vstate.manifest(version)["schema"])
+
+
+def _has_deltas(store, version):
+    return store._parquet_bytes(version) > store.vstate.manifest(version)["base_bytes"]
 
 
 def _jobs(spark, group, fn):
@@ -66,48 +68,20 @@ def _state(df):
 def test_marker_equals_inferred_schema_on_fold_append_and_optimize(spark, tmp_path):
     store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
     store.merge(_batch(spark, range(200), 1, "a"))  # first version: a fold
-    kinds = [store._has_deltas(1)]
+    kinds = [_has_deltas(store, 1)]
     for scn0 in range(1000, 9000, 1000):  # append until the deltas fold
         v = store.merge(_batch(spark, range(200), scn0, f"b{scn0}")).version
-        kinds.append(store._has_deltas(v))
+        kinds.append(_has_deltas(store, v))
         if not kinds[-1]:
             break
     # a fold, at least one append, and a fold over the appended deltas
     assert kinds[0] is False and True in kinds and kinds[-1] is False, kinds
     v = store.optimize()
     for version in store.versions():
-        assert _marker(store, version) == spark.read.parquet(store._data_dir(version)).schema
+        assert _marker(store, version) == spark.read.parquet(store.vstate.dir(version)).schema
     want = _state(_batch(spark, range(200), scn0, f"b{scn0}"))
     assert _state(store.read()) == want
     assert _state(store.read_version(v)) == want
-
-
-def test_store_without_schema_markers_still_serves(spark, tmp_path):
-    """The older layout (no ``_SCHEMA``) falls back to inference for
-    read, lookup and merge; the next commit records a marker."""
-    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
-    store.merge(_batch(spark, range(100), 1, "a"))
-    store.merge(_batch(spark, range(0, 100, 2), 1000, "b"))
-    for version in store.versions():
-        os.remove(os.path.join(store._data_dir(version), "_SCHEMA"))
-
-    # the even keys' second upsert has the higher scn, so it wins
-    want = {
-        k: (scn, p)
-        for k, scn, p, _ in _state(_batch(spark, range(100), 1, "a"))
-        + _state(_batch(spark, range(0, 100, 2), 1000, "b"))
-    }
-    got = {k: (scn, p) for k, scn, p, _ in _state(store.read())}
-    assert got == want
-    assert len(_state(store.read_version(1))) == 100
-    keys = spark.createDataFrame([("s", "k2"), ("s", "k3")], "source string, key_str string")
-    assert sorted(r["scn"] for r in store.lookup(keys).collect()) == [4, 1002]
-
-    v = store.merge(_batch(spark, [5], 5000, "c")).version
-    assert _marker(store, v) == spark.read.parquet(store._data_dir(v)).schema
-    assert store.read().where(F.col("key_str") == "k5").collect()[0]["scn"] == 5005
-    with pytest.raises(ValueError, match="extra"):
-        store.merge(_batch(spark, [6], 6000, "d").withColumn("extra", F.lit(1)))
 
 
 def test_merge_refuses_batches_whose_columns_differ(spark, tmp_path):
@@ -186,14 +160,16 @@ def test_empty_batch_on_a_fold_due_store_reads_no_state(spark, tmp_path):
     the fold stays due): any read of them fails."""
     store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
     store.merge(_batch(spark, range(200), 1, "a"))
+    def fold_due(v):
+        return store._parquet_bytes(v) >= 2 * store.vstate.manifest(v)["base_bytes"]
+
     for scn0 in range(1000, 9000, 1000):
-        v = store._version()
-        if store._parquet_bytes(v) >= 2 * store._base_bytes(v):
+        if fold_due(store.vstate.current()):
             break
         store.merge(_batch(spark, range(200), scn0, f"b{scn0}"))
-    v = store._version()
-    assert store._parquet_bytes(v) >= 2 * store._base_bytes(v), "no fold due"
-    for dirpath, _dirs, files in os.walk(store._data_dir(v)):
+    v = store.vstate.current()
+    assert fold_due(v), "no fold due"
+    for dirpath, _dirs, files in os.walk(store.vstate.dir(v)):
         for name in files:
             if name.endswith(".parquet"):
                 path = os.path.join(dirpath, name)
@@ -204,4 +180,4 @@ def test_empty_batch_on_a_fold_due_store_reads_no_state(spark, tmp_path):
     res, jobs = _jobs(spark, "empty-fold-due", lambda: store.merge(empty))
     assert res == (v, 0, None)
     assert jobs <= 1, jobs
-    assert store._version() == v
+    assert store.vstate.current() == v

@@ -156,14 +156,13 @@ def test_store_optimize_purges_aged_tombstones(spark, sf_dir, tmp_path):
     store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
     store.merge(log)
     before_rows = _rows(store.read(), ["key_str", "scn"])
-    v = store._version()
-    all_rows = spark.read.parquet(store._data_dir(v))
+    all_rows = spark.read.parquet(store.vstate.dir(store.vstate.current()))
     n_tombstones = all_rows.where(F.col("opcode") == "DELETE").count()
     assert n_tombstones > 0
 
     horizon = 2_000_000_700  # part of the delete wave is now aged out
     store.optimize(tombstone_horizon_scn=horizon)
-    after_all = spark.read.parquet(store._data_dir(store._version()))
+    after_all = spark.read.parquet(store.vstate.dir(store.vstate.current()))
     aged = after_all.where((F.col("opcode") == "DELETE") & (F.col("scn") <= horizon))
     fresh = after_all.where((F.col("opcode") == "DELETE") & (F.col("scn") > horizon))
     assert aged.count() == 0
@@ -242,36 +241,132 @@ def test_store_time_travel_versions(spark, sf_dir, tmp_path):
         store.read_version(1)
 
 
-def test_merge_retry_ignores_files_of_a_killed_merge(spark, tmp_path):
-    """A merge killed mid-write leaves files in the uncommitted v<N+1>;
-    the retry must start that directory afresh, never write next to the
-    leftovers (they would surface as duplicate rows). Covers the append
-    path (v2 after a committed v1) and the fold path (the first merge)."""
+def _killed_commit_kinds(spark, kind):
+    """(make(root), two batches, apply(state, batch, batch_id),
+    serve(state), plant(dir, clean twin)) for one versioned state.
+    ``plant`` leaves in ``dir`` a parquet file whose rows would show in
+    serve() if a version ever read them."""
     import glob
     import os
     import shutil
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from databus_spark.operators import joins
+    from databus_spark.operators.dedup import dedup_clusters
     from databus_spark.store.snapshot import ParquetSnapshotStore
-
-    schema = "source string, key_str string, scn long, opcode string, payload string"
-    old = spark.createDataFrame(
-        [("s", f"k{i}", i + 1, "UPSERT", "old") for i in range(50)], schema
-    )
-    new = spark.createDataFrame(
-        [("s", f"k{i}", i + 1000, "UPSERT", "new") for i in range(50)], schema
+    from databus_spark.streaming.sketches import (
+        StreamingDriftMonitor,
+        StreamingEntityResolver,
+        StreamingFrequencySketch,
     )
 
-    store = ParquetSnapshotStore(spark, str(tmp_path / "a"), n_buckets=3)
-    store.merge(old)
-    leftover = sorted(glob.glob(f"{store._data_dir(1)}/_bucket=0/*.parquet"))[0]
-    os.makedirs(f"{store._data_dir(2)}/_bucket=0")
-    shutil.copy(leftover, f"{store._data_dir(2)}/_bucket=0/part-killed.parquet")
-    store.merge(new)
-    got = store.read().select("key_str", "payload").collect()
-    assert len(got) == 50 and {r["payload"] for r in got} == {"new"}
+    def rows(df):
+        return None if df is None else sorted(tuple(r) for r in df.collect())
 
-    fresh = ParquetSnapshotStore(spark, str(tmp_path / "b"), n_buckets=3)
-    os.makedirs(f"{fresh._data_dir(1)}/_bucket=0")
-    shutil.copy(leftover, f"{fresh._data_dir(1)}/_bucket=0/part-killed.parquet")
-    fresh.merge(old)
-    assert fresh.read().count() == 50
+    def copy_current(sub):
+        # a copy of the twin's committed data: read twice, its rows double
+        def plant(d, clean):
+            src = os.path.join(clean.vstate.dir(clean.vstate.current()), sub)
+            os.makedirs(os.path.join(d, sub))
+            shutil.copy(
+                sorted(glob.glob(f"{src}/*.parquet"))[0],
+                os.path.join(d, sub, "part-killed.parquet"),
+            )
+
+        return plant
+
+    if kind == "store":
+        schema = "source string, key_str string, scn long, opcode string, payload string"
+        batches = [
+            spark.createDataFrame(
+                [("s", f"k{i}", i + scn0, "UPSERT", tag) for i in range(50)], schema
+            )
+            for scn0, tag in ((1, "old"), (1000, "new"))
+        ]
+
+        def plant_store(d, _clean):
+            # a key no batch carries: the store's compaction would hide a
+            # duplicate of a batch row, never an extra key
+            os.makedirs(f"{d}/_bucket=0")
+            stray = {"source": ["s"], "key_str": ["stray"], "scn": [10**6]}
+            stray |= {"opcode": ["UPSERT"], "payload": ["stray"]}
+            pq.write_table(pa.table(stray), f"{d}/_bucket=0/part-killed.parquet")
+
+        return (
+            lambda root: ParquetSnapshotStore(spark, root, n_buckets=3),
+            batches,
+            lambda st, b, _i: st.merge(b),
+            lambda st: rows(st.read()),
+            plant_store,
+        )
+    docs = spark.createDataFrame(
+        [
+            (i, f"{w} streamed record {i % 4} padded to length", "en", "s", 40)
+            for i, w in enumerate(["alpha", "beta", "gamma", "delta"] * 3)
+        ],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    batches = [docs.where(f"doc_id % 2 = {i}") for i in (0, 1)]
+    if kind == "frequency":
+        return (
+            lambda root: StreamingFrequencySketch(spark, root, "doc_id"),
+            batches,
+            lambda st, b, i: st.process_batch(b, i),
+            lambda st: rows(st.sketch()),
+            copy_current(""),
+        )
+    if kind == "drift":
+        return (
+            lambda root: StreamingDriftMonitor(spark, root, baseline_docs=docs),
+            batches,
+            lambda st, b, i: st.process_batch(b, i),
+            lambda st: rows(st.counts()),
+            copy_current(""),
+        )
+    base = docs.where("doc_id < 2")
+    return (
+        lambda root: StreamingEntityResolver(
+            spark,
+            root,
+            base_blocks=joins.fuzzy_join_blocks(base),
+            base_labels=dedup_clusters(joins.fuzzy_join_pairs(base)),
+        ),
+        [docs.where(f"doc_id >= 2 AND doc_id % 2 = {i}") for i in (0, 1)],
+        lambda st, b, i: st.process_batch(b, i),
+        lambda st: rows(st.labels()),
+        copy_current("labels"),
+    )
+
+
+@pytest.mark.parametrize("kind", ["store", "frequency", "drift", "resolver"])
+def test_merge_retry_ignores_files_of_a_killed_merge(spark, tmp_path, kind):
+    """A commit killed before its _VERSION flip leaves an uncommitted
+    v<N+1>/ holding files, an orphan _manifest_v<N+1>.json and a
+    _VERSION.tmp. The state must keep serving v<N>, and the retry must
+    commit v<N+1> afresh: files written next to the leftovers would
+    surface as extra rows, and a read of the orphan manifest would skip
+    the batch as a replay. Covers two commits in a row (for the store,
+    the first is a fold and the second an append); a clean twin fed the
+    same batches is the expected state."""
+    import json
+    import os
+
+    make, batches, apply, serve, plant = _killed_commit_kinds(spark, kind)
+    clean, planted = make(str(tmp_path / "clean")), make(str(tmp_path / "planted"))
+    for batch_id, batch in enumerate(batches):
+        apply(clean, batch, batch_id)
+        n = planted.vstate.current()
+        before = serve(planted)
+        plant(planted.vstate.dir(n + 1), clean)
+        with open(os.path.join(planted.root, f"_manifest_v{n + 1}.json"), "w") as f:
+            json.dump({"batch_id": 99, "leaf_floor": 99}, f)
+        with open(os.path.join(planted.root, "_VERSION.tmp"), "w") as f:
+            f.write("99")
+
+        assert planted.vstate.current() == n
+        assert serve(planted) == before
+        apply(planted, batch, batch_id)
+        assert planted.vstate.current() == n + 1
+        assert serve(planted) == serve(clean)

@@ -414,7 +414,9 @@ def _prestage_bigstate(spark, docs, emb, sf_dir):
         store.merge(orders_changelog(spark, sf_dir))  # one big v1 seed
 
     fingerprint = _orders_fingerprint(spark, sf_dir)
-    _stage("bigstate", sf_dir, fingerprint, build, version="bigstate-v1")
+    # v2: the store keeps its base bytes and read schema in a root
+    # manifest; a v1 stage has none and cannot be read
+    _stage("bigstate", sf_dir, fingerprint, build, version="bigstate-v2")
 
 
 def fam_stream_bigstate(spark, docs, emb, sf_dir):
