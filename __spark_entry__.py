@@ -40,41 +40,79 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # One versioned-state commit protocol: ZorderTable commits through
-    # store/versions.py and bpe_learn_merges is the batched learner at
-    # one rule per round, so these 3 rows run changed code
-    # (tools/window_manifest.py affected_queries vs the parent tree).
-    # Rule (a) puts them first.
-    "bpe_learn_merges",
-    "zorder_box_read",
-    "zorder_events_key",
-    # BM25 fold (an earlier change): bm25_topk is bm25_serve's pipeline
-    # with no staged base, the query terms ride one eager checkpoint, and
-    # the staged index has one writer and one reader.
+    # Code-keyed staging: _staged_artifact keys every /tmp artifact on a
+    # digest of the package source instead of hand-kept version stamps,
+    # and the fingerprints lost their module-constant suffixes, so every
+    # row that stages an artifact runs changed code.
+    "ann_ivfpq_rerank_topk",
+    "ann_ivfpq_topk",
+    "ann_pq_topk",
+    "ann_sq8_ivf_serve",
+    "ann_sq8_ivf_serve_delta",
+    "avro_ocf_roundtrip",
     "bm25_incremental",
-    "bm25_topk",
+    "bpe_encode_corpus",
+    "dedup_cluster_star",
+    "dedup_cluster_survivors",
+    "dedup_decision_log",
+    "dedup_incremental_near",
+    "dedup_survivor_corpus",
+    "dsir_incremental",
+    "exactsubstr_incremental",
+    "fuzzy_join_incremental",
     "hybrid_rrf_serve",
+    "jsonl_ingest_audit",
+    "kmeans_assign_summary",
+    "kmeans_centroids",
+    "media_audio_fp_dedup",
+    "media_audio_near_pairs",
+    "media_decision_log",
+    "media_dhash_clusters",
+    "media_dhash_dedup",
+    "media_dhash_incremental",
+    "media_dhash_near_pairs",
+    "media_video_frames",
+    "record_linkage_incremental",
+    "semdedup_incremental",
+    "semdedup_recall_eval",
+    "semdedup_survivors_v2",
+    "semdedup_trained",
+    "trail_file_seek",
+    "zorder_box_read",
+    # The key-mod tiers share one bucket-range helper, and the two staged
+    # subscription rows read their stage directory itself, not a glob.
+    "filter_keymod_longkey",
+    "filter_keymod_staged_hash",
+    "filter_keymod_strkey",
+    "filter_keymod_subscribe",
+    # One atomic small-file write (store/versions.write_atomic) behind the
+    # schema registry, the max-SCN watermark and the checkpoint files.
+    "jdbc_txlog_pull",
+    "schema_evolution_decode",
+    "sql_txlog_pull",
+    # With more rows changed since the committed manifest than the window
+    # holds, the last 8 slots go to the most recently rotated earlier
+    # changes (the versioned-state commit protocol, the BM25 fold and the
+    # ANN fold); the rest of the previous window heads _REST.
+    "bpe_learn_merges",
+    "zorder_events_key",
+    "bm25_topk",
     "hybrid_rrf_topk",
-    # ANN fold (the previous change): the ANN family's bodies share one
-    # probe-cell rule, one rank rule and the IVF+SQ8 pieces.
     "ann_cosine_topk",
     "ann_filtered_topk",
     "ann_ivf_topk",
-    "ann_ivfpq_rerank_topk",
-    "ann_ivfpq_topk",
     "ann_lsh_topk",
-    "ann_pq_topk",
+]
+
+# below the 50-row window this round (all still verified locally by the
+# full sf0.01 oracle sweep), never-checked first then oldest external
+# green first — next round's rotation reads top-down:
+_REST = [
     "ann_recall_eval",
-    "ann_sq8_ivf_serve",
-    "ann_sq8_ivf_serve_delta",
     "ann_sq8_ivf_topk",
     "ann_sq8_topk",
-    # RANGE filter configs parse string keys through the gated parse
-    # (compile_source_config), and key_range_filter lost its wrapper.
     "filter_composite_json",
     "filter_keyrange",
-    # compaction.py lost latest_by_key_window and with it an import, so
-    # every row whose closure reaches the module is a changed unit.
     "bootstrap_snapshot_catchup",
     "buffer_info",
     "checkpoint_mult_fetch",
@@ -97,47 +135,15 @@ _WINDOW = [
     "sql_surface_window_stats",
     "stream_fetch_bounded",
     "txn_window_stats",
-    # With 63 rows changed since the committed manifest and 50 slots,
-    # the window is spent on changed rows only: the 43 above, then the
-    # 7 most recently rotated of the earlier changes (the SemDeDup
-    # unification). The earliest rotated (filter_keymod_longkey/strkey,
-    # then the staging round, audioop, kmeans_assign_summary, then the
-    # staged-changelog cleanup) sit at the FRONT of _REST, first in line
-    # next round.
-    "kmeans_centroids",
-    "semdedup_incremental",
     "semdedup_multiprobe",
-    "semdedup_recall_eval",
     "semdedup_survivors",
-    "semdedup_survivors_v2",
-    "semdedup_trained",
-]
-
-# below the 50-row window this round (all still verified locally by the
-# full sf0.01 oracle sweep), never-checked first then oldest external
-# green first — next round's rotation reads top-down:
-_REST = [
-    "filter_keymod_longkey",
-    "filter_keymod_strkey",
-    "avro_ocf_roundtrip",
-    "filter_keymod_staged_hash",
-    "filter_keymod_subscribe",
-    "jdbc_txlog_pull",
-    "sql_txlog_pull",
-    "trail_file_seek",
     "media_wav_probe",
-    "kmeans_assign_summary",
     "filter_payload_fields",
     "keyset_page",
     "partition_router",
     "corpus_drift",
     "dedup_span_windows",
-    "exactsubstr_incremental",
-    "jsonl_ingest_audit",
-    "media_audio_fp_dedup",
-    "media_dhash_dedup",
     "media_png_resize",
-    "media_video_frames",
     "approx_quantiles_binned",
     "approx_stats",
     "boilerplate_strip",
@@ -173,7 +179,6 @@ _REST = [
     "repetition_filter",
     "retention_cohorts",
     "scalar_functions",
-    "schema_evolution_decode",
     "sequence_packing",
     "skew_salted_agg",
     "stratified_sample",
@@ -190,11 +195,9 @@ _REST = [
     "decontaminate_bloom",
     "quality_topk_per_lang",
     "sparse_tfidf_pairs",
-    "bpe_encode_corpus",
     "bpe_pair_counts",
     "curation_decisions",
     "curation_decisions_v2",
-    "dsir_incremental",
     "exactsubstr_dedup",
     "exactsubstr_spans",
     "exactsubstr_stats",
@@ -219,26 +222,14 @@ _REST = [
     "dedup_simhash_pairs",
     "dedup_sketch_eval",
     "fuzzy_join_docs",
-    "fuzzy_join_incremental",
     "record_linkage_clusters",
-    "record_linkage_incremental",
     "release_gate",
     "release_gate_utility",
-    "dedup_cluster_star",
-    "dedup_cluster_survivors",
-    "dedup_decision_log",
-    "dedup_incremental_near",
-    "dedup_survivor_corpus",
     "curation_decisions_v3",
     "data_expectations",
     "dedup_canonical",
     "dedup_incremental",
     "event_rate_anomaly",
-    "media_audio_near_pairs",
-    "media_decision_log",
-    "media_dhash_clusters",
-    "media_dhash_incremental",
-    "media_dhash_near_pairs",
     "dedup_minhash_lsh",
 ]
 

@@ -604,7 +604,6 @@ def main() -> None:
         f"{sf_dir}|x{BM25X}",
         _content_fingerprint(_base, "doc_id", "n_chars"),
         lambda d: _text.bm25_index_build(_basex, d),
-        version="bm25x-v2",
     )
     _qt = _text.bm25_index_read(spark, _idx)[2]
     _delta = _dedup.documents_with_dups(spark, sf_dir).where(

@@ -107,12 +107,24 @@ def key_mod_bucket() -> Column:
     )
 
 
+def _bucket_range(
+    b: Column, num_buckets: int, min_bucket: int, max_bucket: int
+) -> Column:
+    """min_bucket <= b < max_bucket for a bucket b in [0, num_buckets).
+
+    Single-bound fast path: b is a pmod (or a routed bucket), never
+    negative, so min_bucket <= 0 needs only one comparison — which
+    matters for the per-row tier, where each comparison re-evaluates the
+    string-key hash (no CSE across the two predicate branches)."""
+    if min_bucket <= 0:
+        return b < max_bucket
+    if max_bucket >= num_buckets:
+        return b >= min_bucket
+    return (b >= min_bucket) & (b < max_bucket)
+
+
 def key_mod_filter(num_buckets: int, min_bucket: int, max_bucket: int) -> Column:
     """min_bucket <= abs(key) % num_buckets < max_bucket (KeyModFilter.java:34-79).
-
-    Single-bound fast path: pmod is always >= 0, so min_bucket <= 0 needs
-    only one comparison — which matters because each comparison re-evaluates
-    the string-key hash (no CSE across the two predicate branches).
 
     CONTRACT NOTE (string keys at scale): this per-row form is the
     compatibility FALLBACK, for logs that were staged without routing.
@@ -134,43 +146,26 @@ def key_mod_filter(num_buckets: int, min_bucket: int, max_bucket: int) -> Column
     tests/test_plans.py::test_key_mod_subscription_prunes_partitions.
     """
     b = F.pmod(key_mod_bucket(), F.lit(num_buckets))
-    if min_bucket <= 0:
-        return b < max_bucket
-    if max_bucket >= num_buckets:
-        return b >= min_bucket
-    return (b >= min_bucket) & (b < max_bucket)
+    return _bucket_range(b, num_buckets, min_bucket, max_bucket)
 
 
-def key_mod_filter_staged(
-    num_buckets: int,
-    min_bucket: int,
-    max_bucket: int,
-    hash_col: str = "key_hash",
-) -> Column:
-    """``key_mod_filter`` over a MATERIALIZED hash column
+def key_mod_filter_staged(num_buckets: int, min_bucket: int, max_bucket: int) -> Column:
+    """``key_mod_filter`` over the MATERIALIZED hash column
     (partitioners.with_key_hash): identical bucket function, zero
     per-row hashing. Serves ANY modulus (unlike the routed layout,
     which needs ``num_buckets`` to divide the staged bucket count) —
     the middle subscription tier for string-keyed sources whose logs
-    were staged with the hash column. Same single-bound fast path as
-    the fallback; with a stored column the re-evaluation concern is
-    moot, but the form stays textually parallel."""
-    b = F.pmod(F.col(hash_col), F.lit(num_buckets))
-    if min_bucket <= 0:
-        return b < max_bucket
-    if max_bucket >= num_buckets:
-        return b >= min_bucket
-    return (b >= min_bucket) & (b < max_bucket)
+    were staged with the hash column."""
+    from databus_spark.operators.partitioners import KEY_HASH_COL
+
+    b = F.pmod(F.col(KEY_HASH_COL), F.lit(num_buckets))
+    return _bucket_range(b, num_buckets, min_bucket, max_bucket)
 
 
 def key_mod_subscription(
-    num_buckets: int,
-    min_bucket: int,
-    max_bucket: int,
-    route_buckets: int,
-    route_col: str = "route_partition",
+    num_buckets: int, min_bucket: int, max_bucket: int, route_buckets: int
 ) -> Column:
-    """KeyModFilter over a MATERIALIZED route column — the scale path.
+    """KeyModFilter over the MATERIALIZED route column — the scale path.
 
     When the producer routed events into ``route_buckets`` buckets at
     ingest (partitioners.with_route_partition), a consumer's key-mod
@@ -180,20 +175,17 @@ def key_mod_subscription(
     ``num_buckets`` dividing ``route_buckets`` it is one int pmod.
     Equivalence: route = H % R and R % N == 0 imply H % N == route % N.
     """
+    from databus_spark.operators.partitioners import ROUTE_COL
+
     if route_buckets % num_buckets != 0:
         raise ValueError(
             f"num_buckets={num_buckets} must divide route_buckets={route_buckets} "
             "for a pushable subscription; re-subscribe via key_mod_filter instead"
         )
-    if num_buckets == route_buckets:
-        b: Column = F.col(route_col)
-    else:
-        b = F.pmod(F.col(route_col), F.lit(num_buckets))
-    if min_bucket <= 0:
-        return b < max_bucket
-    if max_bucket >= num_buckets:
-        return b >= min_bucket
-    return (b >= min_bucket) & (b < max_bucket)
+    b = F.col(ROUTE_COL)
+    if num_buckets != route_buckets:
+        b = F.pmod(b, F.lit(num_buckets))
+    return _bucket_range(b, num_buckets, min_bucket, max_bucket)
 
 
 class UnroutedKeyModWarning(UserWarning):
@@ -205,48 +197,23 @@ class StagedHashMismatchWarning(UserWarning):
     consistency probe against key_mod_bucket() and was NOT trusted."""
 
 
-def _staged_hash_trusted(df, hash_col: str, sample_n: int = 64) -> bool:
-    """Sampled consistency probe for the staged-hash tier: compare the
-    stored column against key_mod_bucket() on the first ``sample_n``
-    rows (one bounded job, ~ms). The routed tier requires an explicit
-    ``route_buckets`` opt-in, but before this guard the hash tier
-    auto-activated on the COLUMN NAME alone — any input that happened
-    to carry an unrelated ``key_hash`` column would be silently
-    filtered on it and return wrong rows with no warning (r13 ADVICE).
-    A 64-row sample cannot prove the whole column, but it kills the
-    realistic failure (an unrelated or stale-geometry column disagrees
-    immediately), and callers that staged the column themselves can
-    skip the probe with ``trust_staged_hash=True``."""
-    rows = (
-        df.select((F.col(hash_col) == key_mod_bucket()).alias("_ok"))
-        .limit(sample_n)
-        .collect()
-    )
-    return all(r["_ok"] for r in rows)
-
-
 def subscribe_key_mod(
     df,
     num_buckets: int,
     min_bucket: int,
     max_bucket: int,
     route_buckets: int | None = None,
-    route_col: str = "route_partition",
-    hash_col: str = "key_hash",
-    trust_staged_hash: bool = False,
 ):
     """The ENFORCED key-mod subscription entry point (DataFrame-level).
 
     Three tiers, fastest available wins:
-    1. materialized ``route_col`` (directory-pruned, ~0.65x an
+    1. the materialized route column (directory-pruned, ~0.65x an
        unfiltered scan) when the log was staged with routing and the
        subscription modulus divides the staged bucket count;
-    2. materialized ``hash_col`` (partitioners.with_key_hash): one
+    2. the materialized hash column (partitioners.with_key_hash): one
        stored-column pmod, ANY modulus, no per-row re-hash. Guarded by
-       a sampled consistency probe (``_staged_hash_trusted``) unless
-       the caller vouches for the column with ``trust_staged_hash=True``
-       — presence of a column NAME is not evidence it holds the
-       subscription hash;
+       a sampled consistency probe — presence of a column NAME is not
+       evidence it holds the subscription hash;
     3. the per-row ``key_mod_filter`` scan, with UnroutedKeyModWarning —
        for string keys the fallback re-hashes every row at scan time,
        which is the cost this contract exists to surface.
@@ -255,13 +222,27 @@ def subscribe_key_mod(
     """
     import warnings
 
+    from databus_spark.operators.partitioners import KEY_HASH_COL, ROUTE_COL
+
     def _hash_tier_ok() -> bool:
-        if hash_col not in df.columns:
+        """Sampled consistency probe: the stored column against
+        key_mod_bucket() on the first 64 rows (one bounded job, ~ms).
+        Before it, the hash tier auto-activated on the COLUMN NAME
+        alone, so an input carrying an unrelated ``key_hash`` column
+        was silently filtered on it (r13 ADVICE). A sample cannot prove
+        the whole column, but an unrelated or stale-geometry column
+        disagrees immediately."""
+        if KEY_HASH_COL not in df.columns:
             return False
-        if trust_staged_hash or _staged_hash_trusted(df, hash_col):
+        rows = (
+            df.select((F.col(KEY_HASH_COL) == key_mod_bucket()).alias("_ok"))
+            .limit(64)
+            .collect()
+        )
+        if all(r["_ok"] for r in rows):
             return True
         warnings.warn(
-            f"column '{hash_col}' failed the sampled consistency probe "
+            f"column '{KEY_HASH_COL}' failed the sampled consistency probe "
             "against key_mod_bucket() — it is not this subscription's "
             "staged hash; falling back to the per-row hash scan",
             StagedHashMismatchWarning,
@@ -269,22 +250,18 @@ def subscribe_key_mod(
         )
         return False
 
-    if route_col in df.columns and route_buckets is not None:
+    if ROUTE_COL in df.columns and route_buckets is not None:
         if route_buckets % num_buckets == 0:
             return df.where(
-                key_mod_subscription(
-                    num_buckets, min_bucket, max_bucket, route_buckets, route_col
-                )
+                key_mod_subscription(num_buckets, min_bucket, max_bucket, route_buckets)
             )
         # incompatible modulus: the staged hash column (any-modulus
         # tier) still avoids the per-row re-hash if present and trusted
         if _hash_tier_ok():
-            return df.where(
-                key_mod_filter_staged(num_buckets, min_bucket, max_bucket, hash_col)
-            )
+            return df.where(key_mod_filter_staged(num_buckets, min_bucket, max_bucket))
         warnings.warn(
             f"num_buckets={num_buckets} does not divide route_buckets="
-            f"{route_buckets} and no trusted staged '{hash_col}' column "
+            f"{route_buckets} and no trusted staged '{KEY_HASH_COL}' column "
             "exists; key-mod subscription falls back to the per-row hash "
             "scan — restage with a compatible bucket count or with_key_hash",
             UnroutedKeyModWarning,
@@ -293,9 +270,7 @@ def subscribe_key_mod(
     elif _hash_tier_ok():
         # middle tier: hash materialized at ingest (with_key_hash) —
         # one stored-column pmod, any modulus, no per-row re-hash
-        return df.where(
-            key_mod_filter_staged(num_buckets, min_bucket, max_bucket, hash_col)
-        )
+        return df.where(key_mod_filter_staged(num_buckets, min_bucket, max_bucket))
     else:
         warnings.warn(
             "key-mod subscription over an unrouted log falls back to a "

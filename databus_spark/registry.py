@@ -66,30 +66,70 @@ def _dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
     return f"CAST(sum(CAST(({expr}) AS DECIMAL(27,{scale}))) AS DOUBLE) AS {alias}"
 
 
-def _staged_artifact(
-    prefix: str, sf_dir: str, fingerprint: str, build, *, version: str
-) -> str:
+_PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+_CODE_DIGESTS: dict[tuple[str, str | None], str] = {}
+
+
+def _code_digest(build_file: str) -> str:
+    """Digest of the code that can build a staged artifact: every .py
+    source under the package, plus ``build_file`` when it sits outside
+    the package (bench.py, tools/, tests); a build with no source file
+    (``python -c``, a REPL) adds nothing. Hashes relative paths and
+    contents, never the checkout's location, so two checkouts of one
+    tree share their artifacts. The whole package is hashed, not the
+    build's own closure: an edit anywhere costs one rebuild, while a
+    missed dependency would serve an artifact the old code built.
+    Computed once per process per (root, outside file)."""
+    import hashlib
+
+    build_file = os.path.abspath(build_file)
+    outside = None
+    if os.path.isfile(build_file) and not build_file.startswith(_PKG_ROOT + os.sep):
+        outside = build_file
+    key = (_PKG_ROOT, outside)
+    if key not in _CODE_DIGESTS:
+        h = hashlib.md5()
+        files = sorted(
+            os.path.join(d, f)
+            for d, _dirs, fs in os.walk(_PKG_ROOT)
+            for f in fs
+            if f.endswith(".py")
+        )
+        for path in files:
+            h.update(os.path.relpath(path, _PKG_ROOT).encode() + b"\0")
+            with open(path, "rb") as f:
+                h.update(f.read() + b"\0")
+        if outside is not None:
+            with open(outside, "rb") as f:
+                h.update(f.read())
+        _CODE_DIGESTS[key] = h.hexdigest()
+    return _CODE_DIGESTS[key]
+
+
+def _staged_artifact(prefix: str, sf_dir: str, fingerprint: str, build) -> str:
     """THE staging protocol: every fixture shared through the temp dir
     is staged here and nowhere else. A /tmp artifact directory keyed on
     the fixture path, guarded by an exclusive flock (these dirs are
-    shared across test/bench processes), rebuilt iff the content
-    fingerprint in its _COMPLETE marker mismatches, with the marker
-    written via tmp+rename so a crash can only ever look 'stale', never
-    half-written. ``build(dir)`` materializes the artifact
-    contents (the dir does not exist yet when it is called); returns
-    the artifact directory.
+    shared across test/bench processes), rebuilt iff its _COMPLETE
+    marker does not hold the content fingerprint AND the digest of the
+    code that builds it (_code_digest), with the marker written via
+    tmp+rename so a crash can only ever look 'stale', never
+    half-written. ``build(dir)`` materializes the artifact contents
+    (the dir does not exist yet when it is called); returns the
+    artifact directory.
 
-    ``version`` is the builder's CODE-version stamp, folded into the
-    marker alongside the content fingerprint: bump it whenever the
-    algorithm inside ``build`` changes, or the staged /tmp parquet from
-    the previous code silently serves stale results that the content
-    fingerprint alone cannot detect."""
-    fingerprint = f"{fingerprint}|{version}"
+    The fingerprint carries only what comes from runtime inputs: the
+    source content and call arguments. Anything the code fixes (an
+    algorithm, a module constant, a layout) is covered by the code
+    digest, so a changed tree rebuilds without a hand-kept stamp."""
     import fcntl
     import hashlib
     import shutil
     import tempfile
 
+    from databus_spark.store.versions import write_atomic
+
+    fingerprint = f"{fingerprint}|{_code_digest(build.__code__.co_filename)}"
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     art_dir = os.path.join(tempfile.gettempdir(), f"{prefix}_{digest}")
     marker = os.path.join(art_dir, "_COMPLETE")
@@ -105,10 +145,7 @@ def _staged_artifact(
             if stale:
                 shutil.rmtree(art_dir, ignore_errors=True)
                 build(art_dir)
-                mtmp = marker + ".tmp"
-                with open(mtmp, "w") as f:
-                    f.write(fingerprint)
-                os.replace(mtmp, marker)
+                write_atomic(marker, fingerprint)
         finally:
             fcntl.flock(lock_f, fcntl.LOCK_UN)
     return art_dir
@@ -287,15 +324,13 @@ def filter_keymod_subscribe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from databus_spark.streaming.source import stage_changelog
 
     log = customer_changelog(spark, sf_dir)
-    # version = n_chunks=2, route_buckets=8 and the stage_changelog layout
     stage = _staged_artifact(
         "databus_routed",
         sf_dir,
         _content_fingerprint(log, "scn"),
         lambda d: stage_changelog(log, d, n_chunks=2, route_buckets=8),
-        version="c2b8-route-v1",
     )
-    staged = spark.read.option("basePath", stage).parquet(stage + "/chunk=*")
+    staged = spark.read.parquet(stage)
     return subscribe_key_mod(staged, 8, 0, 4, route_buckets=8).select(*ENV_OUT)
 
 
@@ -330,9 +365,8 @@ def filter_keymod_staged_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _content_fingerprint(log, "scn"),
         lambda d: stage_changelog(log, d, n_chunks=2, key_hash=True),
-        version="c2-keyhash-v1",
     )
-    staged = spark.read.option("basePath", stage).parquet(stage + "/chunk=*")
+    staged = spark.read.parquet(stage)
     return subscribe_key_mod(staged, 5, 0, 2).select(*ENV_OUT)
 
 
@@ -697,9 +731,7 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig.write.parquet(os.path.join(d, "sig"))
         bands.write.parquet(os.path.join(d, "bands"))
 
-    idx_dir = _staged_artifact(
-        "databus_nearidx", sf_dir, fingerprint, build, version="nearidx-v1"
-    )
+    idx_dir = _staged_artifact("databus_nearidx", sf_dir, fingerprint, build)
     base_index = (
         spark.read.parquet(os.path.join(idx_dir, "sig")),
         spark.read.parquet(os.path.join(idx_dir, "bands")),
@@ -759,21 +791,6 @@ def exactsubstr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exactsubstr_stats(load_table(spark, sf_dir, "documents"))
 
 
-def _xsub_code_canary(spark: SparkSession) -> str:
-    """Digest of the winnowing selection's output on one fixed canary
-    doc — folded into the staged khash index's version stamp so the
-    artifact rebuilds whenever the selection math changes (whash's twin
-    risk is covered the same way by portable_hash64's pinned tests)."""
-    import hashlib
-
-    probe = spark.createDataFrame(
-        [(0, " ".join(f"w{i}" for i in range(3 * dedup.EXSUB_WIN)))],
-        "doc_id long, text string",
-    )
-    vals = sorted(r["_h"] for r in dedup._exsub_selected(probe, dedup.EXSUB_WIN).collect())
-    return hashlib.md5(str(vals).encode()).hexdigest()[:10]
-
-
 @query(
     "exactsubstr_incremental",
     dedup.exactsubstr_incremental_sql(
@@ -812,11 +829,10 @@ def exactsubstr_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-filter will actually engage at this query's win: at the
     # default win=8 _exsub_prefilter_on is False (the anchor is
     # structurally weak — see EXSUB_PREFILTER_MIN_WIN's rationale), so
-    # building + canary-stamping + loading the khash index was pure
-    # dead ingest cost billed to every call (r10 ADVICE #2; it was the
-    # round's one bench regression, 1.44 -> 1.94 s). The win is folded
-    # into the version stamp so flipping EXSUB_WIN past the threshold
-    # rebuilds the artifact WITH its khash leg.
+    # building + loading the khash index was pure dead ingest cost
+    # billed to every call (r10 ADVICE #2; it was the round's one bench
+    # regression, 1.44 -> 1.94 s). EXSUB_WIN is code, so flipping it
+    # past the threshold rebuilds the artifact WITH its khash leg.
     prefilter = dedup._exsub_prefilter_on(None, dedup.EXSUB_WIN)
 
     def build(d: str) -> None:
@@ -825,22 +841,7 @@ def exactsubstr_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the pre-filter twin: selected-k-hash set for candidate probing
             dedup.exactsubstr_base_khashes(base).write.parquet(os.path.join(d, "khash"))
 
-    # SELF-CHECKING version stamp: the khash leg's hash values depend on
-    # the selection code's mix order, which changed twice in one round
-    # (linear chain -> doubling) — a manual bump is exactly the stamp a
-    # future edit forgets. The canary runs the REAL selection on one
-    # fixed doc and folds its output into the version, so any change to
-    # the selection math rebuilds the artifact mechanically. Without the
-    # khash leg there is nothing selection-dependent in the artifact, so
-    # the canary job is skipped too.
-    canary = f"-{_xsub_code_canary(spark)}" if prefilter else ""
-    idx_dir = _staged_artifact(
-        "databus_xsubidx",
-        sf_dir,
-        fingerprint,
-        build,
-        version=f"xsub-v5-w{dedup.EXSUB_WIN}-pf{int(prefilter)}{canary}",
-    )
+    idx_dir = _staged_artifact("databus_xsubidx", sf_dir, fingerprint, build)
     base_hashes = spark.read.parquet(os.path.join(idx_dir, "whash"))
     base_khashes = (
         spark.read.parquet(os.path.join(idx_dir, "khash")) if prefilter else None
@@ -954,32 +955,27 @@ def _staged_sq8ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """The on-disk IVF+SQ8 serving artifact (similarity.sq8_ivf_index_
     build), staged once per fixture under the shared marker protocol —
     the FAISS/BM25 build-once-serve-many shape. Content-fingerprinted
-    over the full vector content (same crc discipline as the PQ index)
-    and geometry-stamped so a dial or grid change invalidates it."""
+    over the full vector content (same crc discipline as the PQ index);
+    a dial or grid change is a code change, which rebuilds it."""
     emb = load_table(spark, sf_dir, "embeddings")
-    fingerprint = (
-        _content_fingerprint(
-            emb.withColumn(
-                "_ecrc", F.crc32(
-                    F.concat_ws(
-                        "|",
-                        F.col("vec_id").cast("string"),
-                        F.col("embedding").cast("string"),
-                    ).cast("binary")
-                )
-            ),
-            "vec_id",
-            "_ecrc",
-        )
-        + f"|c{similarity.N_CELLS}a{similarity.SQ8IVF_ASSIGN}s{similarity.SQ8_SCALE}"
+    fingerprint = _content_fingerprint(
+        emb.withColumn(
+            "_ecrc", F.crc32(
+                F.concat_ws(
+                    "|",
+                    F.col("vec_id").cast("string"),
+                    F.col("embedding").cast("string"),
+                ).cast("binary")
+            )
+        ),
+        "vec_id",
+        "_ecrc",
     )
 
     def build(d: str) -> None:
         similarity.sq8_ivf_index_build(emb, d)
 
-    return _staged_artifact(
-        "databus_sq8ivfidx", sf_dir, fingerprint, build, version="sq8ivf-v1"
-    )
+    return _staged_artifact("databus_sq8ivfidx", sf_dir, fingerprint, build)
 
 
 @query("ann_sq8_ivf_serve", similarity.sq8_ivf_serve_sql(n_queries=10, k=5))
@@ -1114,25 +1110,22 @@ def _staged_pq_index(spark: SparkSession, sf_dir: str):
     re-encoding per query was what let the r6 PQ_K 8->32 recall win tax
     all three PQ bench rows ~1.3-2.2x. Content-fingerprinted over the
     FULL vector content (crc32 of the rendered array — a first-
-    component-only probe would miss a re-seed that preserves e[0]) and
-    PQ-geometry-stamped so a fixture or constant change invalidates the
-    cache; file-locked via the shared staging protocol."""
+    component-only probe would miss a re-seed that preserves e[0]);
+    file-locked via the shared staging protocol, whose code digest
+    rebuilds the index when the PQ geometry constants change."""
     emb = load_table(spark, sf_dir, "embeddings")
-    fingerprint = (
-        _content_fingerprint(
-            emb.withColumn(
-                "_ecrc", F.crc32(
-                    F.concat_ws(
-                        "|",
-                        F.col("vec_id").cast("string"),
-                        F.col("embedding").cast("string"),
-                    ).cast("binary")
-                )
-            ),
-            "vec_id",
-            "_ecrc",
-        )
-        + f"|k{similarity.PQ_K}m{similarity.M_SUB}d{similarity.SUB_DIM}"
+    fingerprint = _content_fingerprint(
+        emb.withColumn(
+            "_ecrc", F.crc32(
+                F.concat_ws(
+                    "|",
+                    F.col("vec_id").cast("string"),
+                    F.col("embedding").cast("string"),
+                ).cast("binary")
+            )
+        ),
+        "vec_id",
+        "_ecrc",
     )
 
     def build(d: str) -> None:
@@ -1141,9 +1134,7 @@ def _staged_pq_index(spark: SparkSession, sf_dir: str):
         cb.write.parquet(os.path.join(d, "cb"))
         codes.write.parquet(os.path.join(d, "codes"))
 
-    idx_dir = _staged_artifact(
-        "databus_pqidx", sf_dir, fingerprint, build, version="pq-v1"
-    )
+    idx_dir = _staged_artifact("databus_pqidx", sf_dir, fingerprint, build)
     return (
         spark.read.parquet(os.path.join(idx_dir, "cb")),
         spark.read.parquet(os.path.join(idx_dir, "codes")),
@@ -1355,7 +1346,7 @@ def _staged_kmeans(spark: SparkSession, sf_dir: str, k: int, n_iter: int) -> Dat
             "vec_id",
             "_ecrc",
         )
-        + f"|k{k}i{n_iter}s{similarity.KM_SCALE}"
+        + f"|k{k}i{n_iter}"
     )
 
     def build(d: str) -> None:
@@ -1369,7 +1360,7 @@ def _staged_kmeans(spark: SparkSession, sf_dir: str, k: int, n_iter: int) -> Dat
     # each time (bit r10: the 128-cell eval rows re-ran an 11 s train
     # per bench invocation while k=8 rows thrashed the same dir)
     idx_dir = _staged_artifact(
-        f"databus_kmeans_k{k}i{n_iter}", sf_dir, fingerprint, build, version="km-v1"
+        f"databus_kmeans_k{k}i{n_iter}", sf_dir, fingerprint, build
     )
     return spark.read.parquet(os.path.join(idx_dir, "cent"))
 
@@ -1399,7 +1390,7 @@ def semdedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_id",
         "_ecrc",
-    ) + f"|k{similarity.SEM_EVAL_CELLS}i{similarity.SEM_EVAL_ITER}"
+    )
 
     def build(d: str) -> None:
         cent = similarity.kmeans_lloyd(
@@ -1412,9 +1403,7 @@ def semdedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             centroids=spark.read.parquet(os.path.join(d, "cent")),
         ).write.parquet(os.path.join(d, "bidx"))
 
-    idx_dir = _staged_artifact(
-        "databus_semincidx", sf_dir, fingerprint, build, version="seminc-v1"
-    )
+    idx_dir = _staged_artifact("databus_semincidx", sf_dir, fingerprint, build)
     return similarity.semdedup_incremental(
         incoming,
         centroids=spark.read.parquet(os.path.join(idx_dir, "cent")),
@@ -1453,7 +1442,6 @@ def _staged_bm25_index(spark: SparkSession, sf_dir: str) -> str:
         sf_dir,
         _text_fingerprint(base),
         lambda d: text.bm25_index_build(base, d),
-        version="bm25-v2",
     )
 
 
@@ -2056,28 +2044,23 @@ def dsir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") >= 1_000_000
     )
     base = load_table(spark, sf_dir, "documents")
-    fingerprint = (
-        _content_fingerprint(
-            base.withColumn(
-                "_tcrc",
-                F.crc32(
-                    F.concat_ws(
-                        "|", F.col("doc_id").cast("string"), F.col("text")
-                    ).cast("binary")
-                ),
-            ),
-            "doc_id",
+    fingerprint = _content_fingerprint(
+        base.withColumn(
             "_tcrc",
-        )
-        + f"|t{shards.DSIR_TARGET_LANG}b{shards.DSIR_BUCKETS}"
+            F.crc32(
+                F.concat_ws(
+                    "|", F.col("doc_id").cast("string"), F.col("text")
+                ).cast("binary")
+            ),
+        ),
+        "doc_id",
+        "_tcrc",
     )
 
     def build(d: str) -> None:
         shards.dsir_feature_weights(base).write.parquet(os.path.join(d, "w"))
 
-    idx_dir = _staged_artifact(
-        "databus_dsirw", sf_dir, fingerprint, build, version="dsirw-v1"
-    )
+    idx_dir = _staged_artifact("databus_dsirw", sf_dir, fingerprint, build)
     weights = spark.read.parquet(os.path.join(idx_dir, "w"))
     return shards.dsir_incremental_scores(incoming, base, weights=weights)
 
@@ -2502,7 +2485,6 @@ def zorder_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _content_fingerprint(e, "event_id", "user_id", "hour"),
         lambda d: table(d).write_initial(e),
-        version="z-v2",  # v2: the table moved down to <dir>/t
     )
     t = table(zdir)
     b = e.agg(F.min("user_id"), F.min("hour")).collect()[0]  # scalar probe
@@ -2991,7 +2973,6 @@ def avro_ocf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _content_fingerprint(log, "scn", "amount"),
         build,
-        version="ocf-v1",
     )
     return read_ocf_splits(
         spark,
@@ -3367,9 +3348,7 @@ def bpe_encode_corpus_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(d, "rules")
         )
 
-    art = _staged_artifact(
-        "databus_bperules", sf_dir, fingerprint, build, version="bpe64-v1"
-    )
+    art = _staged_artifact("databus_bperules", sf_dir, fingerprint, build)
     rules = spark.read.parquet(os.path.join(art, "rules"))
     return text.bpe_encode(docs, rules=rules, n_merges=64, k_per_round=16)
 
@@ -3562,14 +3541,12 @@ def media_video_frames_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from databus_spark.operators.multimodal import synth_avi_corpus, video_frame_probe
 
     docs = load_table(spark, sf_dir, "documents")
-    fingerprint = _content_fingerprint(docs, "doc_id") + "|f3"
+    fingerprint = _content_fingerprint(docs, "doc_id")
 
     def build(d: str) -> None:
         synth_avi_corpus(docs).write.parquet(os.path.join(d, "media"))
 
-    avi_dir = _staged_artifact(
-        "databus_avi", sf_dir, fingerprint, build, version="avi-v1"
-    )
+    avi_dir = _staged_artifact("databus_avi", sf_dir, fingerprint, build)
     return video_frame_probe(spark.read.parquet(os.path.join(avi_dir, "media")))
 
 
@@ -3596,15 +3573,15 @@ def media_png_resize_q_sql() -> str:
 
 
 def _staged_media_corpus(
-    spark: SparkSession, sf_dir: str, prefix: str, synth, version: str
+    spark: SparkSession, sf_dir: str, prefix: str, synth
 ) -> DataFrame:
     """Media fixture corpora are STAGED binary parquet (the AVI
     precedent): an image/audio pipeline's input is stored payloads, so
     the measured path is scan -> decode -> hash, not per-query
-    re-encoding of the fixture. Content-fingerprinted + code-version
-    stamped via the shared staging protocol."""
+    re-encoding of the fixture. Keyed on the source content, the
+    partition width and the code digest via the shared staging
+    protocol."""
     docs = load_table(spark, sf_dir, "documents")
-    fingerprint = _content_fingerprint(docs, "doc_id")
 
     def build(d: str) -> None:
         # repartition BEFORE the write: documents.parquet is one small
@@ -3614,15 +3591,14 @@ def _staged_media_corpus(
         # because only the 10x fixture happened to be written 32-wide)
         synth(docs.repartition(n_parts)).write.parquet(os.path.join(d, "media"))
 
-    # The ACTUAL partition width goes into the version stamp: a
+    # The ACTUAL partition width goes into the fingerprint: a
     # hard-coded "+rp32" let a corpus staged by a low-CPU process (4
     # partitions) be silently reused by the 32-CPU bench — the exact
     # single-partition layout bug the repartition above fixes,
     # reintroduced through /tmp artifact reuse.
     n_parts = spark.sparkContext.defaultParallelism
-    art = _staged_artifact(
-        prefix, sf_dir, fingerprint, build, version=f"{version}+rp{n_parts}"
-    )
+    fingerprint = f"{_content_fingerprint(docs, 'doc_id')}|rp{n_parts}"
+    art = _staged_artifact(prefix, sf_dir, fingerprint, build)
     return spark.read.parquet(os.path.join(art, "media"))
 
 
@@ -3677,9 +3653,7 @@ def media_dhash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_phash_corpus,
     )
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
     return dhash_dedup_classes(image_dhash(media))
 
 
@@ -3702,9 +3676,7 @@ def media_dhash_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from databus_spark.operators.dedup import bithash_near_pairs
     from databus_spark.operators.multimodal import image_dhash, synth_phash_corpus
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
     return bithash_near_pairs(image_dhash(media), "dhash", 56, max_hamming=2)
 
 
@@ -3745,16 +3717,12 @@ def _staged_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint = _content_fingerprint(docs, "doc_id")
 
     def build(d: str) -> None:
-        media = _staged_media_corpus(
-            spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-        )
+        media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
         bithash_near_pairs(image_dhash(media), "dhash", 56, max_hamming=2).write.parquet(
             os.path.join(d, "pairs")
         )
 
-    idx_dir = _staged_artifact(
-        "databus_dhashpairs", sf_dir, fingerprint, build, version="dh-pairs-v4"
-    )
+    idx_dir = _staged_artifact("databus_dhashpairs", sf_dir, fingerprint, build)
     return spark.read.parquet(os.path.join(idx_dir, "pairs"))
 
 
@@ -3817,9 +3785,7 @@ def media_decision_log_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from databus_spark.operators.dedup import dedup_clusters_star
     from databus_spark.operators.multimodal import image_dhash, synth_phash_corpus
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
     hashed = image_dhash(media).localCheckpoint(eager=False)
     exact_s = hashed.join(
         hashed.groupBy("dhash").agg(F.min("doc_id").alias("s")), "dhash"
@@ -3906,9 +3872,7 @@ def media_dhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from databus_spark.operators.multimodal import image_dhash, synth_phash_corpus
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
     docs = load_table(spark, sf_dir, "documents")
     fingerprint = _content_fingerprint(docs, "doc_id")
 
@@ -3918,9 +3882,7 @@ def media_dhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(d, "bands")
         )
 
-    idx_dir = _staged_artifact(
-        "databus_dhashidx", sf_dir, fingerprint, build, version="dh-idx-v4"
-    )
+    idx_dir = _staged_artifact("databus_dhashidx", sf_dir, fingerprint, build)
     base_bands = spark.read.parquet(os.path.join(idx_dir, "bands"))
     delta_hash = image_dhash(media.where(F.col("doc_id") % 5 == 0))
     return incremental_bithash_dedup(delta_hash, base_bands, 56)
@@ -3975,9 +3937,7 @@ def media_audio_fp_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_audio_corpus,
     )
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_audiofp", synth_audio_corpus, "audiofp-v2"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_audiofp", synth_audio_corpus)
     return (
         audio_fingerprint(media)
         .groupBy("audio_fp")
@@ -4008,9 +3968,7 @@ def media_audio_near_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_audio_corpus,
     )
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_audiofp", synth_audio_corpus, "audiofp-v2"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_audiofp", synth_audio_corpus)
     return bithash_near_pairs(
         audio_fingerprint(media), "audio_fp", 63, max_hamming=2
     )
@@ -4071,9 +4029,7 @@ def jsonl_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the shared staging protocol also closes the flock gap this site
     # had (it was the one staging block without cross-process locking)
-    jl_dir = _staged_artifact(
-        "databus_jsonl", sf_dir, fingerprint, build, version="jsonl-v1"
-    )
+    jl_dir = _staged_artifact("databus_jsonl", sf_dir, fingerprint, build)
     clean, quarantine = read_jsonl(spark, os.path.join(jl_dir, "data", "*.json"))
     a = clean.agg(F.count(F.lit(1)).alias("n")).select(
         F.lit("clean").alias("kind"), "n"
@@ -4214,7 +4170,6 @@ def trail_file_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _content_fingerprint(orders, "o_orderkey", "o_totalprice"),
         build,
-        version="trail-v1",
     )
     with open(os.path.join(trail_dir, "_FROM_SCN")) as f:
         from_scn = int(f.read())
@@ -4474,13 +4429,10 @@ def _staged_link_index(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(d, "clusters")
         )
 
-    # linkidx-v5: clone-collapsed rep-level blocks + the clone-map
-    # expansion companion + the tertiary reversed-min-gram split key
-    # (_sec2) for sub-blocks still over cap (round-13, operators/
-    # joins.py; v3 was the r12 secondary min-gram blocking)
-    return _staged_artifact(
-        "databus_linkidx", sf_dir, fingerprint, build, version="linkidx-v5"
-    )
+    # clone-collapsed rep-level blocks + the clone-map expansion
+    # companion + the tertiary reversed-min-gram split key (_sec2) for
+    # sub-blocks still over cap (operators/joins.py)
+    return _staged_artifact("databus_linkidx", sf_dir, fingerprint, build)
 
 
 @query(
@@ -4588,17 +4540,14 @@ def _staged_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     remains a visible bench row. Content-fingerprinted (text crc32)
     and file-locked via the shared staging protocol."""
     docs = load_table(spark, sf_dir, "documents")
-    fingerprint = (
-        _content_fingerprint(
-            docs.withColumn("_tcrc", F.crc32(
-                F.concat_ws("|", F.col("doc_id").cast("string"), F.col("text")).cast(
-                    "binary"
-                )
-            )),
-            "doc_id",
-            "_tcrc",
-        )
-        + "|k5t0.5"
+    fingerprint = _content_fingerprint(
+        docs.withColumn("_tcrc", F.crc32(
+            F.concat_ws("|", F.col("doc_id").cast("string"), F.col("text")).cast(
+                "binary"
+            )
+        )),
+        "doc_id",
+        "_tcrc",
     )
 
     def build(d: str) -> None:
@@ -4606,9 +4555,7 @@ def _staged_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup.documents_with_dups(spark, sf_dir), k=5, threshold=0.5
         ).write.parquet(os.path.join(d, "pairs"))
 
-    idx_dir = _staged_artifact(
-        "databus_lshpairs", sf_dir, fingerprint, build, version="lsh-v1"
-    )
+    idx_dir = _staged_artifact("databus_lshpairs", sf_dir, fingerprint, build)
     return spark.read.parquet(os.path.join(idx_dir, "pairs"))
 
 

@@ -26,7 +26,11 @@ from pyspark.sql.window import Window
 from databus_spark.catalog import SOURCE_IDS, sources_registry
 from databus_spark.plans.filterconfig import compile_config
 from databus_spark.sources.schema_registry import SchemaRegistry
-from databus_spark.streaming.checkpoint import Checkpoint
+from databus_spark.streaming.checkpoint import (
+    Checkpoint,
+    SCNNotFoundError,
+    require_retained,
+)
 
 EVENT_HEADER_BYTES = 45  # DbusEventV2 fixed header (DbusEventV2.java:33-90)
 
@@ -133,12 +137,8 @@ class RelayFacade:
         SCNNotFoundError instead of silently skipping the pruned gap —
         ReadEventsRequestProcessor's SCNNotFound answer, which drives
         the client to another relay or to bootstrap."""
-        if self.retained_min_scn is not None and since_scn < self.retained_min_scn - 1:
-            from databus_spark.streaming.controller import SCNNotFoundError
-
-            raise SCNNotFoundError(
-                f"checkpoint {since_scn} below retention floor {self.retained_min_scn}"
-            )
+        if self.retained_min_scn is not None:
+            require_retained(since_scn, self.retained_min_scn)
         nxt = self.log.where(F.col("scn") > since_scn).select("scn").distinct()
         # a root top-n (TakeOrderedAndProject) returns the window scns in
         # order: the last one is the bound, with no single-partition
@@ -195,8 +195,6 @@ class MultiRelayClient:
         so rotation is tried first) — the caller's cue to run the
         bootstrap protocol (BootstrapController), exactly the reference's
         relay-fell-off -> bootstrap transition."""
-        from databus_spark.streaming.controller import SCNNotFoundError
-
         fell_off = 0
         for _ in range(len(self.relays)):
             relay = self.relays[self.active]

@@ -39,6 +39,8 @@ from typing import Iterator, Tuple
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import StructType
 
+from databus_spark.store.versions import write_atomic
+
 FORMAT_NAME = "databus_cdc"
 
 # Generic CDC envelope: payload stays a JSON document (schema-registry
@@ -148,10 +150,7 @@ def _read_index(trail_dir: str) -> dict[str, dict]:
 
 
 def _write_index(trail_dir: str, idx: dict[str, dict]) -> None:
-    tmp = os.path.join(trail_dir, INDEX_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(idx, f, sort_keys=True)
-    os.replace(tmp, os.path.join(trail_dir, INDEX_NAME))
+    write_atomic(os.path.join(trail_dir, INDEX_NAME), json.dumps(idx, sort_keys=True))
 
 
 def _select_files(

@@ -27,6 +27,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from databus_spark.store.versions import write_atomic
+
 
 class FileMaxSCNHandler:
     """Durable watermark: {'maxScn': N} JSON with atomic replace."""
@@ -41,10 +43,7 @@ class FileMaxSCNHandler:
             return int(json.load(f)["maxScn"])
 
     def write(self, scn: int) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"maxScn": int(scn)}, f)
-        os.replace(tmp, self.path)
+        write_atomic(self.path, json.dumps({"maxScn": int(scn)}))
 
 
 class IncrementalPuller:

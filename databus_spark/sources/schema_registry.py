@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databus_spark.store.versions import write_atomic
+
 
 @dataclass(frozen=True)
 class VersionedSchema:
@@ -117,10 +119,7 @@ class FileSchemaRegistry(SchemaRegistry):
 
     def register(self, vs: VersionedSchema) -> VersionedSchema:
         path = os.path.join(self.schema_dir, f"{vs.name}.{vs.version}{self.SUFFIX}")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(vs.ddl)
-        os.replace(tmp, path)  # atomic: a concurrent refresh never sees a torn file
+        write_atomic(path, vs.ddl)  # a concurrent refresh never sees a torn file
         return super().register(vs)
 
     def refresh(self) -> int:

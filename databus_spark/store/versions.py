@@ -6,10 +6,11 @@ snapshot store, the streaming sketch sinks and the z-table.
       _manifest_v<N>.json   <- version N's metadata, a JSON object
       v<N>/                 <- version N's data
 
-commit(N, manifest) replaces the manifest atomically (tmp + rename),
-then flips ``_VERSION`` the same way: the versioned state-store commit
-of Structured Streaming. A writer killed before the flip leaves an
-uncommitted ``v<N>/``, an orphan manifest or a ``_VERSION.tmp``.
+commit(N, manifest) replaces the manifest atomically (write_atomic:
+tmp + rename), then flips ``_VERSION`` the same way: the versioned
+state-store commit of Structured Streaming. A writer killed before the
+flip leaves an uncommitted ``v<N>/``, an orphan manifest or a
+``_VERSION.*.tmp``.
 Readers see none of them, and the next commit of N replaces them; a
 writer starts the data of N in ``new_dir(N)``, which discards what a
 killed writer left there.
@@ -20,10 +21,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 
 
-def _replace(path: str, text: str) -> None:
-    tmp = path + ".tmp"
+def write_atomic(path: str, text: str) -> None:
+    """Replace the small file at ``path`` in one step: a reader sees the
+    old text or the new, never a torn write, and a writer killed midway
+    leaves only a ``*.tmp`` next to it. The temp file is named per
+    writer (pid and thread), so concurrent writers of one path never
+    write into each other's temp file; the last rename wins."""
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
     with open(tmp, "w") as f:
         f.write(text)
     os.replace(tmp, path)
@@ -61,8 +68,8 @@ class VersionedState:
         return path
 
     def commit(self, version: int, manifest: dict) -> None:
-        _replace(self._manifest_path(version), json.dumps(manifest))
-        _replace(os.path.join(self.root, "_VERSION"), str(version))
+        write_atomic(self._manifest_path(version), json.dumps(manifest))
+        write_atomic(os.path.join(self.root, "_VERSION"), str(version))
 
     def versions(self) -> list[int]:
         """Committed versions whose data is retained, oldest first."""

@@ -17,6 +17,8 @@ from __future__ import annotations
 import json
 from dataclasses import asdict, dataclass, field
 
+from databus_spark.store.versions import write_atomic
+
 
 MODE_INIT = "INIT"
 MODE_ONLINE = "ONLINE_CONSUMPTION"
@@ -29,6 +31,22 @@ class InvalidCheckpointTransition(Exception):
     InvalidEventException / asserts in BootstrapCheckpointHandler).
     A real exception — not ``assert`` — so ``python -O`` cannot strip
     the guard and let an illegal transition corrupt the checkpoint."""
+
+
+class SCNNotFoundError(Exception):
+    """Consumer checkpoint SCN no longer in the retention window."""
+
+
+def require_retained(since_scn: int, retained_min_scn: int) -> None:
+    """The relay's retention rule (ReadEventsRequestProcessor's
+    SCNNotFound path). A consumer at since_scn needs the events strictly
+    GREATER than since_scn, so since_scn == retained_min_scn - 1 is
+    still fully served and must not force a needless bootstrap; any
+    older checkpoint would silently skip the pruned gap, so it raises."""
+    if since_scn < retained_min_scn - 1:
+        raise SCNNotFoundError(
+            f"checkpoint {since_scn} below retained min {retained_min_scn}"
+        )
 
 
 def _require_mode(actual: str, allowed: tuple[str, ...], op: str) -> None:
@@ -137,9 +155,4 @@ class FileCheckpointProvider:
             return Checkpoint.from_json(f.read())
 
     def save(self, ckpt: Checkpoint) -> None:
-        import os
-
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(ckpt.to_json())
-        os.replace(tmp, self.path)
+        write_atomic(self.path, ckpt.to_json())

@@ -41,13 +41,11 @@ from databus_spark.streaming.checkpoint import (
     MODE_SNAPSHOT,
     Checkpoint,
     FileCheckpointProvider,
+    SCNNotFoundError,  # re-exported: callers import it from this module
     _require_mode,
+    require_retained,
 )
 from databus_spark.streaming.source import changelog_stream
-
-
-class SCNNotFoundError(Exception):
-    """Consumer checkpoint SCN no longer in the retention window."""
 
 
 class BootstrapController:
@@ -103,18 +101,13 @@ class BootstrapController:
 
     def check_availability(self, from_scn: int) -> None:
         """The relay's SCN check: streaming from a pruned SCN raises
-        (ReadEventsRequestProcessor SCNNotFound path).
-
-        A consumer at from_scn needs events strictly GREATER than
-        from_scn, so from_scn == min_scn - 1 is still fully served and
-        must not trigger a needless bootstrap."""
+        (checkpoint.require_retained); an empty window serves none."""
         min_scn = self.retained_min_scn()
         if min_scn is None:
             raise SCNNotFoundError(
                 f"retention window {self.stage_dir} is empty: no SCN is served"
             )
-        if from_scn < min_scn - 1:
-            raise SCNNotFoundError(f"requested scn {from_scn} < retained min {min_scn}")
+        require_retained(from_scn, min_scn)
 
     # -- bootstrap orchestration ---------------------------------------------
     def snapshot_phase(self) -> int:

@@ -23,6 +23,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from databus_spark.store.versions import write_atomic
+
 
 class EpochLedger:
     def __init__(self, path: str) -> None:
@@ -33,11 +35,7 @@ class EpochLedger:
         return os.path.exists(os.path.join(self.path, f"epoch-{epoch_id}"))
 
     def commit(self, epoch_id: int) -> None:
-        marker = os.path.join(self.path, f"epoch-{epoch_id}")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("done")
-        os.replace(tmp, marker)
+        write_atomic(os.path.join(self.path, f"epoch-{epoch_id}"), "done")
 
 
 class ExactlyOnceSink:

@@ -32,6 +32,8 @@ import json
 import os
 import time
 
+from databus_spark.store.versions import write_atomic
+
 
 class LeaderLease:
     def __init__(self, path: str, node_id: str, lease_ms: int = 5000) -> None:
@@ -84,10 +86,7 @@ class LeaderLease:
             return cur["node_id"] == self.node_id  # re-acquire own live lease
         # expired (or corrupt) lease: take over by atomic replacement, then
         # confirm — a concurrent takeover may have landed after ours
-        tmp = f"{self.path}.{self.node_id}.tmp"
-        with open(tmp, "w") as f:
-            f.write(self._payload())
-        os.replace(tmp, self.path)
+        write_atomic(self.path, self._payload())
         return self._confirmed()
 
     def renew(self) -> bool:
@@ -100,10 +99,7 @@ class LeaderLease:
         if cur["expires_ms"] <= self._now_ms():
             # our own lease lapsed: re-acquire rather than silently extend
             return self.try_acquire()
-        tmp = f"{self.path}.{self.node_id}.tmp"
-        with open(tmp, "w") as f:
-            f.write(self._payload())
-        os.replace(tmp, self.path)
+        write_atomic(self.path, self._payload())
         return self._confirmed()
 
     def release(self) -> None:

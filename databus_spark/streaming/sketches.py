@@ -28,7 +28,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from databus_spark.store.versions import VersionedState
+from databus_spark.store.versions import VersionedState, write_atomic
 
 
 class _VersionedSink:
@@ -179,9 +179,7 @@ class StreamingDriftMonitor(_VersionedSink):
             self._bin_counts(tc).groupBy("bin").agg(
                 F.sum("c").alias("cb")
             ).write.mode("overwrite").parquet(os.path.join(root, "baseline", "bins"))
-            with open(staged + ".tmp", "w") as f:
-                f.write(str(self.vocab_size))
-            os.replace(staged + ".tmp", staged)
+            write_atomic(staged, str(self.vocab_size))
 
     # -- shared binning against the staged space ----------------------------
     def _token_counts(self, docs: DataFrame) -> DataFrame:
@@ -314,9 +312,7 @@ class StreamingEntityResolver(_VersionedSink):
             if base_labels is not None and self.vstate.current() == 0:
                 base_labels.write.parquet(os.path.join(self.vstate.new_dir(1), "labels"))
                 self.vstate.commit(1, {"batch_id": -1, "leaf_floor": 0})
-            with open(staged + ".tmp", "w") as f:
-                f.write("1")
-            os.replace(staged + ".tmp", staged)
+            write_atomic(staged, "1")
 
     def _committed(self) -> tuple[int, dict]:
         """(current version, its manifest). The manifest's leaf_floor is

@@ -38,6 +38,17 @@ def test_fell_off_bootstrap_resume(spark, sf_dir, tmp_path):
     with pytest.raises(SCNNotFoundError):
         ctl.check_availability(0)
 
+    # one retention rule for the controller and the relay facade: a
+    # checkpoint at min-1 needs only retained events, one at min-2 fell off
+    from databus_spark.serve import RelayFacade
+
+    min_scn = ctl.retained_min_scn()
+    relay = RelayFacade(spark, log, retained_min_scn=min_scn)
+    for check in (ctl.check_availability, lambda scn: relay.stream_windows(scn, 1)):
+        with pytest.raises(SCNNotFoundError):
+            check(min_scn - 2)
+        check(min_scn - 1)
+
     applier = ctl.consume_from(0, str(tmp_path / "ckpt"))
     assert ctl.checkpoint.consumption_mode == "ONLINE_CONSUMPTION"
 

@@ -230,8 +230,6 @@ def test_subscribe_key_mod_rejects_unrelated_key_hash(spark, sf_dir):
     hash tier auto-activated on the column name alone). The sampled
     consistency probe rejects the impostor column, warns, and falls
     back to the per-row hash scan — correct rows, visible cost."""
-    import warnings
-
     from databus_spark.envelope import customer_changelog
     from databus_spark.operators.filters import (
         StagedHashMismatchWarning,
@@ -246,17 +244,6 @@ def test_subscribe_key_mod_rejects_unrelated_key_hash(spark, sf_dir):
     with pytest.warns(StagedHashMismatchWarning):
         sub = subscribe_key_mod(poisoned, 8, 0, 4)
     assert sub.count() == expected
-
-    # trust_staged_hash=True is the explicit caller vouch: it skips the
-    # probe entirely and takes the stored column at its word — which on
-    # the impostor column returns DIFFERENT rows (that's what "vouch"
-    # means; the silent default must never do this)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        vouched = subscribe_key_mod(poisoned, 8, 0, 4, trust_staged_hash=True)
-    got = {r["scn"] for r in vouched.select("scn").collect()}
-    want = {r["scn"] for r in sub.select("scn").collect()}
-    assert got != want  # the vouched path really did trust the impostor
 
 
 def test_avro_binary_wire_format_roundtrip():

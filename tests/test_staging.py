@@ -11,8 +11,8 @@ protocol exists for:
   produced crashes AND wrong rows, so a row count is not enough);
 * a stager killed mid-build must neither block the next caller nor leave
   a directory the next caller reuses;
-* a failing build leaves no marker, and a new code-version stamp
-  forces a rebuild.
+* a failing build leaves no marker, and a change to the code that
+  builds an artifact forces a rebuild.
 """
 
 from __future__ import annotations
@@ -126,7 +126,7 @@ _KILLED_STAGER = textwrap.dedent(
         open(ready, "w").close()
         time.sleep(600)
 
-    _staged_artifact("databus_crash", "key", "fp", build, version="v1")
+    _staged_artifact("databus_crash", "key", "fp", build)
     """
 )
 
@@ -175,7 +175,7 @@ def test_stager_killed_inside_build_leaves_nothing_reused(tmp_path, monkeypatch)
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     art = _call_with_timeout(
-        lambda: _staged_artifact("databus_crash", "key", "fp", _good_build, version="v1"),
+        lambda: _staged_artifact("databus_crash", "key", "fp", _good_build),
         60,
     )
     assert os.path.dirname(art) == str(tmp_path)
@@ -194,7 +194,7 @@ def test_failed_build_leaves_no_marker(tmp_path, monkeypatch):
         raise RuntimeError("build failed")
 
     with pytest.raises(RuntimeError, match="build failed"):
-        _staged_artifact("databus_fail", "key", "fp", bad_build, version="v1")
+        _staged_artifact("databus_fail", "key", "fp", bad_build)
     (art,) = [p for p in tmp_path.iterdir() if p.is_dir()]
     assert not (art / "_COMPLETE").exists()
 
@@ -204,25 +204,65 @@ def test_failed_build_leaves_no_marker(tmp_path, monkeypatch):
         calls.append(d)
         _good_build(d)
 
-    assert _staged_artifact("databus_fail", "key", "fp", build, version="v1") == str(art)
+    assert _staged_artifact("databus_fail", "key", "fp", build) == str(art)
     assert len(calls) == 1
     assert (art / "payload").read_text() == "ok"
 
 
-def test_version_stamp_forces_rebuild(tmp_path, monkeypatch):
-    from databus_spark.registry import _staged_artifact
+def test_code_digest_forces_rebuild(tmp_path, monkeypatch):
+    """The marker holds the content fingerprint and the digest of the
+    code that builds the artifact: same content under the same code is
+    reused, and a change to either rebuilds. The digest hashes sources,
+    not where they sit, so an identical copy of a tree shares the
+    artifact."""
+    from databus_spark import registry
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(registry, "_CODE_DIGESTS", {})
     calls = []
+
+    def source_tree(name: str, const: int) -> str:
+        root = tmp_path / name
+        (root / "operators").mkdir(parents=True)
+        (root / "__init__.py").write_text("")
+        (root / "operators" / "geometry.py").write_text(f"N_CELLS = {const}\n")
+        return str(root)
+
+    def outside_build(name: str, tag: str):
+        """A build defined in a file outside the package (a bench or
+        tool script)."""
+        path = tmp_path / f"{name}.py"
+        path.write_text(f"def build(d):\n    calls.append({tag!r})\n    good(d)\n")
+        ns = {"calls": calls, "good": _good_build}
+        exec(compile(path.read_text(), str(path), "exec"), ns)
+        return ns["build"]
 
     def build(d):
         calls.append(d)
         _good_build(d)
 
-    _staged_artifact("databus_ver", "key", "fp", build, version="v1")
-    _staged_artifact("databus_ver", "key", "fp", build, version="v1")
+    def stage(fp: str = "fp", b=build) -> str:
+        return registry._staged_artifact("databus_code", "key", fp, b)
+
+    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("a", 8))
+    stage()
+    stage()
     assert len(calls) == 1
-    _staged_artifact("databus_ver", "key", "fp", build, version="v2")
+    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("copy_of_a", 8))
+    stage()
+    assert len(calls) == 1
+    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("edited", 16))
+    stage()
     assert len(calls) == 2
-    _staged_artifact("databus_ver", "key", "fp2", build, version="v2")
+    stage()
+    assert len(calls) == 2
+    stage("fp2")
     assert len(calls) == 3
+
+    # the build's own file, when it sits outside the package
+    stage("fp2", outside_build("tool", "v1"))
+    assert len(calls) == 4
+    stage("fp2", outside_build("tool_copy", "v1"))
+    assert len(calls) == 4
+    stage("fp2", outside_build("tool_edited", "v2"))
+    assert calls[-1] == "v2" and len(calls) == 5

@@ -37,17 +37,18 @@ REPLICA_STRIDE = 100_000_000
 _STAGED: dict[tuple[str, str], str] = {}
 
 
-def _stage(name: str, sf_dir: str, fingerprint: str, build, version: str) -> None:
+def _stage(name: str, sf_dir: str, fingerprint: str, build) -> None:
     """Stage one derived soak input through the shared staging protocol
-    (registry._staged_artifact: flock, content-fingerprint marker written
-    by rename) and remember its directory for the family that reads it.
+    (registry._staged_artifact: flock, a marker of content fingerprint
+    and code digest written by rename) and remember its directory for
+    the family that reads it.
     The soak fixture dir holds the x10 corpus one run and the x100 corpus
     the next (build_soak_fixture rebuilds it in place per --scale), so
     the key is the source's content, never its path alone."""
     from databus_spark.registry import _staged_artifact
 
     _STAGED[name, sf_dir] = _staged_artifact(
-        f"databus_soak_{name}", sf_dir, fingerprint, build, version=version
+        f"databus_soak_{name}", sf_dir, fingerprint, build
     )
 
 
@@ -263,7 +264,7 @@ def _prestage_web(spark, docs, emb, sf_dir):
     def build(d):
         _web_corpus(docs).repartition(32).write.parquet(os.path.join(d, "web"))
 
-    _stage("web", sf_dir, _text_fingerprint(docs), build, version="web-v1")
+    _stage("web", sf_dir, _text_fingerprint(docs), build)
 
 
 def _read_web(spark, sf_dir):
@@ -346,7 +347,7 @@ def _prestage_stream(spark, docs, emb, sf_dir):
             orders_changelog(spark, sf_dir), os.path.join(d, "stage"), n_chunks=8
         )
 
-    _stage("stream", sf_dir, _orders_fingerprint(spark, sf_dir), build, version="stream-v1")
+    _stage("stream", sf_dir, _orders_fingerprint(spark, sf_dir), build)
 
 
 def _stream_stage_dir(sf_dir: str) -> str:
@@ -413,10 +414,7 @@ def _prestage_bigstate(spark, docs, emb, sf_dir):
         store = ParquetSnapshotStore(spark, os.path.join(d, "base"))
         store.merge(orders_changelog(spark, sf_dir))  # one big v1 seed
 
-    fingerprint = _orders_fingerprint(spark, sf_dir)
-    # v2: the store keeps its base bytes and read schema in a root
-    # manifest; a v1 stage has none and cannot be read
-    _stage("bigstate", sf_dir, fingerprint, build, version="bigstate-v2")
+    _stage("bigstate", sf_dir, _orders_fingerprint(spark, sf_dir), build)
 
 
 def fam_stream_bigstate(spark, docs, emb, sf_dir):
@@ -534,7 +532,6 @@ def _prestage_bm25_serve(spark, docs, emb, sf_dir):
         sf_dir,
         _text_fingerprint(docs),
         lambda d: text.bm25_index_build(docs, d),
-        version="bm25-v2",
     )
 
 
