@@ -107,6 +107,13 @@ def key_mod_bucket() -> Column:
     )
 
 
+# the envelope columns a staged log may carry (partitioners.with_key_hash,
+# partitioners.with_route_partition): the materialized key_mod_bucket()
+# and the producer's routed bucket
+KEY_HASH_COL = "key_hash"
+ROUTE_COL = "route_partition"
+
+
 def _bucket_range(
     b: Column, num_buckets: int, min_bucket: int, max_bucket: int
 ) -> Column:
@@ -156,8 +163,6 @@ def key_mod_filter_staged(num_buckets: int, min_bucket: int, max_bucket: int) ->
     which needs ``num_buckets`` to divide the staged bucket count) —
     the middle subscription tier for string-keyed sources whose logs
     were staged with the hash column."""
-    from databus_spark.operators.partitioners import KEY_HASH_COL
-
     b = F.pmod(F.col(KEY_HASH_COL), F.lit(num_buckets))
     return _bucket_range(b, num_buckets, min_bucket, max_bucket)
 
@@ -175,8 +180,6 @@ def key_mod_subscription(
     ``num_buckets`` dividing ``route_buckets`` it is one int pmod.
     Equivalence: route = H % R and R % N == 0 imply H % N == route % N.
     """
-    from databus_spark.operators.partitioners import ROUTE_COL
-
     if route_buckets % num_buckets != 0:
         raise ValueError(
             f"num_buckets={num_buckets} must divide route_buckets={route_buckets} "
@@ -221,8 +224,6 @@ def subscribe_key_mod(
     as in ``key_mod_subscription``.
     """
     import warnings
-
-    from databus_spark.operators.partitioners import KEY_HASH_COL, ROUTE_COL
 
     def _hash_tier_ok() -> bool:
         """Sampled consistency probe: the stored column against

@@ -15,16 +15,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from databus_spark.operators.filters import key_mod_bucket
+from databus_spark.operators.filters import KEY_HASH_COL, ROUTE_COL, key_mod_bucket
 
 
 def hash_router(n_partitions: int) -> Column:
     """abs(numeric key | java hash of string key) % n — consistent with
     KeyModFilter bucketing, so routing and subscription compose."""
     return F.pmod(key_mod_bucket(), F.lit(n_partitions)).cast("int")
-
-
-KEY_HASH_COL = "key_hash"
 
 
 def with_key_hash(df, hash_col: str = KEY_HASH_COL):
@@ -42,9 +39,6 @@ def with_key_hash(df, hash_col: str = KEY_HASH_COL):
     the relay also hashes once, event-entry-side
     (core/DbusHashPartitionRouter.java), never per subscription."""
     return df.withColumn(hash_col, key_mod_bucket())
-
-
-ROUTE_COL = "route_partition"
 
 
 def with_route_partition(df, n_buckets: int = 8, route_col: str = ROUTE_COL):

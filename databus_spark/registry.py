@@ -67,38 +67,53 @@ def _dsum_sql(expr: str, alias: str, scale: int = 6) -> str:
 
 
 _PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+
+
+def _package_digest(root: str) -> str:
+    """md5 over the relative path and contents of every .py source
+    under ``root``; never the checkout's location, so two checkouts of
+    one tree share their artifacts."""
+    import hashlib
+
+    h = hashlib.md5()
+    files = sorted(
+        os.path.join(d, f) for d, _dirs, fs in os.walk(root) for f in fs if f.endswith(".py")
+    )
+    for path in files:
+        h.update(os.path.relpath(path, root).encode() + b"\0")
+        with open(path, "rb") as f:
+            h.update(f.read() + b"\0")
+    return h.hexdigest()
+
+
+# Taken at import, when the package's code is loaded (3 ms for its
+# ~60 files on a 4-core host): a digest taken later would credit an
+# artifact that this process's code builds to a tree edited in between.
+_PKG_DIGEST = _package_digest(_PKG_ROOT)
 _CODE_DIGESTS: dict[tuple[str, str | None], str] = {}
 
 
 def _code_digest(build_file: str) -> str:
-    """Digest of the code that can build a staged artifact: every .py
-    source under the package, plus ``build_file`` when it sits outside
+    """Digest of the code that can build a staged artifact: the
+    package's (_PKG_DIGEST), plus ``build_file`` when it sits outside
     the package (bench.py, tools/, tests); a build with no source file
-    (``python -c``, a REPL) adds nothing. Hashes relative paths and
-    contents, never the checkout's location, so two checkouts of one
-    tree share their artifacts. The whole package is hashed, not the
-    build's own closure: an edit anywhere costs one rebuild, while a
-    missed dependency would serve an artifact the old code built.
-    Computed once per process per (root, outside file)."""
+    (``python -c``, a REPL) adds nothing. The whole package is hashed,
+    not the build's own closure: an edit anywhere costs one rebuild,
+    while a missed dependency would serve an artifact the old code
+    built. An outside build file is read on its first staging call, so
+    an edit to it between its import and that call goes unseen; so
+    does an edit to a package module that is first imported after the
+    package digest was taken. Computed once per process per (package
+    digest, outside file)."""
     import hashlib
 
     build_file = os.path.abspath(build_file)
     outside = None
     if os.path.isfile(build_file) and not build_file.startswith(_PKG_ROOT + os.sep):
         outside = build_file
-    key = (_PKG_ROOT, outside)
+    key = (_PKG_DIGEST, outside)
     if key not in _CODE_DIGESTS:
-        h = hashlib.md5()
-        files = sorted(
-            os.path.join(d, f)
-            for d, _dirs, fs in os.walk(_PKG_ROOT)
-            for f in fs
-            if f.endswith(".py")
-        )
-        for path in files:
-            h.update(os.path.relpath(path, _PKG_ROOT).encode() + b"\0")
-            with open(path, "rb") as f:
-                h.update(f.read() + b"\0")
+        h = hashlib.md5(_PKG_DIGEST.encode())
         if outside is not None:
             with open(outside, "rb") as f:
                 h.update(f.read())

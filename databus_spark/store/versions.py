@@ -10,7 +10,7 @@ commit(N, manifest) replaces the manifest atomically (write_atomic:
 tmp + rename), then flips ``_VERSION`` the same way: the versioned
 state-store commit of Structured Streaming. A writer killed before the
 flip leaves an uncommitted ``v<N>/``, an orphan manifest or a
-``_VERSION.*.tmp``.
+``_VERSION.*.tmp`` (the next write of ``_VERSION`` removes it).
 Readers see none of them, and the next commit of N replaces them; a
 writer starts the data of N in ``new_dir(N)``, which discards what a
 killed writer left there.
@@ -18,6 +18,8 @@ killed writer left there.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import json
 import os
 import shutil
@@ -26,14 +28,35 @@ import threading
 
 def write_atomic(path: str, text: str) -> None:
     """Replace the small file at ``path`` in one step: a reader sees the
-    old text or the new, never a torn write, and a writer killed midway
-    leaves only a ``*.tmp`` next to it. The temp file is named per
+    old text or the new, never a torn write. The temp file is named per
     writer (pid and thread), so concurrent writers of one path never
-    write into each other's temp file; the last rename wins."""
+    write into each other's temp file; the last rename wins. A writer
+    that fails removes its temp file; one killed midway leaves it, and
+    the next write of ``path`` removes it once that pid is gone."""
     tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+    for left in glob.glob(glob.escape(path) + ".*.*.tmp"):
+        pid = left[len(path) + 1 :].split(".")[0]
+        if pid.isdigit() and not _alive(int(pid)):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(left)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # another user's live process
+        pass
+    return True
 
 
 class VersionedState:

@@ -70,3 +70,25 @@ def test_corrupt_lease_file_is_recoverable(tmp_path):
     assert a.holder() is None
     assert a.try_acquire()
     assert json.load(open(p))["node_id"] == "node-a"
+
+
+def test_lease_write_removes_temp_files_of_dead_writers(tmp_path):
+    """A writer killed inside write_atomic leaves its per-writer temp
+    file next to the lease. The next write of the lease removes it once
+    that pid is gone, and leaves a live writer's alone."""
+    import os
+    import subprocess
+    import threading
+
+    p = str(tmp_path / "lease")
+    lease = LeaderLease(p, "node-a", lease_ms=60_000)
+    assert lease.try_acquire()  # an exclusive create, no temp file
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    killed = f"{p}.{dead.pid}.1.tmp"
+    live = f"{p}.{os.getpid()}.{threading.get_ident() + 1}.tmp"
+    for path in (killed, live):
+        with open(path, "w") as f:
+            f.write("{")
+    assert lease.renew()
+    assert sorted(os.listdir(tmp_path)) == sorted(["lease", os.path.basename(live)])

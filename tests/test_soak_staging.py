@@ -102,3 +102,23 @@ def test_soak_prestages_rebuild_when_the_source_changes(spark, tmp_path, monkeyp
     assert second == expected(2)
     for name in first:
         assert second[name] != first[name], name
+
+
+def test_soak_media_family_stages_through_the_media_corpus(spark, tmp_path, monkeypatch):
+    """fam_media_dhash and its prestage hook stage the image corpus
+    through registry._staged_media_corpus: both run, and the second
+    call reuses what the first staged."""
+    from tools import soak10x
+
+    staged = tmp_path / "tmp"
+    staged.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(staged))
+    sf_dir = str(tmp_path / "sf")
+    _write_docs(spark, sf_dir, [f"doc{i}" for i in range(16)])
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+    soak10x.fam_media_dhash.prestage(spark, docs, None, sf_dir)
+    (art,) = [p for p in staged.glob("databus_phash_*") if p.is_dir()]
+    marker = (art / "_COMPLETE").stat().st_mtime_ns
+    soak10x.fam_media_dhash(spark, docs, None, sf_dir)
+    assert (art / "_COMPLETE").stat().st_mtime_ns == marker

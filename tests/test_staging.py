@@ -228,6 +228,9 @@ def test_code_digest_forces_rebuild(tmp_path, monkeypatch):
         (root / "operators" / "geometry.py").write_text(f"N_CELLS = {const}\n")
         return str(root)
 
+    def package_digest(name: str, const: int) -> str:
+        return registry._package_digest(source_tree(name, const))
+
     def outside_build(name: str, tag: str):
         """A build defined in a file outside the package (a bench or
         tool script)."""
@@ -244,14 +247,14 @@ def test_code_digest_forces_rebuild(tmp_path, monkeypatch):
     def stage(fp: str = "fp", b=build) -> str:
         return registry._staged_artifact("databus_code", "key", fp, b)
 
-    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("a", 8))
+    monkeypatch.setattr(registry, "_PKG_DIGEST", package_digest("a", 8))
     stage()
     stage()
     assert len(calls) == 1
-    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("copy_of_a", 8))
+    monkeypatch.setattr(registry, "_PKG_DIGEST", package_digest("copy_of_a", 8))
     stage()
     assert len(calls) == 1
-    monkeypatch.setattr(registry, "_PKG_ROOT", source_tree("edited", 16))
+    monkeypatch.setattr(registry, "_PKG_DIGEST", package_digest("edited", 16))
     stage()
     assert len(calls) == 2
     stage()

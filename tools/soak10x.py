@@ -442,7 +442,7 @@ fam_stream_bigstate.prestage = _prestage_bigstate
 def fam_media_dhash(spark, docs, emb, sf_dir):
     """The Python-codec path at scale: staged PNG corpus -> real decode
     -> dHash -> banded hamming near pairs. Decode is map-side
-    Arrow-batched work and the v4 fixture's per-group pseudo-random
+    Arrow-batched work and the fixture's per-group pseudo-random
     hashes keep band buckets tiny at any SF (ramp-phase fixtures collapse to
     140 classes and trip MAX_BAND_DOCS at 10x), so this measures
     codec + pair-gen scaling, parallelizable by adding executors."""
@@ -450,9 +450,7 @@ def fam_media_dhash(spark, docs, emb, sf_dir):
     from databus_spark.operators.multimodal import image_dhash, synth_phash_corpus
     from databus_spark.registry import _staged_media_corpus
 
-    media = _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    media = _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
     bithash_near_pairs(image_dhash(media), "dhash", 56, 2).write.format(
         "noop"
     ).mode("overwrite").save()
@@ -462,9 +460,7 @@ def _prestage_media(spark, docs, emb, sf_dir):
     from databus_spark.operators.multimodal import synth_phash_corpus
     from databus_spark.registry import _staged_media_corpus
 
-    _staged_media_corpus(
-        spark, sf_dir, "databus_phash", synth_phash_corpus, "phash-v4"
-    )
+    _staged_media_corpus(spark, sf_dir, "databus_phash", synth_phash_corpus)
 
 
 fam_media_dhash.prestage = _prestage_media
