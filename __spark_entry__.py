@@ -40,60 +40,87 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # Code-keyed staging: _staged_artifact keys every /tmp artifact on a
-    # digest of the package source instead of hand-kept version stamps,
-    # and the fingerprints lost their module-constant suffixes, so every
-    # row that stages an artifact runs changed code.
+    # One banded-LSH pipeline: the MinHash and bit-hash pair generators
+    # and delta probes share one band-row builder, pair generator and
+    # probe, the near index is one band frame, and the pair-array
+    # expression is shared with the n-gram and sparse TF-IDF pair-gen.
+    "dedup_minhash_lsh",
+    "dedup_simhash_pairs",
+    "dedup_incremental_near",
+    "dedup_cluster_star",
+    "dedup_cluster_survivors",
+    "dedup_decision_log",
+    "dedup_survivor_corpus",
+    "dedup_sketch_eval",
+    "media_dhash_near_pairs",
+    "media_dhash_clusters",
+    "media_dhash_incremental",
+    "media_decision_log",
+    "media_audio_near_pairs",
+    "dedup_ngram_jaccard",
+    "sparse_tfidf_pairs",
+    # Rows whose closure reaches a dedup.py unit that changed with it
+    # (the module's import unit among them).
+    "bm25_incremental",
+    "contamination_fraction",
+    "curation_decisions_v2",
+    "curation_decisions_v3",
+    "decontaminate_bloom",
+    "decontaminate_vs_benchmark",
+    "dedup_canonical",
+    "dedup_cdc_chunks",
+    "dedup_exact",
+    "dedup_incremental",
+    "dedup_span_windows",
+    "dsir_incremental",
+    "exactsubstr_dedup",
+    "exactsubstr_incremental",
+    "exactsubstr_spans",
+    "exactsubstr_stats",
+    "fuzzy_join_incremental",
+    "record_linkage_clusters",
+    "record_linkage_incremental",
+    "release_gate",
+    "release_gate_utility",
+    "semdedup_multiprobe",
+    "semdedup_survivors",
+    "semdedup_survivors_v2",
+    "semdedup_trained",
+    "simhash_sketch",
+    "text_novelty",
+    # The last slots go to the most recently rotated earlier changes
+    # (code-keyed staging); the rest of the previous window heads _REST.
     "ann_ivfpq_rerank_topk",
     "ann_ivfpq_topk",
     "ann_pq_topk",
     "ann_sq8_ivf_serve",
     "ann_sq8_ivf_serve_delta",
     "avro_ocf_roundtrip",
-    "bm25_incremental",
     "bpe_encode_corpus",
-    "dedup_cluster_star",
-    "dedup_cluster_survivors",
-    "dedup_decision_log",
-    "dedup_incremental_near",
-    "dedup_survivor_corpus",
-    "dsir_incremental",
-    "exactsubstr_incremental",
-    "fuzzy_join_incremental",
     "hybrid_rrf_serve",
+]
+
+# below the 50-row window this round (all still verified locally by the
+# full sf0.01 oracle sweep), never-checked first then oldest external
+# green first — next round's rotation reads top-down:
+_REST = [
     "jsonl_ingest_audit",
     "kmeans_assign_summary",
     "kmeans_centroids",
     "media_audio_fp_dedup",
-    "media_audio_near_pairs",
-    "media_decision_log",
-    "media_dhash_clusters",
     "media_dhash_dedup",
-    "media_dhash_incremental",
-    "media_dhash_near_pairs",
     "media_video_frames",
-    "record_linkage_incremental",
     "semdedup_incremental",
     "semdedup_recall_eval",
-    "semdedup_survivors_v2",
-    "semdedup_trained",
     "trail_file_seek",
     "zorder_box_read",
-    # The key-mod tiers share one bucket-range helper, and the two staged
-    # subscription rows read their stage directory itself, not a glob.
     "filter_keymod_longkey",
     "filter_keymod_staged_hash",
     "filter_keymod_strkey",
     "filter_keymod_subscribe",
-    # One atomic small-file write (store/versions.write_atomic) behind the
-    # schema registry, the max-SCN watermark and the checkpoint files.
     "jdbc_txlog_pull",
     "schema_evolution_decode",
     "sql_txlog_pull",
-    # With more rows changed since the committed manifest than the window
-    # holds, the last 8 slots go to the most recently rotated earlier
-    # changes (the versioned-state commit protocol, the BM25 fold and the
-    # ANN fold); the rest of the previous window heads _REST.
     "bpe_learn_merges",
     "zorder_events_key",
     "bm25_topk",
@@ -102,12 +129,6 @@ _WINDOW = [
     "ann_filtered_topk",
     "ann_ivf_topk",
     "ann_lsh_topk",
-]
-
-# below the 50-row window this round (all still verified locally by the
-# full sf0.01 oracle sweep), never-checked first then oldest external
-# green first — next round's rotation reads top-down:
-_REST = [
     "ann_recall_eval",
     "ann_sq8_ivf_topk",
     "ann_sq8_topk",
@@ -135,20 +156,16 @@ _REST = [
     "sql_surface_window_stats",
     "stream_fetch_bounded",
     "txn_window_stats",
-    "semdedup_multiprobe",
-    "semdedup_survivors",
     "media_wav_probe",
     "filter_payload_fields",
     "keyset_page",
     "partition_router",
     "corpus_drift",
-    "dedup_span_windows",
     "media_png_resize",
     "approx_quantiles_binned",
     "approx_stats",
     "boilerplate_strip",
     "cm_frequency_profile",
-    "dedup_cdc_chunks",
     "hll_distinct_users",
     "k_anonymity_audit",
     "media_jpeg_probe",
@@ -159,15 +176,11 @@ _REST = [
     "structure_profile",
     "supplier_profit_by_nation",
     "text_compressibility",
-    "text_novelty",
     "text_token_stats",
     "time_window_sliding",
     "time_window_tumbling",
     "train_split_assign",
     "urgent_orders_shipped",
-    "decontaminate_vs_benchmark",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
     "dsir_doc_scores",
     "dsir_feature_weights",
     "dsir_select_topk",
@@ -191,16 +204,9 @@ _REST = [
     "weighted_sample_topk",
     "xml_trail_parse",
     "bpe_learn_merges_batched",
-    "contamination_fraction",
-    "decontaminate_bloom",
     "quality_topk_per_lang",
-    "sparse_tfidf_pairs",
     "bpe_pair_counts",
     "curation_decisions",
-    "curation_decisions_v2",
-    "exactsubstr_dedup",
-    "exactsubstr_spans",
-    "exactsubstr_stats",
     "lm2_quality_score",
     "lm_quality_score",
     "as_of_join_events",
@@ -211,7 +217,6 @@ _REST = [
     "pii_redact",
     "oov_rate",
     "pivot_events_daily",
-    "simhash_sketch",
     "vocab_top_terms",
     "media_png_probe",
     "funnel_conversion",
@@ -219,18 +224,9 @@ _REST = [
     "key_skew_profile",
     "length_histogram",
     "media_features",
-    "dedup_simhash_pairs",
-    "dedup_sketch_eval",
     "fuzzy_join_docs",
-    "record_linkage_clusters",
-    "release_gate",
-    "release_gate_utility",
-    "curation_decisions_v3",
     "data_expectations",
-    "dedup_canonical",
-    "dedup_incremental",
     "event_rate_anomaly",
-    "dedup_minhash_lsh",
 ]
 
 _PRIORITY = _WINDOW + _REST

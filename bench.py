@@ -475,7 +475,7 @@ def main() -> None:
         .drop("_rep")
     )
     _stage(biglog, routed_dir, n_chunks=4, route_buckets=8, part_dirs=True, key_hash=True)
-    staged = spark.read.option("basePath", routed_dir).parquet(routed_dir + "/chunk=*")
+    staged = spark.read.parquet(routed_dir)
 
     def best_of_each(dfs, n: int = 4) -> list[float]:
         # These scans finish in ~1 s, so a single GC pause doubles a

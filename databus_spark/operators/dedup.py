@@ -27,6 +27,8 @@ lightly-edited copies (first token dropped, doc_id + 2_000_000) of every
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -186,13 +188,29 @@ MAX_SHINGLE_DF = 100  # spam-shingle cap: df above this carries no dedup signal
 MAX_BAND_DOCS = 200
 
 
+def pair_array(pair_struct) -> Column:
+    """array of pair_struct(x, y) over every (earlier, later) element
+    pair of the array column `docs`: the C(size, 2) pairs of one
+    posting list as one nested-transform expression, no self-join."""
+    docs = F.col("docs")
+    return F.flatten(
+        F.transform(
+            docs,
+            lambda x, i: F.transform(
+                F.slice(docs, i + 2, F.size(docs)), lambda y: pair_struct(x, y)
+            ),
+        )
+    )
+
+
 def _posting_pairs(postings: DataFrame, pair_struct) -> DataFrame:
     """Ordered pairs from grouped, size-capped posting lists.
 
     `postings` must have a sorted array column `docs`; `pair_struct(x, y)`
     builds the output struct for one (earlier, later) element pair. One
-    explode instead of a self-join: the per-row pair array is bounded by
-    C(MAX_BAND_DOCS, 2), so no bucket can go quadratic in the shuffle.
+    explode of pair_array instead of a self-join: the per-row pair array
+    is bounded by C(MAX_BAND_DOCS, 2), so no bucket can go quadratic in
+    the shuffle.
 
     The explicit repartition matters (same AQE trap as
     documents_with_dups): the posting lists are tiny pre-explode, so AQE
@@ -202,18 +220,9 @@ def _posting_pairs(postings: DataFrame, pair_struct) -> DataFrame:
     parallelism for the expensive explode stage.
     """
     n = postings.sparkSession.sparkContext.defaultParallelism
-    pair_array = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: pair_struct(x, y),
-            ),
-        )
-    )
     return (
         postings.repartition(n)
-        .select(F.explode(pair_array).alias("p"))
+        .select(F.explode(pair_array(pair_struct)).alias("p"))
         .select("p.*")
         .distinct()
     )
@@ -240,17 +249,9 @@ def ngram_jaccard_pairs(docs: DataFrame, k: int = 5, threshold: float = 0.6) -> 
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
         .where((F.size("docs") >= 2) & (F.size("docs") <= MAX_SHINGLE_DF))
     )
-    pair_array = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = pair_array(lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")))
     shared = (
-        postings.select(F.explode(pair_array).alias("p"))
+        postings.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
@@ -296,8 +297,106 @@ def ngram_jaccard_sql(k: int = 5, threshold: float = 0.6) -> str:
 
 
 # ---------------------------------------------------------------------------
-# 3. MinHash + LSH
+# 3. Banded LSH: one pipeline for the MinHash and bit-hash families
 # ---------------------------------------------------------------------------
+# A family is its band keys, a per-row payload and a pairwise score.
+# One band-row builder, one capped pair generator and one delta probe
+# serve the MinHash and the bit-hash (SimHash, dHash, audio) families.
+
+
+class _LSHFamily(NamedTuple):
+    """Band keys (one per band) and the payload struct are expressions
+    over a signature row; score(x, y) scores two rows carrying the
+    payload fields, a pair is kept where keep(score), and a delta doc's
+    best match has the lowest rank."""
+
+    band_keys: list[Column]
+    payload: Column
+    score: Callable[[Column, Column], Column]
+    keep: Callable[[Column], Column]
+    rank: Callable[[Column], Column]
+
+
+def _lsh_bands(sig: DataFrame, fam: _LSHFamily, id_out: str) -> DataFrame:
+    """(id_out, {id_out}_sig, band, band_key) from ONE scan of the
+    signatures and one explode: a per-band union would scan them once
+    per band (bands x partitions near-empty map tasks)."""
+    bands = F.array(
+        *[
+            F.struct(F.lit(b).cast("int").alias("band"), key.alias("band_key"))
+            for b, key in enumerate(fam.band_keys)
+        ]
+    )
+    return sig.select(
+        F.col("doc_id").alias(id_out),
+        fam.payload.alias(f"{id_out}_sig"),
+        F.explode(bands).alias("_bk"),
+    ).select(id_out, f"{id_out}_sig", "_bk.band", "_bk.band_key")
+
+
+def _lsh_pairs(sig: DataFrame, fam: _LSHFamily, score_name: str) -> DataFrame:
+    """(doc_a, doc_b, {score_name}) for doc_a < doc_b sharing a band
+    bucket of at most MAX_BAND_DOCS docs, kept by the family. Pair-gen
+    from posting lists, never a band self-join; the lists carry the
+    payloads, so scoring needs no join back to the signatures."""
+    # checkpoint: another action on the pairs reuses the signatures, not
+    # their shuffle and per-row Python work (the media decode) again
+    banded = _lsh_bands(sig.localCheckpoint(eager=False), fam, "doc_id")
+    # doc_id FIRST: sort_array orders by it, so pair-gen emits doc_a < doc_b;
+    # the payload fields sit flat beside it
+    postings = (
+        banded.groupBy("band", "band_key")
+        .agg(F.sort_array(F.collect_set(F.struct("doc_id", "doc_id_sig.*"))).alias("docs"))
+        .where((F.size("docs") >= 2) & (F.size("docs") <= MAX_BAND_DOCS))
+    )
+    pairs = _posting_pairs(
+        postings,
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            fam.score(x, y).alias(score_name),
+        ),
+    )
+    return pairs.where(fam.keep(F.col(score_name)))
+
+
+def _lsh_probe(delta_sig, base_bands, fam: _LSHFamily, best_name, ids=None) -> DataFrame:
+    """(doc_id, matched_base, {best_name}, is_new) per doc of ids (default
+    the delta): its lowest-rank kept base match, ties to the lowest id,
+    found by probing the base band rows (base_doc, base_doc_sig, band,
+    band_key), so the delta never re-signs the base. Buckets of more
+    than MAX_BAND_DOCS base docs are not probed. Both payloads ride the
+    band rows: no scoring join goes back to a signature table."""
+    # barrier: the delta signatures can feed both the probe bands and the
+    # id list; per-row Python work in them (the media decode) would run twice
+    delta_sig = delta_sig.localCheckpoint(eager=False)
+    ids = delta_sig if ids is None else ids
+    in_bucket = F.count(F.lit(1)).over(Window.partitionBy("band", "band_key"))
+    base = base_bands.withColumn("_n", in_bucket).where(F.col("_n") <= MAX_BAND_DOCS)
+    score = fam.score(F.col("in_doc_sig"), F.col("base_doc_sig"))
+    # a pair sharing several buckets repeats; min needs no distinct
+    best = F.min(F.struct(fam.rank(F.col("_s")).alias("_r"), "base_doc", "_s"))
+    matches = (
+        _lsh_bands(delta_sig, fam, "in_doc")
+        .join(base, ["band", "band_key"])
+        .select("in_doc", "base_doc", score.alias("_s"))
+        .where(fam.keep(F.col("_s")))
+        .groupBy("in_doc")
+        .agg(best.alias("_m"))
+        .select(
+            "in_doc",
+            F.col("_m.base_doc").alias("matched_base"),
+            F.col("_m._s").alias(best_name),
+        )
+    )
+    return (
+        ids.select("doc_id")
+        .join(matches, F.col("doc_id") == F.col("in_doc"), "left")
+        .select("doc_id", "matched_base", best_name, F.col("matched_base").isNull().alias("is_new"))
+    )
+
+
+# -- MinHash family ----------------------------------------------------------
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
@@ -343,54 +442,35 @@ def minhash_signatures(docs: DataFrame, k: int = 5) -> DataFrame:
     return base.groupBy("doc_id").agg(*aggs)
 
 
+def _band_keys() -> list[Column]:
+    """Band b's key: the md5 of minhashes b*rows .. b*rows + rows - 1."""
+    rows = N_HASHES // N_BANDS
+    return [
+        F.md5(F.concat_ws("|", *[F.col(f"mh_{b * rows + r}") for r in range(rows)]))
+        for b in range(N_BANDS)
+    ]
+
+
+def _minhash_family(threshold: float = 0.5) -> _LSHFamily:
+    """Payload: the minhashes; score: the fraction of equal minhashes
+    (the unbiased Jaccard estimate), kept if >= threshold; rank: -score."""
+
+    def score(x, y):
+        eq = sum(F.when(x[f"mh_{i}"] == y[f"mh_{i}"], 1).otherwise(0) for i in range(N_HASHES))
+        return F.round(eq / F.lit(N_HASHES), 6)
+
+    payload = F.struct(*[F.col(f"mh_{i}") for i in range(N_HASHES)])
+    return _LSHFamily(_band_keys(), payload, score, lambda s: s >= threshold, lambda s: -s)
+
+
 def minhash_lsh_pairs(docs: DataFrame, k: int = 5, threshold: float = 0.5) -> DataFrame:
     """Banded LSH: docs agreeing on ALL rows of any band become candidates;
     candidates are scored by signature similarity (fraction of equal
-    minhashes — the unbiased Jaccard estimate) and thresholded.
-
-    Candidate generation is pair-gen from grouped band posting lists with
-    a MAX_BAND_DOCS population cap — never a band self-join, so a
-    degenerate hot bucket cannot fan out quadratically. The posting
-    lists carry the FULL signature struct (the bithash pattern), so
-    est_jaccard is computed inline during pair-gen: zero scoring joins —
-    the old plan re-joined sig twice (two extra shuffles of the
-    signature table per query) just to recover what the bucket already
-    held. Payload cost is N_HASHES longs per posting entry, bounded by
-    MAX_BAND_DOCS per bucket."""
-    # signatures feed every band — checkpoint once instead of
-    # recomputing the explode+agg per band
-    sig = minhash_signatures(docs, k).localCheckpoint(eager=False)
-    # doc_id FIRST: sort_array orders by it, so pair-gen emits doc_a < doc_b
-    ds = F.struct(F.col("doc_id"), *[F.col(f"mh_{i}") for i in range(N_HASHES)])
-    # ONE scan of the signatures with the N_BANDS keys exploded inline
-    # (r14 verdict #4): the previous N_BANDS-branch union scanned the
-    # checkpoint blocks once PER BAND, so the postings shuffle's map
-    # side was N_BANDS x partitions near-empty tasks (128 at fixture
-    # scale, ~0.2 s scheduling each) — and at any scale it reads the
-    # signature blocks N_BANDS times instead of once. Same rows, same
-    # (band, band_key) keys, strictly fewer tasks and block reads.
-    banded = sig.select(ds.alias("ds"), F.explode(_band_keys()).alias("_bk")).select(
-        "ds", F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-    )
-    postings = (
-        banded.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_set("ds")).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= MAX_BAND_DOCS))
-    )
-
-    def scored_pair(x, y):
-        eq = sum(
-            F.when(x[f"mh_{i}"] == y[f"mh_{i}"], 1).otherwise(0)
-            for i in range(N_HASHES)
-        )
-        return F.struct(
-            x["doc_id"].alias("doc_a"),
-            y["doc_id"].alias("doc_b"),
-            F.round(eq / F.lit(N_HASHES), 6).alias("est_jaccard"),
-        )
-
-    return _posting_pairs(postings, scored_pair).where(
-        F.col("est_jaccard") >= threshold
+    minhashes) and thresholded, inline from the signatures the posting
+    lists carry (_lsh_pairs). Payload cost is N_HASHES longs per posting
+    entry, bounded by MAX_BAND_DOCS per bucket."""
+    return _lsh_pairs(
+        minhash_signatures(docs, k), _minhash_family(threshold), "est_jaccard"
     )
 
 
@@ -508,41 +588,26 @@ def hash_band_layout(n_bits: int, max_hamming: int) -> list[tuple[int, int]]:
     return layout
 
 
+def _bithash_family(hash_col: str, n_bits: int, max_hamming: int) -> _LSHFamily:
+    """Payload: the hash; score: the hamming distance, kept if <=
+    max_hamming; rank: the score."""
+    return _LSHFamily(
+        _bithash_band_keys(hash_col, n_bits, max_hamming),
+        F.struct(hash_col),
+        lambda x, y: F.bit_count(x[hash_col].bitwiseXOR(y[hash_col])),
+        lambda s: s <= max_hamming,
+        lambda s: s,
+    )
+
+
 def bithash_near_pairs(
     sig: DataFrame, hash_col: str, n_bits: int, max_hamming: int = 2
 ) -> DataFrame:
-    """Near-dup pairs by hamming distance over ANY integer bit-hash
-    column (SimHash, image dHash, audio fingerprints...): band-blocked
-    posting lists with the MAX_BAND_DOCS cap, hamming computed inline
-    from the carried hashes — the generic restatement of
-    simhash_near_pairs, zero joins, no quadratic buckets."""
-    sig = sig.select(F.col("doc_id"), F.col(hash_col).alias("_h")).localCheckpoint(
-        eager=False
-    )
-    # one scan + explode instead of a band-count union of checkpoint
-    # scans (the minhash_lsh_pairs narrow-union fix, same rationale)
-    banded = sig.select(
-        "doc_id", "_h", F.explode(_bithash_band_keys("_h", n_bits, max_hamming)).alias("_bk")
-    ).select(
-        "doc_id",
-        "_h",
-        F.col("_bk.band").alias("band"),
-        F.col("_bk.band_key").alias("band_key"),
-    )
-    postings = (
-        banded.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_set(F.struct(F.col("doc_id"), F.col("_h")))).alias("docs"))
-        .where((F.size("docs") >= 2) & (F.size("docs") <= MAX_BAND_DOCS))
-    )
-    pairs = _posting_pairs(
-        postings,
-        lambda x, y: F.struct(
-            x["doc_id"].alias("doc_a"),
-            y["doc_id"].alias("doc_b"),
-            F.bit_count(x["_h"].bitwiseXOR(y["_h"])).alias("hamming"),
-        ),
-    )
-    return pairs.where(F.col("hamming") <= max_hamming)
+    """Near-dup pairs (doc_a, doc_b, hamming) over ANY integer bit-hash
+    column (SimHash, image dHash, audio fingerprints...): the banded
+    pair generator with the hamming distance computed inline from the
+    carried hashes, zero joins, no quadratic buckets."""
+    return _lsh_pairs(sig, _bithash_family(hash_col, n_bits, max_hamming), "hamming")
 
 
 def bithash_near_pairs_sql(
@@ -572,43 +637,23 @@ def bithash_near_pairs_sql(
     """
 
 
-def _bithash_band_keys(hash_col: str, n_bits: int, max_hamming: int):
-    """array<struct<band,band_key>> of a bit-hash column under
-    hash_band_layout — the single-projection (explode) form of the
-    banded keys; see _band_keys for why explode beats a per-band
-    union."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.shiftright(F.col(hash_col), off)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("band_key"),
-            )
-            for b, (off, width) in enumerate(hash_band_layout(n_bits, max_hamming))
-        ]
-    )
+def _bithash_band_keys(hash_col: str, n_bits: int, max_hamming: int) -> list[Column]:
+    """Band keys of a bit-hash column under hash_band_layout."""
+    return [
+        F.shiftright(F.col(hash_col), off).bitwiseAND(F.lit((1 << width) - 1))
+        for off, width in hash_band_layout(n_bits, max_hamming)
+    ]
 
 
 def bithash_bands(
     sig: DataFrame, hash_col: str, n_bits: int, max_hamming: int, id_out: str
 ) -> DataFrame:
-    """Band rows (band, band_key, {id_out}, {id_out}_h) for a bit-hash
-    signature frame — the materialize-at-ingest index an incremental
+    """Band rows ({id_out}, {id_out}_sig, band, band_key) of a bit-hash
+    signature frame: the materialize-at-ingest index an incremental
     probe joins against (persist as parquet, append per ingest batch)."""
-    return sig.select(
-        F.col("doc_id").alias(id_out),
-        F.col(hash_col).alias(f"{id_out}_h"),
-        F.explode(_bithash_band_keys(hash_col, n_bits, max_hamming)).alias("_bk"),
-    ).select(
-        id_out,
-        f"{id_out}_h",
-        F.col("_bk.band").alias("band"),
-        F.col("_bk.band_key").alias("band_key"),
-    )
+    return _lsh_bands(sig, _bithash_family(hash_col, n_bits, max_hamming), id_out)
 
 
-_HAMMING_KEY_SHIFT = 40  # (hamming << 40) | doc_id: one scalar min both engines agree on
 OCC_POS_BITS = 20  # (doc_id << 20) | pos occurrence keys: doc_id < 2^43, 1M-token docs
 DEDUP_CC_DRIVER_CAP = 200_000  # edges; <= this the component solve is driver-side
 
@@ -668,59 +713,11 @@ def incremental_bithash_dedup(
 ) -> DataFrame:
     """(doc_id, matched_base, best_hamming, is_new) per incoming doc:
     the best base match within max_hamming (lowest hamming, ties to the
-    lowest base id), candidates generated by probing the base band
-    index — the delta NEVER re-hashes the base (the rolling-crawl
-    ingestion shape incremental_near_dedup set for text). Degenerate
-    base buckets (> MAX_BAND_DOCS) are dropped from probing, mirroring
-    every pair generator's cap. Ranking uses one scalar key
-    (hamming << 40 | base_id) so the Spark min and the SQL oracle's min
-    are bit-identical."""
-    # barrier: incoming_sig feeds FOUR consumers (3 band projections +
-    # the final left join) — when it carries per-row Python work (the
-    # media decode->hash stage) each branch would re-run it (the
-    # codified localCheckpoint rule; caught by the plan guard showing
-    # 4 MapInPandas stages for one delta batch)
-    incoming_sig = incoming_sig.localCheckpoint(eager=False)
-    ok = (
-        base_bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") <= MAX_BAND_DOCS)
-        .select("band", "band_key")
-    )
-    probe = bithash_bands(incoming_sig, hash_col, n_bits, max_hamming, "in_doc")
-    cand = (
-        probe.join(base_bands.join(ok, ["band", "band_key"]), ["band", "band_key"])
-        .select("in_doc", "in_doc_h", "base_doc", "base_doc_h")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("in_doc_h").bitwiseXOR(F.col("base_doc_h")))
-    key = packed_key(
-        hamming, F.col("base_doc"), _HAMMING_KEY_SHIFT, "incremental_bithash_dedup"
-    )
-    matches = (
-        cand.where(hamming <= max_hamming)
-        .groupBy("in_doc")
-        .agg(F.min(key).alias("_k"))
-        .select(
-            "in_doc",
-            F.col("_k").bitwiseAND(F.lit((1 << _HAMMING_KEY_SHIFT) - 1)).alias(
-                "matched_base"
-            ),
-            F.shiftright(F.col("_k"), _HAMMING_KEY_SHIFT).cast("int").alias(
-                "best_hamming"
-            ),
-        )
-    )
-    return (
-        incoming_sig.select("doc_id")
-        .join(matches, incoming_sig["doc_id"] == matches["in_doc"], "left")
-        .select(
-            "doc_id",
-            "matched_base",
-            "best_hamming",
-            F.col("matched_base").isNull().alias("is_new"),
-        )
-    )
+    lowest base id), found by probing the base band index from
+    bithash_bands — the delta NEVER re-hashes the base (the
+    rolling-crawl ingestion shape incremental_near_dedup set for text)."""
+    fam = _bithash_family(hash_col, n_bits, max_hamming)
+    return _lsh_probe(incoming_sig, base_bands, fam, "best_hamming")
 
 
 def bithash_bands_sql(
@@ -1315,57 +1312,20 @@ def span_dedup_sql(from_sql: str, win: int = SPAN_WIN) -> str:
 # incremental_dedup() catches exact copies; a rolling crawl mostly
 # delivers EDITED copies (boilerplate swaps, timestamp churn). Same
 # production constraint: the base corpus is NEVER re-deduplicated —
-# only the delta is probed. At 100 TB the base's band index (band,
-# band_key, doc_id) is materialized once at ingest and appended per
-# batch, so a delta probe is one equi-join against an index keyed
-# exactly like the join — the incremental complement of
-# minhash_lsh_pairs' in-corpus pair-gen.
+# only the delta is probed. At 100 TB the base's band index (base_doc,
+# base_doc_sig, band, band_key) is materialized once at ingest and
+# appended per batch; a delta probe is one equi-join against an index
+# keyed exactly like the join, and the signature each band row carries
+# scores the candidate in place — the incremental complement of
+# minhash_lsh_pairs' in-corpus pair-gen, run by the shared _lsh_probe.
 
-def _band_keys():
-    """array<struct<band,band_key>> over a signature row — the banded
-    LSH keys emitted by ONE projection (explode) instead of an
-    N_BANDS-branch union. The union shape scanned its input once per
-    band: N_BANDS x partitions map tasks feeding every downstream
-    shuffle (128 near-empty tasks at fixture scale) and N_BANDS reads
-    of the signature blocks at any scale."""
-    rows_per_band = N_HASHES // N_BANDS
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-
-
-def _sig_bands(sig: DataFrame, id_out: str) -> DataFrame:
-    """Banded LSH keys of a signature frame: (id_out, band, band_key)."""
-    return sig.select(
-        F.col("doc_id").alias(id_out), F.explode(_band_keys()).alias("_bk")
-    ).select(
-        id_out,
-        F.col("_bk.band").alias("band"),
-        F.col("_bk.band_key").alias("band_key"),
-    )
-
-
-def build_near_index(base: DataFrame, k: int = 5):
-    """(signatures, bands) of the base corpus — the materialize-at-
-    ingest artifact incremental_near_dedup probes. Persist both frames
-    (parquet, appended per ingest batch) so a delta probe never
-    re-signs the base; bands are keyed exactly like the probe join."""
-    sig = minhash_signatures(base, k)
-    return sig, _sig_bands(sig, "base_doc")
+def build_near_index(base: DataFrame, k: int = 5) -> DataFrame:
+    """The base corpus' MinHash band rows (base_doc, base_doc_sig, band,
+    band_key), each carrying its signature — the materialize-at-ingest
+    artifact incremental_near_dedup probes. Persist it (parquet,
+    appended per ingest batch) so a delta probe never re-signs the
+    base."""
+    return _lsh_bands(minhash_signatures(base, k), _minhash_family(), "base_doc")
 
 
 def incremental_near_dedup(
@@ -1376,61 +1336,21 @@ def incremental_near_dedup(
     base_index=None,
 ) -> DataFrame:
     """(doc_id, matched_base, est_jaccard, is_new) per incoming doc:
-    the lowest-id base doc whose minhash signature agrees >= threshold
-    (candidates generated by banded LSH against the base band index).
-    Degenerate base buckets (> MAX_BAND_DOCS) are dropped from probing,
-    mirroring every pair generator's hot-bucket cap.
+    the base doc whose minhash signature agrees most, >= threshold
+    (ties to the lowest id), found by probing the base band index.
 
-    ``base_index`` — the (signatures, bands) pair from build_near_index,
-    normally read back from ingest-materialized parquet — skips
-    re-signing the base corpus; without it the index is derived inline
-    (the compatibility path for ad-hoc runs)."""
-    in_sig = minhash_signatures(incoming, k).localCheckpoint(eager=False)
-    if base_index is not None:
-        base_sig, base_bands = base_index
-    else:
-        base_sig = minhash_signatures(base, k).localCheckpoint(eager=False)
-        base_bands = _sig_bands(base_sig, "base_doc")
-    ok = (
-        base_bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") <= MAX_BAND_DOCS)
-        .select("band", "band_key")
-    )
-    base_bands = base_bands.join(ok, ["band", "band_key"])
-    cand = (
-        _sig_bands(in_sig, "in_doc")
-        .join(base_bands, ["band", "band_key"])
-        .select("in_doc", "base_doc")
-        .distinct()
-    )
-    sa, sb = in_sig.alias("sa"), base_sig.alias("sb")
-    eq = sum(
-        F.when(F.col(f"sa.mh_{i}") == F.col(f"sb.mh_{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    )
-    matches = (
-        cand.join(sa, cand["in_doc"] == F.col("sa.doc_id"))
-        .join(sb, cand["base_doc"] == F.col("sb.doc_id"))
-        .select("in_doc", "base_doc", F.round(eq / F.lit(N_HASHES), 6).alias("ej"))
-        .where(F.col("ej") >= threshold)
-        .groupBy("in_doc")
-        .agg(
-            F.min_by("base_doc", F.struct((-F.col("ej")).alias("nej"), F.col("base_doc"))).alias(
-                "matched_base"
-            ),
-            F.max("ej").alias("est_jaccard"),
-        )
-    )
-    return (
-        incoming.select("doc_id")
-        .join(matches, incoming["doc_id"] == matches["in_doc"], "left")
-        .select(
-            "doc_id",
-            "matched_base",
-            "est_jaccard",
-            F.col("matched_base").isNull().alias("is_new"),
-        )
+    ``base_index`` — the band frame from build_near_index, normally read
+    back from ingest-materialized parquet — skips re-signing the base
+    corpus; without it the index is derived inline (the compatibility
+    path for ad-hoc runs)."""
+    if base_index is None:
+        base_index = build_near_index(base, k)
+    return _lsh_probe(
+        minhash_signatures(incoming, k),
+        base_index,
+        _minhash_family(threshold),
+        "est_jaccard",
+        ids=incoming,
     )
 
 

@@ -1705,6 +1705,7 @@ MAX_TERM_DF = 100
 
 
 def sparse_tfidf_pairs(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
+    from databus_spark.operators.dedup import pair_array
     from databus_spark.operators.text import tokens_col
 
     toks = docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
@@ -1739,22 +1740,16 @@ def sparse_tfidf_pairs(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
         .where(F.size("docs") >= 2)
     )
     n = postings.sparkSession.sparkContext.defaultParallelism
-    pair_array = F.flatten(
-        F.transform(
-            F.col("docs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size(F.col("docs"))),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    y["doc_id"].alias("doc_b"),
-                    (x["w"] * y["w"]).alias("p"),
-                ),
-            ),
+    pairs = pair_array(
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            (x["w"] * y["w"]).alias("p"),
         )
     )
     dots = (
         postings.repartition(n)
-        .select(F.explode(pair_array).alias("pr"))
+        .select(F.explode(pairs).alias("pr"))
         .groupBy(F.col("pr.doc_a").alias("doc_a"), F.col("pr.doc_b").alias("doc_b"))
         .agg(F.sum("pr.p").cast("double").alias("dot"))
     )

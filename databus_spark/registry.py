@@ -719,15 +719,15 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the base corpus's banded-LSH index — catches the EDITED
     copies (first-token-dropped) the exact-hash incremental check
     misses, without ever re-deduplicating the base. The base index
-    (signatures + band keys) is the materialize-at-ingest artifact:
-    staged ONCE here (content-fingerprinted, file-locked via the shared
+    (band rows, each carrying its signature) is the materialize-at-ingest
+    artifact: staged ONCE here (content-fingerprinted, file-locked via the shared
     staging protocol) and read back as parquet, so the measured cost is
     the real delta-probe path, not a base re-sign."""
     incoming = dedup.documents_with_dups(spark, sf_dir).where(
         F.col("doc_id") >= 1_000_000
     )
     base = load_table(spark, sf_dir, "documents")
-    # the cached signatures/band keys depend on the TEXT content, not
+    # the cached band rows and signatures depend on the TEXT content, not
     # just (doc_id, n_chars) — a regenerated fixture with identical ids
     # and lengths but different text must invalidate the index
     fingerprint = _content_fingerprint(
@@ -742,15 +742,10 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(d: str) -> None:
-        sig, bands = dedup.build_near_index(base)
-        sig.write.parquet(os.path.join(d, "sig"))
-        bands.write.parquet(os.path.join(d, "bands"))
+        dedup.build_near_index(base).write.parquet(os.path.join(d, "bands"))
 
     idx_dir = _staged_artifact("databus_nearidx", sf_dir, fingerprint, build)
-    base_index = (
-        spark.read.parquet(os.path.join(idx_dir, "sig")),
-        spark.read.parquet(os.path.join(idx_dir, "bands")),
-    )
+    base_index = spark.read.parquet(os.path.join(idx_dir, "bands"))
     return dedup.incremental_near_dedup(incoming, base, base_index=base_index)
 
 
@@ -3877,10 +3872,10 @@ def media_dhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-crawl image ingestion: the delta batch (doc_id % 5 = 0)
     is decoded + dHashed and probes the STAGED base band index (built
     once at ingest — the base corpus is never re-decoded or re-hashed),
-    returning the best base match within hamming 2 or is_new. Ranking
-    key (hamming << 40 | base_id) makes the Spark min and the SQL
-    oracle's min bit-identical. The image twin of
-    dedup_incremental_near's delta-probes-index shape."""
+    returning the best base match within hamming 2 or is_new: the
+    lowest (hamming, base_id), which the oracle's packed
+    (hamming << 40 | base_id) key orders the same way. The image twin
+    of dedup_incremental_near's delta-probes-index shape."""
     from databus_spark.operators.dedup import (
         bithash_bands,
         incremental_bithash_dedup,

@@ -92,7 +92,7 @@ class BootstrapController:
         None when the window holds nothing. A chunk that cannot be read
         raises: serving it as an empty window would force a bootstrap."""
         try:
-            df = self.spark.read.schema(self.schema).parquet(self.stage_dir + "/chunk=*")
+            df = self.spark.read.schema(self.schema).parquet(self.stage_dir)
         except AnalysisException as e:
             if e.getCondition() == "PATH_NOT_FOUND":
                 return None

@@ -222,6 +222,28 @@ def test_bithash_near_pairs_pigeonhole_recall(spark):
     assert not any(4 in p for p in got)
 
 
+def test_bithash_probe_returns_base_ids_past_2_40(spark):
+    """The bit-hash delta probe ranks matches by (hamming, base id), not
+    by a packed key, so a base doc_id >= 2^40 comes back as matched_base
+    instead of overflowing the key."""
+    big = (1 << 40) + 7
+    h = 0x00F0F0F0F0F0F0
+    base = spark.createDataFrame(
+        [(big, h ^ 0b1), (big + 1, h ^ 0b111), (3, h ^ (1 << 30) ^ (1 << 31))],
+        "doc_id BIGINT, h BIGINT",
+    )
+    delta = spark.createDataFrame([(1, h), (2, h ^ (1 << 50) ^ 0xFF)], "doc_id BIGINT, h BIGINT")
+    bands = dedup.bithash_bands(base, "h", 56, 2, "base_doc")
+    got = {
+        r["doc_id"]: r
+        for r in dedup.incremental_bithash_dedup(delta, bands, 56, hash_col="h").collect()
+    }
+    # doc 3 is also within 2 bits, but big is closer (hamming 1)
+    assert got[1]["matched_base"] == big and got[1]["best_hamming"] == 1
+    assert not got[1]["is_new"]
+    assert got[2]["is_new"] and got[2]["matched_base"] is None
+
+
 def test_packed_key_width_guard(spark):
     """packed_key must raise inside codegen on out-of-range ids (silent
     aliasing of two distinct (high, low) pairs is corruption, not an

@@ -72,13 +72,12 @@ _BOUNDED_GENERATE_BROADCASTS = {
     "ann_pq_topk",
     "ann_ivfpq_topk",
     "ann_ivfpq_rerank_topk",
-    # r15: bithash_bands emits its band keys via explode of a CONSTANT
-    # (max_hamming+1)-element struct array (was an equivalent
-    # max_hamming+1-branch union, which this heuristic could not see).
-    # The broadcast side here is the incoming DELTA batch's band rows —
-    # delta_rows x 3, bounded by ingest batch size by construction; the
-    # broadcast decision and size are identical to the pre-r15 union
-    # form.
+    # dedup._lsh_bands (the one band-row builder of both LSH families)
+    # emits its band keys via explode of a CONSTANT (max_hamming+1)-
+    # element struct array (was an equivalent max_hamming+1-branch
+    # union, which this heuristic could not see). The broadcast side
+    # here is the incoming DELTA batch's band rows — delta_rows x 3,
+    # bounded by ingest batch size by construction.
     "media_dhash_incremental",
 }
 

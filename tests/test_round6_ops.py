@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from databus_spark.catalog import load_table
@@ -79,26 +80,41 @@ def test_binned_quantiles_within_bin_width(spark, sf_dir):
         assert r["abs_err"] <= bin_w, (r["q"], r["abs_err"], bin_w)
 
 
-def test_incremental_near_matches_batch_lsh_semantics(spark, sf_dir):
-    """Every delta doc the in-corpus LSH pair generator links to a base
-    doc must also be matched by the incremental probe (same bands, same
-    signatures — the incremental index loses no recall vs batch)."""
+def _near_recall_case(spark, sf_dir, family):
+    """(batch pairs, delta probe, is_delta) for one banded-LSH family:
+    the batch pair generator runs over the whole corpus, the incremental
+    probe matches the delta docs against a band index of the rest."""
     from databus_spark.operators import dedup
 
-    corpus = dedup.documents_with_dups(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(corpus, k=5).collect()
+    if family == "minhash":
+        corpus = dedup.documents_with_dups(spark, sf_dir)
+        incoming = corpus.where(F.col("doc_id") >= 1_000_000)
+        base = load_table(spark, sf_dir, "documents")
+        probe = dedup.incremental_near_dedup(incoming, base)
+        return dedup.minhash_lsh_pairs(corpus, k=5), probe, lambda d: d >= 1_000_000
+    from databus_spark.operators.multimodal import image_dhash, synth_phash_corpus
+
+    sig = image_dhash(synth_phash_corpus(load_table(spark, sf_dir, "documents")))
+    in_delta = F.col("doc_id") % 5 == 0
+    bands = dedup.bithash_bands(sig.where(~in_delta), "dhash", 56, 2, "base_doc")
+    probe = dedup.incremental_bithash_dedup(sig.where(in_delta), bands, 56)
+    return dedup.bithash_near_pairs(sig, "dhash", 56), probe, lambda d: d % 5 == 0
+
+
+@pytest.mark.parametrize("family", ["minhash", "dhash"])
+def test_incremental_near_matches_batch_lsh_semantics(spark, sf_dir, family):
+    """Every delta doc the in-corpus LSH pair generator links to a base
+    doc must also be matched by the incremental probe (same bands, same
+    signatures — the incremental index loses no recall vs batch), for
+    the MinHash family and a bit-hash family (image dHash)."""
+    pairs, probe, is_delta = _near_recall_case(spark, sf_dir, family)
     batch_matched = {
-        max(r["doc_a"], r["doc_b"])
-        for r in pairs
-        if min(r["doc_a"], r["doc_b"]) < 1_000_000 <= max(r["doc_a"], r["doc_b"])
+        r["doc_a"] if is_delta(r["doc_a"]) else r["doc_b"]
+        for r in pairs.collect()
+        if is_delta(r["doc_a"]) != is_delta(r["doc_b"])
     }
-    incoming = corpus.where(F.col("doc_id") >= 1_000_000)
-    base = load_table(spark, sf_dir, "documents")
-    inc = {
-        r["doc_id"]
-        for r in dedup.incremental_near_dedup(incoming, base).where(~F.col("is_new")).collect()
-    }
-    assert batch_matched <= inc
+    inc = {r["doc_id"] for r in probe.where(~F.col("is_new")).collect()}
+    assert batch_matched and batch_matched <= inc
 
 
 def test_boilerplate_strip_semantics(spark):
