@@ -15,10 +15,20 @@ from the same primitives the rest of the engine uses — the transport is
 whatever the caller does with the frame (collect for an RPC-sized page,
 write for a bulk hand-off). This is the single entry point a reference
 client would port against.
+
+The reference relay answers /stream from one in-memory event buffer
+(core/DbusEventBuffer.java): it binary-searches its SCN index
+(core/ScnIndex.java:42-96) for the checkpoint, then scans forward. The
+facade keeps the same two pieces: the log read as ONE partition (the
+buffer) and a sorted array of its distinct SCNs (the index), so every
+request is one Spark job — a window-atomic page runs one job to read
+(its bound comes from the index with none), and a byte-budgeted stream
+runs its top-k and running-sum cutoff in one stage of one task.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -36,6 +46,22 @@ EVENT_HEADER_BYTES = 45  # DbusEventV2 fixed header (DbusEventV2.java:33-90)
 
 
 class RelayFacade:
+    """One relay over one change log: the DbusEventBuffer and its
+    ScnIndex, restated as a one-partition frame and a sorted SCN array.
+
+    ``log`` should be a scan of a retained (staged) log. The facade
+    reads it through ``coalesce(1)``, so the scan runs in one task and
+    every ordered step above it (the byte-budget top-k, the running-sum
+    window, the SCN ``distinct``) finds its input on one partition and
+    needs no exchange. That one task also runs whatever narrow work sits
+    upstream of ``log``, so a log built by an expensive pipeline should
+    be staged (written, or checkpointed) first.
+
+    The relay serves the log it was built over: a DataFrame over files
+    fixes its file list at construction, and the SCN index, built once
+    on the first ``stream_windows`` call, indexes that same frame.
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -44,11 +70,20 @@ class RelayFacade:
         retained_min_scn: int | None = None,
     ):
         self.spark = spark
-        self.log = log
+        self.log = log.coalesce(1)
         self.schemas = schemas or SchemaRegistry()
         # Oldest scn this relay still holds (its buffer has wrapped past
         # older events). None = full history retained.
         self.retained_min_scn = retained_min_scn
+        self._scns: np.ndarray | None = None  # the SCN index, built lazily
+
+    def _scn_index(self) -> np.ndarray:
+        """The log's distinct SCNs, sorted: 8 bytes per transaction
+        window, built by one job (one task, no exchange) on first use."""
+        if self._scns is None:
+            table = self.log.select("scn").distinct().toArrow()
+            self._scns = np.sort(table.column(0).to_numpy().astype(np.int64))
+        return self._scns
 
     # -- /sources -------------------------------------------------------------
     def sources(self) -> DataFrame:
@@ -81,7 +116,9 @@ class RelayFacade:
     ) -> DataFrame:
         """Events after the checkpoint SCN through the server-side filter
         conjunction {source, partition, key filters}, size-bounded —
-        ReadEventsRequestProcessor.process semantics as one plan."""
+        ReadEventsRequestProcessor.process semantics as one plan. Over
+        the one-partition buffer it is one Spark job; with ``size_bytes``
+        that job is one stage of one task, with no exchange."""
         since = checkpoint.windowScn if isinstance(checkpoint, Checkpoint) else int(checkpoint)
         out = self.log.where(F.col("scn") > since)
         pred: Column = F.lit(True)
@@ -96,10 +133,11 @@ class RelayFacade:
             # Exact byte-budget cutoff WITHOUT a log-wide global sort:
             # every event costs >= the fixed header, so at most
             # size_bytes/EVENT_HEADER_BYTES rows can ever be admitted —
-            # take that many via distributed top-k (TakeOrderedAndProject)
-            # first, then run the exact running-size cutoff on the small
-            # bounded set. Identical results; the global window touches
-            # O(budget) rows instead of O(retained log).
+            # take that many via top-k (TakeOrderedAndProject) first,
+            # then run the exact running-size cutoff on the small
+            # bounded set. Identical results; the window touches
+            # O(budget) rows instead of O(retained log). On the
+            # one-partition buffer both run in the scan's own task.
             #
             # The top-k pre-bound equals the unbounded-window form only if
             # the sort key is a unique total order — a duplicate key at
@@ -131,7 +169,13 @@ class RelayFacade:
         so the client's checkpoint always lands on a window boundary
         (the reference only checkpoints at onCheckpoint/window end;
         ReadEventsRequestProcessor serves whole windows the same way).
-        Returns (events in (since, boundary], boundary scn).
+        Returns (events in (since, boundary], boundary scn); a caught-up
+        checkpoint comes back with an empty page.
+
+        The bound is a binary search of the SCN index, as
+        DbusEventBuffer.streamEvents seeks its ScnIndex: it runs no Spark
+        job once the index exists (the first call builds it with one),
+        and reading the page is one job of one task.
 
         A checkpoint older than the retention window raises
         SCNNotFoundError instead of silently skipping the pruned gap —
@@ -139,14 +183,12 @@ class RelayFacade:
         the client to another relay or to bootstrap."""
         if self.retained_min_scn is not None:
             require_retained(since_scn, self.retained_min_scn)
-        nxt = self.log.where(F.col("scn") > since_scn).select("scn").distinct()
-        # a root top-n (TakeOrderedAndProject) returns the window scns in
-        # order: the last one is the bound, with no single-partition
-        # exchange for a max over the limit
-        head = nxt.orderBy("scn").limit(n_windows).collect()
-        if not head:
+        scns = self._scn_index()
+        first = int(np.searchsorted(scns, since_scn, "right"))
+        last = min(first + n_windows, len(scns))
+        if last <= first:
             return self.log.where(F.lit(False)), since_scn
-        bound = int(head[-1]["scn"])
+        bound = int(scns[last - 1])
         page = self.log.where((F.col("scn") > since_scn) & (F.col("scn") <= bound))
         return page, bound
 

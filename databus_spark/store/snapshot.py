@@ -69,6 +69,14 @@ WHEN MATCHED AND b.scn > s.scn THEN UPDATE SET *
 WHEN NOT MATCHED AND b.opcode <> 'DELETE' THEN INSERT *
 """
 
+# to_json writes timestamps to the millisecond by default; a key must
+# round-trip through from_json exactly, so write every microsecond
+_EXACT_JSON = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+
 class MergeResult(NamedTuple):
     """What merge() committed, with the batch's row count and max SCN
     observed on the write itself. An empty batch commits nothing: its
@@ -157,40 +165,59 @@ class ParquetSnapshotStore:
         serving path of the reference's bootstrap DB (per-key state to a
         catching-up consumer) without a full-table scan.
 
-        The requested keys' bucket ids are computed with the SAME hash
-        expression merge() buckets by, then only those _bucket=<k>
-        directories are scanned. Pruning happens at that bucket-directory
-        level only: the key semi-join pushes no key filter into the
-        parquet scan, so every row group of a scanned bucket is read.
-        The key semi-join runs before the latest-per-key compaction, so
-        pending deltas cost only the matched rows.
-        At 16k buckets over 100 TB a lookup reads ~1/16000th of the
-        table regardless of table size.
+        One collect over the keys frame returns each key with its bucket
+        id, computed with the SAME hash expression merge() buckets by.
+        Only those _bucket=<k> directories are scanned, filtered by
+        ``struct(*key_cols) IN (<the distinct keys>)`` with each key a
+        literal of the manifest's key types; past
+        ``spark.sql.optimizer.inSetConversionThreshold`` keys Catalyst
+        turns the list into a hashed ``InSet``. The filter runs before
+        the latest-per-key compaction, so pending deltas cost only the
+        matched rows. Pruning happens at the bucket-directory level: a
+        struct predicate is not pushed into the parquet scan, so every
+        row group of a scanned bucket is read. At 16k buckets over
+        100 TB a lookup reads ~1/16000th of the table regardless of
+        table size.
 
-        Two Spark jobs for a local keys frame (``createDataFrame`` of a
-        pandas frame or an Arrow table, planned as a LocalRelation): its
-        bucket ids are collected without a job, the scan is built under
-        the version's recorded schema, and the semi-join needs no key
-        ``distinct`` (it never repeats a left row), which leaves the
-        broadcast and the scan. A distributed keys frame (a list of rows
-        is parallelized) adds one job for the bucket ids and the join's
-        own shuffle stages.
+        As in an equi-join, a key with a null component matches no row,
+        and a key given twice returns its row once.
+
+        One Spark job, the scan, for a local keys frame
+        (``createDataFrame`` of a pandas frame or an Arrow table is a
+        LocalRelation, which collects without a job); two for a
+        distributed one (a list of rows is parallelized), whose collect
+        is a job. The scan is built under the version's recorded schema,
+        so building it runs none.
         """
         v = self.vstate.current()
         if v == 0:
             return None
         man = self.vstate.manifest(v)
-        buckets = sorted({r[0] for r in keys.select(self._bucket_col()).collect()})
+        schema = StructType.fromJson(man["schema"])
+        rows = (
+            keys.dropna(subset=self.key_cols)
+            .select(F.to_json(F.struct(*self.key_cols), _EXACT_JSON), self._bucket_col())
+            .collect()
+        )
         paths = [
             p
-            for b in buckets
+            for b in sorted({r[1] for r in rows})
             if os.path.isdir(p := os.path.join(self.vstate.dir(v), f"_bucket={b}"))
         ]
         if not paths:
             return self._scan(v, man).drop("_bucket").limit(0)
-        df = self._scan(v, man, paths).join(
-            keys.select(*self.key_cols), self.key_cols, "left_semi"
+        # The key list is one SQL expression, built by one call: a Column
+        # literal per key costs ~10 JVM round trips (23 s for 10k keys).
+        # Each key crosses as its to_json text, hex-encoded so that no
+        # character needs escaping, and from_json under the manifest's
+        # key types makes it a typed literal when constant folding runs.
+        key_type = StructType([schema[c] for c in self.key_cols]).simpleString()
+        literals = ", ".join(
+            f"from_json(CAST(X'{key.encode().hex()}' AS STRING), '{key_type}')"
+            for key in sorted({r[0] for r in rows})
         )
+        key = ", ".join(f"`{c}`" for c in self.key_cols)
+        df = self._scan(v, man, paths).where(F.expr(f"struct({key}) IN ({literals})"))
         return self._live(df, v, man)
 
     # -- MERGE ----------------------------------------------------------------
@@ -290,8 +317,9 @@ class ParquetSnapshotStore:
             )
         new_version = v + 1
         # sorted by key within each bucket file. lookup() still prunes at
-        # the bucket-directory level only: its semi-join pushes no key
-        # filter down, so the row-group min/max stats are not consulted.
+        # the bucket-directory level only: its key filter is over a struct
+        # of the key columns, which parquet does not push down, so the
+        # row-group min/max stats are not consulted.
         out = current.repartition(self.n_buckets, "_bucket").sortWithinPartitions(*self.key_cols)
         out.write.mode("append").partitionBy("_bucket").parquet(self.vstate.new_dir(new_version))
         self._commit(new_version, self._parquet_bytes(new_version), _read_schema(out.schema))

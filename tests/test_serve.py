@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import datetime
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from databus_spark.envelope import multi_source_changelog
 from databus_spark.serve import RelayFacade
 from databus_spark.sources.schema_registry import SchemaRegistry, VersionedSchema
-from databus_spark.streaming.checkpoint import Checkpoint
+from databus_spark.store.snapshot import ParquetSnapshotStore
+from databus_spark.streaming.checkpoint import Checkpoint, SCNNotFoundError
 
 
 @pytest.fixture(scope="module")
@@ -231,3 +236,124 @@ def test_stream_windows_bound_edges(facade):
             assert page.select("scn").distinct().count() == min(
                 n, sum(1 for s in scns if s > since)
             )
+
+
+def test_scn_index_bound_matches_aggregate(facade, spark):
+    """The index's binary search gives the bound the aggregate gives:
+    from below the log's first SCN, from a window SCN, from between two
+    windows, and past the head (caught up). A relay that retains less
+    still raises SCNNotFound first, without building its index."""
+    f, log = facade
+    scns = sorted(r["scn"] for r in log.select("scn").distinct().collect())
+    gaps = [a for a, b in zip(scns, scns[1:]) if b - a > 1]
+    assert gaps  # the fixture has SCNs no window carries
+    for since in (scns[0] - 5, scns[0], scns[len(scns) // 2], gaps[len(gaps) // 2] + 1,
+                  scns[-1] + 7):
+        for n in (1, 3):
+            page, bound = f.stream_windows(since, n)
+            want = _agg_max_bound(log, since, n)
+            assert bound == (since if want is None else want), (since, n)
+            assert page.count() == log.where(
+                (F.col("scn") > since) & (F.col("scn") <= bound)
+            ).count()
+
+    shallow = RelayFacade(spark, log, retained_min_scn=scns[5])
+    with pytest.raises(SCNNotFoundError):
+        shallow.stream_windows(scns[0] - 5, 3)
+    assert shallow._scns is None
+
+
+def _jobs(spark, group, fn):
+    """Run fn under a job group; return (its result, the jobs it ran,
+    their stages)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    ids = tracker.getJobIdsForGroup(group)
+    return out, len(ids), sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
+
+
+def test_one_job_per_request(facade, spark, tmp_path):
+    """Each consumer request is one Spark job: a page once the relay's
+    SCN index exists (building it is one more, once per relay), a
+    byte-budgeted stream (one stage: its top-k and running sum need no
+    exchange on the one-partition buffer) and a lookup from a local keys
+    frame. A list-of-rows keys frame adds the job that collects it."""
+    _, log = facade
+    relay = RelayFacade(spark, log)
+    scns = sorted(r["scn"] for r in log.select("scn").distinct().collect())
+    _, jobs, _ = _jobs(spark, "serve-scn-index", lambda: relay.stream_windows(scns[0], 1))
+    assert jobs == 1
+    for since in (scns[0], scns[len(scns) // 3]):
+        table, jobs, _ = _jobs(
+            spark, f"serve-page-{since}", lambda s=since: relay.stream_windows(s, 50)[0].toArrow()
+        )
+        assert table.num_rows > 0 and jobs == 1, (since, jobs)
+    table, jobs, stages = _jobs(
+        spark, "serve-stream-4096", lambda: relay.stream(scns[1], size_bytes=4096).toArrow()
+    )
+    assert table.num_rows > 0 and (jobs, stages) == (1, 1)
+
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
+    store.merge(log)
+    keys = [tuple(r) for r in log.select("source", "key_str").distinct().limit(8).collect()]
+    frames = {
+        "pandas": (spark.createDataFrame(pd.DataFrame(keys, columns=["source", "key_str"])), 1),
+        "rows": (spark.createDataFrame(keys, "source string, key_str string"), 2),
+    }
+    for name, (frame, want) in frames.items():
+        for attempt in ("cold", "warm"):
+            _, jobs, _ = _jobs(
+                spark, f"serve-lookup-{name}-{attempt}", lambda f=frame: store.lookup(f).toArrow()
+            )
+            assert jobs == want, (name, attempt, jobs)
+
+
+def test_lookup_matches_semi_join(spark, tmp_path):
+    """The key filter returns what a left-semi join of the live state
+    with the keys returns, on a folded version and on one with pending
+    deltas: a key given twice once, an absent key nothing, a key with a
+    null component nothing, Python ints against a long key column, and
+    past the In-to-InSet threshold."""
+    schema = "source string, k long, scn long, opcode string, payload string"
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), key_cols=("source", "k"), n_buckets=4)
+    batches = [
+        [("s", i, i + 1, "UPSERT", f"a{i}") for i in range(40)] + [("t", 2, 50, "UPSERT", "t2")],
+        [("s", i, 100 + i, "UPSERT", f"b{i}") for i in range(0, 40, 3)]
+        + [("s", 4, 200, "DELETE", None)],
+    ]
+    cases = {
+        "duplicate": [("s", 3), ("s", 3), ("t", 2)],
+        "absent": [("s", 999), ("u", 1)],
+        "null component": [("s", None), (None, 5), ("s", 6)],
+        "many": [("s", i) for i in range(0, 40, 2)] + [("s", 0)],
+    }
+    for batch in batches:
+        store.merge(spark.createDataFrame(batch, schema))
+        live = store.read()
+        for name, keys in cases.items():
+            frame = spark.createDataFrame(keys, ["source", "k"])
+            assert frame.schema["k"].dataType == LongType()
+            got = store.lookup(frame)
+            want = live.join(frame, ["source", "k"], "left_semi")
+            assert sorted(got.collect()) == sorted(want.collect()), name
+            if name == "many":
+                plan = got._jdf.queryExecution().optimizedPlan().toString()
+                assert "INSET" in plan, plan
+    assert store.lookup(spark.createDataFrame([("t", 2)], ["source", "k"])).count() == 1
+
+
+def test_lookup_timestamp_keys_round_trip_exactly(spark, tmp_path):
+    """A timestamp key is matched to the microsecond."""
+    stamps = [datetime.datetime(2024, 1, 1, 0, 0, 0, 123456 + i) for i in range(3)]
+    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), key_cols=("ts",), n_buckets=2)
+    store.merge(spark.createDataFrame(
+        [(t, i + 1, "UPSERT") for i, t in enumerate(stamps)], "ts timestamp, scn long, opcode string"
+    ))
+    got = store.lookup(spark.createDataFrame([(stamps[1],)], "ts timestamp")).collect()
+    assert [r["ts"] for r in got] == [stamps[1]]

@@ -128,9 +128,9 @@ def test_merge_refuses_batches_whose_columns_differ(spark, tmp_path):
 
 def test_request_paths_run_no_probe_jobs(spark, tmp_path):
     """An 8-key lookup from a local keys frame (pandas or Arrow, planned
-    as a LocalRelation) runs at most 2 Spark jobs: the broadcast and the
-    scan. Building read() or read_version() on a version with a recorded
-    schema runs none."""
+    as a LocalRelation) runs one Spark job, the scan: the keys collect
+    without a job and filter the scan as literals. Building read() or
+    read_version() on a version with a recorded schema runs none."""
     store = ParquetSnapshotStore(spark, str(tmp_path / "snap"), n_buckets=4)
     store.merge(_batch(spark, range(200), 1, "a"))
     keys = [("s", f"k{i}") for i in range(0, 200, 25)]
@@ -148,7 +148,7 @@ def test_request_paths_run_no_probe_jobs(spark, tmp_path):
                 spark, f"lookup-{name}-{attempt}", lambda f=frame: store.lookup(f).toArrow()
             )
             assert table.num_rows == 8
-            assert jobs <= 2, (name, attempt, jobs)
+            assert jobs == 1, (name, attempt, jobs)
     assert _jobs(spark, "read", store.read)[1] == 0
     assert _jobs(spark, "read-version", lambda: store.read_version(1))[1] == 0
 

@@ -25,6 +25,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -354,20 +355,27 @@ def _stream_stage_dir(sf_dir: str) -> str:
     return os.path.join(_STAGED["stream", sf_dir], "stage")
 
 
-def fam_stream_apply(spark, docs, emb, sf_dir):
-    import tempfile
-
+def _drain(spark, store, stage_sf: str, ckpt: str) -> None:
+    """Drain the staged orders log of ``stage_sf`` into ``store`` through
+    the streaming applier. A drain still running after 1800 s is
+    stopped and raises, so no leg is timed on a half-drained stream."""
     from databus_spark.envelope import orders_changelog
-    from databus_spark.store.snapshot import ParquetSnapshotStore
     from databus_spark.streaming.applier import StreamingApplier
     from databus_spark.streaming.source import changelog_stream
 
-    olog = orders_changelog(spark, sf_dir)
-    stage = _stream_stage_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="soak_stream_")
-    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
-    q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
-    q.awaitTermination(1800)
+    olog = orders_changelog(spark, stage_sf)
+    stream = changelog_stream(spark, _stream_stage_dir(stage_sf), olog.schema)
+    q = StreamingApplier(store).run(stream, ckpt)
+    if not q.awaitTermination(1800):
+        q.stop()
+        raise TimeoutError(f"stream drain of {stage_sf} still running after 1800 s")
+
+
+def fam_stream_apply(spark, docs, emb, sf_dir):
+    from databus_spark.store.snapshot import ParquetSnapshotStore
+
+    with tempfile.TemporaryDirectory(prefix="soak_stream_") as tmp:
+        _drain(spark, ParquetSnapshotStore(spark, f"{tmp}/snap"), sf_dir, f"{tmp}/ck")
 
 
 fam_stream_apply.prestage = _prestage_stream
@@ -377,19 +385,11 @@ def fam_stream_apply_unbucketed(spark, docs, emb, sf_dir):
     # the bucketing control (r8 verdict ask #7): n_buckets=1 makes every
     # merge rewrite the WHOLE table — per-task state and shuffle against
     # the 16-bucket leg is the measured headroom of the bucketed store
-    import tempfile
-
-    from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
-    from databus_spark.streaming.applier import StreamingApplier
-    from databus_spark.streaming.source import changelog_stream
 
-    olog = orders_changelog(spark, sf_dir)
-    stage = _stream_stage_dir(sf_dir)
-    tmp = tempfile.mkdtemp(prefix="soak_stream_ub_")
-    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap", n_buckets=1))
-    q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
-    q.awaitTermination(1800)
+    with tempfile.TemporaryDirectory(prefix="soak_stream_ub_") as tmp:
+        store = ParquetSnapshotStore(spark, f"{tmp}/snap", n_buckets=1)
+        _drain(spark, store, sf_dir, f"{tmp}/ck")
 
 
 fam_stream_apply_unbucketed.prestage = _prestage_stream
@@ -418,22 +418,13 @@ def _prestage_bigstate(spark, docs, emb, sf_dir):
 
 
 def fam_stream_bigstate(spark, docs, emb, sf_dir):
-    import tempfile
-
-    from databus_spark.envelope import orders_changelog
     from databus_spark.store.snapshot import ParquetSnapshotStore
-    from databus_spark.streaming.applier import StreamingApplier
-    from databus_spark.streaming.source import changelog_stream
 
-    tmp = tempfile.mkdtemp(prefix="soak_bigstate_")
-    ParquetSnapshotStore._link_tree(
-        os.path.join(_STAGED["bigstate", sf_dir], "base"), f"{tmp}/snap"
-    )
-    applier = StreamingApplier(ParquetSnapshotStore(spark, f"{tmp}/snap"))
-    olog = orders_changelog(spark, SF_DIR)
-    stage = _stream_stage_dir(SF_DIR)
-    q = applier.run(changelog_stream(spark, stage, olog.schema), f"{tmp}/ck")
-    q.awaitTermination(1800)
+    with tempfile.TemporaryDirectory(prefix="soak_bigstate_") as tmp:
+        ParquetSnapshotStore._link_tree(
+            os.path.join(_STAGED["bigstate", sf_dir], "base"), f"{tmp}/snap"
+        )
+        _drain(spark, ParquetSnapshotStore(spark, f"{tmp}/snap"), SF_DIR, f"{tmp}/ck")
 
 
 fam_stream_bigstate.prestage = _prestage_bigstate
