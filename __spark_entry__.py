@@ -40,56 +40,26 @@ def entry(spark: SparkSession) -> DataFrame:
 _WINDOW_SIZE = 50
 
 _WINDOW = [
-    # One banded-LSH pipeline: the MinHash and bit-hash pair generators
-    # and delta probes share one band-row builder, pair generator and
-    # probe, the near index is one band frame, and the pair-array
-    # expression is shared with the n-gram and sparse TF-IDF pair-gen.
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
+    # One writer per versioned state: every row whose closure reaches
+    # registry._staged_artifact (its lock is now versions.exclusive) or
+    # the z-table (its writes now go through VersionedState.writer()).
     "dedup_incremental_near",
     "dedup_cluster_star",
     "dedup_cluster_survivors",
     "dedup_decision_log",
     "dedup_survivor_corpus",
-    "dedup_sketch_eval",
     "media_dhash_near_pairs",
     "media_dhash_clusters",
     "media_dhash_incremental",
     "media_decision_log",
     "media_audio_near_pairs",
-    "dedup_ngram_jaccard",
-    "sparse_tfidf_pairs",
-    # Rows whose closure reaches a dedup.py unit that changed with it
-    # (the module's import unit among them).
     "bm25_incremental",
-    "contamination_fraction",
-    "curation_decisions_v2",
-    "curation_decisions_v3",
-    "decontaminate_bloom",
-    "decontaminate_vs_benchmark",
-    "dedup_canonical",
-    "dedup_cdc_chunks",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_span_windows",
     "dsir_incremental",
-    "exactsubstr_dedup",
     "exactsubstr_incremental",
-    "exactsubstr_spans",
-    "exactsubstr_stats",
     "fuzzy_join_incremental",
-    "record_linkage_clusters",
     "record_linkage_incremental",
-    "release_gate",
-    "release_gate_utility",
-    "semdedup_multiprobe",
-    "semdedup_survivors",
     "semdedup_survivors_v2",
     "semdedup_trained",
-    "simhash_sketch",
-    "text_novelty",
-    # The last slots go to the most recently rotated earlier changes
-    # (code-keyed staging); the rest of the previous window heads _REST.
     "ann_ivfpq_rerank_topk",
     "ann_ivfpq_topk",
     "ann_pq_topk",
@@ -98,12 +68,6 @@ _WINDOW = [
     "avro_ocf_roundtrip",
     "bpe_encode_corpus",
     "hybrid_rrf_serve",
-]
-
-# below the 50-row window this round (all still verified locally by the
-# full sf0.01 oracle sweep), never-checked first then oldest external
-# green first — next round's rotation reads top-down:
-_REST = [
     "jsonl_ingest_audit",
     "kmeans_assign_summary",
     "kmeans_centroids",
@@ -114,15 +78,49 @@ _REST = [
     "semdedup_recall_eval",
     "trail_file_seek",
     "zorder_box_read",
-    "filter_keymod_longkey",
     "filter_keymod_staged_hash",
-    "filter_keymod_strkey",
     "filter_keymod_subscribe",
     "jdbc_txlog_pull",
-    "schema_evolution_decode",
     "sql_txlog_pull",
-    "bpe_learn_merges",
     "zorder_events_key",
+    # The last slots go to the most recently rotated earlier changes
+    # (one banded-LSH pipeline); the rest of the previous window heads
+    # _REST.
+    "dedup_minhash_lsh",
+    "dedup_simhash_pairs",
+    "dedup_sketch_eval",
+    "dedup_ngram_jaccard",
+    "sparse_tfidf_pairs",
+    "contamination_fraction",
+    "curation_decisions_v2",
+    "curation_decisions_v3",
+    "decontaminate_bloom",
+    "decontaminate_vs_benchmark",
+]
+
+# below the 50-row window this round (all still verified locally by the
+# full sf0.01 oracle sweep), never-checked first then oldest external
+# green first — next round's rotation reads top-down:
+_REST = [
+    "dedup_canonical",
+    "dedup_cdc_chunks",
+    "dedup_exact",
+    "dedup_incremental",
+    "dedup_span_windows",
+    "exactsubstr_dedup",
+    "exactsubstr_spans",
+    "exactsubstr_stats",
+    "record_linkage_clusters",
+    "release_gate",
+    "release_gate_utility",
+    "semdedup_multiprobe",
+    "semdedup_survivors",
+    "simhash_sketch",
+    "text_novelty",
+    "filter_keymod_longkey",
+    "filter_keymod_strkey",
+    "schema_evolution_decode",
+    "bpe_learn_merges",
     "bm25_topk",
     "hybrid_rrf_topk",
     "ann_cosine_topk",

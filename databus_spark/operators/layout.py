@@ -127,12 +127,11 @@ def zorder_layout(
 #   interval list), so the driver never sees data rows; it collects
 #   only the distinct set of touched file ids.
 
-import contextlib as _contextlib
-import fcntl as _fcntl
 import os as _os
 import uuid as _uuid
 
 from databus_spark.store.versions import VersionedState as _VersionedState
+from databus_spark.store.versions import exclusive as _exclusive
 
 
 class ZorderTable:
@@ -141,8 +140,9 @@ class ZorderTable:
     write_initial(df) lays the table out and freezes the bucketing
     bounds; append(df) rewrites only the files whose z-interval the
     batch overlaps. Each version's manifest commits through
-    store/versions.py, the crash-atomic commit every versioned state
-    (the snapshot store, the streaming sketch sinks) uses.
+    store/versions.py, the crash-atomic commit and writer lock every
+    versioned state (the snapshot store, the streaming sketch sinks)
+    uses.
     """
 
     def __init__(self, spark, path: str, x_col: str, y_col: str,
@@ -151,23 +151,6 @@ class ZorderTable:
         self.x_col, self.y_col, self.bits = x_col, y_col, bits
         self.rows_per_file = rows_per_file
         self.vstate = _VersionedState(path)
-
-    # -- writer mutual exclusion -------------------------------------------
-    @_contextlib.contextmanager
-    def _write_lock(self):
-        """Cross-process flock over every mutating operation. These
-        tables live in shared /tmp paths across test/bench processes
-        (the registry staging blocks flock for the same reason):
-        without it, vacuum racing an append can delete the in-flight
-        version's data files or its freshly-committed manifest, and two
-        appends can both claim v+1."""
-        lp = self.path.rstrip("/") + ".lock"
-        with open(lp, "w") as f:
-            _fcntl.flock(f, _fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                _fcntl.flock(f, _fcntl.LOCK_UN)
 
     # -- manifest / version plumbing ---------------------------------------
     def _version(self) -> int:
@@ -229,76 +212,65 @@ class ZorderTable:
 
     # -- public API ---------------------------------------------------------
     def write_initial(self, df: DataFrame) -> None:
-        with self._write_lock():
-            self._write_initial_locked(df)
-
-    def _write_initial_locked(self, df: DataFrame) -> None:
-        mm = df.agg(
-            F.min(self.x_col), F.max(self.x_col),
-            F.min(self.y_col), F.max(self.y_col),
-        ).collect()[0]
-        if mm[0] is None:
-            raise ValueError(
-                "write_initial needs at least one row: the clustering "
-                "bounds freeze at creation and an empty table has none"
-            )
-        bounds = {"xmin": int(mm[0]), "xmax": int(mm[1]),
-                  "ymin": int(mm[2]), "ymax": int(mm[3])}
-        keyed = self._keyed(df, bounds)
-        entries = self._write_files(keyed, self.vstate.dir(1))
-        self.vstate.commit(1, {"bounds": bounds, "files": entries})
+        with self.vstate.writer() as (v, new_dir):
+            mm = df.agg(
+                F.min(self.x_col), F.max(self.x_col),
+                F.min(self.y_col), F.max(self.y_col),
+            ).collect()[0]
+            if mm[0] is None:
+                raise ValueError(
+                    "write_initial needs at least one row: the clustering "
+                    "bounds freeze at creation and an empty table has none"
+                )
+            bounds = {"xmin": int(mm[0]), "xmax": int(mm[1]),
+                      "ymin": int(mm[2]), "ymax": int(mm[3])}
+            entries = self._write_files(self._keyed(df, bounds), new_dir)
+            self.vstate.commit(v + 1, {"bounds": bounds, "files": entries})
 
     def append(self, df: DataFrame) -> dict:
         """Incrementally cluster a new batch: only files whose
         z-interval the batch touches are rewritten; disjoint appends
         rewrite nothing. Returns {'rewritten': n, 'kept': m}."""
-        with self._write_lock():
-            return self._append_locked(df)
-
-    def _append_locked(self, df: DataFrame) -> dict:
-        v = self.vstate.current()
-        man = self.vstate.manifest(v)
-        bounds = man["bounds"]
-        keyed = self._keyed(df, bounds).localCheckpoint(eager=False)
-        # pure-JVM VALUES LocalRelation, not createDataFrame-from-rows:
-        # the latter plans the broadcast side as a pickled Python RDD
-        # whose first evaluation spawns a non-Arrow worker (the
-        # dim_df/sources_registry trap; all-integer literals here)
-        touched: set[int] = set()
-        if man["files"]:  # empty table: nothing to rewrite, VALUES needs >=1 row
-            rows_sql = ", ".join(
-                f"({i}, {int(e['zlo'])}, {int(e['zhi'])})"
-                for i, e in enumerate(man["files"])
-            )
-            ival_df = F.broadcast(
-                self.spark.sql(
-                    "SELECT CAST(col1 AS INT) AS fid, CAST(col2 AS LONG) AS zlo, "
-                    f"CAST(col3 AS LONG) AS zhi FROM (VALUES {rows_sql})"
+        with self.vstate.writer() as (v, new_dir):
+            man = self.vstate.manifest(v)
+            bounds = man["bounds"]
+            keyed = self._keyed(df, bounds).localCheckpoint(eager=False)
+            # pure-JVM VALUES LocalRelation, not createDataFrame-from-rows:
+            # the latter plans the broadcast side as a pickled Python RDD
+            # whose first evaluation spawns a non-Arrow worker (the
+            # dim_df/sources_registry trap; all-integer literals here)
+            touched: set[int] = set()
+            if man["files"]:  # empty table: nothing to rewrite, VALUES needs >=1 row
+                rows_sql = ", ".join(
+                    f"({i}, {int(e['zlo'])}, {int(e['zhi'])})"
+                    for i, e in enumerate(man["files"])
                 )
-            )
-            touched = {
-                r["fid"]
-                for r in keyed.join(
-                    ival_df,
-                    (F.col("z") >= F.col("zlo")) & (F.col("z") <= F.col("zhi")),
-                ).select("fid").distinct().collect()
-            }
-        # the manifest names its files, so what a killed append left in
-        # v<N+1>/ is never read: vacuum collects it once superseded
-        new_dir = self.vstate.dir(v + 1)
-        kept, rewrite_files = [], []
-        for i, e in enumerate(man["files"]):
-            (rewrite_files if i in touched else kept).append(e)
-        union = keyed
-        if rewrite_files:
-            old = self.spark.read.parquet(
-                *[_os.path.join(self.path, e["file"]) for e in rewrite_files]
-            )
-            union = old.unionByName(keyed)
-        entries = kept + self._write_files(union, new_dir)
-        entries.sort(key=lambda e: e["zlo"])
-        self.vstate.commit(v + 1, {"bounds": bounds, "files": entries})
-        return {"rewritten": len(rewrite_files), "kept": len(kept)}
+                ival_df = F.broadcast(
+                    self.spark.sql(
+                        "SELECT CAST(col1 AS INT) AS fid, CAST(col2 AS LONG) AS zlo, "
+                        f"CAST(col3 AS LONG) AS zhi FROM (VALUES {rows_sql})"
+                    )
+                )
+                touched = {
+                    r["fid"]
+                    for r in keyed.join(
+                        ival_df,
+                        (F.col("z") >= F.col("zlo")) & (F.col("z") <= F.col("zhi")),
+                    ).select("fid").distinct().collect()
+                }
+            kept, rewrite_files = [], []
+            for i, e in enumerate(man["files"]):
+                (rewrite_files if i in touched else kept).append(e)
+            union = keyed
+            if rewrite_files:
+                old = self.spark.read.parquet(
+                    *[_os.path.join(self.path, e["file"]) for e in rewrite_files]
+                )
+                union = old.unionByName(keyed)
+            entries = kept + self._write_files(union, new_dir)
+            entries.sort(key=lambda e: e["zlo"])
+            self.vstate.commit(v + 1, {"bounds": bounds, "files": entries})
+            return {"rewritten": len(rewrite_files), "kept": len(kept)}
 
     def read(self) -> DataFrame:
         man = self.manifest()
@@ -317,65 +289,61 @@ class ZorderTable:
         absent from the manifest that ``_VERSION`` points at, and never
         touches ``_VERSION`` or the live manifest — a crash mid-vacuum
         leaves the table fully readable with some garbage remaining,
-        which the next vacuum collects. Concurrency-safe too: it runs
-        under the same writer flock as append (so it can never observe
-        a half-committed version) and additionally skips manifests and
-        version dirs NEWER than _VERSION — a crashed append's orphans
-        are collected only once a later commit supersedes them.
-        Returns removal counts.
+        which the next vacuum collects. It runs under the writer lock
+        (store/versions.py), so it never observes a half-committed
+        version, and skips manifests and version dirs NEWER than
+        _VERSION: a crashed append's orphans are collected only once a
+        later commit supersedes them. Returns removal counts.
         """
-        with self._write_lock():
-            return self._vacuum_locked()
+        with _exclusive(self.vstate.lock_path):
+            v = self.vstate.current()
+            man = self.vstate.manifest(v)
+            referenced = {
+                _os.path.normpath(_os.path.join(self.path, e["file"]))
+                for e in man["files"]
+            }
+            # sidecars that must survive alongside a referenced file
+            keep_sidecars = set()
+            for fp in referenced:
+                d, base = _os.path.split(fp)
+                keep_sidecars.add(_os.path.join(d, "_SUCCESS"))
+                keep_sidecars.add(_os.path.join(d, "._SUCCESS.crc"))
+                keep_sidecars.add(_os.path.join(d, f".{base}.crc"))
 
-    def _vacuum_locked(self) -> dict:
-        v = self.vstate.current()
-        man = self.vstate.manifest(v)
-        referenced = {
-            _os.path.normpath(_os.path.join(self.path, e["file"]))
-            for e in man["files"]
-        }
-        # sidecars that must survive alongside a referenced file
-        keep_sidecars = set()
-        for fp in referenced:
-            d, base = _os.path.split(fp)
-            keep_sidecars.add(_os.path.join(d, "_SUCCESS"))
-            keep_sidecars.add(_os.path.join(d, "._SUCCESS.crc"))
-            keep_sidecars.add(_os.path.join(d, f".{base}.crc"))
-
-        removed = {"data_files": 0, "manifests": 0, "tmp": 0, "dirs": 0}
-        for name in _os.listdir(self.path):
-            full = _os.path.join(self.path, name)
-            if name.endswith(".tmp") and _os.path.isfile(full):
-                _os.remove(full)
-                removed["tmp"] += 1
-            elif name.startswith("_manifest_v") and name.endswith(".json"):
-                try:
-                    mv = int(name[len("_manifest_v"):-len(".json")])
-                except ValueError:
-                    continue
-                # mv < v, not mv != v: a manifest NEWER than _VERSION is
-                # an in-flight or crashed append's commit-in-progress —
-                # never collect ahead of the version pointer
-                if mv < v:
+            removed = {"data_files": 0, "manifests": 0, "tmp": 0, "dirs": 0}
+            for name in _os.listdir(self.path):
+                full = _os.path.join(self.path, name)
+                if name.endswith(".tmp") and _os.path.isfile(full):
                     _os.remove(full)
-                    removed["manifests"] += 1
-        for name in _os.listdir(self.path):
-            full = _os.path.join(self.path, name)
-            if not (name.startswith("v") and name[1:].isdigit() and _os.path.isdir(full)):
-                continue
-            if int(name[1:]) > v:
-                continue  # in-flight version dir — same rule as manifests
-            for root, dirs, files in _os.walk(full, topdown=False):
-                for f in files:
-                    fp = _os.path.normpath(_os.path.join(root, f))
-                    if fp in referenced or fp in keep_sidecars:
+                    removed["tmp"] += 1
+                elif name.startswith("_manifest_v") and name.endswith(".json"):
+                    try:
+                        mv = int(name[len("_manifest_v"):-len(".json")])
+                    except ValueError:
                         continue
-                    _os.remove(fp)
-                    removed["data_files"] += 1
-                if not _os.listdir(root):
-                    _os.rmdir(root)
-                    removed["dirs"] += 1
-        return removed
+                    # mv < v, not mv != v: a manifest NEWER than _VERSION is
+                    # a crashed append's — never collect ahead of the
+                    # version pointer
+                    if mv < v:
+                        _os.remove(full)
+                        removed["manifests"] += 1
+            for name in _os.listdir(self.path):
+                full = _os.path.join(self.path, name)
+                if not (name.startswith("v") and name[1:].isdigit() and _os.path.isdir(full)):
+                    continue
+                if int(name[1:]) > v:
+                    continue  # a crashed append's version dir — same rule as manifests
+                for root, dirs, files in _os.walk(full, topdown=False):
+                    for f in files:
+                        fp = _os.path.normpath(_os.path.join(root, f))
+                        if fp in referenced or fp in keep_sidecars:
+                            continue
+                        _os.remove(fp)
+                        removed["data_files"] += 1
+                    if not _os.listdir(root):
+                        _os.rmdir(root)
+                        removed["dirs"] += 1
+            return removed
 
     def read_box(
         self,

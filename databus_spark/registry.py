@@ -137,32 +137,25 @@ def _staged_artifact(prefix: str, sf_dir: str, fingerprint: str, build) -> str:
     source content and call arguments. Anything the code fixes (an
     algorithm, a module constant, a layout) is covered by the code
     digest, so a changed tree rebuilds without a hand-kept stamp."""
-    import fcntl
     import hashlib
     import shutil
     import tempfile
 
-    from databus_spark.store.versions import write_atomic
+    from databus_spark.store.versions import exclusive, write_atomic
 
     fingerprint = f"{fingerprint}|{_code_digest(build.__code__.co_filename)}"
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     art_dir = os.path.join(tempfile.gettempdir(), f"{prefix}_{digest}")
     marker = os.path.join(art_dir, "_COMPLETE")
-    lock_path = art_dir + ".lock"
-    os.makedirs(os.path.dirname(lock_path), exist_ok=True)
-    with open(lock_path, "w") as lock_f:
-        fcntl.flock(lock_f, fcntl.LOCK_EX)
-        try:
-            stale = True
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    stale = f.read().strip() != fingerprint
-            if stale:
-                shutil.rmtree(art_dir, ignore_errors=True)
-                build(art_dir)
-                write_atomic(marker, fingerprint)
-        finally:
-            fcntl.flock(lock_f, fcntl.LOCK_UN)
+    with exclusive(art_dir + ".lock"):
+        stale = True
+        if os.path.exists(marker):
+            with open(marker) as f:
+                stale = f.read().strip() != fingerprint
+        if stale:
+            shutil.rmtree(art_dir, ignore_errors=True)
+            build(art_dir)
+            write_atomic(marker, fingerprint)
     return art_dir
 
 
@@ -2480,8 +2473,8 @@ def zorder_box_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hour"),
     )
 
-    # The table sits one level down so its writer lock (path + ".lock")
-    # lives inside the artifact dir, never on the staging lock file.
+    # The table's writer lock (<path>/_LOCK) lives inside the artifact
+    # dir, never on the staging lock file (<artifact dir>.lock).
     def table(d: str) -> ZorderTable:
         return ZorderTable(
             spark, os.path.join(d, "t"), "user_id", "hour", rows_per_file=20_000

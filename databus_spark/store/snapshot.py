@@ -234,53 +234,65 @@ class ParquetSnapshotStore:
 
         A batch must carry the state's columns with the same types (in
         any order, nullability aside); otherwise ValueError names the
-        differing columns and nothing is written.
+        differing columns and nothing is written. Writers of one root
+        run one at a time, under store/versions.py's writer lock.
         """
         # always (re)derive: an inherited _bucket column from another
         # schema or geometry would route rows into wrong buckets
         batch = batch.withColumn("_bucket", self._bucket_col())
-        cur = self.vstate.current()
-        schema = man = None
-        if cur > 0:
-            man = self.vstate.manifest(cur)
-            schema = StructType.fromJson(man["schema"])
-            _check_columns(schema, batch.schema)
-        fold = cur == 0 or self._parquet_bytes(cur) >= 2 * man["base_bytes"]
-        # a fold scans and rewrites the whole state: make sure there is a
-        # batch to fold first (one short job over the batch alone)
-        if fold and cur > 0 and batch.isEmpty():
-            return MergeResult(cur, 0, None)
-        new_dir = self.vstate.new_dir(cur + 1)
-        obs = Observation()
-        if fold:
-            # observe ABOVE the union: an Observation on a union leg
-            # never fires; the marker column says which rows are the batch
-            frame = batch.withColumn("_in_batch", F.lit(True))
+        with self.vstate.writer() as (cur, new_dir):
+            schema = man = None
             if cur > 0:
-                current = self._scan(cur, man).select(*batch.columns)
-                frame = current.withColumn("_in_batch", F.lit(False)).unionByName(frame)
-            frame = frame.observe(obs, *_batch_stats(F.col("_in_batch"))).drop("_in_batch")
-            out = latest_by_key(frame, self.key_cols + ["_bucket"]).repartition(
-                self.n_buckets, "_bucket"
+                man = self.vstate.manifest(cur)
+                schema = StructType.fromJson(man["schema"])
+                _check_columns(schema, batch.schema)
+            fold = cur == 0 or self._parquet_bytes(cur) >= 2 * man["base_bytes"]
+            # a fold scans and rewrites the whole state: make sure there is
+            # a batch to fold first (one short job over the batch alone)
+            if fold and cur > 0 and batch.isEmpty():
+                return MergeResult(cur, 0, None)
+            obs = Observation()
+            if fold:
+                out = self._fold(cur, man, batch, obs)
+                schema = _read_schema(out.schema)
+            else:
+                for entry in os.listdir(self.vstate.dir(cur)):
+                    if entry.startswith("_bucket="):
+                        self._link_tree(
+                            os.path.join(self.vstate.dir(cur), entry),
+                            os.path.join(new_dir, entry),
+                        )
+                out = batch.observe(obs, *_batch_stats(F.lit(True)))
+            out.write.mode("append").partitionBy("_bucket").parquet(new_dir)
+            rows, max_scn = obs.get["rows"], obs.get["max_scn"]
+            if rows == 0:
+                shutil.rmtree(new_dir, ignore_errors=True)
+                return MergeResult(cur, 0, None)
+            base = self._parquet_bytes(cur + 1) if fold else man["base_bytes"]
+            # an append keeps v<N>'s schema: the check made the batch match it
+            self._commit(cur + 1, base, schema)
+            return MergeResult(cur + 1, rows, max_scn)
+
+    def _fold(self, cur, man, batch=None, obs=None, tombstone_horizon_scn=None) -> DataFrame:
+        """The one fold, of merge and optimize: latest_by_key(v<cur> ∪
+        batch), one partition per bucket. ``obs`` observes the batch's
+        rows ABOVE the union (on a union leg it never fires), told apart
+        by a marker column. Tombstones at or below the horizon are
+        purged AFTER the compaction: purged first, a DELETE pending in a
+        delta would vanish and resurrect the UPSERT beneath it."""
+        frame = None
+        if cur > 0:
+            frame = self._scan(cur, man).withColumn("_in_batch", F.lit(False))
+        if batch is not None:
+            marked = batch.withColumn("_in_batch", F.lit(True))
+            frame = marked if frame is None else frame.select(*marked.columns).unionByName(marked)
+            frame = frame.observe(obs, *_batch_stats(F.col("_in_batch")))
+        out = latest_by_key(frame.drop("_in_batch"), self.key_cols + ["_bucket"])
+        if tombstone_horizon_scn is not None:
+            out = out.where(
+                ~((F.col("opcode") == "DELETE") & (F.col("scn") <= tombstone_horizon_scn))
             )
-            schema = _read_schema(out.schema)
-        else:
-            for entry in os.listdir(self.vstate.dir(cur)):
-                if entry.startswith("_bucket="):
-                    self._link_tree(
-                        os.path.join(self.vstate.dir(cur), entry),
-                        os.path.join(new_dir, entry),
-                    )
-            out = batch.observe(obs, *_batch_stats(F.lit(True)))
-        out.write.mode("append").partitionBy("_bucket").parquet(new_dir)
-        rows, max_scn = obs.get["rows"], obs.get["max_scn"]
-        if rows == 0:
-            shutil.rmtree(new_dir, ignore_errors=True)
-            return MergeResult(cur, 0, None)
-        base = self._parquet_bytes(cur + 1) if fold else man["base_bytes"]
-        # an append keeps v<N>'s schema: the check made the batch match it
-        self._commit(cur + 1, base, schema)
-        return MergeResult(cur + 1, rows, max_scn)
+        return out.repartition(self.n_buckets, "_bucket")
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
@@ -297,33 +309,19 @@ class ParquetSnapshotStore:
 
     def optimize(self, tombstone_horizon_scn: int | None = None) -> int:
         """Compaction maintenance (the Delta OPTIMIZE + tombstone-retention
-        analog): a fold of the current version into a sorted base.
+        analog): merge's fold of the current version, with no batch.
         DELETE markers are retained so replayed older batches cannot
         resurrect keys (see _live()). Once every consumer checkpoint has
         passed `tombstone_horizon_scn`, markers at or below it can never
-        be contradicted and are purged. The purge runs AFTER the
-        latest-per-key compaction: run first, it would drop a DELETE
-        still pending in a delta and resurrect the older UPSERT beneath
-        it in the base. Returns the new version."""
-        v = self.vstate.current()
-        if v == 0:
-            return 0
-        current = latest_by_key(
-            self._scan(v, self.vstate.manifest(v)), self.key_cols + ["_bucket"]
-        )
-        if tombstone_horizon_scn is not None:
-            current = current.where(
-                ~((F.col("opcode") == "DELETE") & (F.col("scn") <= tombstone_horizon_scn))
-            )
-        new_version = v + 1
-        # sorted by key within each bucket file. lookup() still prunes at
-        # the bucket-directory level only: its key filter is over a struct
-        # of the key columns, which parquet does not push down, so the
-        # row-group min/max stats are not consulted.
-        out = current.repartition(self.n_buckets, "_bucket").sortWithinPartitions(*self.key_cols)
-        out.write.mode("append").partitionBy("_bucket").parquet(self.vstate.new_dir(new_version))
-        self._commit(new_version, self._parquet_bytes(new_version), _read_schema(out.schema))
-        return new_version
+        be contradicted and are purged. Returns the new version."""
+        with self.vstate.writer() as (cur, new_dir):
+            if cur == 0:
+                return 0
+            man = self.vstate.manifest(cur)
+            out = self._fold(cur, man, tombstone_horizon_scn=tombstone_horizon_scn)
+            out.write.mode("append").partitionBy("_bucket").parquet(new_dir)
+            self._commit(cur + 1, self._parquet_bytes(cur + 1), _read_schema(out.schema))
+            return cur + 1
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop superseded versions (the BootstrapDBCleaner analog)."""

@@ -5,20 +5,37 @@ snapshot store, the streaming sketch sinks and the z-table.
       _VERSION              <- the committed version N, a bare integer
       _manifest_v<N>.json   <- version N's metadata, a JSON object
       v<N>/                 <- version N's data
+      _LOCK                 <- the writer lock
 
 commit(N, manifest) replaces the manifest atomically (write_atomic:
 tmp + rename), then flips ``_VERSION`` the same way: the versioned
 state-store commit of Structured Streaming. A writer killed before the
 flip leaves an uncommitted ``v<N>/``, an orphan manifest or a
 ``_VERSION.*.tmp`` (the next write of ``_VERSION`` removes it).
-Readers see none of them, and the next commit of N replaces them; a
-writer starts the data of N in ``new_dir(N)``, which discards what a
-killed writer left there.
+Readers see none of them, and the next commit of N replaces them;
+``writer()`` empties ``v<N>/`` before the next writer builds N there.
+
+One writer per state, as Structured Streaming's state store and
+Databus's partition ownership both require. Every writer runs inside
+``writer()``, which holds an exclusive flock on ``root/_LOCK`` from
+reading the current version to the commit; ``vacuum`` takes the same
+lock. A second writer, in another process or another thread, WAITS
+for the lock and then builds on the version the first one committed.
+The flock belongs to an open file, so a thread that takes the lock of
+a root it already holds waits for itself forever: take it once per
+public call, never from inside another writer of the same root. A
+writer killed while holding it releases it with its process.
+
+Readers take no lock, and nothing protects them from ``vacuum``: a
+frame built over version N lists ``v<N>/``'s files when it is built,
+so it must be evaluated before a ``vacuum`` that drops N (after
+``keep_last`` later commits), or be built again from a newer version.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import glob
 import json
 import os
@@ -49,6 +66,16 @@ def write_atomic(path: str, text: str) -> None:
                 os.remove(left)
 
 
+@contextlib.contextmanager
+def exclusive(path: str):
+    """Hold an exclusive flock on the file at ``path``, waiting for any
+    holder to release it: the one cross-process lock of the package.
+    Closing the file releases it, also when the holder is killed."""
+    with open(path, "a") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        yield
+
+
 def _alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -62,7 +89,20 @@ def _alive(pid: int) -> bool:
 class VersionedState:
     def __init__(self, root: str) -> None:
         self.root = root
+        self.lock_path = os.path.join(root, "_LOCK")
         os.makedirs(root, exist_ok=True)
+
+    @contextlib.contextmanager
+    def writer(self):
+        """The only way to write this state: under the writer lock,
+        yields the committed version ``cur`` and the directory of
+        ``cur + 1`` to build it in, which the caller commits (or not)
+        before the block ends. What a killed writer left there is
+        removed first: writing next to it would duplicate rows."""
+        with exclusive(self.lock_path):
+            cur = self.current()
+            shutil.rmtree(self.dir(cur + 1), ignore_errors=True)
+            yield cur, self.dir(cur + 1)
 
     def current(self) -> int:
         """The committed version; 0 before the first commit."""
@@ -82,14 +122,6 @@ class VersionedState:
     def dir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
 
-    def new_dir(self, version: int) -> str:
-        """A clean directory for an uncommitted version: a writer killed
-        mid-write leaves files there, and writing next to them would
-        duplicate rows."""
-        path = self.dir(version)
-        shutil.rmtree(path, ignore_errors=True)
-        return path
-
     def commit(self, version: int, manifest: dict) -> None:
         write_atomic(self._manifest_path(version), json.dumps(manifest))
         write_atomic(os.path.join(self.root, "_VERSION"), str(version))
@@ -106,10 +138,12 @@ class VersionedState:
     def vacuum(self, keep_last: int) -> None:
         """Drop every version but the last keep_last committed ones. The
         manifest goes first, so a vacuum killed midway leaves a data
-        directory the next vacuum still finds."""
-        cutoff = self.current() - keep_last
-        for v in self.versions():
-            if v <= cutoff:
-                if os.path.exists(self._manifest_path(v)):
-                    os.remove(self._manifest_path(v))
-                shutil.rmtree(self.dir(v), ignore_errors=True)
+        directory the next vacuum still finds. Runs under the writer
+        lock."""
+        with exclusive(self.lock_path):
+            cutoff = self.current() - keep_last
+            for v in self.versions():
+                if v <= cutoff:
+                    if os.path.exists(self._manifest_path(v)):
+                        os.remove(self._manifest_path(v))
+                    shutil.rmtree(self.dir(v), ignore_errors=True)

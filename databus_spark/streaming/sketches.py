@@ -17,7 +17,8 @@ replaced ``_VERSION`` pointer, so a crash mid-commit leaves the
 previous state readable and the batch replays. Each version's manifest
 records the last merged batch_id: merges are idempotent for HLL's max,
 but the applier's at-least-once replay would double-add a Count-Min
-batch, so the additive sinks skip a batch_id already committed.
+batch, so every sink skips a batch_id already committed, checked under
+the writer lock.
 """
 
 from __future__ import annotations
@@ -50,11 +51,15 @@ class _VersionedSink:
 
     def _merge(self, fresh: DataFrame, batch_id: int, keys: list[str], agg: Column) -> None:
         """Fold the batch's partial state into the current table by the
-        per-key aggregate ``agg``, and commit it as the next version."""
-        v, prev = self.vstate.current(), self._table()
-        merged = fresh if prev is None else fresh.unionByName(prev).groupBy(*keys).agg(agg)
-        merged.write.parquet(self.vstate.new_dir(v + 1))
-        self.vstate.commit(v + 1, {"batch_id": batch_id})
+        per-key aggregate ``agg``, and commit it as the next version;
+        a batch_id at or below the committed one is a replay, skipped."""
+        with self.vstate.writer() as (v, new_dir):
+            if batch_id <= self._committed()[1]["batch_id"]:
+                return
+            prev = self._table()
+            merged = fresh if prev is None else fresh.unionByName(prev).groupBy(*keys).agg(agg)
+            merged.write.parquet(new_dir)
+            self.vstate.commit(v + 1, {"batch_id": batch_id})
 
     def vacuum(self, keep_last: int = 2) -> None:
         """Drop state versions older than the last keep_last."""
@@ -81,8 +86,8 @@ class StreamingDistinctCounter(_VersionedSink):
     # -- the foreachBatch hook ----------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Sketch the batch, max-merge with persisted registers, commit
-        the next version. Replay-safe WITHOUT a batch-id check: max is
-        idempotent, so re-merging a replayed batch changes nothing."""
+        the next version. Max is idempotent, so a replay would change
+        nothing even if it were not skipped."""
         from databus_spark.operators.stats import hll_registers
 
         fresh = hll_registers(batch, self.key_col, self.group_col)
@@ -114,8 +119,6 @@ class StreamingFrequencySketch(_VersionedSink):
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         from databus_spark.operators.stats import cm_sketch
 
-        if batch_id <= self._committed()[1]["batch_id"]:
-            return  # replay of an already-merged batch: adding twice would overcount
         fresh = cm_sketch(batch, self.key_col)
         self._merge(fresh, batch_id, ["s", "pos"], F.sum("c").alias("c"))
 
@@ -209,8 +212,6 @@ class StreamingDriftMonitor(_VersionedSink):
 
     # -- the foreachBatch hook ----------------------------------------------
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._committed()[1]["batch_id"]:
-            return  # replayed batch: counter addition would double-count
         fresh = self._bin_counts(self._token_counts(batch))
         self._merge(fresh, batch_id, ["src", "bin"], F.sum("c").alias("c"))
 
@@ -301,23 +302,24 @@ class StreamingEntityResolver(_VersionedSink):
         self.max_block = joins.LINK_MAX_BLOCK if max_block is None else max_block
         self.compact_every = compact_every
         staged = os.path.join(root, "base_blocks", "_STAGED")
-        if not os.path.exists(staged):
-            base_blocks.write.mode("overwrite").parquet(
-                os.path.join(root, "base_blocks", "data")
-            )
-            # seed v1 with the base corpus's own cluster labels (the
-            # staged entity state, same seed as the batch operator) —
-            # without it base-internal clusters would never surface,
-            # since batches only probe the index, never base vs base
-            if base_labels is not None and self.vstate.current() == 0:
-                base_labels.write.parquet(os.path.join(self.vstate.new_dir(1), "labels"))
-                self.vstate.commit(1, {"batch_id": -1, "leaf_floor": 0})
-            write_atomic(staged, "1")
+        with self.vstate.writer() as (v, new_dir):
+            if not os.path.exists(staged):
+                base_blocks.write.mode("overwrite").parquet(
+                    os.path.join(root, "base_blocks", "data")
+                )
+                # seed v1 with the base corpus's own cluster labels (the
+                # staged entity state, same seed as the batch operator) —
+                # without it base-internal clusters would never surface,
+                # since batches only probe the index, never base vs base
+                if base_labels is not None and v == 0:
+                    base_labels.write.parquet(os.path.join(new_dir, "labels"))
+                    self.vstate.commit(1, {"batch_id": -1, "leaf_floor": 0})
+                write_atomic(staged, "1")
 
     def _committed(self) -> tuple[int, dict]:
         """(current version, its manifest). The manifest's leaf_floor is
         the compaction watermark: leaves numbered <= floor were folded
-        into a later leaf and are dead (vacuum-able)."""
+        into a later leaf and are dead."""
         v, man = super()._committed()
         return v, {"leaf_floor": 0, **man}
 
@@ -334,7 +336,7 @@ class StreamingEntityResolver(_VersionedSink):
         (floor, version] — an orphan leaf from a crash-before-commit is
         numbered past the version and ignored until its replay
         overwrites it; leaves at or below the compaction floor were
-        folded into a later leaf and are skipped (then vacuumed)."""
+        folded into a later leaf and are skipped (then dropped)."""
         d = os.path.join(self.root, "inc_leaves")
         v, man = self._committed()
         floor = man["leaf_floor"]
@@ -352,74 +354,67 @@ class StreamingEntityResolver(_VersionedSink):
         from databus_spark.operators import joins
         from databus_spark.operators.dedup import dedup_clusters
 
-        v, man = self._committed()
-        if batch_id <= man["batch_id"]:
-            return  # replay: appending its blocks again would duplicate the index
-        kw = dict(
-            text_col=self.text_col,
-            block_col=self.block_col,
-            len_col=self.len_col,
-            prefix_len=self.prefix_len,
-            bucket=self.bucket,
-        )
-        base_blocks = self.spark.read.parquet(
-            os.path.join(self.root, "base_blocks", "data")
-        )
-        leaves = self._inc_leaf_dirs()
-        probe_index = (
-            base_blocks
-            if not leaves
-            else base_blocks.unionByName(self.spark.read.parquet(*leaves))
-        )
-        cross = joins.fuzzy_join_incremental(
-            batch, base_blocks=probe_index, max_dist=self.max_dist, **kw
-        ).select(F.col("doc_id").alias("doc_a"), F.col("base_id").alias("doc_b"))
-        within = joins.fuzzy_join_pairs(
-            batch, max_dist=self.max_dist, max_block=self.max_block, **kw
-        ).select("doc_a", "doc_b")
-        star = (
-            self.labels()
-            .where(F.col("doc_id") != F.col("cluster_id"))
-            .select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("doc_b"))
-        )
-        merged = dedup_clusters(cross.unionByName(within).unionByName(star))
-        # accumulated-index rows carry the sentinel secondary key: a
-        # per-batch leaf has no cross-stream population context, and
-        # incremental probes always probe the sentinel leg (joins.py)
-        new_inc = joins._fuzzy_blocks(
-            batch, self.text_col, self.block_col, self.len_col,
-            self.prefix_len, self.bucket, id_alias="base_id",
-        ).select(
-            "base_id", "_blk", "_pfx", "_bkt",
-            F.lit(joins._LINK_SEC_NONE).alias("_sec"),
-            F.lit(joins._LINK_SEC_NONE).alias("_sec2"),
-        )
-        v += 1
-        merged.write.parquet(os.path.join(self.vstate.new_dir(v), "labels"))
-        # append-only: ONE leaf per batch, O(batch) bytes written — never
-        # the r11 read-union-overwrite of the whole accumulated index.
-        # Every compact_every-th leaf instead FOLDS the live leaves in
-        # with the batch (log-structured compaction: probe-side leaf
-        # count stays bounded; the fold cost amortizes over the window).
-        floor = man["leaf_floor"]
-        if leaves and len(leaves) + 1 >= self.compact_every:
-            new_inc = new_inc.unionByName(self.spark.read.parquet(*leaves))
-            floor = v - 1  # everything before this fold is dead
-        new_inc.write.mode("overwrite").parquet(
-            os.path.join(self.root, "inc_leaves", f"leaf{v}")
-        )
-        self.vstate.commit(v, {"batch_id": batch_id, "leaf_floor": floor})
-
-    def vacuum(self, keep_last: int = 2) -> None:
-        super().vacuum(keep_last)
-        floor = self._committed()[1]["leaf_floor"]
-        # dead leaves: folded into a later leaf by compaction
-        leaf_dir = os.path.join(self.root, "inc_leaves")
-        if os.path.isdir(leaf_dir):
+        with self.vstate.writer() as (_, new_dir):
+            v, man = self._committed()
+            if batch_id <= man["batch_id"]:
+                return  # replay: appending its blocks again would duplicate the index
+            kw = dict(
+                text_col=self.text_col,
+                block_col=self.block_col,
+                len_col=self.len_col,
+                prefix_len=self.prefix_len,
+                bucket=self.bucket,
+            )
+            base_blocks = self.spark.read.parquet(
+                os.path.join(self.root, "base_blocks", "data")
+            )
+            leaves = self._inc_leaf_dirs()
+            probe_index = (
+                base_blocks
+                if not leaves
+                else base_blocks.unionByName(self.spark.read.parquet(*leaves))
+            )
+            cross = joins.fuzzy_join_incremental(
+                batch, base_blocks=probe_index, max_dist=self.max_dist, **kw
+            ).select(F.col("doc_id").alias("doc_a"), F.col("base_id").alias("doc_b"))
+            within = joins.fuzzy_join_pairs(
+                batch, max_dist=self.max_dist, max_block=self.max_block, **kw
+            ).select("doc_a", "doc_b")
+            star = (
+                self.labels()
+                .where(F.col("doc_id") != F.col("cluster_id"))
+                .select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("doc_b"))
+            )
+            merged = dedup_clusters(cross.unionByName(within).unionByName(star))
+            # accumulated-index rows carry the sentinel secondary key: a
+            # per-batch leaf has no cross-stream population context, and
+            # incremental probes always probe the sentinel leg (joins.py)
+            new_inc = joins._fuzzy_blocks(
+                batch, self.text_col, self.block_col, self.len_col,
+                self.prefix_len, self.bucket, id_alias="base_id",
+            ).select(
+                "base_id", "_blk", "_pfx", "_bkt",
+                F.lit(joins._LINK_SEC_NONE).alias("_sec"),
+                F.lit(joins._LINK_SEC_NONE).alias("_sec2"),
+            )
+            v += 1
+            merged.write.parquet(os.path.join(new_dir, "labels"))
+            # append-only: ONE leaf per batch, O(batch) bytes written — never
+            # the r11 read-union-overwrite of the whole accumulated index.
+            # Every compact_every-th leaf instead FOLDS the live leaves in
+            # with the batch (log-structured compaction: probe-side leaf
+            # count stays bounded; the fold cost amortizes over the window).
+            floor = man["leaf_floor"]
+            if leaves and len(leaves) + 1 >= self.compact_every:
+                new_inc = new_inc.unionByName(self.spark.read.parquet(*leaves))
+                floor = v - 1  # everything before this fold is dead
+            new_inc.write.mode("overwrite").parquet(
+                os.path.join(self.root, "inc_leaves", f"leaf{v}")
+            )
+            self.vstate.commit(v, {"batch_id": batch_id, "leaf_floor": floor})
+            # leaves at or below the floor are dead, and only writers read
+            # leaves: drop them now (after a crash here, the next batch does)
+            leaf_dir = os.path.join(self.root, "inc_leaves")
             for name in os.listdir(leaf_dir):
-                if (
-                    name.startswith("leaf")
-                    and name[4:].isdigit()
-                    and int(name[4:]) <= floor
-                ):
+                if name[4:].isdigit() and int(name[4:]) <= floor:
                     shutil.rmtree(os.path.join(leaf_dir, name), ignore_errors=True)

@@ -301,7 +301,7 @@ def test_zorder_vacuum_spares_inflight_version(spark, tmp_path):
     newer than the version pointer is an in-flight (or crashed) append's
     commit-in-progress and must survive, so a writer that crashed
     between writing _manifest_v{v+1} and flipping _VERSION can always be
-    re-driven. Mutating ops also hold the <path>.lock flock (r6 advice:
+    re-driven. Mutating ops also hold the <path>/_LOCK flock (r6 advice:
     these tables live in shared /tmp paths across processes)."""
     import json
     import os
@@ -331,7 +331,7 @@ def test_zorder_vacuum_spares_inflight_version(spark, tmp_path):
     assert os.path.exists(inflight), "in-flight data files must survive vacuum"
 
     # writer lock file exists and is flock-able (cross-process guard)
-    assert os.path.exists(t.path.rstrip("/") + ".lock")
+    assert os.path.exists(os.path.join(t.path, "_LOCK"))
 
 
 def test_zorder_staging_rebuild_does_not_self_deadlock(spark, sf_dir):

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import count_jobs
+
 _WARM_JOBS = {
     "semdedup_survivors": 16,
     "semdedup_multiprobe": 16,
@@ -42,18 +44,6 @@ _WARM_JOBS = {
 }
 
 
-def _jobs(spark, group, fn):
-    """Run fn under a job group; return the jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", sorted(_WARM_JOBS))
 def test_warm_job_count_bounded(spark, sf_dir, name):
     from databus_spark.registry import QUERIES
@@ -62,5 +52,5 @@ def test_warm_job_count_bounded(spark, sf_dir, name):
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     run()  # stages the trained model / base index on a cold fixture
-    jobs = _jobs(spark, f"semdedup-jobs-{name}", run)
+    _, jobs, _ = count_jobs(spark, f"semdedup-jobs-{name}", run)
     assert jobs <= _WARM_JOBS[name], (name, jobs)

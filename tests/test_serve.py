@@ -14,6 +14,7 @@ from databus_spark.serve import RelayFacade
 from databus_spark.sources.schema_registry import SchemaRegistry, VersionedSchema
 from databus_spark.store.snapshot import ParquetSnapshotStore
 from databus_spark.streaming.checkpoint import Checkpoint, SCNNotFoundError
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -263,21 +264,6 @@ def test_scn_index_bound_matches_aggregate(facade, spark):
     assert shallow._scns is None
 
 
-def _jobs(spark, group, fn):
-    """Run fn under a job group; return (its result, the jobs it ran,
-    their stages)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    ids = tracker.getJobIdsForGroup(group)
-    return out, len(ids), sum(len(tracker.getJobInfo(j).stageIds) for j in ids)
-
-
 def test_one_job_per_request(facade, spark, tmp_path):
     """Each consumer request is one Spark job: a page once the relay's
     SCN index exists (building it is one more, once per relay), a
@@ -287,14 +273,14 @@ def test_one_job_per_request(facade, spark, tmp_path):
     _, log = facade
     relay = RelayFacade(spark, log)
     scns = sorted(r["scn"] for r in log.select("scn").distinct().collect())
-    _, jobs, _ = _jobs(spark, "serve-scn-index", lambda: relay.stream_windows(scns[0], 1))
+    _, jobs, _ = count_jobs(spark, "serve-scn-index", lambda: relay.stream_windows(scns[0], 1))
     assert jobs == 1
     for since in (scns[0], scns[len(scns) // 3]):
-        table, jobs, _ = _jobs(
+        table, jobs, _ = count_jobs(
             spark, f"serve-page-{since}", lambda s=since: relay.stream_windows(s, 50)[0].toArrow()
         )
         assert table.num_rows > 0 and jobs == 1, (since, jobs)
-    table, jobs, stages = _jobs(
+    table, jobs, stages = count_jobs(
         spark, "serve-stream-4096", lambda: relay.stream(scns[1], size_bytes=4096).toArrow()
     )
     assert table.num_rows > 0 and (jobs, stages) == (1, 1)
@@ -308,7 +294,7 @@ def test_one_job_per_request(facade, spark, tmp_path):
     }
     for name, (frame, want) in frames.items():
         for attempt in ("cold", "warm"):
-            _, jobs, _ = _jobs(
+            _, jobs, _ = count_jobs(
                 spark, f"serve-lookup-{name}-{attempt}", lambda f=frame: store.lookup(f).toArrow()
             )
             assert jobs == want, (name, attempt, jobs)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from databus_spark.store.snapshot import ParquetSnapshotStore
+from tests.conftest import count_jobs
 
 _SCHEMA = (
     "source string, key_str string, scn long, opcode string, payload string, ts timestamp"
@@ -47,18 +48,6 @@ def _marker(store, version):
 
 def _has_deltas(store, version):
     return store._parquet_bytes(version) > store.vstate.manifest(version)["base_bytes"]
-
-
-def _jobs(spark, group, fn):
-    """Run fn under a job group; return (its result, the jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _state(df):
@@ -144,13 +133,13 @@ def test_request_paths_run_no_probe_jobs(spark, tmp_path):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         assert plan.startswith("LocalRelation"), plan
         for attempt in ("cold", "warm"):
-            table, jobs = _jobs(
+            table, jobs, _ = count_jobs(
                 spark, f"lookup-{name}-{attempt}", lambda f=frame: store.lookup(f).toArrow()
             )
             assert table.num_rows == 8
             assert jobs == 1, (name, attempt, jobs)
-    assert _jobs(spark, "read", store.read)[1] == 0
-    assert _jobs(spark, "read-version", lambda: store.read_version(1))[1] == 0
+    assert count_jobs(spark, "read", store.read)[1] == 0
+    assert count_jobs(spark, "read-version", lambda: store.read_version(1))[1] == 0
 
 
 def test_empty_batch_on_a_fold_due_store_reads_no_state(spark, tmp_path):
@@ -177,7 +166,7 @@ def test_empty_batch_on_a_fold_due_store_reads_no_state(spark, tmp_path):
                 with open(path, "r+b") as f:
                     f.write(b"\0" * size)
     empty = _batch(spark, range(200), 1, "c").where(F.col("scn") < 0)
-    res, jobs = _jobs(spark, "empty-fold-due", lambda: store.merge(empty))
+    res, jobs, _ = count_jobs(spark, "empty-fold-due", lambda: store.merge(empty))
     assert res == (v, 0, None)
     assert jobs <= 1, jobs
     assert store.vstate.current() == v
